@@ -405,51 +405,22 @@ PANEL_QUERIES = [
 
 # ---------------------------------------------------------------------------
 # Cold-run pinning (VERDICT r12 item 4): streaming entries that stage
-# micro-batch inputs + a checkpoint under a per-(sf_dir, session) memo dir
+# micro-batch inputs + a checkpoint in a per-(entry, sf_dir) work dir
 # become ~free on any SAME-SESSION re-run — the consumed checkpoint reports
 # "no new files" — so the remeasure pass's min() and the panel's 3-run
 # median could record a warm number a fresh session can never reproduce
 # (stream_checksum_mv flip-flopped 3.37 → 2.67 → 0.215 → 2.03 s across
-# rounds for exactly this reason).  Every timed execution of the entries
-# below now PURGES the entry's memo first (staging + checkpoint deleted),
-# so each committed number is the cold, fresh-session-reproducible one;
-# the payload carries ``cold_pinned`` so the artifact says which numbers
-# hold that contract.  Deliberately-warm serving memos — the prebuilt
-# IVF / MinHash / fuzzy-benchmark indexes built in _prime_session, and the
-# offline z-order layout — are NOT purged: offline-built-once is their
-# documented lifecycle, and priming makes them warm on the FIRST run too.
-_PKG = (
-    "consumer_financial_protection_bureau_predictive_analysis_using_machine"
-    "_learning_models_in_pyspark_spark"
-)
-COLD_MEMOS: dict[str, list[tuple[str, str]]] = {
-    "stream_minute_rollup": [("plans.breadth3", "_ROLLUP_DIRS")],
-    "stream_mv_maintenance": [("plans.breadth6", "_MV_STREAM_DIRS")],
-    "stream_join_mv": [("plans.breadth6", "_JOIN_MV_DIRS")],
-    "stream_checksum_mv": [("plans.breadth7", "_CK_STREAM_DIRS")],
-    "stream_substring_decontaminate": [("plans.breadth9", "_SS_STREAM_DIRS")],
-    "stream_bot_users": [("plans.breadth9", "_BOT_STREAM_DIRS")],
-    "stream_quality_classifier": [("plans.breadth10", "_QC_STREAM_DIRS")],
-    "stream_ref_perplexity": [("plans.breadth10b", "_PPL_STREAM_DIRS")],
-    "stream_cusum_drift": [("plans.breadth10b", "_CUSUM_STREAM_DIRS")],
-    "stream_curation_e2e": [("plans.breadth11", "_CUR_STREAM_DIRS")],
-    "stream_decontaminate_fuzzy": [("plans.breadth12", "_FD_STREAM_DIRS")],
-    "stream_phash_dedup": [("plans.media_queries", "_PHASH_STREAM_DIRS")],
-    "stream_semantic_dedup": [("plans.streaming_queries", "_SEMDEDUP_DIRS")],
-    "stream_quality_gate": [("plans.streaming_queries", "_GATE_DIRS")],
-}
-
-
-def _cold_reset(name: str) -> None:
-    """Purge ``name``'s staging/checkpoint memo dirs so its next execution
-    runs the full cold streaming lifecycle."""
-    import importlib
-    import shutil
-
-    for mod_suffix, attr in COLD_MEMOS.get(name, ()):
-        memo = getattr(importlib.import_module(f"{_PKG}.{mod_suffix}"), attr)
-        for key in list(memo):
-            shutil.rmtree(memo.pop(key), ignore_errors=True)
+# rounds for exactly this reason).  Every timed execution therefore first
+# calls streaming.jobs.reset(name), which deletes the entry's work dirs
+# (staging + checkpoint) and is a no-op for entries without any; the
+# payload carries ``cold_pinned`` — the timed entries that held a work
+# dir — so the artifact says which numbers hold that contract.
+# Deliberately-warm serving memos — the prebuilt IVF / MinHash /
+# fuzzy-benchmark indexes built in _prime_session, and the offline
+# z-order layout — live outside that registry and are NOT purged:
+# offline-built-once is their documented lifecycle, and priming makes them
+# warm on the FIRST run too.
+# ---------------------------------------------------------------------------
 
 
 def _prime_session(spark, sf_dir: str, cpus: str) -> None:
@@ -474,7 +445,7 @@ def _prime_session(spark, sf_dir: str, cpus: str) -> None:
     # stream_decontaminate_fuzzy entries measure PROBE cost by design, so
     # their index must be warm on the first timed run too (previously it
     # was cold on run 1 and warm on any remeasure — the same
-    # round-over-round oscillation COLD_MEMOS pins from the other side)
+    # round-over-round oscillation the cold reset pins from the other side)
     _b12.fuzzy_bench_index_for(spark, sf_dir)
 
 
@@ -500,6 +471,9 @@ def run_panel(commit: bool = False) -> None:
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         CATALOG,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
 
     spark = get_session(master=f"local[{cpus}]", app_name="bench-panel")
     spark.sparkContext.setLogLevel("ERROR")
@@ -510,7 +484,7 @@ def run_panel(commit: bool = False) -> None:
         spec = CATALOG[name]
         runs = []
         for _ in range(3):
-            _cold_reset(name)
+            SJ.reset(name)
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).count()
             runs.append(round(time.perf_counter() - t0, 3))
@@ -552,7 +526,7 @@ def run_panel(commit: bool = False) -> None:
         "reproduced_regressions": reproduced,
         "cleared_as_load": cleared,
         "vs_prev_panel": vs_prev_panel,
-        "cold_pinned": sorted(set(COLD_MEMOS) & set(panel)),
+        "cold_pinned": sorted(SJ.staged_names() & set(panel)),
     }
     path = _artifact_path()
     payload = {}
@@ -601,6 +575,9 @@ def main(commit: bool = False) -> None:
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         CATALOG,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
 
     spark = get_session(master=f"local[{cpus}]", app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -616,7 +593,7 @@ def main(commit: bool = False) -> None:
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         spec = CATALOG[name]
-        _cold_reset(name)
+        SJ.reset(name)
         t0 = time.perf_counter()
         n = spec.fn(spark, sf_dir).count()
         dt = time.perf_counter() - t0
@@ -631,9 +608,9 @@ def main(commit: bool = False) -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        # every timing of these entries purged its staging/checkpoint memo
+        # every timing of these entries purged its staging/checkpoint dir
         # first — the committed number is cold and fresh-session-reproducible
-        "cold_pinned": sorted(set(COLD_MEMOS) & set(timings)),
+        "cold_pinned": sorted(SJ.staged_names() & set(timings)),
     }
     regressions = _regressions_vs_previous_round(timings)
     if regressions:
@@ -650,7 +627,7 @@ def main(commit: bool = False) -> None:
             spec = CATALOG[name]
             samples = [timings[name]]
             for _ in range(2):
-                _cold_reset(name)
+                SJ.reset(name)
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).count()
                 samples.append(round(time.perf_counter() - t0, 3))

@@ -44,7 +44,13 @@ def swap_local_checkpoint(slot: str, df: DataFrame) -> DataFrame:
     """Register ``df`` (already localCheckpoint'ed) under ``slot``,
     releasing whatever the slot held from a previous invocation.  Keeps
     a session's steady-state storage at one live artifact per slot
-    regardless of how many times the builder re-runs."""
+    regardless of how many times the artifact is rebuilt.
+
+    Contract: a DataFrame returned by a previous invocation of the same
+    slot is unreadable after the swap — its localCheckpoint blocks are
+    released, and a local checkpoint has no lineage to recompute them
+    from.  Collect what you need before the slot is rebuilt; never hold
+    the old frame across a rebuild."""
     prev = _SLOTS.get(slot)
     if prev is not None:
         release_local_checkpoint(prev)

@@ -663,9 +663,6 @@ def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The first stream_* entry that serves an MLlib model.
 # ---------------------------------------------------------------------------
 
-_QC_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_quality_classifier", None,
     "streaming", "ml", "quality", "model-serving", "foreachBatch",
@@ -684,11 +681,6 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming scores are pinned EQUAL to the batch entry's full-corpus
     scores, which is the serving-path contract: where the model runs
     (batch job or ingest stream) must not change a single score."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
     docs = _t(spark, sf_dir, "documents")
@@ -696,37 +688,12 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = Q.fit_quality_model(base)
     base.unpersist()
 
-    work = _QC_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_qc_")
-        try:
-            in_dir = f"{work}/in"
-            raw = docs.select("doc_id", "text")
-            raw.filter("pmod(doc_id, 2) == 0").coalesce(1).write.parquet(
-                f"{in_dir}/b0"
-            )
-            raw.filter("pmod(doc_id, 2) == 1").coalesce(1).write.parquet(
-                f"{in_dir}/b1"
-            )
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i, sub in enumerate(("b0", "b1")):
-                for f in os.listdir(f"{in_dir}/{sub}"):
-                    if f.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/{sub}/{f}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _QC_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _QC_STREAM_DIRS.values()
-                ]
-            )
-        _QC_STREAM_DIRS[sf_dir] = work
+    raw = docs.select("doc_id", "text")
+    work = SJ.stage_microbatches(
+        "stream_quality_classifier",
+        sf_dir,
+        lambda: [raw.filter(f"pmod(doc_id, 2) == {i}") for i in range(2)],
+    )
     flat = f"{work}/batches"
 
     def score_fn(batch_df: DataFrame) -> DataFrame:

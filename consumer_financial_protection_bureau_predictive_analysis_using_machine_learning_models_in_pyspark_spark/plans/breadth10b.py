@@ -922,9 +922,6 @@ def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming serving twin: perplexity scoring at ingest
 # ---------------------------------------------------------------------------
 
-_PPL_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_ref_perplexity", None,
     "streaming", "lm", "perplexity", "model-serving", "foreachBatch",
@@ -988,16 +985,12 @@ def stream_ref_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts.count()
 
     raw = docs.select("doc_id", "lang", "text")
-    flat = SJ.stage_microbatches(
-        _PPL_STREAM_DIRS,
+    work = SJ.stage_microbatches(
+        "stream_ref_perplexity",
         sf_dir,
-        [
-            raw.filter("pmod(doc_id, 2) == 0"),
-            raw.filter("pmod(doc_id, 2) == 1"),
-        ],
-        "stream_ppl_",
+        lambda: [raw.filter(f"pmod(doc_id, 2) == {i}") for i in range(2)],
     )
-    work = _PPL_STREAM_DIRS[sf_dir]
+    flat = f"{work}/batches"
 
     def score_fn(batch_df: DataFrame) -> DataFrame:
         scored = _ppl_score(batch_df, ref, stats)
@@ -1568,8 +1561,6 @@ def events_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming CUSUM: the stateful-ingest twin with a FULL value oracle
 # ---------------------------------------------------------------------------
 
-_CUSUM_STREAM_DIRS: dict[str, str] = {}
-
 _CUSUM_ORACLE = CATALOG["events_cusum_drift"].oracle
 
 
@@ -1610,13 +1601,12 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiled = ev.select("event_id", "user_id", "ts", "value").withColumn(
         "_b", F.ntile(3).over(wall) - 1
     )
-    flat = SJ.stage_microbatches(
-        _CUSUM_STREAM_DIRS,
+    work = SJ.stage_microbatches(
+        "stream_cusum_drift",
         sf_dir,
-        [tiled.filter(F.col("_b") == b).drop("_b") for b in range(3)],
-        "stream_cusum_",
+        lambda: [tiled.filter(F.col("_b") == b).drop("_b") for b in range(3)],
     )
-    work = _CUSUM_STREAM_DIRS[sf_dir]
+    flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema
     stream = (

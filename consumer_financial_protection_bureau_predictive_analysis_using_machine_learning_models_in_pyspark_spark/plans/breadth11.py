@@ -825,9 +825,6 @@ def ann_ivf_rebuild_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to the composed pipeline.
 # ---------------------------------------------------------------------------
 
-_CUR_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_curation_e2e", None,
     "streaming", "pipeline", "curation", "funnel", "foreachBatch",
@@ -915,13 +912,14 @@ def stream_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bgrams = _ck("bgrams", _grams8_of(bench).select("gram").distinct())
 
     # ---- staged micro-batches ----
-    flat = SJ.stage_microbatches(
-        _CUR_STREAM_DIRS,
+    work = SJ.stage_microbatches(
+        "stream_curation_e2e",
         sf_dir,
-        [train.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b) for b in range(3)],
-        "stream_cur_",
+        lambda: [
+            train.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b) for b in range(3)
+        ],
     )
-    work = _CUR_STREAM_DIRS[sf_dir]
+    flat = f"{work}/batches"
 
     def _ledger(df: DataFrame, stage_ix: int, stage: str) -> DataFrame:
         return df.groupBy("reason").agg(

@@ -27,11 +27,6 @@ curation/decontamination operators imply.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,35 +50,6 @@ from .breadth11 import (
 # ---------------------------------------------------------------------------
 # Restartable curation pipeline
 # ---------------------------------------------------------------------------
-
-_RESTART_DIRS: dict[str, str] = {}
-
-
-def _fresh_workdir(prefix: str, key: str = "") -> str:
-    """One REUSED work dir per (prefix, key), WIPED on every entry: each
-    invocation still times the full cold materialize path (the dir it
-    gets is empty), but repeated bench/soak invocations in one long
-    session no longer accumulate unbounded /tmp disk (ADVICE r12) — the
-    previous invocation's stage artifacts are deleted here, after its
-    consumer has collected, not at session exit.  atexit stays as the
-    final-invocation backstop."""
-    memo = f"{prefix}|{key}"
-    work = _RESTART_DIRS.get(memo)
-    if work is not None:
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work, exist_ok=True)
-        return work
-    work = tempfile.mkdtemp(prefix=prefix)
-    if not _RESTART_DIRS:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(d, ignore_errors=True)
-                for d in _RESTART_DIRS.values()
-            ]
-        )
-    _RESTART_DIRS[memo] = work
-    return work
-
 
 @register(
     "docs_curation_restartable",
@@ -109,14 +75,21 @@ def docs_curation_restartable(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation with durability — strictly stronger than the e2e entry's
     localCheckpoint).  Each invocation uses a FRESH work dir: the entry
     times the full materialize path, never a warm resume; the resume
-    path is exercised (and pinned) in tests."""
-    work = _fresh_workdir("curation_restart_", sf_dir)
+    path is exercised (and pinned) in tests.
+
+    The previous invocation's work dir is deleted on entry, after its
+    consumer has collected, so repeated invocations in one long session
+    hold one dir of stage artifacts, not one per call."""
+    from ..streaming import jobs as SJ
+
+    SJ.reset("docs_curation_restartable")
+    work = SJ.workdir("docs_curation_restartable", sf_dir)
     frames, _report = RS.run_stages(spark, sf_dir, CURATION_STAGES, work)
     # localCheckpoint (eager): the returned ledger must stay valid after
-    # the NEXT invocation wipes this work dir (_fresh_workdir's
-    # reuse-and-wipe), so it cannot keep lineage into the stage
-    # artifacts; the ledger is stage-count-sized, and materializing it
-    # here keeps the timed entry covering the full funnel either way
+    # the NEXT invocation deletes this work dir, so it cannot keep
+    # lineage into the stage artifacts; the ledger is stage-count-sized,
+    # and materializing it here keeps the timed entry covering the full
+    # funnel either way
     return curation_ledger(frames).localCheckpoint()
 
 
@@ -193,9 +166,6 @@ def docs_decontaminate_fuzzy_prebuilt(
     return fuzzy_flagged(hc, bc, hb, bb).orderBy("doc_id")
 
 
-_FD_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_decontaminate_fuzzy",
     CATALOG["docs_decontaminate_fuzzy"].oracle,
@@ -226,13 +196,14 @@ def stream_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import jobs as SJ
 
     corpus = fd_corpus(spark, sf_dir)
-    flat = SJ.stage_microbatches(
-        _FD_STREAM_DIRS,
+    work = SJ.stage_microbatches(
+        "stream_decontaminate_fuzzy",
         sf_dir,
-        [corpus.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b) for b in range(3)],
-        "stream_fdecon_",
+        lambda: [
+            corpus.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b) for b in range(3)
+        ],
     )
-    work = _FD_STREAM_DIRS[sf_dir]
+    flat = f"{work}/batches"
     hb, bb = fuzzy_bench_index_for(spark, sf_dir)
 
     def probe(batch_df: DataFrame):

@@ -430,9 +430,6 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_DIRS: dict[str, str] = {}
-
-
 @register("stream_minute_rollup", None, "streaming", "continuous-aggregate")
 def stream_minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming continuous-aggregate maintenance loop end-to-end
@@ -446,23 +443,9 @@ def stream_minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The work dir is memoized per sf_dir and cleaned at exit (repeated
     calls resume the checkpoint: an already-drained source adds no
     batches and the rollup re-reads the same partials)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
-    work = _ROLLUP_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_rollup_")
-        if not _ROLLUP_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _ROLLUP_DIRS.values()
-                ]
-            )
-        _ROLLUP_DIRS[sf_dir] = work
+    work = SJ.workdir("stream_minute_rollup", sf_dir)
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     stream = SJ.read_events_stream(spark, sf_dir)
     SJ.run_streaming_rollup(stream, out, ckpt, level="minute")

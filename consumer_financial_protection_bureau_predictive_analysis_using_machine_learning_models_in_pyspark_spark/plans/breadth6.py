@@ -430,9 +430,6 @@ def dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming compact-state MV maintenance
 # ---------------------------------------------------------------------------
 
-_MV_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_mv_maintenance", None,
     "streaming", "materialized-view", "incremental", "foreachBatch",
@@ -451,48 +448,13 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The work dir is memoized per sf_dir and cleaned at exit (repeated
     calls resume the checkpoint: a drained source adds no batches and the
     state re-reads the same latest version)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
-    work = _MV_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        # memoize ONLY after the staging build completes: a partial build
-        # must raise and leave no cache entry, or a retry would silently
-        # stream a truncated batch set (r7 review finding, fixed in both
-        # streaming staging caches)
-        work = tempfile.mkdtemp(prefix="stream_mv_")
-        try:
-            ev = _t(spark, sf_dir, "events").select(
-                "user_id", "ts", "value"
-            )
-            in_dir = f"{work}/in"
-            for i in range(3):
-                ev.filter(F.pmod(F.col("user_id"), F.lit(3)) == i).coalesce(
-                    1
-                ).write.parquet(f"{in_dir}/b{i}")
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i in range(3):
-                for f in os.listdir(f"{in_dir}/b{i}"):
-                    if f.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/b{i}/{f}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _MV_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _MV_STREAM_DIRS.values()
-                ]
-            )
-        _MV_STREAM_DIRS[sf_dir] = work
+    def frames():
+        ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
+        return [ev.filter(F.pmod(F.col("user_id"), F.lit(3)) == i) for i in range(3)]
+
+    work = SJ.stage_microbatches("stream_mv_maintenance", sf_dir, frames)
     flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema
@@ -629,9 +591,6 @@ def docs_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bin_id")
 
 
-_JOIN_MV_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_join_mv", None,
     "streaming", "materialized-view", "join", "dimension-change",
@@ -652,16 +611,11 @@ def stream_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on WHICH dim version each batch saw — exactly what the
     versioned read-modify-write makes auditable.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..streaming import jobs as SJ
 
-    work = _JOIN_MV_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_joinmv_")
+    def build(work: str) -> None:
         ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
         users = ev.select("user_id").distinct()
         halves = f"{work}/halves"
@@ -671,15 +625,6 @@ def stream_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).write.parquet(f"{halves}/h{i}")
         in_dir = f"{work}/in"
         os.makedirs(in_dir)
-
-        def _promote(i: int) -> None:
-            src = f"{halves}/h{i}"
-            part = next(
-                f for f in os.listdir(src) if f.endswith(".parquet")
-            )
-            dst = f"{in_dir}/batch_{i}.parquet"
-            shutil.copyfile(f"{src}/{part}", dst)
-            os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
 
         def _write_dim(shift: int) -> None:
             users.select(
@@ -702,24 +647,14 @@ def stream_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stream, f"{work}/dim", f"{work}/state", f"{work}/ckpt"
             )
 
-        _promote(0)
+        SJ.promote_batch(f"{halves}/h0", in_dir, 0)
         _write_dim(0)
         _drain()              # batch 0 joins dim v1
         _write_dim(1)         # every user moves one segment over
-        _promote(1)
+        SJ.promote_batch(f"{halves}/h1", in_dir, 1)
         _drain()              # batch 1 joins dim v2, merged onto v0 state
-        # memoize ONLY now, after the full build+drain sequence succeeded
-        # — a partial run must raise and leave no cache entry, or a retry
-        # would serve truncated state (r7 review finding)
-        if not _JOIN_MV_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _JOIN_MV_DIRS.values()
-                ]
-            )
-        _JOIN_MV_DIRS[sf_dir] = work
 
+    work = SJ.workdir("stream_join_mv", sf_dir, build)
     mv = SJ.read_mv_state(spark, f"{work}/state")
     return mv.select(
         "segment",

@@ -611,9 +611,6 @@ def orders_partition_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CK_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_checksum_mv", None,
     "streaming", "checksum", "replica-audit", "incremental", "foreachBatch",
@@ -630,48 +627,13 @@ def stream_checksum_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the final per-month state.  Rows-only (stateful streaming);
     equality with the from-scratch batch fold over the whole table and
     idempotent batch replay are pinned in tests/test_round7.py."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
-    work = _CK_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        # register in the memo ONLY after the staging build completes: a
-        # partial build (disk full, interrupt) must raise and leave no
-        # cache entry, or a retry would silently stream a truncated
-        # batch set and return wrong checksums
-        work = tempfile.mkdtemp(prefix="stream_ck_")
-        try:
-            ev = _t(spark, sf_dir, "events").select(
-                "event_id", "event_type", "ts"
-            )
-            in_dir = f"{work}/in"
-            for i in range(3):
-                ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).coalesce(
-                    1
-                ).write.parquet(f"{in_dir}/b{i}")
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i in range(3):
-                for f_ in os.listdir(f"{in_dir}/b{i}"):
-                    if f_.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/b{i}/{f_}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _CK_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _CK_STREAM_DIRS.values()
-                ]
-            )
-        _CK_STREAM_DIRS[sf_dir] = work
+    def frames():
+        ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "ts")
+        return [ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)]
+
+    work = SJ.stage_microbatches("stream_checksum_mv", sf_dir, frames)
     flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema
@@ -797,9 +759,6 @@ def orders_replica_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LATE_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_late_data_audit", None,
     "streaming", "watermark", "late-data", "audit",
@@ -826,105 +785,72 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes — per-type injected/streamed/dropped is the returned audit.
     Bounded state at 100 TB/day rests on this drop behavior; this pins
     it with exact counts (rows-only: stateful streaming semantics)."""
-    import atexit
     import datetime as _dt
     import os
-    import shutil
-    import tempfile
 
     from ..streaming import jobs as SJ
 
-    work = _LATE_DIRS.get(sf_dir)
-    if work is None:
-        # memoize ONLY after the staging build completes (r7 discipline)
-        work = tempfile.mkdtemp(prefix="stream_late_")
-        try:
-            ev = _t(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            b = ev.agg(
-                F.min("ts").alias("lo"),
-                F.max("ts").alias("hi"),
-                F.max("event_id").alias("mid"),
-            ).collect()[0]
-            late = [
-                (b.mid + 1 + i, b.lo + _dt.timedelta(minutes=i), 0,
-                 "late_probe", 1.0)
-                for i in range(7)
-            ]
-            ontime = [
-                (b.mid + 101 + i,
-                 b.hi - _dt.timedelta(minutes=30) + _dt.timedelta(minutes=i),
-                 0, "ontime_probe", 1.0)
-                for i in range(7)
-            ]
-            adv = [
-                (b.mid + 1001, b.hi + _dt.timedelta(hours=3), 0,
-                 "advance", 1.0)
-            ]
-            in_dir = f"{work}/in"
-            # base batch: a 1-in-50 sample — the audit pins watermark
-            # SEMANTICS, not base-corpus throughput; probe placement uses
-            # the full table's lo/hi bounds, and the watermark after b0
-            # (max sampled ts - 2 h) preserves every pinned property
-            # (late << wm; on-time > wm; advancer closes both)
-            ev.filter(F.pmod(F.col("event_id"), F.lit(50)) == 0).coalesce(
+    def build(work: str) -> None:
+        ev = _t(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        b = ev.agg(
+            F.min("ts").alias("lo"),
+            F.max("ts").alias("hi"),
+            F.max("event_id").alias("mid"),
+        ).collect()[0]
+        late = [
+            (b.mid + 1 + i, b.lo + _dt.timedelta(minutes=i), 0,
+             "late_probe", 1.0)
+            for i in range(7)
+        ]
+        ontime = [
+            (b.mid + 101 + i,
+             b.hi - _dt.timedelta(minutes=30) + _dt.timedelta(minutes=i),
+             0, "ontime_probe", 1.0)
+            for i in range(7)
+        ]
+        adv = [
+            (b.mid + 1001, b.hi + _dt.timedelta(hours=3), 0, "advance", 1.0)
+        ]
+        in_dir = f"{work}/in"
+        # base batch: a 1-in-50 sample — the audit pins watermark
+        # SEMANTICS, not base-corpus throughput; probe placement uses
+        # the full table's lo/hi bounds, and the watermark after b0
+        # (max sampled ts - 2 h) preserves every pinned property
+        # (late << wm; on-time > wm; advancer closes both)
+        ev.filter(F.pmod(F.col("event_id"), F.lit(50)) == 0).coalesce(
+            1
+        ).write.parquet(f"{in_dir}/b0")
+        for i, rows in ((1, late + ontime), (2, adv)):
+            spark.createDataFrame(rows, schema=ev.schema).coalesce(
                 1
-            ).write.parquet(f"{in_dir}/b0")
-            for i, rows in ((1, late + ontime), (2, adv)):
-                spark.createDataFrame(rows, schema=ev.schema).coalesce(
-                    1
-                ).write.parquet(f"{in_dir}/b{i}")
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            out_dir, ckpt = f"{work}/out", f"{work}/ckpt"
-            # one availableNow RUN per arriving file, shared checkpoint:
-            # each run restores the watermark before reading new files
-            pkey = "spark.sql.shuffle.partitions"
-            old = spark.conf.get(pkey)
-            # state-partition pin, see streaming.jobs.STREAM_STATE_PARTITIONS
-            spark.conf.set(pkey, str(SJ.STREAM_STATE_PARTITIONS))
-            try:
-                for i in range(3):
-                    for f_ in os.listdir(f"{in_dir}/b{i}"):
-                        if f_.endswith(".parquet"):
-                            dst = f"{flat}/batch_{i}.parquet"
-                            shutil.copyfile(f"{in_dir}/b{i}/{f_}", dst)
-                            os.utime(
-                                dst,
-                                (1_600_000_000 + i, 1_600_000_000 + i),
-                            )
-                    schema = spark.read.parquet(flat).schema
-                    stream = (
-                        spark.readStream.schema(schema)
-                        .parquet(flat)
-                        # watermarks need TIMESTAMP (LTZ); fixture is NTZ
-                        .withColumn("ts", F.col("ts").cast("timestamp"))
-                    )
-                    q = (
-                        SJ.windowed_counts(stream)
-                        .writeStream.format("parquet")
-                        .option("path", out_dir)
-                        .option("checkpointLocation", ckpt)
-                        .outputMode("append")
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    q.awaitTermination()
-            finally:
-                spark.conf.set(pkey, old)
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _LATE_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _LATE_DIRS.values()
-                ]
+            ).write.parquet(f"{in_dir}/b{i}")
+        flat = f"{work}/batches"
+        os.makedirs(flat)
+        # one availableNow RUN per arriving file, shared checkpoint:
+        # each run restores the watermark before reading new files
+        for i in range(3):
+            SJ.promote_batch(f"{in_dir}/b{i}", flat, i)
+            schema = spark.read.parquet(flat).schema
+            stream = (
+                spark.readStream.schema(schema)
+                .parquet(flat)
+                # watermarks need TIMESTAMP (LTZ); fixture is NTZ
+                .withColumn("ts", F.col("ts").cast("timestamp"))
             )
-        _LATE_DIRS[sf_dir] = work
+            w = (
+                SJ.windowed_counts(stream)
+                .writeStream.format("parquet")
+                .option("path", f"{work}/out")
+                .option("checkpointLocation", f"{work}/ckpt")
+                .outputMode("append")
+                .trigger(availableNow=True)
+            )
+            with SJ.pinned_state_partitions(spark):
+                w.start().awaitTermination()
 
+    work = SJ.workdir("stream_late_data_audit", sf_dir, build)
     out = spark.read.parquet(f"{work}/out")
     streamed = (
         out.filter(F.col("event_type").isin("late_probe", "ontime_probe"))

@@ -929,9 +929,6 @@ FROM tok t LEFT JOIN per_doc p ON p.doc_id = t.doc_id
 ORDER BY t.doc_id
 """.strip()
 
-_SS_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_substring_decontaminate",
     _STREAM_SS_SQL,
@@ -953,42 +950,13 @@ def stream_substring_decontaminate(
     fully value-oracled: the SQL screens each batch against exactly the
     grams of earlier batches.  Batch-0 docs report zero spans by design
     (nothing ingested before them)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
-    work = _SS_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_ssdecon_")
-        try:
-            docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-            in_dir = f"{work}/in"
-            for b in range(3):
-                docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.parquet(
-                    f"{in_dir}/b{b}"
-                )
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i in range(3):
-                for fn in os.listdir(f"{in_dir}/b{i}"):
-                    if fn.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/b{i}/{fn}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _SS_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _SS_STREAM_DIRS.values()
-                ]
-            )
-        _SS_STREAM_DIRS[sf_dir] = work
+    def frames():
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        return [docs.filter(F.col("doc_id") % 3 == b) for b in range(3)]
+
+    work = SJ.stage_microbatches("stream_substring_decontaminate", sf_dir, frames)
     flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema
@@ -1341,9 +1309,6 @@ FROM stats
 ORDER BY user_id
 """.strip()
 
-_BOT_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_bot_users",
     _STREAM_BOT_SQL,
@@ -1362,48 +1327,17 @@ def stream_bot_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     full value oracle: the SQL is simply the batch computation over the
     whole corpus.  Bot flags computed from the final state with the
     shared cv² expressions."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    from pyspark.sql import Window
 
     from ..streaming import jobs as SJ
 
-    work = _BOT_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_bot_")
-        try:
-            from pyspark.sql import Window
+    def frames():
+        ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+        wall = Window.orderBy("ts", "event_id")
+        tiled = ev.withColumn("_b", F.ntile(3).over(wall) - 1)
+        return [tiled.filter(F.col("_b") == b).drop("_b") for b in range(3)]
 
-            ev = _t(spark, sf_dir, "events").select(
-                "user_id", "ts", "event_id"
-            )
-            wall = Window.orderBy("ts", "event_id")
-            tiled = ev.withColumn("_b", F.ntile(3).over(wall) - 1)
-            in_dir = f"{work}/in"
-            for b in range(3):
-                tiled.filter(F.col("_b") == b).drop("_b").coalesce(
-                    1
-                ).write.parquet(f"{in_dir}/b{b}")
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i in range(3):
-                for fn in os.listdir(f"{in_dir}/b{i}"):
-                    if fn.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/b{i}/{fn}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _BOT_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _BOT_STREAM_DIRS.values()
-                ]
-            )
-        _BOT_STREAM_DIRS[sf_dir] = work
+    work = SJ.stage_microbatches("stream_bot_users", sf_dir, frames)
     flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema

@@ -220,9 +220,6 @@ def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.media_table(aug).filter(F.col("modality") == "image")
 
 
-_PHASH_STREAM_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_phash_dedup", None,
     "streaming", "multimodal", "phash", "dedup", "foreachBatch",
@@ -240,46 +237,13 @@ def stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (blob byte-folds aren't SQL-expressible); sequential equivalence
     with the batch-mode exact-phash dedup and replay idempotency are
     pinned in tests/test_round8.py."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming import jobs as SJ
 
-    work = _PHASH_STREAM_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_phash_")
-        try:
-            media = _phash_media(spark, sf_dir).select(
-                "media_id", "modality", "content"
-            )
-            in_dir = f"{work}/in"
-            media.filter("pmod(media_id, 2) == 0").coalesce(1).write.parquet(
-                f"{in_dir}/b0"
-            )
-            media.filter("pmod(media_id, 2) == 1").coalesce(1).write.parquet(
-                f"{in_dir}/b1"
-            )
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i, sub in enumerate(("b0", "b1")):
-                for f in os.listdir(f"{in_dir}/{sub}"):
-                    if f.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/{sub}/{f}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _PHASH_STREAM_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _PHASH_STREAM_DIRS.values()
-                ]
-            )
-        _PHASH_STREAM_DIRS[sf_dir] = work
+    def frames():
+        media = _phash_media(spark, sf_dir).select("media_id", "modality", "content")
+        return [media.filter(f"pmod(media_id, 2) == {i}") for i in range(2)]
+
+    work = SJ.stage_microbatches("stream_phash_dedup", sf_dir, frames)
     flat = f"{work}/batches"
 
     schema = spark.read.parquet(flat).schema

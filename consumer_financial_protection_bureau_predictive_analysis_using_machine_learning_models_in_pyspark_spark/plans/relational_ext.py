@@ -320,11 +320,10 @@ ORDER BY n.n_name
 
 @register("sql_nation_revenue", _NATION_REVENUE_SQL, "sql-frontend", "join", "agg")
 def sql_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL front end: temp views + spark.sql running literally the same
-    text as the oracle — Catalyst and DuckDB plan the identical declarative
-    query."""
-    readers.register_views(spark, sf_dir)
-    return spark.sql(_NATION_REVENUE_SQL)
+    """The SQL front end: spark.sql running literally the same text as the
+    oracle, tables bound per call — Catalyst and DuckDB plan the identical
+    declarative query."""
+    return readers.run_sql(spark, sf_dir, _NATION_REVENUE_SQL)
 
 
 # ---------------------------------------------------------------------------

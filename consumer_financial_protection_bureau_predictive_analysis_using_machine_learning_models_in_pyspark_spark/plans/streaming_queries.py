@@ -279,9 +279,6 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_DIRS: dict[str, str] = {}
-
-
 @register(
     "stream_semantic_dedup", None,
     "streaming", "semdedup", "incremental", "foreachBatch",
@@ -300,52 +297,15 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The work dir is memoized per sf_dir and cleaned at exit (repeated
     calls resume the checkpoint: a drained source adds no batches and
     the statuses re-read the same partitions)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..operators import dedup as DD
     from ..operators import similarity as SIM
-    from ..streaming import jobs as SJ
     from .text_queries import ivf_index_for
 
-    work = _SEMDEDUP_DIRS.get(sf_dir)
-    if work is None:
-        # memoize ONLY after the staging build completes: a partial build
-        # must raise and leave no cache entry (r7 review finding, fixed
-        # in every streaming staging cache)
-        work = tempfile.mkdtemp(prefix="stream_semdedup_")
-        try:
-            emb = _t(spark, sf_dir, "embeddings")
-            in_dir = f"{work}/in"
-            emb.filter("pmod(vec_id, 10) == 0").coalesce(1).write.parquet(
-                f"{in_dir}/b0"
-            )
-            emb.filter("pmod(vec_id, 10) == 5").coalesce(1).write.parquet(
-                f"{in_dir}/b1"
-            )
-            # flatten: the file source tails a directory of files; mtimes
-            # fix the micro-batch order (b0 strictly first)
-            flat = f"{work}/batches"
-            os.makedirs(flat)
-            for i, sub in enumerate(("b0", "b1")):
-                for f in os.listdir(f"{in_dir}/{sub}"):
-                    if f.endswith(".parquet"):
-                        dst = f"{flat}/batch_{i}.parquet"
-                        shutil.copyfile(f"{in_dir}/{sub}/{f}", dst)
-                        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _SEMDEDUP_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _SEMDEDUP_DIRS.values()
-                ]
-            )
-        _SEMDEDUP_DIRS[sf_dir] = work
+    def frames():
+        emb = _t(spark, sf_dir, "embeddings")
+        return [emb.filter(f"pmod(vec_id, 10) == {r}") for r in (0, 5)]
+
+    work = SJ.stage_microbatches("stream_semantic_dedup", sf_dir, frames)
     flat = f"{work}/batches"
 
     idx = ivf_index_for(
@@ -420,8 +380,6 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GATE_DIRS: dict[str, str] = {}
-
 # The event-stream gate's checks — shared verbatim with the pytest
 # corrupt-batch fixture so the two can't drift.
 EVENT_GATE_CHECKS = {
@@ -467,22 +425,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_batches proves the partition plumbing).  Corrupt-batch quarantine
     behavior and replay idempotence are pinned in pytest with an
     injected second batch."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    work = _GATE_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="stream_gate_")
-        if not _GATE_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _GATE_DIRS.values()
-                ]
-            )
-        _GATE_DIRS[sf_dir] = work
+    work = SJ.workdir("stream_quality_gate", sf_dir)
     out, ckpt = f"{work}/out", f"{work}/ckpt"
     stream = SJ.read_events_stream(spark, sf_dir)
     SJ.run_streaming_quality_gate(

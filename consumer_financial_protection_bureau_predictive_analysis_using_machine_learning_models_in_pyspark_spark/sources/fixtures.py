@@ -90,11 +90,10 @@ def complaints_cte(body_sql: str, extra_ctes: dict[str, str] | None = None) -> s
 def complaints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the complaints fixture in Spark.
 
-    Runs the *same SQL text* the DuckDB oracle uses, over temp views of the
-    parquet tables — guaranteeing fixture parity by construction.  Catalyst
-    plans this like any DataFrame program (the joins against customer/nation/
-    documents are auto-broadcast: all three are small dims).
+    Runs the *same SQL text* the DuckDB oracle uses, with the parquet
+    tables bound per call (``readers.run_sql``) — guaranteeing fixture
+    parity by construction.  Catalyst plans this like any DataFrame
+    program (the joins against customer/nation/documents are
+    auto-broadcast: all three are small dims).
     """
-    for t in ("orders", "customer", "nation", "documents"):
-        readers.load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(COMPLAINTS_FIXTURE_SQL)
+    return readers.run_sql(spark, sf_dir, COMPLAINTS_FIXTURE_SQL)

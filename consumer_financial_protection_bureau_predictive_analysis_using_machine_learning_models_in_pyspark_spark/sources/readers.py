@@ -9,6 +9,7 @@ schema-pinned PERMISSIVE JSON reader for reference parity.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,14 +62,22 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.expr(_NS_TO_NTZ))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in schemas.TESTDATA_TABLES}
+_TABLE_REF = re.compile(
+    r"\b(FROM|JOIN)\s+(" + "|".join(schemas.TESTDATA_TABLES) + r")\b"
+)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for the SQL front end."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+def run_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run ``text`` — SQL over the plain test-table names, the same string
+    the DuckDB oracle runs — with every table it reads bound for this call
+    only (``spark.sql`` DataFrame arguments).  No session temp view is
+    created or overwritten, so concurrent callers cannot see each other's
+    tables and a caller's own ``orders`` view survives."""
+    names = dict.fromkeys(t for _, t in _TABLE_REF.findall(text))
+    return spark.sql(
+        _TABLE_REF.sub(r"\1 {\2}", text),
+        **{t: load_table(spark, sf_dir, t) for t in names},
+    )
 
 
 def read_complaints_json(spark: SparkSession, path: str) -> DataFrame:

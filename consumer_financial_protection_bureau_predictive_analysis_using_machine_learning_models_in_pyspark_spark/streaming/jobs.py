@@ -21,8 +21,11 @@ Scale posture:
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
+import tempfile
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
@@ -85,28 +88,57 @@ def _start_and_drain(writer, spark) -> None:
         q.awaitTermination()
 
 
-# One staging dir per source file, reused across calls (repeated test/bench
-# runs previously leaked a fresh mkdtemp per call); cleaned up at exit.
-_STAGING_DIRS: dict[str, str] = {}
+# Work dirs of the streaming entries, keyed by (entry name, key) — key is
+# the sf_dir for catalog entries.  A dir holds an entry's staged inputs
+# plus the checkpoint/state a rerun resumes, so it is reused across calls
+# in one session; ``reset`` drops an entry's dirs for a cold rerun, and
+# whatever is left is removed at exit.
+_WORK_DIRS: dict[tuple[str, str], str] = {}
+atexit.register(
+    lambda: [shutil.rmtree(d, ignore_errors=True) for d in _WORK_DIRS.values()]
+)
+
+
+def workdir(name: str, key: str, build=None) -> str:
+    """The work dir of ``(name, key)``, created on first use.  On a miss
+    the dir is made and ``build(work)`` runs in it; the dir is memoized
+    only once ``build`` returns — a build that raises deletes the dir and
+    leaves no entry, so a retry rebuilds instead of resuming a truncated
+    batch set."""
+    work = _WORK_DIRS.get((name, key))
+    if work is not None and os.path.isdir(work):
+        return work
+    work = tempfile.mkdtemp(prefix=f"{name}_")
+    try:
+        if build is not None:
+            build(work)
+    except BaseException:
+        shutil.rmtree(work, ignore_errors=True)
+        raise
+    _WORK_DIRS[(name, key)] = work
+    return work
+
+
+def reset(name: str) -> None:
+    """Delete every work dir of entry ``name`` and forget it, so the next
+    call runs the full cold lifecycle.  No-op when nothing is staged."""
+    for k in [k for k in _WORK_DIRS if k[0] == name]:
+        shutil.rmtree(_WORK_DIRS.pop(k), ignore_errors=True)
+
+
+def staged_names() -> set[str]:
+    """Names of the entries that currently hold a work dir."""
+    return {name for name, _ in _WORK_DIRS}
 
 
 def _staging_dir(src: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    stage = _STAGING_DIRS.get(src)
-    if stage and os.path.isdir(stage):
-        return stage
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(stage, os.path.basename(src)))
-    if not _STAGING_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _STAGING_DIRS.values()]
-        )
-    _STAGING_DIRS[src] = stage
-    return stage
+    """A dir holding a symlink to ``src`` — the file source tails a
+    directory, the fixture is a single file."""
+    return workdir(
+        "events_stream",
+        src,
+        lambda stage: os.symlink(src, os.path.join(stage, os.path.basename(src))),
+    )
 
 
 def read_events_stream(
@@ -121,8 +153,6 @@ def read_events_stream(
     rejects nanos outright), current ones plain TIMESTAMP(MICROS).  The
     file source wants a DIRECTORY (it tails new files), while the fixture
     is a single file — stage a symlink dir."""
-    import os
-
     from .. import schemas
     from ..sources.readers import _NS_TO_NTZ, _events_ts_is_nanos
 
@@ -555,48 +585,51 @@ def run_streaming_semantic_dedup(
             assigned = base
         idx = SIM.IvfIndex(assigned, index.centroids, index.n_assign)
         # scratch: the operator's internal per-batch persists (corpus_hits)
-        # are released below — every micro-batch builds a distinct plan, so
-        # without the release the stream accumulates one dead cache entry
-        # per batch for its whole lifetime (ADVICE r13)
+        # plus ``st`` are released below, whether or not the writes
+        # succeed — every micro-batch builds a distinct plan, so without
+        # the release the stream accumulates one dead cache entry per
+        # batch for its whole lifetime (ADVICE r13)
         scratch: list = []
-        st = SIM.semantic_dedup_incremental(
-            idx,
-            batch_df,
-            threshold,
-            n_probe_cells=n_probe_cells,
-            id_col=id_col,
-            vec_col=vec_col,
-            scratch=scratch,
-        ).persist()
-        (
-            st.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-        kept_ids = st.filter(F.col("status") == "kept").select(
-            F.col("doc_id").alias(id_col)
-        )
-        newly_kept = batch_df.join(kept_ids, id_col, "left_semi").select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("vec"),
-            F.explode(
-                SIM._top_cells(
-                    F.col(vec_col), index.centroids, index.n_assign
-                )
-            ).alias("cell"),
-        )
-        (
-            newly_kept.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(kept_dir)
-        )
-        st.unpersist()
-        for frame in scratch:
-            frame.unpersist()
+        try:
+            st = SIM.semantic_dedup_incremental(
+                idx,
+                batch_df,
+                threshold,
+                n_probe_cells=n_probe_cells,
+                id_col=id_col,
+                vec_col=vec_col,
+                scratch=scratch,
+            ).persist()
+            scratch.append(st)
+            (
+                st.withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(out_dir)
+            )
+            kept_ids = st.filter(F.col("status") == "kept").select(
+                F.col("doc_id").alias(id_col)
+            )
+            newly_kept = batch_df.join(kept_ids, id_col, "left_semi").select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("vec"),
+                F.explode(
+                    SIM._top_cells(
+                        F.col(vec_col), index.centroids, index.n_assign
+                    )
+                ).alias("cell"),
+            )
+            (
+                newly_kept.withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(kept_dir)
+            )
+        finally:
+            for frame in scratch:
+                frame.unpersist()
 
     w = (
         stream.writeStream.foreachBatch(process)
@@ -1214,8 +1247,8 @@ def run_streaming_model_scoring(
 
     ``score_fn`` may return either the scored frame, or a
     ``(scored, scratch)`` tuple where ``scratch`` lists internally
-    persisted per-batch frames — they are unpersisted after the batch's
-    write completes, so a probe that caches a batch-derived frame (a
+    persisted per-batch frames — they are unpersisted once the batch's
+    write returns or raises, so a probe that caches a batch-derived frame (a
     distinct plan every micro-batch, un-dedupable by the CacheManager)
     does not leak one cache entry per batch for the stream's lifetime
     (ADVICE r13)."""
@@ -1223,16 +1256,18 @@ def run_streaming_model_scoring(
     def score(batch_df: DataFrame, batch_id: int) -> None:
         res = score_fn(batch_df)
         scored, scratch = res if isinstance(res, tuple) else (res, [])
-        (
-            scored
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-        for frame in scratch:
-            frame.unpersist()
+        try:
+            (
+                scored
+                .withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(out_dir)
+            )
+        finally:
+            for frame in scratch:
+                frame.unpersist()
 
     w = (
         stream.writeStream.foreachBatch(score)
@@ -1422,42 +1457,28 @@ def run_streaming_cusum(
     _start_and_drain(w, stream.sparkSession)
 
 
-def stage_microbatches(cache: dict, key: str, frames, prefix: str) -> str:
-    """Write each frame in ``frames`` as ONE parquet file under a flat
-    staging dir with strictly increasing mtimes — the file-source
-    micro-batch fixture every ``stream_*`` twin drives (maxFilesPerTrigger
-    1 replays them in mtime order).  ``cache`` is the caller's module
-    dict keyed by ``key`` (reruns reuse the staged corpus); cleanup is
-    registered atexit on first use.  Factored from the five per-entry
-    copies of this scaffold (r10b review finding)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+def stage_microbatches(name: str, sf_dir: str, frames) -> str:
+    """Get-or-build the work dir of entry ``name`` with its micro-batch
+    fixture: each frame of ``frames()`` is written as ONE parquet file
+    under ``<work>/batches`` with strictly increasing mtimes, so a file
+    source with maxFilesPerTrigger 1 replays them in order.  ``frames``
+    is only called on a miss; a rerun reuses the staged corpus."""
 
-    work = cache.get(key)
-    if work is not None:
-        return f"{work}/batches"
-    work = tempfile.mkdtemp(prefix=prefix)
-    try:
-        in_dir = f"{work}/in"
-        flat = f"{work}/batches"
-        os.makedirs(flat)
-        for i, frame in enumerate(frames):
-            frame.coalesce(1).write.parquet(f"{in_dir}/b{i}")
-            for fn in os.listdir(f"{in_dir}/b{i}"):
-                if fn.endswith(".parquet"):
-                    dst = f"{flat}/batch_{i}.parquet"
-                    shutil.copyfile(f"{in_dir}/b{i}/{fn}", dst)
-                    os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    if not cache:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(d, ignore_errors=True) for d in cache.values()
-            ]
-        )
-    cache[key] = work
-    return flat
+    def build(work: str) -> None:
+        os.makedirs(f"{work}/batches")
+        for i, frame in enumerate(frames()):
+            frame.coalesce(1).write.parquet(f"{work}/in/b{i}")
+            promote_batch(f"{work}/in/b{i}", f"{work}/batches", i)
+
+    return workdir(name, sf_dir, build)
+
+
+def promote_batch(part_dir: str, flat: str, i: int) -> None:
+    """Copy the parquet file of the single-partition write ``part_dir`` to
+    ``<flat>/batch_<i>.parquet``, its mtime fixing it as micro-batch ``i``
+    of a file source over ``flat``."""
+    for fn in os.listdir(part_dir):
+        if fn.endswith(".parquet"):
+            dst = f"{flat}/batch_{i}.parquet"
+            shutil.copyfile(f"{part_dir}/{fn}", dst)
+            os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))

@@ -9,8 +9,8 @@ bounded in a 3-batch fixture, unbounded under continuous ingest.  r14
 threads a ``scratch`` list through those operators; the foreachBatch
 runners unpersist after each batch's write.
 
-These tests run a streaming entry twice COLD (memo purge between runs,
-bench methodology) and assert the second run adds zero persistent RDDs:
+These tests run a streaming entry twice COLD (work-dir reset between
+runs, bench methodology) and assert the second run adds zero persistent RDDs:
 the first run is allowed to warm the documented session caches (frozen
 benchmark index etc.), after which a steady state must hold — per-batch
 frames may not survive their batch.
@@ -29,8 +29,9 @@ sys.path.insert(0, REPO)
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
     CATALOG,
 )
-
-import bench  # noqa: E402
+from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+    jobs as SJ,
+)
 
 
 def _n_persistent(spark) -> int:
@@ -50,13 +51,13 @@ def _n_persistent(spark) -> int:
 def test_streaming_entry_does_not_leak_cache(spark, sf_dir, name):
     fn = CATALOG[name].fn
     # run 1 (cold): builds the documented session caches + all batches
-    bench._cold_reset(name)
+    SJ.reset(name)
     fn(spark, sf_dir).count()
     before = _n_persistent(spark)
     # run 2 (cold again): steady state — per-batch/per-run persists and
     # localCheckpoints must have been released (or swapped), so the
     # cache count cannot grow
-    bench._cold_reset(name)
+    SJ.reset(name)
     fn(spark, sf_dir).count()
     after = _n_persistent(spark)
     assert after <= before, (
@@ -81,3 +82,61 @@ def test_minhash_hashes_supersedes_guard(spark, sf_dir):
     # the supported form still works
     n = DD.minhash_dedup_pairs(spark, docs, hashes=hashes).count()
     assert n == 1
+
+
+def _stage_batch(spark, df, tmp_path):
+    """One parquet file in a fresh dir: a one-micro-batch file source."""
+    src = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(src)
+    return spark.readStream.schema(df.schema).parquet(src)
+
+
+def _unwritable(tmp_path, leaf):
+    """An output path under a regular file: any write to it raises."""
+    blocker = tmp_path / "blocker"
+    blocker.write_text("x")
+    return str(blocker / leaf)
+
+
+def test_scoring_batch_releases_scratch_when_write_raises(spark, tmp_path):
+    stream = _stage_batch(
+        spark, spark.range(50).withColumnRenamed("id", "doc_id"), tmp_path
+    )
+
+    def score_fn(batch_df):
+        cached = batch_df.withColumn("twice", batch_df.doc_id * 2).persist()
+        cached.count()
+        return cached, [cached]
+
+    before = _n_persistent(spark)
+    with pytest.raises(Exception):
+        SJ.run_streaming_model_scoring(
+            stream, score_fn, _unwritable(tmp_path, "out"), str(tmp_path / "ck")
+        )
+    assert _n_persistent(spark) == before
+
+
+def test_semantic_dedup_batch_releases_scratch_when_write_raises(
+    spark, sf_dir, tmp_path
+):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.text_queries import (  # noqa: E501
+        ivf_index_for,
+    )
+
+    idx = ivf_index_for(spark, sf_dir, n_assign=3, where="pmod(vec_id, 5) != 0")
+    idx.assigned.count()
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    stream = _stage_batch(spark, emb.filter("pmod(vec_id, 10) == 0"), tmp_path)
+    before = _n_persistent(spark)
+    # the status write succeeds (materializing the batch's cached
+    # frames); the kept-vector write then raises
+    with pytest.raises(Exception):
+        SJ.run_streaming_semantic_dedup(
+            stream,
+            idx,
+            str(tmp_path / "out"),
+            _unwritable(tmp_path, "kept"),
+            str(tmp_path / "ck"),
+        )
+    assert (tmp_path / "out").exists()
+    assert _n_persistent(spark) == before

@@ -866,14 +866,11 @@ def test_stream_cusum_twin(spark):
             rs.n_events, rs.max_pos_u, rs.max_neg_u,
             rs.n_alarm_events, rs.first_alarm_event_id,
         ), uid
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
-        breadth10b as B,
-    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
         jobs as SJ,
     )
 
-    work = B._CUSUM_STREAM_DIRS[SF]
+    work = SJ.workdir("stream_cusum_drift", SF)
     assert SJ.mv_versions(spark, f"{work}/state") == [0, 1, 2]
 
 

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
     CATALOG,
-    breadth12,
     breadth13,
 )
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
@@ -36,6 +35,9 @@ from consumer_financial_protection_bureau_predictive_analysis_using_machine_lear
 )
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
     restart as RS,
+)
+from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+    jobs as SJ,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -368,17 +370,20 @@ def test_resume_distrusts_dir_without_success_marker(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_restartable_workdir_reused_and_wiped():
-    """The per-(prefix, key) work dir is reused across invocations and
-    arrives empty each time (bounded /tmp, still cold-path timing)."""
-    w1 = breadth12._fresh_workdir("t13_wd_", "k")
-    with open(os.path.join(w1, "leftover"), "w") as f:
-        f.write("x")
-    w2 = breadth12._fresh_workdir("t13_wd_", "k")
-    assert w2 == w1
-    assert os.listdir(w2) == []
-    w3 = breadth12._fresh_workdir("t13_wd_", "other")
-    assert w3 != w1
+def test_restartable_workdir_reused_and_wiped(spark):
+    """docs_curation_restartable reuses its registry slot across
+    invocations and deletes the previous invocation's stage artifacts on
+    entry (bounded /tmp, still cold-path timing); the ledger returned by
+    the earlier call stays readable."""
+    name = "docs_curation_restartable"
+    first = CATALOG[name].fn(spark, SF)
+    w1 = SJ.workdir(name, SF)
+    assert os.listdir(w1)
+    second = CATALOG[name].fn(spark, SF)
+    w2 = SJ.workdir(name, SF)
+    assert not os.path.exists(w1)
+    assert os.listdir(w2)
+    assert sorted(first.collect()) == sorted(second.collect())
 
 
 def test_bench_round_of_skips_undigited_artifacts():
@@ -386,83 +391,3 @@ def test_bench_round_of_skips_undigited_artifacts():
 
     assert bench._round_of("/x/BENCH_LOCAL_retry.json") is None
     assert bench._round_of("/x/BENCH_LOCAL_r12.json") == 12
-
-
-def test_cold_reset_purges_memo_and_dir():
-    """bench._cold_reset deletes both the memo entry and its on-disk
-    staging/checkpoint dir, so the next run is a full cold lifecycle."""
-    import bench
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
-        breadth7,
-    )
-
-    d = tempfile.mkdtemp(prefix="coldreset13_")
-    breadth7._CK_STREAM_DIRS["__test__"] = d
-    try:
-        bench._cold_reset("stream_checksum_mv")
-        assert "__test__" not in breadth7._CK_STREAM_DIRS
-        assert not os.path.exists(d)
-    finally:
-        breadth7._CK_STREAM_DIRS.pop("__test__", None)
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_cold_memos_cover_every_checkpoint_memoized_stream_entry():
-    """BOTH halves of the cold-pin contract: (a) every COLD_MEMOS target
-    resolves to a real dict on a real catalog entry, and (b) every
-    module-level ``*_DIRS`` memo dict in the plans package is either a
-    COLD_MEMOS target or on the documented exclusion list — so a
-    round-14 streaming entry that adds a staging+checkpoint memo but
-    forgets the bench registration fails HERE instead of silently
-    reviving the stream_checksum_mv warm-replay oscillation class."""
-    import importlib
-    import pkgutil
-
-    import bench
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark import (  # noqa: E501
-        plans,
-    )
-
-    for name, specs in bench.COLD_MEMOS.items():
-        assert name in CATALOG
-        for mod, attr in specs:
-            memo = getattr(importlib.import_module(f"{bench._PKG}.{mod}"), attr)
-            assert isinstance(memo, dict), (name, mod, attr)
-
-    registered = {
-        (mod.split(".", 1)[1], attr)
-        for specs in bench.COLD_MEMOS.values()
-        for mod, attr in specs
-    }
-    # memo dicts that are deliberately NOT cold-pinned, with the reason:
-    excluded = {
-        "_ZORDER_DIRS",  # offline layout artifact: warm is the lifecycle
-        "_LATE_DIRS",  # stream_late_data_audit is bench-excluded
-        "_RESTART_DIRS",  # wiped on every entry: self-cold by design
-        # prebuilt serving indexes/artifacts: warm-by-design, primed in
-        # _prime_session so run 1 matches every later run
-        "_PQ_CACHE",
-        "_IVF_CACHE",
-        "_MINHASH_IDX_CACHE",
-        "_FUZZY_IDX_CACHE",
-        "_REBUILD_IDX_CACHE",
-        "_LR_SCORED_CACHE",  # session-scoped scored frame (ML eval dim)
-        "CATALOG",  # the registry itself (imported into every module)
-    }
-    found = set()
-    for info in pkgutil.iter_modules(plans.__path__):
-        mod = importlib.import_module(f"{plans.__name__}.{info.name}")
-        for attr in dir(mod):
-            # any module-level dict memo: *_DIRS staging dirs AND
-            # *_CACHE/*_STATE-style memos — a rename must not dodge
-            # the contract
-            if (
-                attr.endswith(("_DIRS", "_CACHE", "_STATE"))
-                and isinstance(getattr(mod, attr), dict)
-            ):
-                found.add((info.name, attr))
-    unregistered = {
-        (m, a) for (m, a) in found
-        if a not in excluded and (m, a) not in registered
-    }
-    assert not unregistered, unregistered

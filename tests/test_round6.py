@@ -279,8 +279,8 @@ def test_stream_mv_equals_batch_aggregate(spark):
     must change nothing."""
     import os
 
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
-        breadth6,
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
     )
 
     mv = catalog.CATALOG["stream_mv_maintenance"].fn(spark, SF_SMOKE)
@@ -306,7 +306,7 @@ def test_stream_mv_equals_batch_aggregate(spark):
         assert abs(g.sum_value - e.sum_value) < 1e-9, uid
         assert g.max_ts == e.max_ts, uid
 
-    state_dir = f"{breadth6._MV_STREAM_DIRS[SF_SMOKE]}/state"
+    state_dir = f"{SJ.workdir('stream_mv_maintenance', SF_SMOKE)}/state"
     versions = sorted(d for d in os.listdir(state_dir) if d.startswith("v"))
     assert len(versions) >= 2, versions  # cross-batch merge really happened
 

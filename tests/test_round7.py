@@ -810,13 +810,12 @@ def test_stream_checksum_mv_full_redelivery_idempotent(spark):
     a fresh checkpoint over the existing state dir rewrites every
     version from its predecessors byte-identically — the final state
     must not double-fold."""
-    import consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.breadth7 as B7  # noqa: E501
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
         jobs as SJ,
     )
 
     before = catalog.CATALOG["stream_checksum_mv"].fn(spark, SF_SMOKE).collect()
-    work = B7._CK_STREAM_DIRS[SF_SMOKE]
+    work = SJ.workdir("stream_checksum_mv", SF_SMOKE)
     schema = spark.read.parquet(f"{work}/batches").schema
     stream = (
         spark.readStream.schema(schema)

@@ -55,6 +55,26 @@ def test_json_reader_permissive_corrupt_capture(spark, complaints_json):
     assert {r.company for r in good.collect()} == {"Acme Bank", "Beta Corp"}
 
 
+def test_complaints_leaves_caller_temp_views_alone(spark, sf_dir):
+    """The fixture binds its tables per call: a caller's own ``orders``
+    view survives, and the session's temp views are unchanged."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        fixtures,
+    )
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    spark.range(1).createOrReplaceTempView("orders")
+    try:
+        before = temp_views()
+        assert fixtures.complaints(spark, sf_dir).count() > 1
+        assert spark.table("orders").count() == 1
+        assert temp_views() == before
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
 def test_write_parquet_partitioned_roundtrip(spark, tmp_path):
     df = spark.range(100).withColumn("bucket", (F.col("id") % 3).cast("int"))
     out = str(tmp_path / "part_out")

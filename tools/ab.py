@@ -16,7 +16,7 @@ repo-standard workflow:
     python tools/ab.py compare /tmp/a.json /tmp/b.json
 
 ``measure`` runs one primed session per core count (bench.py methodology:
-_prime_session, per-run cold reset of streaming memos, timed ``.count()``)
+_prime_session, per-run cold reset of streaming work dirs, timed ``.count()``)
 and records per-query run lists, medians, and the md5 of the normalized
 extended plan (tools/plan_fingerprint.normalize).  ``compare`` prints a
 per-query ratio per core column and flags fingerprint mismatches — equal
@@ -51,6 +51,9 @@ def _measure_one_session(names, cpus, runs, sf_dir, plans_dir, tag):
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         CATALOG,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
     import bench
 
     spark = get_session(master=f"local[{cpus}]", app_name=f"ab-{cpus}")
@@ -63,7 +66,7 @@ def _measure_one_session(names, cpus, runs, sf_dir, plans_dir, tag):
         samples = []
         df = None
         for _ in range(runs):
-            bench._cold_reset(name)
+            SJ.reset(name)
             spark.sparkContext.setJobDescription(f"ab[{cpus}] {name}")
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)

@@ -143,6 +143,9 @@ def run() -> None:
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.catalog import (  # noqa: E501
         CATALOG,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.session import (  # noqa: E501
         get_session,
     )
@@ -188,12 +191,10 @@ def run() -> None:
         for label, sf_dir in (("sf0_1", SF01), ("sf10", SF10)):
             runs = []
             for _ in range(2):
-                # streaming entries: purge the staging+checkpoint memo so
+                # streaming entries: purge the staging+checkpoint dir so
                 # run 2 is a cold ingest, not the consumed-checkpoint
                 # replay (the bench.py cold-pin contract, r13)
-                import bench
-
-                bench._cold_reset(name)
+                SJ.reset(name)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 runs.append(time.perf_counter() - t0)

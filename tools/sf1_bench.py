@@ -135,6 +135,9 @@ def main() -> None:
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.catalog import (  # noqa: E501
         CATALOG,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.session import (  # noqa: E501
         get_session,
     )
@@ -166,9 +169,7 @@ def main() -> None:
                 # consumed-checkpoint replay (bench.py cold-pin, r13 —
                 # the r12 stream_decontaminate_fuzzy 0.35 s sf1 number
                 # was the warm replay path this purge retires)
-                import bench
-
-                bench._cold_reset(name)
+                SJ.reset(name)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 runs.append(time.perf_counter() - t0)
