@@ -17,6 +17,7 @@ Parquet the null/blank predicates reach the scan.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -81,17 +82,42 @@ def clean_complaints(
     return filter_non_blank(recode_blanks(drop_corrupt(df), recode), required)
 
 
-def observed_clean(df: DataFrame, required: Sequence[str]) -> tuple[DataFrame, "object"]:
+class CleanQuality:
+    """The data-quality counters of one ``observed_clean`` pass.
+
+    They ride a *named* ``observe`` on the cleaned frame, and ``get`` reads
+    them back from the query that frame ran (``QueryExecution``'s observed
+    metrics).  So they fill in after a ``collect()``/``toPandas()`` of that
+    frame; before it, or after another action (``count()`` runs a different
+    query), the counters read as 0 or None.  No ``pyspark.sql.Observation`` is
+    used: registering one creates the session's ObservationManager, which
+    Spark keeps in a non-transient session field and cannot serialize, so
+    every later task whose closure holds the session fails "Task not
+    serializable" (an LR model's training summary holds it, and
+    ``transform`` ships the model).
+    """
+
+    def __init__(self, frame: DataFrame, name: str):
+        self._frame, self._name = frame, name
+
+    @property
+    def get(self) -> dict:
+        from pyspark.serializers import CPickleSerializer
+
+        row = self._frame._jdf.queryExecution().observedMetrics().apply(self._name)
+        utils = self._frame.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+        return CPickleSerializer().loads(utils.toPyRow(row)).asDict()
+
+
+def observed_clean(df: DataFrame, required: Sequence[str]) -> tuple[DataFrame, CleanQuality]:
     """clean + data-quality counters in the SAME pass (`df.observe`):
     rows_in, rows_corrupt, and per-column blank counts accumulate as the
     action runs — no second scan, unlike the reference's separate count()
     jobs per question (decision_tree_final_class_8.py:166-175 pattern).
 
-    Returns (cleaned_df, observation); read ``observation.get`` AFTER an
-    action on the returned frame.
+    Returns (cleaned_df, quality); read ``quality.get`` AFTER collecting
+    the returned frame (see ``CleanQuality``).
     """
-    from pyspark.sql import Observation
-
     metrics = [F.count(F.lit(1)).alias("rows_in")]
     if schemas.CORRUPT_COL in df.columns:
         metrics.append(
@@ -103,9 +129,9 @@ def observed_clean(df: DataFrame, required: Sequence[str]) -> tuple[DataFrame, "
         metrics.append(
             F.sum(F.when(non_blank(c), 0).otherwise(1)).alias(f"blank_{c}")
         )
-    obs = Observation("clean_quality")
-    observed = df.observe(obs, *metrics)
-    cleaned = drop_corrupt(observed)
+    # observe names must be unique within one plan (two cleaned frames may join)
+    name = f"clean_quality_{uuid.uuid4().hex}"
+    cleaned = drop_corrupt(df.observe(name, *metrics))
     for c in required:
         cleaned = cleaned.filter(non_blank(c))
-    return cleaned, obs
+    return cleaned, CleanQuality(cleaned, name)

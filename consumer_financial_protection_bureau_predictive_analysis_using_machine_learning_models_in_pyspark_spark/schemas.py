@@ -60,19 +60,6 @@ COMPANY_RESPONSE_CLASSES = [
 # ---------------------------------------------------------------------------
 # Driver-generated synthetic test tables (TESTDATA.md / FIXTURES.md §A).
 # ---------------------------------------------------------------------------
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 REGION_SCHEMA = T.StructType(
     [
         T.StructField("r_regionkey", T.IntegerType()),
@@ -145,10 +132,11 @@ LINEITEM_SCHEMA = T.StructType(
     ]
 )
 
-# The events parquet stores ts as TIMESTAMP(NANOS), which Spark's vectorized
-# reader rejects ([PARQUET_TYPE_ILLEGAL]).  The engine reads it as raw int64
-# nanoseconds and reconstructs a TIMESTAMP_NTZ (see readers.load_table) —
-# pure epoch arithmetic, deterministic under any session timezone.
+# Early events vintages store ts as TIMESTAMP(NANOS), which Spark's vectorized
+# reader rejects ([PARQUET_TYPE_ILLEGAL]).  The engine reads that vintage as
+# raw int64 nanoseconds and reconstructs a TIMESTAMP_NTZ (see
+# readers.load_table) — pure epoch arithmetic, deterministic under any session
+# timezone.  Current vintages store TIMESTAMP(MICROS) and read as EVENTS_SCHEMA.
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -188,6 +176,23 @@ EMBEDDINGS_SCHEMA = T.StructType(
         T.StructField("label", T.IntegerType()),
     ]
 )
+
+# Every test table, in TESTDATA.md order.  readers.load_table reads each one
+# through its schema here (no footer-inference Spark job) and refuses a name
+# without an entry.
+TABLE_SCHEMAS = {
+    "region": REGION_SCHEMA,
+    "nation": NATION_SCHEMA,
+    "customer": CUSTOMER_SCHEMA,
+    "supplier": SUPPLIER_SCHEMA,
+    "part": PART_SCHEMA,
+    "orders": ORDERS_SCHEMA,
+    "lineitem": LINEITEM_SCHEMA,
+    "events": EVENTS_SCHEMA,
+    "documents": DOCUMENTS_SCHEMA,
+    "embeddings": EMBEDDINGS_SCHEMA,
+}
+TESTDATA_TABLES = list(TABLE_SCHEMAS)
 
 # JSON schema for the `props` column of events (extension surface: from_json).
 EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])

@@ -4,6 +4,13 @@ The reference's only source is inferred-schema NDJSON (reference init.py:13,
 timely_LR.py:31).  The engine reads Parquet as the canonical columnar store
 (vectorized reader, row-group pruning, pushed filters) and keeps a
 schema-pinned PERMISSIVE JSON reader for reference parity.
+
+Every test table is read through its pinned schema
+(``schemas.TABLE_SCHEMAS``), never an inferred one: ``spark.read.parquet``
+with no schema runs one footer-inference Spark job per call, so a report
+that reads four tables would pay four jobs before its query starts.  A new
+table needs an entry in ``schemas.py``; ``load_table`` refuses names it has
+no schema for.
 """
 
 from __future__ import annotations
@@ -12,15 +19,28 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import schemas
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-generated parquet table (TESTDATA.md)."""
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Read one synthetic parquet test table (TESTDATA.md) through its
+    pinned schema, ``schemas.TABLE_SCHEMAS[name]``: building the frame runs
+    no Spark job.  ``events`` first sniffs its parquet footer with pyarrow
+    (no Spark job either) and reads the TIMESTAMP(NANOS) vintage as raw
+    int64 ``ts`` converted to TIMESTAMP_NTZ.  A name without a pinned schema
+    raises ``ValueError``; add the table to ``schemas.py`` first.
+    """
+    if name not in schemas.TABLE_SCHEMAS:
+        raise ValueError(
+            f"no pinned schema for table {name!r}; add it to schemas.TABLE_SCHEMAS"
+        )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events" and _events_ts_is_nanos(path):
+        raw = spark.read.schema(schemas.EVENTS_RAW_SCHEMA).parquet(path)
+        return raw.withColumn("ts", F.expr(_NS_TO_NTZ))
+    return spark.read.schema(schemas.TABLE_SCHEMAS[name]).parquet(path)
 
 
 # TIMESTAMP_NTZ epoch reconstruction from int64 nanoseconds, truncating to
@@ -50,16 +70,6 @@ def _events_ts_is_nanos(path: str) -> bool:
         t = pq.read_schema(path).field("ts").type
         _EVENTS_TS_IS_NANOS[path] = str(t) in ("int64", "timestamp[ns]")
     return _EVENTS_TS_IS_NANOS[path]
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if not _events_ts_is_nanos(path):
-        return spark.read.parquet(path)
-    raw = spark.read.schema(schemas.EVENTS_RAW_SCHEMA).parquet(path)
-    return raw.withColumn("ts", F.expr(_NS_TO_NTZ))
 
 
 _TABLE_REF = re.compile(

@@ -148,7 +148,7 @@ def read_events_stream(
     stand-in for Kafka (same DataFrame surface; swap `format('kafka')` +
     from_json(value) in production).
 
-    Same ts-encoding sniff as sources.readers._load_events: legacy fixtures
+    Same ts-encoding sniff as sources.readers.load_table: legacy fixtures
     store TIMESTAMP(NANOS) (read as int64 + reconstruct; Spark's reader
     rejects nanos outright), current ones plain TIMESTAMP(MICROS).  The
     file source wants a DIRECTORY (it tails new files), while the fixture

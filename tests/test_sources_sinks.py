@@ -229,6 +229,36 @@ def test_observed_clean_counters(spark):
     assert got["blank_company"] == 2  # '' and NULL both count
 
 
+def test_observed_clean_then_mllib_fit(spark):
+    """An observed_clean pass leaves the session serializable: a fitted LR
+    model keeps the session in its training summary and ships itself in
+    transform's closure, so an MLlib fit + transform on the cleaned frame
+    must still run in the same session."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark import (
+        schemas,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (
+        cleaning,
+    )
+
+    df = spark.createDataFrame(
+        [(str(i), "" if i % 5 == 0 else "Acme", float(i % 7), float(i % 2),
+          "oops" if i == 3 else None) for i in range(40)],
+        f"id string, company string, x double, label double, {schemas.CORRUPT_COL} string",
+    )
+    cleaned, obs = cleaning.observed_clean(df, required=["company"])
+    assert len(cleaned.collect()) == 31  # 8 blank, 1 corrupt
+    assert obs.get["rows_in"] == 40
+
+    feats = VectorAssembler(inputCols=["x"], outputCol="features").transform(cleaned)
+    model = LogisticRegression(maxIter=5).fit(feats)
+    scored = model.transform(feats).select("id", "prediction").collect()
+    assert len(scored) == 31
+
+
 def test_foreach_batch_parquet_sink(spark, tmp_path):
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (
         readers as R,
