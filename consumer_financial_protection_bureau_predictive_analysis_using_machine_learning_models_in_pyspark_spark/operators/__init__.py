@@ -3,13 +3,9 @@ tested function over DataFrames (SURVEY §2's inventory re-expressed)."""
 
 from . import (  # noqa: F401
     cleaning,
-    dedup,
     encode,
     metrics,
-    multimodal,
     sampling,
-    similarity,
     skew,
-    text,
     windows,
 )

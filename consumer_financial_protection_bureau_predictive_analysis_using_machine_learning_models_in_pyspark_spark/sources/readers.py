@@ -18,8 +18,9 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import schemas
 
@@ -37,10 +38,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             f"no pinned schema for table {name!r}; add it to schemas.TABLE_SCHEMAS"
         )
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events" and _events_ts_is_nanos(path):
-        raw = spark.read.schema(schemas.EVENTS_RAW_SCHEMA).parquet(path)
-        return raw.withColumn("ts", F.expr(_NS_TO_NTZ))
+    if name == "events":
+        schema, ts = events_encoding(path)
+        raw = spark.read.schema(schema).parquet(path)
+        return raw if ts is None else raw.withColumn("ts", ts)
     return spark.read.schema(schemas.TABLE_SCHEMAS[name]).parquet(path)
+
+
+def events_encoding(path: str) -> tuple[StructType, Column | None]:
+    """How to read the events parquet file at ``path``: the schema to read
+    it with, and the expression that rebuilds ``ts`` as TIMESTAMP_NTZ
+    (``None`` when the file's ``ts`` already is one).  The one owner of the
+    events encoding, shared by batch loads and the events stream; the
+    footer sniff runs no Spark job."""
+    if _events_ts_is_nanos(path):
+        return schemas.EVENTS_RAW_SCHEMA, F.expr(_NS_TO_NTZ)
+    return schemas.TABLE_SCHEMAS["events"], None
 
 
 # TIMESTAMP_NTZ epoch reconstruction from int64 nanoseconds, truncating to

@@ -80,3 +80,24 @@ def test_loads_and_fixture_plan_launch_no_spark_job(spark, sf_dir):
     # job-start events reach the status tracker through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_events_stream_build_launches_no_spark_job(spark, sf_dir):
+    """Starting the events stream reads through the pinned events encoding
+    (readers.events_encoding): building the streaming frame runs no
+    schema-inference job."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
+        jobs as SJ,
+    )
+
+    sc = spark.sparkContext
+    group = f"events-stream-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build the events stream without starting it")
+    try:
+        stream = SJ.read_events_stream(spark, sf_dir)
+        assert stream.isStreaming
+        assert stream.schema["ts"].dataType.typeName() == "timestamp"
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
