@@ -12,8 +12,8 @@ overwrites of the committed round artifact).
 
 Query set: the flagship complaint pipeline plus one representative per
 operator family (relational agg/join/window, set ops, JSON/event-time,
-streaming, graph, layout, ML train+score) so a regression in any engine
-subsystem shows up in the headline number.
+text analysis, dedup, similarity search, ML train+score) so a regression
+in any engine subsystem shows up in the headline number.
 """
 
 from __future__ import annotations
@@ -58,22 +58,85 @@ BENCH_QUERIES = [
     "orders_profile",
     "orders_profile_approx",
     "csv_roundtrip_customer",
-    # round-4 breadth: robust outliers + approximate twins
+    # text / dedup / similarity (LLM-data-pipeline surface)
+    "docs_token_stats",
+    "docs_corpus_datasheet",
+    "docs_tfidf_keywords",
+    "docs_quality_score",
+    "docs_language_id",
+    "docs_decontaminate",
+    "docs_pack_bins",
+    "docs_chunk",
+    "docs_filter_chain",
+    "docs_quality_classifier",
+    "docs_quality_classifier_agreement",
+    "docs_quality_classifier_sweep",
+    "docs_repetition_stats",
+    "docs_token_budget_sample",
+    "dedup_exact",
+    "dedup_incremental",
+    "dedup_incremental_bloom",
+    "dedup_incremental_minhash",
+    "dedup_incremental_minhash_prebuilt",
+    "dedup_minhash_lsh",
+    "dedup_minhash_fast",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "dedup_components",
+    "ann_cosine_topk",
+    "ann_cosine_topk_fast",
+    "ann_ivf_topk",
+    "ann_ivf_prebuilt_topk",
+    "ann_range_search",
+    "ann_recall_eval",
+    "ann_ivf_delete_compact",
+    "ann_int8_rerank_topk",
+    "ann_pq_adc_topk",
+    "ann_ivfpq_topk",
+    # round-4 breadth: temperature mixture + curriculum + manifest
+    "docs_temperature_mix",
+    "docs_quality_deciles",
+    "docs_pack_manifest",
+    "docs_pack_sequences",
+    "docs_delete_impact",
+    "docs_domain_reweight",
+    "docs_dsir_importance",
+    "docs_dsir_sample",
+    "docs_dsir_score_batch",
+    "docs_reweighted_sample",
+    "docs_training_export",
+    "docs_bm25_rank",
+    "docs_hybrid_rrf",
+    "ann_semantic_dedup",
+    "ann_semantic_canonical",
+    "ann_semantic_canonical_fast",
+    "ann_semantic_dedup_incremental",
+    "ann_semantic_dedup_incremental_lsh",
+    "docs_quality_deciles_approx",
     "events_value_outliers_mad",
     "events_value_outliers_mad_approx",
     "events_active_users_approx",
     "stream_static_enrich",
-    # round-3 breadth: reshape + SCD2 + rolling event statistics
+    # round-3 breadth: reshape + deterministic sampling + LM scoring
     "orders_status_pivot",
     "lineitem_unpivot",
+    "docs_stratified_sample",
+    "docs_unigram_logprob",
+    "docs_boilerplate_spans",
     "orders_scd2",
     "orders_rfm_segments",
     "events_rolling_mean_dev",
     "events_value_histogram",
+    "docs_weighted_sample",
+    "docs_weighted_topk_sample",
     "customer_halves_full_outer",
     "events_active_users",
     "complaints_monthly_trend",
-    # streaming
+    # multimodal + streaming
+    "media_meta_stats",
+    "media_decode_features",
+    "media_resize_images",
+    "docs_shard_export",
     "stream_windowed_counts",
     # layout / maintenance (r6)
     "orders_mv_merge",
@@ -81,19 +144,30 @@ BENCH_QUERIES = [
     "lineitem_skipping_stats",
     "stream_mv_maintenance",
     "stream_join_mv",
+    # text/curation (r6)
+    "docs_bigram_pmi",
+    "docs_quality_zscore",
+    "docs_vocab_coverage",
+    "dedup_canonical_best",
+    "dedup_canonical_delete_promote",
     # graph / quality / interchange (r6 second wave)
     "supplier_copurchase_pagerank",
     "part_copurchase_triangles",
     "star_constraint_audit",
     "orders_snapshot_diff",
+    "docs_snapshot_diff",
     "orc_roundtrip_part",
     "events_purchase_attribution",
+    "docs_bpe_merges",
+    "docs_bpe_encode",
+    "docs_bpe_vocab",
     "part_association_rules",
     "lineitem_numeric_corr",
     "orders_price_psi",
     "orders_price_ks",
     "orders_status_priority_chi2",
     "stream_quality_gate",
+    "stream_quality_classifier",
     "events_top_session_paths",
     "supplier_strong_components",
     "part_similar_items",
@@ -104,11 +178,38 @@ BENCH_QUERIES = [
     "ml_timely_lr_calibration",
     "ml_timely_lr_threshold_sweep",
     "ml_response_dt",
-    # r7 part 2: ops/audit
+    # r7 part 2: loader-side layout + ops/audit
+    "docs_epoch_shuffle",
     "events_peak_concurrency",
     "orders_partition_checksums",
     "stream_checksum_mv",
     "orders_replica_reconcile",
+    "dedup_cluster_size_stats",
+    "media_audio_fingerprint",
+    "media_phash_dedup",
+    "media_phash_near_pairs",
+    # r11 additions
+    "docs_decontaminate_fuzzy",
+    "docs_padded_batches",
+    "docs_curation_e2e",
+    "stream_curation_e2e",
+    "dedup_edit_distance_canonical",
+    "ann_ivf_rebuild_policy",
+    # r12 additions
+    "docs_curation_restartable",
+    "docs_decontaminate_fuzzy_prebuilt",
+    "stream_decontaminate_fuzzy",
+    "docs_padded_batch_manifest",
+    "dedup_containment_collapsed",
+    "dedup_minhash_canonical",
+    # r13 additions: SemDeDup clone-collapse governor + dup-factor dispatch
+    "ann_semantic_collapsed",
+    "ann_semantic_collapsed_fast",
+    "ann_semantic_auto",
+    "dedup_containment_auto",
+    "dedup_minhash_auto",
+    "docs_decontaminate_fuzzy_collapsed",
+    "docs_decontaminate_fuzzy_auto",
     # r8 coverage sweep (VERDICT r7 item 3): every remaining catalog
     # entry is benched unless it appears in BENCH_EXCLUDED with a reason.
     # -- reference-parity complaints pipeline
@@ -149,10 +250,38 @@ BENCH_QUERIES = [
     "q19_disjunctive_revenue",
     "q20_potential_promotion",
     "q22_sales_opportunity",
+    # -- text / dedup remainder
+    "docs_fingerprints",
+    "docs_pii_redact",
+    "docs_domain_mix",
+    "dedup_canonical_docs",
+    "dedup_jaccard_blocked",
+    "dedup_components_star",
+    "ann_lsh_topk",
+    "media_frame_sample",
     # -- r8 additions
+    "docs_hashed_features",
+    "dedup_edit_distance",
+    "docs_contamination_report",
+    "stream_phash_dedup",
     "orders_delete_propagation",
     "lineitem_hilbert_layout",
+    "docs_bigram_condprob",
+    "dedup_containment",
+    "dedup_containment_canonical",
     # -- r9 additions
+    "docs_substring_dedup",
+    "docs_substring_clean_stats",
+    "dedup_incremental_containment",
+    "dedup_incremental_containment_prebuilt",
+    "media_text_pair_filter",
+    "docs_substring_excise",
+    "dedup_lsh_recall_eval",
+    "docs_length_buckets",
+    "docs_substring_decontaminate",
+    "stream_substring_decontaminate",
+    "docs_dedup_rate_by_source",
+    "docs_self_repetition_spans",
     "events_bot_users",
     "stream_bot_users",
     # -- streaming remainder (availableNow lifecycles; same harness
@@ -162,14 +291,25 @@ BENCH_QUERIES = [
     "stream_dedup_events",
     "stream_running_user_stats",
     "stream_click_purchase_join",
+    "stream_semantic_dedup",
     "stream_minute_rollup",
     # -- r10 second-window additions
+    "dedup_containment_canonical_fast",
+    "docs_unimax_mix",
     "customer_k_anonymity",
     "customer_k_anonymize",
+    "ann_hard_negatives",
+    "docs_ref_perplexity_buckets",
+    "docs_unimax_sample",
+    "docs_tokenizer_fertility",
+    "stream_ref_perplexity",
     "customer_l_diversity",
     "events_cusum_drift",
+    "ann_ivf_nprobe_sweep",
+    "docs_quality_conformal",
     "events_forecast_snaive",
     "stream_cusum_drift",
+    "docs_mix_drift_kl",
 ]
 
 # Catalog entries deliberately NOT benched, with the reason committed
@@ -204,7 +344,7 @@ BENCH_EXCLUDED = {
     ),
     "ml_lda_topics": (
         "online-LDA fit; corpus featurization path is benched via"
-        " ml_timely_lr, the fit loop is MLlib's"
+        " ml_timely_lr / docs_tfidf_keywords, the fit loop is MLlib's"
     ),
     "ml_lda_topics_em": (
         "EM-LDA parity twin (k=25, reference settings) of ml_lda_topics;"
@@ -220,19 +360,46 @@ BENCH_EXCLUDED = {
 # Isolated drift panel (VERDICT r8 "What's wrong" #2): the full bench's
 # wall numbers drift ~1.3× round-over-round with session load (199 queries
 # share one JVM), so a genuine 1.3–1.9× single-query regression is
-# indistinguishable from box load there.  This fixed panel — the ≥1.5×
-# r8/r7 movers — is re-run SERIALLY in a
+# indistinguishable from box load there.  This fixed panel — the twin
+# anchor pairs plus every ≥1.5× r8/r7 mover — is re-run SERIALLY in a
 # fresh session at round close (``python bench.py --panel``), 3 runs per
 # query, medians recorded in the same BENCH_LOCAL artifact under
 # ``panel``.  Panel members also get a tighter 1.3× remeasure bar in the
 # full bench run (vs 2× default).
 PANEL_QUERIES = [
+    # twin anchor pairs (exact anchor + production twin)
+    "ann_cosine_topk",
+    "ann_cosine_topk_fast",
+    "dedup_minhash_lsh",
+    "dedup_minhash_fast",
+    "ann_semantic_canonical",
+    "ann_semantic_canonical_fast",
+    "dedup_incremental",
+    "dedup_incremental_bloom",
+    "dedup_containment_canonical",
+    "dedup_containment_canonical_fast",
     # r8/r7 ≥1.5× movers — reproduce-or-clear
+    "docs_domain_reweight",
+    "docs_dsir_importance",
+    "docs_dsir_sample",
+    "docs_dsir_score_batch",
     "stream_static_enrich",
     "stream_windowed_counts",
+    "docs_training_export",
+    "docs_stratified_sample",
+    "docs_boilerplate_spans",
+    "docs_pack_manifest",
     "q1_pricing_summary",
+    "ann_semantic_dedup",
     "lineitem_unpivot",
+    "docs_bm25_rank",
+    "ann_semantic_dedup_incremental",
     "orders_rfm_segments",
+    "docs_weighted_topk_sample",
+    # r10 ≥1.5× movers — reproduce-or-clear (VERDICT r10 "What's wrong" #2)
+    "docs_hashed_features",
+    "docs_bigram_condprob",
+    "media_frame_sample",
 ]
 
 
@@ -248,17 +415,38 @@ PANEL_QUERIES = [
 # (staging + checkpoint) and is a no-op for entries without any; the
 # payload carries ``cold_pinned`` — the timed entries that held a work
 # dir — so the artifact says which numbers hold that contract.
-# The offline z-order layout lives outside that registry and is NOT
-# purged: offline-built-once is its documented lifecycle.
+# Deliberately-warm serving memos — the prebuilt IVF / MinHash /
+# fuzzy-benchmark indexes built in _prime_session, and the offline
+# z-order layout — live outside that registry and are NOT purged:
+# offline-built-once is their documented lifecycle, and priming makes them
+# warm on the FIRST run too.
 # ---------------------------------------------------------------------------
 
 
 def _prime_session(spark, sf_dir: str, cpus: str) -> None:
-    """One-time JVM/daemon warmup shared by bench + panel."""
+    """One-time JVM/daemon/offline-index warmup shared by bench + panel."""
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     spark.range(64).repartition(int(cpus)).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        text_queries as _tq,
+    )
+
+    _tq.ivf_index_for(spark, sf_dir)
+    _tq.ivf_index_for(spark, sf_dir, n_assign=3)
+    _tq.ivf_index_for(spark, sf_dir, n_assign=3, where="pmod(vec_id, 5) != 0")
+    _tq.minhash_index_for(spark, sf_dir)
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        breadth12 as _b12,
+    )
+
+    # frozen fuzzy-decontamination benchmark index: the *_fuzzy_prebuilt /
+    # stream_decontaminate_fuzzy entries measure PROBE cost by design, so
+    # their index must be warm on the first timed run too (previously it
+    # was cold on run 1 and warm on any remeasure — the same
+    # round-over-round oscillation the cold reset pins from the other side)
+    _b12.fuzzy_bench_index_for(spark, sf_dir)
 
 
 def run_panel(commit: bool = False) -> None:
@@ -317,8 +505,8 @@ def run_panel(commit: bool = False) -> None:
     # r12 lesson: panel-vs-prev-FULL is apples-to-oranges (fresh cold
     # session vs a 250-query warm session) — all 7 of r11's "reproduced"
     # flags dissolved under idle isolated re-measure + plan-fingerprint
-    # identity (tools/isolate_one.py, tools/ab.py,
-    # tools/ADJUDICATE_r12.json).  Keep the full-bench compare for continuity,
+    # identity (tools/isolate_one.py, tools/plan_fingerprint.py,
+    # ADJUDICATE_r12.json).  Keep the full-bench compare for continuity,
     # but ALSO record the like-for-like compare against the previous
     # round's PANEL medians; a flag that appears in BOTH views (and on
     # an idle box) is worth a bisect, one that appears only against the
@@ -395,7 +583,11 @@ def main(commit: bool = False) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers so q1 doesn't pay one-time session
-    # cost, and spawn the Python worker pool
+    # cost, spawn the Python worker pool, and build the offline serving
+    # indexes (prebuilt-IVF / corpus MinHash): their build is an OFFLINE
+    # lifecycle — the steady-state serving cost is what the *_prebuilt
+    # entries measure, and their fit-included anchors right above them
+    # keep the comparison honest
     _prime_session(spark, sf_dir, cpus)
 
     timings: dict[str, float] = {}
@@ -450,9 +642,9 @@ def main(commit: bool = False) -> None:
             print(f"# REGRESSION {name}: {prev:.3f}s -> {cur:.3f}s", file=sys.stderr)
     # per twin pair (QuerySpec.twin_of; QUERIES.md `twin of` column): the
     # exact-anchor / production-twin wall ratio, committed so the
-    # "exact entry costs Nx its approximate twin" claim (e.g.
-    # orders_profile vs orders_profile_approx) is a regression-guarded
-    # number, not a one-off VERDICT observation.
+    # "verification entry costs Nx the serving path" claim (e.g.
+    # ann_semantic_canonical 3.23 s vs _fast 1.40 s in r6) is a
+    # regression-guarded number, not a one-off VERDICT observation.
     twin_speedup = {}
     for name, spec in CATALOG.items():
         if spec.twin_of and name in timings and spec.twin_of in timings:

@@ -5,14 +5,14 @@ Protection-Bureau-Predictive-Analysis-using-machine-learning-models-in-PySpark).
 The reference (surveyed in SURVEY.md) is a set of one-off PySpark scripts over
 one wide complaints table.  This package rebuilds that surface as named,
 parameterized, tested operators — DataFrame/SQL-first, Catalyst-optimized,
-designed for 100 TB scale — plus relational, graph, layout and
-streaming-window extensions.
+designed for 100 TB scale — plus the large-scale training-data-pipeline
+extensions (dedup, similarity search, text analysis, streaming windows).
 
 Layout:
     session     — SparkSession factory (AQE on, sane shuffle partitions)
     schemas     — explicit StructType schemas (no inference in the engine)
     sources/    — readers (parquet/json), sinks, the complaints fixture
-    functions/  — column-expression builders (text cleaning, Hilbert index)
+    functions/  — column-expression builders (text cleaning, vector math)
     operators/  — named relational + composite operators (SURVEY.md §2)
     plans/      — the query catalog: name -> (spark callable, oracle SQL)
     ml/         — parameterized ML pipelines (SURVEY.md §2.9)

@@ -1,4 +1,4 @@
-"""Column-expression builders: native text cleaning for the NLP path and
-the Hilbert-curve index shared between Spark queries and DuckDB oracles."""
+"""Column-expression builders shared between Spark queries and the DuckDB
+oracles (single source of truth for hash/tokenize arithmetic)."""
 
 from . import textfns  # noqa: F401

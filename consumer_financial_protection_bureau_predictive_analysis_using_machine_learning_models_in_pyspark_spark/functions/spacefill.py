@@ -8,9 +8,10 @@ grid-adjacent, so range-bucketed files get strictly tighter bounding
 boxes at the same bit depth (the reason newer lake formats offer
 OPTIMIZE ... HILBERT alongside ZORDER).
 
-ONE unrolled step program (the classic xy2d state machine, ~7 steps per
-bit level; all arithmetic — the quadrant Gray code (3·rx) XOR ry is folded
-to ``3·rx + ry − 2·rx·ry`` so no dialect bitwise ops are needed) rendered
+Same generation discipline as functions/hashing.py: ONE unrolled step
+program (the classic xy2d state machine, ~7 steps per bit level; all
+arithmetic — the quadrant Gray code (3·rx) XOR ry is folded to
+``3·rx + ry − 2·rx·ry`` so no dialect bitwise ops are needed) rendered
 into a Spark lateral-alias projection AND nested DuckDB subqueries, so
 the engine column and the oracle can never drift.  Tested by exhaustive
 bijection + unit-step adjacency against the pure-Python reference.
@@ -19,6 +20,8 @@ bijection + unit-step adjacency against the pure-Python reference.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .hashing import _DuckDBDialect, _SparkDialect
 
 
 # ---------------------------------------------------------------------------
@@ -57,12 +60,12 @@ def hilbert_xy2d_py(x: int, y: int, bits: int) -> int:
 
 
 def _hilbert_program(
-    xa: str, ya: str, prefix: str, idiv: str, bits: int = 8
+    xa: str, ya: str, prefix: str, dialect, bits: int = 8
 ) -> tuple[list[tuple[str, str]], str]:
     """Emit ``(steps, final_name)`` computing the Hilbert index of the
     two integer-binned SQL expressions ``xa``/``ya`` (each in
-    [0, 2^bits)).  Each step may reference earlier names; ``idiv`` is the
-    dialect's integer-division operator (Spark ``div``, DuckDB ``//``)."""
+    [0, 2^bits)).  Each step may reference earlier names."""
+    d = dialect
     items: list[tuple[str, str]] = []
 
     def emit(name: str, expr: str) -> str:
@@ -74,8 +77,8 @@ def _hilbert_program(
     dd = emit("d0", "cast(0 as bigint)")
     for lvl in range(bits):
         s = 1 << (bits - 1 - lvl)
-        rx = emit(f"rx{lvl}", f"(({x} {idiv} {s}) % 2)")
-        ry = emit(f"ry{lvl}", f"(({y} {idiv} {s}) % 2)")
+        rx = emit(f"rx{lvl}", f"({d.idiv(x, s)} % 2)")
+        ry = emit(f"ry{lvl}", f"({d.idiv(y, s)} % 2)")
         # (3·rx) XOR ry over {0,1}² == 3·rx + ry − 2·rx·ry (pure arithmetic)
         dd = emit(
             f"d{lvl + 1}",
@@ -115,7 +118,7 @@ def with_hilbert(
     ``x_col``/``y_col`` (each must already be in [0, 2^bits) — the
     binning is the caller's min-max scaling, same as zorder_values).
     Native integer SQL, linear Project chain, no UDF, no shuffle."""
-    steps, final = _hilbert_program(x_col, y_col, f"__hb_{out_col}", "div", bits)
+    steps, final = _hilbert_program(x_col, y_col, f"__hb_{out_col}", _SparkDialect(), bits)
     items = [f"{expr} AS {name}" for name, expr in steps]
     keep = df.columns
     return df.selectExpr("*", *items, f"{final} AS {out_col}").select(*keep, out_col)
@@ -133,52 +136,13 @@ def hilbert_duckdb_subquery(
     ``x_col``/``y_col``) in nested subqueries computing the Hilbert
     index into ``out_name``.  Returns a parenthesized subquery selecting
     ``carry_cols + [out_name]`` (nested because DuckDB inlines lateral
-    aliases; see _steps_to_nested_subqueries)."""
-    steps, final = _hilbert_program(x_col, y_col, f"__hb_{out_name}", "//", bits)
-    return _steps_to_nested_subqueries(
+    aliases; the wrapping is hashing.steps_to_nested_subqueries — one
+    shared implementation for every step program)."""
+    from .hashing import steps_to_nested_subqueries
+
+    steps, final = _hilbert_program(
+        x_col, y_col, f"__hb_{out_name}", _DuckDBDialect(), bits
+    )
+    return steps_to_nested_subqueries(
         inner_sql, list(carry_cols), [x_col, y_col], steps, final, out_name, "__hbq"
     )
-
-
-# ---------------------------------------------------------------------------
-# DuckDB rendering
-# ---------------------------------------------------------------------------
-#
-# DuckDB's binder resolves lateral column aliases by INLINING the
-# referenced expression (not by introducing a projection), so the same
-# step list rendered as one flat select list re-creates the exponential
-# blowup (a 20-row hash query ran >2 min before being killed).  Nested
-# subqueries bind as real projections and stay linear (measured: 96
-# chained levels with double references bind in ~17 ms), so the DuckDB
-# rendering wraps each step in its own subquery level, carrying only the
-# columns still LIVE (referenced by a later step or requested by the
-# caller).
-
-
-def _steps_to_nested_subqueries(
-    inner_sql: str,
-    carry_cols: list[str],
-    input_cols: list[str],
-    steps: list[tuple[str, str]],
-    final: str,
-    out_name: str,
-    alias_prefix: str,
-) -> str:
-    """Render a ``(name, expr)`` step program over ``inner_sql`` as one
-    nested-subquery-per-step chain.
-
-    Each level carries ``carry_cols`` ∪ ``input_cols`` ∪ any earlier
-    step name still referenced by a later expr (a conservative substring
-    scan).  Returns a parenthesized subquery selecting
-    ``carry_cols + [final AS out_name]``.
-    """
-    q = f"({inner_sql})"
-    for i, (name, expr) in enumerate(steps):
-        later = " ".join(e for _, e in steps[i + 1 :])
-        live = [c for c in carry_cols if c not in input_cols] + list(input_cols)
-        for prev_name, _ in steps[:i]:
-            if prev_name in later or prev_name == final:
-                live.append(prev_name)
-        q = f"(select {', '.join(live)}, {expr} as {name} from {q} as {alias_prefix}{i})"
-    outer = ", ".join(list(carry_cols) + [f"{final} as {out_name}"])
-    return f"(select {outer} from {q} as {alias_prefix}f)"

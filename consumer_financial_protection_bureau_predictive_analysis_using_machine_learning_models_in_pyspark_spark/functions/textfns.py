@@ -6,12 +6,94 @@ redaction runs, strip non-alpha, drop 1-char tokens).  Every builder here is
 a native column expression — JVM-side, whole-stage-codegen'd, no Python
 worker hop — which is the single biggest scale win over the reference's NLP
 path (SURVEY §4.3).
+
+Hash builders keep Spark and DuckDB bit-identical: md5 → first 14 hex chars
+(56 bits, fits bigint) → mod 2^31-1, all arithmetic within int64 so ANSI
+mode never overflows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Mersenne prime 2^31-1: hash/permutation modulus.  (a*h+b) with a,b,h < p
+# stays under 2^62 — no int64 overflow in either engine.
+HASH_P = 2_147_483_647
+
+# English stopwords used by quality scoring (a tiny, pinned subset — the full
+# StopWordsRemover list stays in the ML pipeline where parity doesn't need
+# DuckDB to agree).
+STOPWORDS_EN = ["the", "a", "and", "of", "to", "is", "in", "it"]
+
+LANG_STOPWORDS = {
+    "en": ["the", "a", "and", "of", "to", "is"],
+    "es": ["el", "la", "de", "y", "que", "en"],
+    "de": ["der", "die", "und", "das", "ist", "ein"],
+    "fr": ["le", "les", "des", "et", "est", "une"],
+}
+
+
+def tokens(c: str | Column) -> Column:
+    """Whitespace tokenization of lowercased, trimmed text."""
+    col = F.col(c) if isinstance(c, str) else c
+    return F.split(F.lower(F.trim(col)), r"\s+")
+
+
+def distinct_tokens(c: str | Column) -> Column:
+    return F.array_distinct(tokens(c))
+
+
+def shingles(toks: Column, n: int = 3) -> Column:
+    """Word n-gram shingles: [t1 t2 t3, t2 t3 t4, ...] (distinct).
+
+    Token-set similarity is useless on a small vocabulary (every document
+    looks like every other); shingles are sequence-sensitive, so only true
+    near-duplicates collide.  Pure array expressions — no UDF.
+    """
+    gram = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda j: F.concat_ws(
+                " ", *[F.element_at(toks, j + i) for i in range(n)]
+            ),
+        )
+    )
+    # Guard: F.sequence(1, size-2) runs DESCENDING when size < 3 (Spark picks
+    # step=-1 if start > stop) — short docs must yield no shingles instead.
+    return F.when(F.size(toks) >= n, gram).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
+def token_hash(c: str | Column) -> Column:
+    """56-bit md5 prefix → bigint → mod 2^31-1; identical in DuckDB via
+    ``CAST('0x' || substr(md5(t),1,14) AS BIGINT) % 2147483647``."""
+    col = F.col(c) if isinstance(c, str) else c
+    return (
+        F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint") % HASH_P
+    )
+
+
+def token_hash_fast(c: str | Column) -> Column:
+    """xxhash64 → non-negative mod 2^31-1: the engine's scale-path hash.
+
+    One JVM-native 64-bit hash per shingle vs md5's hex digest + string
+    slice + base conversion — same [0, p) range contract as token_hash, an
+    order of magnitude cheaper per row.  No DuckDB twin exists for xxhash64,
+    so oracle-checked queries keep the md5 builder; pipelines that only need
+    self-consistent hashing (minhash, bucketing) should prefer this one.
+    """
+    col = F.col(c) if isinstance(c, str) else c
+    return F.pmod(F.xxhash64(col), F.lit(HASH_P))
+
+
+def content_fingerprint(c: str | Column) -> Column:
+    """56-bit content fingerprint of whitespace-normalized lowercase text —
+    the exact-dedup key."""
+    col = F.col(c) if isinstance(c, str) else c
+    norm = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+    return F.conv(F.substring(F.md5(norm), 1, 14), 16, 10).cast("bigint")
 
 
 def clean_text_tokens(c: str | Column) -> Column:

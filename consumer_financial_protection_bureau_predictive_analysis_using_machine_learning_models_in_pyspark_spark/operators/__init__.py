@@ -3,9 +3,13 @@ tested function over DataFrames (SURVEY §2's inventory re-expressed)."""
 
 from . import (  # noqa: F401
     cleaning,
+    dedup,
     encode,
     metrics,
+    multimodal,
     sampling,
+    similarity,
     skew,
+    text,
     windows,
 )

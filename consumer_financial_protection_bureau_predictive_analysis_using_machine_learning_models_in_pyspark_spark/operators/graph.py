@@ -1,11 +1,11 @@
-"""Graph analytics over co-occurrence graphs: weighted PageRank,
-triangle counting / clustering coefficients, association rules, item
-similarity and connected components.
+"""Graph analytics over co-occurrence graphs: weighted PageRank and
+triangle counting / clustering coefficients.
 
 The reference's pipelines stop at flat-table ML (SURVEY §2.9); these
-operators extend the engine to graph-shaped signals — entity importance
-ranking (PageRank over a co-occurrence graph) and community density
-(triangles / clustering coefficient), both expressed as pure DataFrame plans so Catalyst plans the
+operators extend the engine to the graph-shaped curation signals a
+training-data pipeline needs — entity importance ranking (PageRank over a
+co-occurrence graph) and community density (triangles / clustering
+coefficient), both expressed as pure DataFrame plans so Catalyst plans the
 joins and AQE handles skew.
 
 Scale posture (100 TB):
@@ -23,7 +23,8 @@ Scale posture (100 TB):
   sum and redistributed uniformly — the standard correction, without which
   total rank leaks each step.
 
-Numeric parity discipline: every cross-engine float is either an IEEE-exact
+Numeric parity discipline (the unigram_logprob lesson — see
+operators/text.py): every cross-engine float is either an IEEE-exact
 int/int division, a decimal fold, or a double expression with identical
 literals and association order rounded before comparison.  Edge shares are
 ROUND(w/W, 6) decimals; per-iteration ranks are ROUND(..., 8) decimals so
@@ -443,140 +444,3 @@ def jaccard_similar_items(
         .filter(F.col("rank") <= top_k)
         .select("item", "neighbor", "n_both", "jaccard", F.col("rank").cast("int").alias("rank"))
     )
-
-
-# ---------------------------------------------------------------------------
-# Connected components
-# ---------------------------------------------------------------------------
-
-_CC_MAX_ITER = 20  # label-propagation round budget (graph diameter bound)
-_CC_DRIVER_MAX_EDGES = 500_000  # at or below: driver union-find
-
-
-def _components_union_find(edges: list[tuple]) -> list[tuple]:
-    """Driver-side min-root union-find with path compression: merges
-    always attach the larger root under the smaller, so every set's root
-    IS its minimum id — identical labels to the distributed fixpoint."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    nodes = set()
-    for a, b in edges:
-        nodes.add(a)
-        nodes.add(b)
-        ra, rb = find(a), find(b)
-        if ra == rb:
-            continue
-        if rb < ra:
-            ra, rb = rb, ra
-        parent[rb] = ra
-    return [(n, find(n)) for n in nodes]
-
-
-def connected_components(pairs: DataFrame) -> DataFrame:
-    """Connected components of an undirected edge list ``(doc_a, doc_b)``:
-    (doc_id, component) where component = min doc_id reachable through
-    the edges.
-
-    Two execution paths behind one contract:
-
-    - **Bounded driver union-find** when the edge list is small.  The
-      iterative path pays ~0.4 s of fixed job overhead PER ROUND times the
-      graph diameter (measured: a diameter-10 graph of 2.5 k edges took 11
-      rounds = 5 s distributed, <50 ms as driver union-find).  The
-      collect is gated by a MEASURED count against ``_CC_DRIVER_MAX_EDGES``
-      (500 k edges ≈ 8 MB of long pairs — the same counted-threshold
-      discipline as ``skew.broadcast_if_bounded``); min-root union by
-      rank yields labels identical to the distributed fixpoint
-      (oracle-checked).
-    - **Iterative min-label propagation** above the threshold: each round
-      every node takes the min of its own label and its neighbors';
-      labels only decrease, so the fixpoint is the exact per-component
-      min (deterministic — oracle-safe).  Rounds needed = graph diameter
-      ≤ ``_CC_MAX_ITER``.  Each round is one equi-join + one aggregation,
-      both shuffle-partitioned by node id; a per-round ``localCheckpoint``
-      truncates the plan so lineage doesn't snowball.
-    """
-    # materialize pairs ONCE: the undirected edge union references it from
-    # two branches, and each propagation round scans the edges again
-    p = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_edges = p.count()  # materializes the persist it needs anyway
-    if n_edges <= _CC_DRIVER_MAX_EDGES:
-        from pyspark.sql import types as T
-
-        dt = pairs.schema["doc_a"].dataType
-        labels = _components_union_find([(r.a, r.b) for r in p.collect()])
-        out = pairs.sparkSession.createDataFrame(
-            labels,
-            T.StructType(
-                [
-                    T.StructField("doc_id", dt),
-                    T.StructField("component", dt),
-                ]
-            ),
-        )
-        p.unpersist()
-        return out
-    edges = p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    # Convergence signal (r4): labels are monotonically non-increasing, so
-    # the label-sum strictly decreases on every round that changes ANY
-    # label — an exact DECIMAL(38,0) sum comparison replaces the previous
-    # labels⋈labels diff-count, saving one O(N) self-join per round (the
-    # sum is a plain aggregate over the frame the checkpoint just
-    # materialized; decimal keeps it overflow-proof at any id width).
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    for _ in range(_CC_MAX_ITER):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    p.unpersist()
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: no fixpoint within {_CC_MAX_ITER} "
-            "rounds (graph diameter exceeds the round budget) — labels may "
-            "span partial components",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))

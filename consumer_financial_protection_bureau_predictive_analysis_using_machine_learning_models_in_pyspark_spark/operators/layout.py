@@ -297,3 +297,56 @@ def file_extent_report(spark, path: str, cols: tuple[str, ...]) -> DataFrame:
     per_file = df.groupBy("_f").agg(*aggs)
     rank = F.dense_rank().over(Window.orderBy("_f"))
     return per_file.withColumn("file_rank", rank).drop("_f")
+
+
+def epoch_shuffle(
+    df: DataFrame,
+    n_epochs: int = 2,
+    n_shards: int = 8,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Deterministic multi-epoch training shuffle WITHOUT a global sort:
+    for each epoch, every row gets an epoch-salted md5 order key, a
+    shard from that key's first hex digit, and reproducible within-shard
+    ordering by the key — the loader contract a pretraining run needs
+    (each epoch visits the corpus in a different but replayable order,
+    and no two epochs correlate shard assignment or order).
+
+    This is `docs_shard_export`'s hash sharding generalized to the
+    epoch dimension: the permutation is the RANK of md5(epoch:id) —
+    never materialized as a global sort; the writer realizes it as
+    ``partitionBy(shard) + sortWithinPartitions(order_key)``, so each
+    shard sorts locally and the cluster never funnels through one
+    ordered exchange.  Epochs multiply rows here only because the
+    manifest view wants all epochs in one frame; a real loader generates
+    one epoch per pass with the same expressions.
+
+    Returns (epoch INT, shard_id INT, <id_col>, order_key STRING hex).
+    Pure engine-portable string/arith expressions — no bit tricks, no
+    rand() — so SQL oracles replay it exactly.  The shard folds the
+    first 13 hex digits of the key (a 52-bit uniform, not a single
+    digit) so ANY ``n_shards`` — including > 16 and non-divisors of
+    16 — gets a balanced assignment.
+    """
+    key = F.md5(
+        F.concat(
+            F.col("epoch").cast("string"),
+            F.lit(":"),
+            F.col(id_col).cast("string"),
+        )
+    )
+    shard = (
+        F.conv(F.substring(F.col("order_key"), 1, 13), 16, 10).cast("bigint")
+        % F.lit(int(n_shards))
+    ).cast("int")
+    return (
+        df.select(
+            F.col(id_col),
+            F.explode(
+                F.sequence(F.lit(0), F.lit(int(n_epochs) - 1))
+            ).alias("epoch"),
+        )
+        .withColumn("order_key", key)
+        .withColumn("shard_id", shard)
+        .select("epoch", "shard_id", id_col, "order_key")
+    )

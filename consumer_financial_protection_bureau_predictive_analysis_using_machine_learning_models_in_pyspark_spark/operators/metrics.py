@@ -182,8 +182,8 @@ def confusion_matrix_export(
     pulled through the guarded driver collect (``to_pandas_small`` — a
     |classes|-row frame, never the corpus), then written as a CSV golden
     and, when matplotlib is importable, a heatmap PNG.  matplotlib is
-    absent in this container, so the plot follows a strict posture:
-    requesting ``heatmap_path`` without the library
+    absent in this container, so the plot follows the multimodal-codec
+    strict posture: requesting ``heatmap_path`` without the library
     raises ``NotImplementedError`` (fail loudly, don't fake an artifact);
     the CSV — the part a downstream tool actually consumes — never needs
     it.

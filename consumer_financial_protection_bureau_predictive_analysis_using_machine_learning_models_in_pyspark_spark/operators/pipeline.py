@@ -1,20 +1,244 @@
-"""Record-maintenance operators over the star schema:
+"""Training-data pipeline operators (beyond-reference extension surface):
+the corpus-preparation steps between "raw crawl" and "tokenizer input" that
+a large-scale LLM data pipeline runs after dedup/quality scoring.
 
-- fuzzy_match_blocked: blocked entity resolution (equi-join candidate
-                       generation, Levenshtein verify, best match per query);
-- delete_propagation:  right-to-be-forgotten cascade audit from deletion
-                       requests down through orders and lineitems.
+- decontaminate:     flag corpus documents sharing any word n-gram with a
+                     benchmark/eval set (train-test overlap removal);
+- pack_bins:         greedy contiguous sequence packing — assign documents
+                     to fixed token-budget bins for training batch assembly;
+- incremental_dedup: triage a NEW batch of documents against an existing
+                     corpus by content fingerprint (the steady-state form
+                     of dedup: the corpus is already clean, only the delta
+                     needs work);
+- filter_chain:      ordered C4/Gopher-style quality gates with a
+                     first-failure reason per document.
 
-Both are join/window/column-expression compositions — no Python UDFs;
-everything stays inside whole-stage codegen.
+All operators are join/window/column-expression compositions — no Python
+UDFs; everything stays inside whole-stage codegen and shuffles carry only
+narrow (id, gram/fingerprint/count) rows, never document text.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import textfns as TF
+
+
+def decontaminate(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    n: int = 8,
+    text_col: str = "text",
+) -> DataFrame:
+    """Benchmark decontamination: (doc_id, n_hit_grams) for every corpus
+    document sharing at least one word ``n``-gram with the benchmark set —
+    the standard train/test-overlap flagging step (8-gram overlap is the
+    GPT-3/PaLM convention).
+
+    Scale posture: the benchmark side is small by definition (eval suites
+    are KBs-MBs) — its distinct gram set is broadcast, so the 100 TB corpus
+    side never shuffles; each corpus partition streams its exploded grams
+    through a broadcast hash join and the only aggregation state is one
+    count per contaminated doc.
+    """
+    # Tokenize into a NAMED column before building shingles: inlining the
+    # split into the shingle transform re-evaluates it once per element_at
+    # (n+2 splits per row — measured 30× slower at sf0.1); the projection
+    # is a CollapseProject barrier because duplicating the split is not
+    # "cheap", so it runs exactly once per document.
+    grams = TF.shingles(F.col("_toks"), n)  # in-row distinct n-grams
+    bench_grams = (
+        benchmark.select(TF.tokens(text_col).alias("_toks"))
+        .select(F.explode(grams).alias("gram"))
+        .distinct()
+    )
+    # shingles() is distinct within a row, so (doc_id, gram) is already
+    # unique after explode — no cross-row distinct shuffle needed
+    corpus_grams = corpus.select(
+        "doc_id", TF.tokens(text_col).alias("_toks")
+    ).select("doc_id", F.explode(grams).alias("gram"))
+    return (
+        corpus_grams.join(F.broadcast(bench_grams), "gram")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_hit_grams"))
+    )
+
+
+def pack_bins(
+    df: DataFrame,
+    budget: int = 512,
+    part_col: str = "lang",
+    order_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Greedy contiguous sequence packing: documents are laid out in
+    deterministic ``order_col`` order within each ``part_col`` stream and
+    assigned to fixed token-budget bins by running token count —
+    ``bin_id = floor((running_total - doc_tokens) / budget)``, i.e. a doc
+    goes to the bin in which it STARTS (a straddling doc spills its tail
+    into the bin it began in, so a bin exceeds ``budget`` by at most one
+    document's tail — the packing used when documents are concatenated then
+    chunked, à la GPT-style pretraining batches).
+
+    Returns per-bin stats: (part, bin_id, n_docs, bin_tokens).
+
+    Scale posture: one window + one aggregation, both partitioned by
+    ``part_col`` — a single shuffle of (part, order, n_tokens) rows; text
+    never moves.  At 100 TB use a higher-cardinality stream key (e.g.
+    lang × hash-bucket) so no single window partition exceeds an executor.
+    """
+    binned = assign_bins(df, budget, part_col, order_col, text_col)
+    return binned.groupBy(part_col, "bin_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("bin_tokens"),
+    )
+
+
+def assign_bins(
+    df: DataFrame,
+    budget: int = 512,
+    part_col: str = "lang",
+    order_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The per-document half of :func:`pack_bins`: one row per input doc
+    with its (part, order, n_tokens, cum, bin_id) assignment.  Split out
+    (r4) so downstream consumers — the per-bin stats of ``pack_bins`` and
+    the ordered manifest of ``pack_manifest`` — share one window pass."""
+    n_tok = F.size(TF.tokens(text_col)).cast("bigint")
+    w = (
+        Window.partitionBy(part_col)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        df.select(part_col, order_col, n_tok.alias("n_tokens"))
+        .withColumn("cum", F.sum("n_tokens").over(w))
+        .withColumn(
+            "bin_id",
+            F.floor((F.col("cum") - F.col("n_tokens")) / F.lit(float(budget))),
+        )
+    )
+
+
+def pack_manifest(
+    df: DataFrame,
+    budget: int = 512,
+    part_col: str = "lang",
+    order_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The training-batch manifest a data loader actually consumes: per
+    (part, bin) the ORDERED document id list (comma-joined string — the
+    cross-engine-stable rendering of an ordered list), plus doc/token
+    counts.  Built on the same single window pass as ``pack_bins``.
+
+    Scale posture: collect_list holds one bin's ids — bounded by
+    budget / min_doc_tokens docs per bin, a few hundred at realistic
+    budgets — and sort_array canonicalizes the shuffle-order-dependent
+    collect_list, so the manifest is deterministic on any partitioning.
+    """
+    binned = assign_bins(df, budget, part_col, order_col, text_col)
+    ordered_ids = F.concat_ws(
+        ",",
+        F.transform(
+            F.sort_array(F.collect_list(order_col)),
+            lambda x: x.cast("string"),
+        ),
+    )
+    return binned.groupBy(part_col, "bin_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("bin_tokens"),
+        ordered_ids.alias("doc_ids"),
+    )
+
+
+def incremental_dedup(
+    corpus: DataFrame,
+    batch: DataFrame,
+    text_col: str = "text",
+) -> DataFrame:
+    """Steady-state dedup: triage a NEW document batch against an existing
+    (already-deduplicated) corpus.  Returns (doc_id, status) for every
+    batch document:
+
+    - ``dup_of_corpus`` — content fingerprint already present in the corpus;
+    - ``dup_in_batch``  — first seen within this batch under a smaller id;
+    - ``kept``          — novel.
+
+    Scale posture: only fingerprints move — the corpus side reduces to a
+    distinct (fingerprint) projection before the join, so the shuffle
+    carries 8-byte keys regardless of document size; the in-batch ranking
+    windows over the (small) batch only.  This is the incremental form that
+    avoids re-running full-corpus dedup on every ingest.
+    """
+    fp = TF.content_fingerprint(text_col)
+    corpus_fp = (
+        corpus.select(fp.alias("fp")).distinct().withColumn("in_corpus", F.lit(1))
+    )
+    b = batch.select("doc_id", fp.alias("fp"))
+    rank_w = Window.partitionBy("fp").orderBy("doc_id")
+    return (
+        b.join(corpus_fp, "fp", "left")
+        .withColumn("rn", F.row_number().over(rank_w))
+        .select(
+            "doc_id",
+            F.when(F.col("in_corpus").isNotNull(), F.lit("dup_of_corpus"))
+            .when(F.col("rn") > 1, F.lit("dup_in_batch"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+        )
+    )
+
+
+def chunk_documents(
+    df: DataFrame,
+    chunk: int = 32,
+    stride: int = 24,
+    text_col: str = "text",
+) -> DataFrame:
+    """Split documents into overlapping token chunks (``chunk`` tokens,
+    advancing ``stride`` — overlap = chunk - stride), the standard prep for
+    fixed-context training windows.  A document of n ≤ chunk tokens yields
+    one chunk; otherwise ceil((n - chunk)/stride) + 1, so the tail is
+    always covered.
+
+    Returns (doc_id, chunk_id, start_tok, chunk_tokens, chunk_text).
+
+    Scale posture: in-row array arithmetic only (tokens projected ONCE as
+    a named column — see the CollapseProject note in ``decontaminate``),
+    then one explode; no shuffle, no UDF — runs at scan speed and
+    parallelizes with the input partitioning.
+    """
+    w = F.col("_toks")
+    n = F.size(w)
+    n_chunks = F.when(n <= chunk, F.lit(1)).otherwise(
+        F.ceil((n - F.lit(chunk)) / F.lit(float(stride))).cast("int") + 1
+    )
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.struct(
+            i.cast("bigint").alias("chunk_id"),
+            (i * stride).cast("bigint").alias("start_tok"),
+            F.least(F.lit(chunk), n - i * stride)
+            .cast("bigint")
+            .alias("chunk_tokens"),
+            F.concat_ws(" ", F.slice(w, i * stride + 1, chunk)).alias(
+                "chunk_text"
+            ),
+        ),
+    )
+    return (
+        df.select("doc_id", TF.tokens(text_col).alias("_toks"))
+        .select("doc_id", F.explode(chunks).alias("c"))
+        .select("doc_id", "c.chunk_id", "c.start_tok", "c.chunk_tokens", "c.chunk_text")
+    )
 
 
 def fuzzy_match_blocked(
@@ -58,6 +282,529 @@ def fuzzy_match_blocked(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
+    )
+
+
+def filter_chain(
+    df: DataFrame,
+    rules: Sequence[tuple[str, Column]],
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Ordered quality gates (C4/Gopher-style): each rule is
+    ``(name, pass_predicate)``; a document is kept iff every predicate
+    passes, and ``reason`` names the FIRST failing rule (or 'kept').
+
+    Pure column expressions — the whole chain is one codegen'd projection
+    evaluated during the scan; at 100 TB this runs at parquet-read speed
+    and the downstream filter on ``keep`` prunes before any shuffle.
+
+    NULL semantics (the column_audit r6 discipline, applied to the
+    curation gate): a predicate that evaluates to NULL (e.g. any length
+    test on a NULL text) FAILS its rule — fail-closed, with the reason
+    naming that rule — instead of the three-valued alternative where
+    ``keep`` is NULL (dropped by the downstream filter) while ``reason``
+    incoherently reads 'kept'.
+    """
+    keep, reason = filter_chain_cols(rules)
+    return df.select(id_col, keep.alias("keep"), reason.alias("reason"))
+
+
+def filter_chain_cols(
+    rules: Sequence[tuple[str, Column]],
+) -> tuple[Column, Column]:
+    """The (keep, reason) column expressions behind ``filter_chain``,
+    exposed so a caller can attach the verdict alongside OTHER columns
+    in the same projection — e.g. the model-based quality classifier
+    computes weak labels AND token features in one corpus scan instead
+    of joining the verdict frame back against the text."""
+    reason = F.lit("kept")
+    for name, pred in reversed(list(rules)):
+        reason = F.when(~F.coalesce(pred, F.lit(False)), F.lit(name)).otherwise(
+            reason
+        )
+    keep = F.lit(True)
+    for _, pred in rules:
+        keep = keep & F.coalesce(pred, F.lit(False))
+    return keep, reason
+
+
+def sample_token_budget(
+    df: DataFrame,
+    budget: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_buckets: int = 256,
+) -> DataFrame:
+    """Deterministic token-budget corpus sampling: shuffle documents into a
+    pseudo-random order (md5 of the id — stable across engines and runs),
+    then keep the prefix whose cumulative whitespace-token count fits
+    ``budget``.  The standard "give me ~N tokens of held-out data" slice.
+
+    Scale posture: a naive ``SUM() OVER (ORDER BY rk)`` is a single-
+    partition global window — the classic scale-killer.  This runs the
+    distributed two-phase prefix sum instead:
+
+    1. bucket each row by its rank-key prefix (``n_buckets`` ordered
+       buckets), 2. aggregate per-bucket token totals (tiny: one row per
+       bucket), 3. broadcast the running bucket offsets back, 4. window
+       only WITHIN each bucket (partitioned — parallel), adding the
+       bucket's offset.  The only global ordering ever materialized is the
+       ``n_buckets``-row offset table.
+
+    Returns (id_col, n_tokens, cum_tokens) for the kept prefix.
+    """
+    rk = F.md5(F.col(id_col).cast("string"))
+    base = df.select(
+        F.col(id_col),
+        F.size(TF.tokens(text_col)).cast("bigint").alias("n_tokens"),
+        rk.alias("_rk"),
+        F.substring(rk, 1, 2).alias("_bucket"),
+    )
+    # Per-bucket totals -> exclusive running offset; n_buckets rows, so the
+    # global-order window here is over a trivially small frame.
+    offsets = (
+        base.groupBy("_bucket")
+        .agg(F.sum("n_tokens").alias("_bucket_tokens"))
+        .select(
+            "_bucket",
+            (
+                F.sum("_bucket_tokens").over(
+                    Window.orderBy("_bucket").rowsBetween(
+                        Window.unboundedPreceding, Window.currentRow
+                    )
+                )
+                - F.col("_bucket_tokens")
+            ).alias("_offset"),
+        )
+    )
+    within = Window.partitionBy("_bucket").orderBy("_rk", id_col).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return (
+        base.join(F.broadcast(offsets), "_bucket")
+        .select(
+            id_col,
+            "n_tokens",
+            (F.sum("n_tokens").over(within) + F.col("_offset")).alias("cum_tokens"),
+        )
+        .filter(F.col("cum_tokens") <= F.lit(int(budget)))
+    )
+
+
+# per-session latest persisted gram frame; see boilerplate_spans docstring
+# (ADVICE r3/r4).  Keyed by SparkSession so one session's eviction can
+# never touch another's cache; the lock makes concurrent builders safe.
+_BOILERPLATE_LAST_GRAMS: dict[int, DataFrame] = {}
+_BOILERPLATE_LOCK = __import__("threading").Lock()
+
+
+def boilerplate_spans(
+    docs: DataFrame,
+    n: int = 5,
+    min_docs: int = 2,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    evict_previous: bool = True,
+) -> DataFrame:
+    """Cross-document repeated-span detection: the fraction of each
+    document made of word n-grams that appear in >= ``min_docs`` DISTINCT
+    documents — the template/boilerplate signal (nav bars, license
+    headers, scraper artifacts) that span-level dedup removes where
+    doc-level dedup cannot (each page is unique, its furniture is not).
+
+    Shape: distinct n-gram shingles per doc (in-row array expressions) →
+    explode to (gram, doc) pairs → gram document-frequency aggregate (the
+    shuffle carries distinct pairs only, never text) → semi-join the
+    boilerplate grams back and count per doc.  Same scan shape as
+    ``decontaminate``, with the corpus itself as the reference set.
+
+    The exploded gram frame feeds THREE consumers (df aggregate, per-doc
+    boilerplate count, per-doc totals); it is persisted MEMORY_AND_DISK so
+    the tokenize+shingle CPU runs once, not three times (3.4× measured at
+    sf0.1 — the same pattern as MinHash's persisted shingles).  Because
+    the returned frame is lazy, the builder cannot unpersist after its
+    own action.  Lifetime control (ADVICE r3/r4): the persisted handle is
+    ATTACHED to the returned frame as ``.boilerplate_grams`` so the
+    caller owns it (``out.boilerplate_grams.unpersist()`` when done);
+    as a convenience for repeated catalog/bench/driver runs, each
+    invocation also evicts the SAME session's previous gram frame (a
+    per-session holder behind a lock — never another session's, never
+    racing a concurrent builder).  A caller still consuming an earlier
+    result passes ``evict_previous=False`` to keep that cache live.
+
+    Returns (doc_id, n_grams, n_boilerplate, boilerplate_fraction); docs
+    shorter than ``n`` tokens have 0 grams and fraction 0.0.
+    """
+    from pyspark import StorageLevel
+
+    # Tokens as a NAMED column first (same CollapseProject barrier as
+    # dedup.shingle_hashes): shingling directly over the tokens expression
+    # inlines the split regex into every element_at — n+2 splits per row,
+    # ~18x slower measured at sf0.1.
+    grams = (
+        docs.select(id_col, TF.tokens(text_col).alias("_toks"))
+        .select(
+            id_col,
+            F.explode_outer(TF.shingles(F.col("_toks"), n)).alias("_g"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    skey = id(docs.sparkSession)
+    with _BOILERPLATE_LOCK:
+        prev = _BOILERPLATE_LAST_GRAMS.pop(skey, None) if evict_previous else None
+        _BOILERPLATE_LAST_GRAMS[skey] = grams
+    if prev is not None:
+        try:
+            prev.unpersist(blocking=False)
+        except Exception:
+            pass  # prior frame's session already stopped
+    gram_df = (
+        grams.filter(F.col("_g").isNotNull())
+        .groupBy("_g")
+        .agg(F.count_distinct(F.col(id_col)).alias("_df"))
+    )
+    bp = gram_df.filter(F.col("_df") >= min_docs).select("_g")
+    per_doc = grams.join(bp, "_g", "left_semi").groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_boilerplate")
+    )
+    totals = grams.groupBy(id_col).agg(
+        F.sum(F.when(F.col("_g").isNotNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_grams")
+    )
+    out = (
+        totals.join(per_doc, id_col, "left")
+        .na.fill({"n_boilerplate": 0})
+        .select(
+            id_col,
+            "n_grams",
+            F.col("n_boilerplate").cast("bigint").alias("n_boilerplate"),
+            F.when(
+                F.col("n_grams") > 0,
+                F.round(F.col("n_boilerplate") / F.col("n_grams"), 6),
+            )
+            .otherwise(F.lit(0.0))
+            .alias("boilerplate_fraction"),
+        )
+    )
+    out.boilerplate_grams = grams  # caller-owned cache handle (ADVICE r4)
+    return out
+
+
+def incremental_dedup_bloom(
+    corpus: DataFrame,
+    batch: DataFrame,
+    text_col: str = "text",
+    n_bits: int = 1 << 22,
+    n_hashes: int = 5,
+) -> DataFrame:
+    """``incremental_dedup`` with a Bloom-filter corpus prefilter — SAME
+    statuses, exactly (shares the incremental oracle), different 100 TB
+    shape: the corpus's distinct-fingerprint projection is far too large
+    to broadcast and joining the batch against it shuffles the whole
+    corpus side; here the corpus folds into an ``n_bits`` Bloom filter
+    instead and never shuffles at all.
+
+    Build: distinct corpus fingerprints → ``n_hashes`` bit positions per
+    fp (``xxhash64(fp, seed_i)`` — computed by the JVM on BOTH sides, so
+    builder and prober can never disagree) → per-word ``bit_or`` fold
+    (map-side partial; the shuffle carries ≤ n_bits/64 word partials) →
+    a dense uint64 array on the driver, ``sc.broadcast`` to executors.
+    Driver/executor memory is n_bits/8 bytes by CONFIG, not by data
+    (default 512 KiB; ~1.2 GiB serves a billion-row corpus at 1% fpp —
+    torrent-broadcast territory, still no shuffle).
+
+    Probe: an Arrow-batched pandas UDF tests the precomputed position
+    arrays against the broadcast words (vectorized bit lookups — the
+    documented Python crossing; a closure-captured numpy array, NOT a
+    per-row py4j call).  Bloom positives are then verified EXACTLY: the
+    maybe-fingerprints (batch-bounded, broadcast) semi-join the corpus
+    projection, so false positives cannot leak into ``dup_of_corpus``
+    and false negatives are impossible by construction — the output is
+    bit-identical to ``incremental_dedup``.
+    """
+    import numpy as np
+
+    fp = TF.content_fingerprint(text_col)
+    positions = F.array(
+        *[
+            F.pmod(F.xxhash64(F.col("fp"), F.lit(i)), F.lit(n_bits))
+            for i in range(n_hashes)
+        ]
+    )
+    corpus_fp = corpus.select(fp.alias("fp")).distinct()
+    words = (
+        corpus_fp.select(F.explode(positions).alias("pos"))
+        .select(
+            F.shiftright("pos", 6).alias("word"),
+            # shiftleft's bit count must be a literal in the Python API —
+            # the variable shift lives in an expr string instead
+            F.expr(
+                "shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos, 64) AS INT))"
+            ).alias("bit"),
+        )
+        .groupBy("word")
+        .agg(F.bit_or("bit").alias("bits"))
+        .collect()
+    )
+    dense = np.zeros(n_bits >> 6, dtype=np.uint64)
+    for r in words:
+        # bit_or yields a signed bigint; mask to the 64-bit pattern before
+        # the uint64 cast (NumPy >=2.1 hard-fails on negative-int casts)
+        dense[r.word] = np.uint64(r.bits & 0xFFFFFFFFFFFFFFFF)
+    bc = corpus.sparkSession.sparkContext.broadcast(dense)
+
+    @F.pandas_udf("boolean")
+    def maybe(pos: pd.Series) -> pd.Series:
+        w = bc.value
+        p = np.stack(pos.to_numpy()).astype(np.int64)
+        hit = (w[p >> 6] >> (p & 63).astype(np.uint64)) & np.uint64(1)
+        return pd.Series((hit != 0).all(axis=1))
+
+    b = batch.select("doc_id", fp.alias("fp")).withColumn(
+        "_maybe", maybe(positions)
+    )
+    maybe_fps = b.filter(F.col("_maybe")).select("fp").distinct()
+    confirmed = corpus_fp.join(
+        F.broadcast(maybe_fps), "fp", "left_semi"
+    ).withColumn("in_corpus", F.lit(1))
+    rank_w = Window.partitionBy("fp").orderBy("doc_id")
+    return (
+        b.join(F.broadcast(confirmed), "fp", "left")
+        .withColumn("rn", F.row_number().over(rank_w))
+        .select(
+            "doc_id",
+            F.when(F.col("in_corpus").isNotNull(), F.lit("dup_of_corpus"))
+            .when(F.col("rn") > 1, F.lit("dup_in_batch"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+        )
+    )
+
+
+def pack_sequences(
+    df: DataFrame,
+    seq_len: int = 128,
+    order_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = 256,
+) -> DataFrame:
+    """Fixed-length SEQUENCE packing with document SPLITTING — the actual
+    pretraining batch-assembly contract.  ``pack_bins``/``pack_manifest``
+    are greedy no-split packers (a doc never straddles bins, bins run
+    ragged); real sample packing concatenates the token stream and cuts
+    it every ``seq_len`` tokens, so documents cross sequence boundaries
+    and every sequence except the last is exactly full.  A training
+    loader needs the boundary map — which doc occupies which token span
+    of which sequence — to reset attention masks at doc starts.
+
+    Shape: one global token prefix-sum gives each doc its half-open
+    global interval [start, end); the doc then explodes to exactly the
+    sequences it overlaps (``F.sequence`` over floor-divided bounds —
+    fanout = 1 + (n_tokens div seq_len), bounded), and per-sequence spans
+    are pure column arithmetic.  The prefix sum uses the same two-phase
+    distributed form as ``sample_token_budget`` — per-bucket totals
+    (``n_buckets`` rows) carry the global running offset, the wide
+    window is partitioned per bucket — with the bucket key
+    ``order_col DIV 10^4`` (truncating division is monotonic, so
+    (bucket, order) ordering IS the global order for ANY bigint id —
+    the earlier zero-padded string prefix silently truncated ids beyond
+    12 digits, r8 advisor fix).  ``order_col`` must therefore be an
+    integral column; raises TypeError otherwise.  No global-sort window
+    ever materializes; the corpus text never shuffles (only
+    (id, n_tokens) rows do).
+
+    Returns one row per sequence: (seq_id, n_segments, n_tokens — always
+    ``seq_len`` except the final sequence — and ``segments``, the
+    ordered "doc_id:start-end" comma list in within-sequence token
+    coordinates, end exclusive).
+    """
+    spans = sequence_spans(
+        df, seq_len=seq_len, order_col=order_col,
+        text_col=text_col, n_buckets=n_buckets,
+    )
+    seg = F.concat_ws(
+        ",",
+        F.transform(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        F.col("span_start"),
+                        F.col("_id"),
+                        F.col("span_end"),
+                    )
+                )
+            ),
+            lambda s: F.concat(
+                s["_id"].cast("string"),
+                F.lit(":"),
+                s["span_start"].cast("string"),
+                F.lit("-"),
+                s["span_end"].cast("string"),
+            ),
+        ),
+    )
+    return (
+        spans.groupBy("seq_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_segments"),
+            F.sum(F.col("span_end") - F.col("span_start"))
+            .cast("bigint")
+            .alias("n_tokens"),
+            seg.alias("segments"),
+        )
+        .orderBy("seq_id")
+    )
+
+
+def domain_reweight_mw(
+    df: DataFrame,
+    group_col: str = "source",
+    text_col: str = "text",
+    iterations: int = 3,
+) -> DataFrame:
+    """DoReMi-flavored domain mixture optimization via multiplicative
+    weights, in EXACT integer arithmetic: each domain's loss proxy is its
+    mean quality deficit (micro-units, from quality_score_exact), and
+    each iteration multiplies up the weight of domains whose loss exceeds
+    the current weight-averaged loss (Hedge/MW with the linearized
+    update w ← w·(1 + η·excess), η = 1/2) — the "spend more mixture on
+    the domains the proxy model finds hard" step, with the weighted
+    average recomputed per iteration so updates interact across domains
+    like the real algorithm.
+
+    Every quantity is an int64 in micro-units and every division is the
+    half-up integer form ((2p+q) DIV 2q) — the r7 oracle discipline — so
+    the 3-iteration trajectory replays bit-exactly in the unrolled-CTE
+    DuckDB oracle and on any engine build.  Overflow headroom: weights
+    start at 1e6 and grow ≤1.5×/iteration; w·multiplier ≤ ~5e12 ≪ 2^63.
+
+    Scale posture: the corpus is scanned ONCE for the per-domain moments
+    (map-side combined sum of quality_u); iterations run on the
+    domain-sized frame (a broadcast-sized dim at any corpus scale), so
+    adding iterations costs nothing corpus-shaped.  Each iteration's
+    frame is eagerly localCheckpoint-ed before its total is derived —
+    the per-iteration crossJoin(tot) otherwise embeds the prior lineage
+    twice, doubling the plan (and re-planning the corpus subtree
+    2^iterations times) as iteration count grows (r8 advisor fix); the
+    checkpoint pins "scanned once" structurally instead of relying on
+    AQE exchange reuse.  Returns per domain:
+    n_docs, mloss_u, and the weight after each iteration (w1..wN,
+    scaled 1e6; normalize by SUM(wN) downstream — kept unnormalized so
+    the surface stays integer-exact).
+    """
+    from .text import quality_score_exact
+
+    g = (
+        quality_score_exact(df, text_col, keep=(group_col,))
+        .groupBy(group_col)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("quality_u").cast("bigint").alias("sum_qu"),
+        )
+    )
+    cur = g.select(
+        group_col,
+        "n_docs",
+        F.expr(
+            "CAST((2 * (4000000 * n_docs - sum_qu) + n_docs)"
+            " DIV (2 * n_docs) AS BIGINT)"
+        ).alias("mloss_u"),
+    ).withColumn("w", F.lit(1_000_000).cast("bigint"))
+    w_cols = []
+    for t in range(1, iterations + 1):
+        # domain-sized frame: eager lineage cut — one corpus scan total,
+        # O(1) plan growth per iteration regardless of iteration count
+        cur = cur.localCheckpoint(eager=True)
+        tot = cur.agg(
+            F.sum(F.col("w") * F.col("mloss_u")).alias("_wl"),
+            F.sum("w").alias("_wsum"),
+        )
+        cur = (
+            cur.crossJoin(F.broadcast(tot))
+            .withColumn("_avg", F.expr("(2 * _wl + _wsum) DIV (2 * _wsum)"))
+            .withColumn(
+                "_ex", F.greatest(F.col("mloss_u") - F.col("_avg"), F.lit(0))
+            )
+            .withColumn(
+                "w",
+                F.expr(
+                    "CAST((2 * (w * (1000000 + (_ex + 1) DIV 2)) + 1000000)"
+                    " DIV 2000000 AS BIGINT)"
+                ),
+            )
+            .withColumn(f"w{t}", F.col("w"))
+            .drop("_wl", "_wsum", "_avg", "_ex")
+        )
+        w_cols.append(f"w{t}")
+    return cur.select(group_col, "n_docs", "mloss_u", *w_cols).orderBy(
+        group_col
+    )
+
+
+def contamination_report(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    n: int = 8,
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-EVAL-document contamination report — the reverse direction of
+    :func:`decontaminate`: for every benchmark document, how many of its
+    word ``n``-grams appear anywhere in the training corpus.
+
+    ``(doc_id, n_grams, n_hit_grams, contamination_u)`` where
+    ``contamination_u`` is the hit ratio in half-up-rounded 1e-6
+    micro-units (the engine-stable integer surface — same idiom as
+    quality_score_exact, so the driver hash carries no IEEE double).
+
+    Scale posture: the eval side is small by definition.  Its distinct
+    gram set broadcasts; the 100 TB corpus side explodes grams and
+    filters through that broadcast WITHOUT shuffling, and only the
+    matched grams (≤ eval gram count) reach the distinct-agg.  The final
+    per-eval-doc join is broadcast again.  The corpus is read once, no
+    corpus-sized shuffle anywhere.
+    """
+    grams = TF.shingles(F.col("_toks"), n)
+    ev = benchmark.select("doc_id", TF.tokens(text_col).alias("_toks")).select(
+        "doc_id", F.explode(grams).alias("gram")
+    )
+    ev_gram_set = ev.select("gram").distinct()
+    corpus_grams = corpus.select(TF.tokens(text_col).alias("_toks")).select(
+        F.explode(grams).alias("gram")
+    )
+    hit_set = (
+        corpus_grams.join(F.broadcast(ev_gram_set), "gram")
+        .select("gram")
+        .distinct()
+        .withColumn("_hit", F.lit(1))
+    )
+    per_doc = (
+        ev.join(F.broadcast(hit_set), "gram", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_grams"),
+            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).cast("bigint").alias("n_hit_grams"),
+        )
+    )
+    # EVERY benchmark doc gets a row — docs too short to form a single
+    # n-gram report (0, 0, 0) instead of silently vanishing from the
+    # audit (r8 review finding: the explode dropped them)
+    return (
+        benchmark.select("doc_id")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_grams", F.lit(0)).cast("bigint").alias("n_grams"),
+            F.coalesce("n_hit_grams", F.lit(0)).cast("bigint").alias("n_hit_grams"),
+        )
+        .withColumn(
+            "contamination_u",
+            F.expr(
+                "CAST(CASE WHEN n_grams = 0 THEN 0"
+                " ELSE (2000000 * n_hit_grams + n_grams) DIV (2 * n_grams)"
+                " END AS BIGINT)"
+            ),
+        )
     )
 
 
@@ -150,3 +897,406 @@ def delete_propagation(
         ).alias("del_checksum"),
     )
     return cust_row.union(ord_row).union(li_row)
+
+
+def positional_gram_hashes(
+    docs: DataFrame,
+    k: int = 10,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(doc_id, n_tokens, pos, h): hash of the k-token gram starting at
+    1-indexed token position ``pos`` — the positional twin of
+    ``dedup.shingle_hashes`` (which distinct-collapses and so cannot
+    locate spans).  Pure array expressions, no UDF; docs shorter than
+    ``k`` tokens emit no gram rows."""
+    gram = F.transform(
+        F.sequence(F.lit(1), F.size("_toks") - (k - 1)),
+        lambda j: F.concat_ws(
+            " ", *[F.element_at(F.col("_toks"), j + i) for i in range(k)]
+        ),
+    )
+    # sequence(1, size-(k-1)) runs DESCENDING for short docs (step -1 when
+    # start > stop) — guard exactly as textfns.shingles does.
+    guarded = F.when(F.size("_toks") >= k, gram).otherwise(
+        F.array().cast("array<string>")
+    )
+    return (
+        docs.select(id_col, TF.tokens(text_col).alias("_toks"))
+        .select(
+            id_col,
+            F.size("_toks").cast("bigint").alias("n_tokens"),
+            F.posexplode(guarded).alias("_i", "_gram"),
+        )
+        .select(
+            id_col,
+            "n_tokens",
+            (F.col("_i") + 1).cast("bigint").alias("pos"),
+            TF.token_hash("_gram").alias("h"),
+        )
+    )
+
+
+def substring_spans(
+    docs: DataFrame,
+    k: int = 10,
+    min_docs: int = 2,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Cross-document repeated-span EXCISION (the substring-level dedup
+    that doc-level Jaccard/containment both miss when the duplicated span
+    is a minority of each doc — Lee et al., "Deduplicating Training Data
+    Makes Language Models Better", approximated at k-gram granularity):
+    maximal per-doc token spans every k-gram of which appears in
+    ≥ ``min_docs`` DISTINCT documents, merged over overlapping/adjacent
+    gram windows.  Returns the per-doc cut list
+    ``(doc_id, tok_start, tok_end, span_tokens)`` — 1-indexed inclusive
+    token bounds, ordered consumers sort downstream.
+
+    Shape (all linear — this operator has NO pair join, so hot grams are
+    harmless, unlike the shingle inverted-index dedups): positional
+    k-gram hashes → gram document-frequency aggregate (distinct-doc
+    count, shuffle carries (h, doc) pairs only) → semi-join repeated
+    grams back to positions → per-doc gaps-and-islands merge (two
+    window passes partitioned by doc).  At 100 TB every stage is a
+    hash-partitioned shuffle on gram hash or doc id; nothing is
+    quadratic in gram popularity.
+
+    The positional gram frame feeds the df aggregate AND the coverage
+    probe; persisted MEMORY_AND_DISK so tokenize+gram CPU runs once
+    (CacheManager dedupes repeated catalog calls by logical plan).
+    """
+    from pyspark import StorageLevel
+
+    grams = positional_gram_hashes(docs, k, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    repeated = (
+        grams.groupBy("h")
+        .agg(F.count_distinct(F.col(id_col)).alias("_d"))
+        .filter(F.col("_d") >= min_docs)
+        .select("h")
+    )
+    covered = grams.join(repeated, "h", "left_semi")
+    w = Window.partitionBy(id_col).orderBy("pos")
+    flagged = covered.withColumn(
+        "_new",
+        F.when(F.col("pos") - F.lag("pos").over(w) > k, 1).otherwise(0),
+    )
+    islands = flagged.withColumn(
+        "_island", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    return (
+        islands.groupBy(id_col, "_island")
+        .agg(
+            F.min("pos").alias("tok_start"),
+            (F.max("pos") + (k - 1)).alias("tok_end"),
+        )
+        .select(
+            id_col,
+            "tok_start",
+            "tok_end",
+            (F.col("tok_end") - F.col("tok_start") + 1).alias("span_tokens"),
+        )
+    )
+
+
+def substring_clean_stats(
+    docs: DataFrame,
+    k: int = 10,
+    min_docs: int = 2,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-doc cleaned lengths after cross-doc repeated-span excision:
+    ``(doc_id, n_tokens, n_spans, cut_tokens, clean_tokens)`` for EVERY
+    document (zero-span docs included via left join).  Spans are merged
+    before summing, so overlapping gram windows never double-cut."""
+    spans = substring_spans(docs, k, min_docs, id_col, text_col)
+    per_doc = spans.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_spans"),
+        F.sum("span_tokens").cast("bigint").alias("cut_tokens"),
+    )
+    base = docs.select(
+        id_col, F.size(TF.tokens(text_col)).cast("bigint").alias("n_tokens")
+    )
+    return (
+        base.join(per_doc, id_col, "left")
+        .select(
+            id_col,
+            "n_tokens",
+            F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
+            F.coalesce("cut_tokens", F.lit(0)).cast("bigint").alias("cut_tokens"),
+            (
+                F.col("n_tokens")
+                - F.coalesce("cut_tokens", F.lit(0))
+            ).cast("bigint").alias("clean_tokens"),
+        )
+    )
+
+
+def substring_excise(
+    docs: DataFrame,
+    k: int = 10,
+    min_docs: int = 2,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The excision itself: rebuild each document's text with every
+    cross-doc repeated span (``substring_spans``) cut out —
+    ``(doc_id, n_tokens, clean_tokens, clean_text)`` for EVERY doc.
+
+    ``clean_text`` is TOKEN-NORMALIZED (lowercased tokens re-joined with
+    single spaces — the same normalization the gram hashes saw), so
+    excision composes with the rest of the text pipeline and the oracle
+    reproduces it byte-for-byte.  A doc that is entirely repeated content
+    comes back with ``clean_text = ''``.
+
+    Shape: cut positions are the exploded span ranges (Σ span lengths ≤
+    n_tokens, so the explode is sub-linear in corpus size), removal is a
+    left-anti join on (doc, pos), and reconstitution is one doc-keyed
+    aggregate — ``array_sort(collect_list(struct(pos, tok)))`` keeps the
+    order without a global sort.  Nothing here is quadratic in gram
+    popularity (see ``substring_spans``)."""
+    spans = substring_spans(docs, k, min_docs, id_col, text_col)
+    cuts = spans.select(
+        id_col,
+        F.explode(F.sequence("tok_start", "tok_end")).alias("pos"),
+    )
+    toks = (
+        docs.select(id_col, TF.tokens(text_col).alias("_toks"))
+        .select(
+            id_col,
+            F.size("_toks").cast("bigint").alias("n_tokens"),
+            F.posexplode("_toks").alias("_i", "tok"),
+        )
+        .select(
+            id_col,
+            "n_tokens",
+            (F.col("_i") + 1).cast("bigint").alias("pos"),
+            "tok",
+        )
+    )
+    kept = toks.join(cuts, [id_col, "pos"], "left_anti")
+    rebuilt = kept.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("clean_tokens"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+                lambda s: s.tok,
+            ),
+            " ",
+        ).alias("clean_text"),
+    )
+    base = docs.select(
+        id_col, F.size(TF.tokens(text_col)).cast("bigint").alias("n_tokens")
+    )
+    return base.join(rebuilt, id_col, "left").select(
+        id_col,
+        "n_tokens",
+        F.coalesce("clean_tokens", F.lit(0)).cast("bigint").alias(
+            "clean_tokens"
+        ),
+        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+    )
+
+
+def substring_spans_vs_corpus(
+    batch: DataFrame,
+    corpus: DataFrame | None = None,
+    k: int = 10,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    corpus_grams: DataFrame | None = None,
+) -> DataFrame:
+    """Span-level decontamination of an ingest batch against an existing
+    corpus: maximal token spans of each BATCH doc every k-gram of which
+    appears in ≥ 1 CORPUS document — the incremental twin of
+    ``substring_spans`` (where dedup_incremental screens whole docs and
+    docs_decontaminate screens doc-level gram overlap, this locates and
+    bounds the shared spans so the batch can be excised, not dropped).
+
+    Returns ``(doc_id, tok_start, tok_end, span_tokens)`` over batch ids.
+
+    Scale: the corpus contributes only its DISTINCT gram-hash set —
+    ``corpus_grams`` accepts a prebuilt/persisted frame (one column ``h``;
+    built from ``positional_gram_hashes`` when omitted) so the corpus
+    tokenize+gram pass amortizes across ingest batches like the other
+    prebuilt indexes; the probe is a semi-join on h (hash-partitioned,
+    linear, no pair join), and the islands merge is per-batch-doc
+    windowing.  Same gaps-and-islands semantics as substring_spans.
+    """
+    grams_b = positional_gram_hashes(batch, k, id_col, text_col)
+    if corpus_grams is None:
+        if corpus is None:
+            raise ValueError("pass corpus or corpus_grams")
+        corpus_grams = positional_gram_hashes(
+            corpus, k, id_col, text_col
+        ).select("h")
+    covered = grams_b.join(
+        corpus_grams.select("h").distinct(), "h", "left_semi"
+    )
+    w = Window.partitionBy(id_col).orderBy("pos")
+    flagged = covered.withColumn(
+        "_new",
+        F.when(F.col("pos") - F.lag("pos").over(w) > k, 1).otherwise(0),
+    )
+    islands = flagged.withColumn(
+        "_island",
+        F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    return (
+        islands.groupBy(id_col, "_island")
+        .agg(
+            F.min("pos").alias("tok_start"),
+            (F.max("pos") + (k - 1)).alias("tok_end"),
+        )
+        .select(
+            id_col,
+            "tok_start",
+            "tok_end",
+            (F.col("tok_end") - F.col("tok_start") + 1).alias("span_tokens"),
+        )
+    )
+
+
+def self_repetition_spans(
+    docs: DataFrame,
+    k: int = 10,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """WITHIN-document repetition excision (the degenerate/looped-text
+    cleanup pass — distinct from the cross-doc substring family: here a
+    span is cut because its k-grams already occurred EARLIER IN THE SAME
+    DOCUMENT): maximal token spans every k-gram of which repeats an
+    earlier same-doc occurrence, merged gaps-and-islands style.  Returns
+    the per-doc cut list ``(doc_id, tok_start, tok_end, span_tokens)``.
+
+    Shape: one positional-gram pass, a min-position window over
+    (doc, gram-hash) to mark repeats (no join at all — strictly linear),
+    then the shared islands merge per doc.  The doc-keyed window
+    partitions bound all state by document size."""
+    grams = positional_gram_hashes(docs, k, id_col, text_col)
+    wh = Window.partitionBy(id_col, "h")
+    covered = (
+        grams.withColumn("_first", F.min("pos").over(wh))
+        .filter(F.col("pos") > F.col("_first"))
+        .select(id_col, "pos")
+    )
+    w = Window.partitionBy(id_col).orderBy("pos")
+    flagged = covered.withColumn(
+        "_new",
+        F.when(F.col("pos") - F.lag("pos").over(w) > k, 1).otherwise(0),
+    )
+    islands = flagged.withColumn(
+        "_island",
+        F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    return (
+        islands.groupBy(id_col, "_island")
+        .agg(
+            F.min("pos").alias("tok_start"),
+            (F.max("pos") + (k - 1)).alias("tok_end"),
+        )
+        .select(
+            id_col,
+            "tok_start",
+            "tok_end",
+            (F.col("tok_end") - F.col("tok_start") + 1).alias("span_tokens"),
+        )
+    )
+
+
+def sequence_spans(
+    df: DataFrame,
+    seq_len: int = 128,
+    order_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = 256,
+) -> DataFrame:
+    """The per-(doc, sequence) boundary map behind ``pack_sequences``,
+    exposed as its own frame (r10): (_id, seq_id, span_start, span_end)
+    with spans in within-sequence token coordinates, end exclusive.
+    ``pack_sequences`` aggregates this into the loader manifest; the
+    delete-impact audit (plans/breadth10.docs_delete_impact) consumes it
+    directly to find which packed sequences a document deletion
+    invalidates.
+
+    Shape (unchanged from pack_sequences, one definition now): two-phase
+    bucket prefix sum — per-bucket totals carry the global offset, the
+    wide window is bucket-partitioned, the only global ordering is the
+    ``n_buckets``-row offset table — then a bounded explode
+    (1 + nt DIV seq_len rows per doc) and pure column arithmetic.
+    ``order_col`` must be integral (the (bucket, order) == global-order
+    invariant relies on monotonic integer division).
+    """
+    from pyspark.sql import types as T
+
+    if not isinstance(
+        df.schema[order_col].dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+    ):
+        raise TypeError(
+            f"sequence packing requires an integral order column; "
+            f"{order_col!r} is {df.schema[order_col].dataType.simpleString()}"
+            " (the (bucket, order) == global-order invariant relies on "
+            "monotonic integer division)"
+        )
+    n_tok = F.size(TF.tokens(text_col)).cast("bigint")
+    base = df.select(
+        F.col(order_col).alias("_id"),
+        n_tok.alias("_nt"),
+        F.expr(f"CAST(`{order_col}` AS BIGINT) DIV 10000").alias("_bucket"),
+    )
+    offsets = (
+        base.groupBy("_bucket")
+        .agg(F.sum("_nt").alias("_bucket_tokens"))
+        .select(
+            "_bucket",
+            (
+                F.coalesce(
+                    F.sum("_bucket_tokens").over(
+                        Window.orderBy("_bucket").rowsBetween(
+                            Window.unboundedPreceding, -1
+                        )
+                    ),
+                    F.lit(0),
+                )
+            ).alias("_offset"),
+        )
+    )
+    w = (
+        Window.partitionBy("_bucket")
+        .orderBy("_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        base.join(F.broadcast(offsets), "_bucket")
+        .withColumn("_cum", F.sum("_nt").over(w) + F.col("_offset"))
+        .withColumn("_start", F.col("_cum") - F.col("_nt"))
+        # a 0-token doc has an empty interval: drop it BEFORE the explode
+        # (F.sequence(a, b) with b < a would generate a DESCENDING range)
+        .filter(F.col("_nt") >= 1)
+        .withColumn(
+            "seq_id",
+            F.explode(
+                F.sequence(
+                    F.floor(F.col("_start") / F.lit(seq_len)),
+                    F.floor((F.col("_cum") - 1) / F.lit(seq_len)),
+                )
+            ),
+        )
+        .select(
+            "_id",
+            "seq_id",
+            F.greatest(
+                F.col("_start") - F.col("seq_id") * F.lit(seq_len), F.lit(0)
+            ).alias("span_start"),
+            F.least(
+                F.col("_cum") - F.col("seq_id") * F.lit(seq_len),
+                F.lit(seq_len),
+            ).alias("span_end"),
+        )
+    )

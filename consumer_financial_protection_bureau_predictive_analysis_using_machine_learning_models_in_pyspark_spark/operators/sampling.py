@@ -73,6 +73,202 @@ def rebalance_to_target(
     return out
 
 
+def stratified_quota_sample(
+    df: DataFrame,
+    group_col: str,
+    quota: int,
+    id_col: str,
+    salt: str = "",
+) -> DataFrame:
+    """Deterministic per-group quota sampling: rank each group's rows by a
+    uniform hash of their id and keep the first ``quota``.
+
+    Unlike ``sampleBy`` (per-partition Bernoulli over arrival order, so
+    membership shifts with cluster layout and emits a binomial approximate
+    count), this selection is a pure function of the data: reproducible
+    across runs, partitionings, and engines (the DuckDB oracle replays it
+    exactly), and each group yields EXACTLY min(quota, |group|) rows — the
+    contract a training-data mixture spec needs.  ``salt`` re-draws the
+    sample without touching the data.
+
+    Scale: one ``row_number`` window partitioned by the group key — a hash
+    shuffle on the group plus a partition-local sort, no global sort.  For
+    quotas ≪ group sizes at extreme scale, a pre-filter on the hash value
+    (keep ~2× quota/|group| quantile) would bound the sort input; not
+    needed at driver scale.
+    """
+    from pyspark.sql import Window
+
+    rk = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
+    w = Window.partitionBy(group_col).orderBy(rk, F.col(id_col))
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= quota)
+        .drop("_rk")
+    )
+
+
+def temperature_sample(
+    df: DataFrame,
+    group_col: str,
+    id_col: str,
+    alpha: float = 0.5,
+    target_frac: float = 0.5,
+) -> DataFrame:
+    """Temperature-scaled domain resampling: draw a corpus whose group
+    mixture follows q_g ∝ share_g^alpha (alpha<1 flattens the mixture
+    toward uniform — the multilingual/pretraining reweighting of
+    mBERT/XLM-R and data-mix papers), at ``target_frac`` of the corpus,
+    deterministically.
+
+    Per-group keep probability: keep_g = min(1, target_frac · N · q_g /
+    n_g); each row keeps iff a uniform md5-hash of its id falls under
+    keep_g — the same engine-reproducible Bernoulli as
+    ``docs_weighted_sample`` (no RNG state, identical membership on any
+    partitioning or engine).
+
+    Numeric discipline: q_g's normalizer folds sqrt terms through DECIMAL
+    (order-independent, engine-exact); the remaining arithmetic is
+    correctly-rounded IEEE double ops over identical inputs, written in
+    one fixed association order mirrored by the SQL oracle.
+
+    Scale posture: the weight table has one row per group — a bounded
+    domain dimension (sources/languages), NOT scale-linear — so its
+    broadcast join back is safe at any corpus size; the sample itself is
+    a map-side filter.  Returns the kept rows with ``keep_frac`` and the
+    group's corpus count ``group_total`` attached (so reports need no
+    second corpus aggregate).
+    """
+    from pyspark.sql import Window
+
+    # The corpus is aggregated ONCE; the normalizer scalars (_n_tot,
+    # _s_tot) come from unpartitioned windows over the group-cardinality
+    # aggregate — a single-partition pass over a frame bounded by the
+    # domain dimension, NOT the corpus, so the "no partitionBy" warning
+    # class does not apply.  (crossJoin scalar frames here would re-run
+    # the corpus aggregate once per scalar through the shared lineage.)
+    everything = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n_g"))
+    with_tot = counts.withColumn(
+        "_n_tot", F.sum("_n_g").over(everything).cast("bigint")
+    )
+    share = F.col("_n_g") / F.col("_n_tot")
+    # alpha=0.5 (the common default) goes through sqrt, which IEEE 754
+    # requires to be correctly rounded — bit-identical in every engine.
+    # Other alphas use pow, where a ≤1-ulp libm divergence is possible
+    # (same measure-zero boundary caveat as unigram_logprob).
+    powed = F.sqrt(share) if alpha == 0.5 else F.pow(share, F.lit(float(alpha)))
+    scored = with_tot.withColumn("_sd", powed.cast("decimal(20,15)")).withColumn(
+        "_s_tot", F.sum("_sd").over(everything)
+    )
+    keep = F.least(
+        F.lit(1.0),
+        F.lit(float(target_frac))
+        * (F.col("_sd").cast("double") / F.col("_s_tot").cast("double"))
+        * (F.col("_n_tot").cast("double") / F.col("_n_g").cast("double")),
+    )
+    weights = scored.withColumn("_keep", keep).select(group_col, "_n_g", "_keep")
+    unif = F.conv(
+        F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
+    ).cast("bigint") / F.lit(float(16 ** 13))
+    return (
+        df.join(F.broadcast(weights), group_col)
+        .filter(unif < F.col("_keep"))
+        .withColumn(
+            "keep_frac",
+            F.floor(F.col("_keep") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
+        )
+        .withColumn("group_total", F.col("_n_g").cast("bigint"))
+        .drop("_n_g", "_keep")
+    )
+
+
+def weighted_mixture_sample(
+    df: DataFrame,
+    weights: DataFrame,
+    group_col: str = "source",
+    id_col: str = "doc_id",
+    weight_col: str = "w",
+    target_frac: float = 0.5,
+) -> DataFrame:
+    """Realize an externally-optimized group mixture: given a per-group
+    target-weight table (any positive exact weights — e.g.
+    ``pipeline.domain_reweight_mw``'s integer ``w3``), draw a
+    deterministic ~``target_frac`` sample whose group mixture follows
+    w_g / Σw.  This is the APPLY step that closes the mixture-
+    optimization loop: reweight computes the target, this realizes it.
+
+    keep_g = min(1, target_frac · (w_g/W) · (N/n_g)); membership is the
+    same engine-reproducible md5-uniform Bernoulli as
+    ``temperature_sample`` (whose self-computed share^alpha weights this
+    generalizes to caller-supplied ones).  The weight/count arithmetic
+    is correctly-rounded IEEE doubles over exact integers in one fixed
+    association order, mirrored by the SQL oracle.
+
+    Scale posture: identical to temperature_sample — the weight table is
+    a bounded domain dim (broadcast), the sample a map-side filter.
+    Returns kept rows with ``keep_frac``, ``group_total`` and the
+    group's ``mix_weight`` attached.
+
+    The weight table must COVER every group present in ``df`` with a
+    non-NULL weight: a partial table would silently drop the uncovered
+    groups and skew the mixture (r7 advisor flag).  Coverage is enforced
+    IN-PLAN — a left join plus ``assert_true`` that names the first
+    uncovered group at execution time — so composing the plan stays lazy
+    and free (the r8 review flagged the earlier eager collect+persist:
+    every caller paid a full count job at plan-construction time).
+    """
+    from pyspark.sql import Window
+
+    everything = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n_g"))
+    wtab = weights.select(group_col, F.col(weight_col).alias("_w"))
+    covered = counts.join(wtab, group_col, "left")
+    guard = F.assert_true(
+        F.col("_w").isNotNull(),
+        F.concat(
+            F.lit("weighted_mixture_sample: weight table has no (non-NULL) "
+                  "weight for group '"),
+            F.col(group_col).cast("string"),
+            F.lit("' present in df — a partial weight table would silently "
+                  "skew the mixture"),
+        ),
+    )
+    w_type = dict(covered.dtypes)["_w"]
+    joined = (
+        covered.withColumn("_w", F.coalesce(guard.cast(w_type), F.col("_w")))
+        .withColumn("_n_tot", F.sum("_n_g").over(everything).cast("bigint"))
+        .withColumn("_w_tot", F.sum("_w").over(everything).cast("bigint"))
+    )
+    keep = F.least(
+        F.lit(1.0),
+        F.lit(float(target_frac))
+        * (F.col("_w").cast("double") / F.col("_w_tot").cast("double"))
+        * (F.col("_n_tot").cast("double") / F.col("_n_g").cast("double")),
+    )
+    wfinal = joined.select(
+        group_col, "_n_g", F.col("_w"), keep.alias("_keep")
+    )
+    unif = F.conv(
+        F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
+    ).cast("bigint") / F.lit(float(16 ** 13))
+    return (
+        df.join(F.broadcast(wfinal), group_col)
+        .filter(unif < F.col("_keep"))
+        .withColumn(
+            "keep_frac",
+            F.floor(F.col("_keep") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
+        )
+        .withColumn("group_total", F.col("_n_g").cast("bigint"))
+        .withColumn("mix_weight", F.col("_w").cast("bigint"))
+        .drop("_n_g", "_w", "_keep")
+    )
+
+
 def train_test_split(
     df: DataFrame, weights: list[float] | None = None, seed: int = 42
 ) -> list[DataFrame]:

@@ -24,7 +24,7 @@ P = 2_147_483_647
 
 # d pairwise-independent hash rows: h_i(x) = ((a_i·x + b_i) mod p) mod w.
 # Constants are part of the operator contract (the SQL oracle renders the
-# same arithmetic), chosen odd / well-mixed.
+# same arithmetic), chosen odd / well-mixed like the minhash PERMS.
 CMS_SALTS = [
     (1_103_515_245, 12_345),
     (2_654_435_761, 40_503),

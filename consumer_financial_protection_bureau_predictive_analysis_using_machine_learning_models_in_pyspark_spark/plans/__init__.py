@@ -7,7 +7,9 @@ catalog through here.
 
 from . import catalog  # noqa: F401  (defines the registry + core queries)
 from . import relational_ext  # noqa: F401
+from . import text_queries  # noqa: F401
 from . import ml_queries  # noqa: F401
+from . import media_queries  # noqa: F401
 from . import streaming_queries  # noqa: F401
 from . import source_queries  # noqa: F401
 from . import pipeline_queries  # noqa: F401
@@ -20,7 +22,11 @@ from . import breadth6  # noqa: F401
 from . import breadth7  # noqa: F401
 from . import breadth8  # noqa: F401
 from . import breadth9  # noqa: F401
+from . import breadth10  # noqa: F401
 from . import breadth10b  # noqa: F401
+from . import breadth11  # noqa: F401
+from . import breadth12  # noqa: F401
+from . import breadth13  # noqa: F401
 from . import graph_queries  # noqa: F401
 from . import quality_queries  # noqa: F401
 

@@ -1,4 +1,5 @@
-"""Behavioral / product-analytics queries over the events stream.
+"""Behavioral / product-analytics queries over the events stream, plus the
+token-budget corpus-sampling operator's catalog entry.
 
 These are the classic "analytics engine" shapes the relational pack doesn't
 cover:
@@ -7,7 +8,10 @@ cover:
                            purchase, each stage strictly after the previous
                            one for the same user);
 - events_cohort_retention: first-activity cohorts × week-offset activity
-                           matrix (COUNT(DISTINCT user) per cell).
+                           matrix (COUNT(DISTINCT user) per cell);
+- docs_token_budget_sample: deterministic ~N-token corpus slice via a
+                           distributed two-phase prefix sum (no global
+                           single-partition window).
 
 Scale posture: every per-user reduction is a narrow (user_id, ts) shuffle —
 event payloads never move; funnel stages reuse the per-user aggregates
@@ -21,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import pipeline as PL
 from .catalog import register, _t
 
 
@@ -143,6 +148,47 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("active_users"))
         .orderBy("cohort_day", "week_offset")
     )
+
+
+_TOKEN_BUDGET = 200_000
+
+@register(
+    "docs_token_budget_sample",
+    f"""
+WITH r AS (
+  SELECT doc_id,
+         CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+              AS BIGINT) AS n_tokens,
+         md5(CAST(doc_id AS VARCHAR)) AS rk
+  FROM documents
+),
+c AS (
+  SELECT doc_id, n_tokens,
+         CAST(SUM(n_tokens) OVER (
+           ORDER BY rk, doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+         ) AS BIGINT) AS cum_tokens
+  FROM r
+)
+SELECT doc_id, n_tokens, cum_tokens
+FROM c WHERE cum_tokens <= {_TOKEN_BUDGET}
+ORDER BY doc_id
+""",
+    "sampling", "window", "prefix-sum",
+)
+def docs_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic token-budget corpus slice (see
+    ``operators.pipeline.sample_token_budget``): md5-shuffled order, keep
+    the prefix whose cumulative token count fits the budget.
+
+    The oracle expresses the semantics as the naive global window; the
+    Spark side runs the distributed two-phase prefix sum (per-bucket
+    totals → broadcast offsets → partitioned within-bucket windows), which
+    is the formulation that survives 100 TB — the global ordering only
+    ever materializes as a 256-row offset table.
+    """
+    docs = _t(spark, sf_dir, "documents")
+    return PL.sample_token_budget(docs, _TOKEN_BUDGET).orderBy("doc_id")
 
 
 @register(
@@ -275,6 +321,113 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.last("_avg_u", ignorenulls=True).over(locf).alias("locf_avg_value_u"),
         )
         .orderBy("event_type", "hour")
+    )
+
+
+# Target mixture for the training-corpus domain-mix sampler: per-source keep
+# probabilities, applied via a deterministic md5-threshold so the "sample" is
+# a pure filter — reproducible across engines, runs, and partitionings.
+_MIX_WEIGHTS = {f"src{i}": w for i, w in zip(range(20), [1.0, 0.9, 0.8, 0.7, 0.6, 0.5, 0.45, 0.4, 0.35, 0.3, 0.25, 0.2, 0.18, 0.15, 0.12, 0.1, 0.08, 0.06, 0.04, 0.02])}
+_MIX_DEFAULT = 0.05
+
+
+def _hex_threshold(w: float) -> str:
+    # Hex chars sort below 'g', so 'g' keeps everything (w >= 1).
+    return "g" if w >= 1.0 else format(int(w * 16**8), "08x")
+
+
+def _mix_case_sql() -> str:
+    arms = "\n".join(
+        f"    WHEN '{s}' THEN '{_hex_threshold(w)}'"
+        for s, w in sorted(_MIX_WEIGHTS.items())
+    )
+    return f"CASE source\n{arms}\n    ELSE '{_hex_threshold(_MIX_DEFAULT)}' END"
+
+
+@register(
+    "docs_domain_mix",
+    f"""
+SELECT source,
+       COUNT(*) AS n_kept,
+       CAST(SUM(n_chars) AS BIGINT) AS chars_kept
+FROM documents
+WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < {_mix_case_sql()}
+GROUP BY source
+ORDER BY source
+""",
+    "sampling", "mixing", "agg",
+)
+def docs_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic domain-mixture sampling: each source keeps a target
+    fraction of its documents (down-weighting over-represented domains —
+    the standard pre-training mixture step), selected by comparing the
+    md5(doc_id) hex prefix against the per-source threshold.
+
+    A pure narrow filter — no shuffle, no RNG state, no sampleBy second
+    pass; the kept set is identical on any engine and any partitioning.
+    The per-source thresholds compile to a CASE over a 20-arm literal map
+    (broadcast-free: it is constant-folded into the scan predicate).
+    """
+    thr = F.lit(_hex_threshold(_MIX_DEFAULT))
+    for s, w in sorted(_MIX_WEIGHTS.items(), reverse=True):
+        thr = F.when(F.col("source") == s, F.lit(_hex_threshold(w))).otherwise(thr)
+    return (
+        _t(spark, sf_dir, "documents")
+        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8) < thr)
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum("n_chars").cast("bigint").alias("chars_kept"),
+        )
+        .orderBy("source")
+    )
+
+
+_N_SHARDS = 16
+
+
+@register(
+    "docs_shard_export",
+    f"""
+WITH sharded AS (
+  SELECT CAST(instr('0123456789abcdef',
+                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS INT)
+           AS shard_id,
+         n_chars
+  FROM documents
+)
+SELECT shard_id,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_chars) AS BIGINT) AS total_chars
+FROM sharded
+GROUP BY shard_id
+ORDER BY shard_id
+""",
+    "sharding", "export", "agg",
+)
+def docs_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic training-export sharding: md5-hash each doc id into one
+    of {_N_SHARDS} shards and report per-shard document / byte balance —
+    the assignment a `partitionBy("shard_id")` training-data writer would
+    use, with the balance stats a pre-write skew check.
+
+    The shard id is engine-portable (hex-digit position, no bit tricks), a
+    pure projection with no shuffle until the {_N_SHARDS}-row aggregate.
+    """
+    shard = (
+        F.expr(
+            "instr('0123456789abcdef', substring(md5(cast(doc_id as string)), 1, 1)) - 1"
+        )
+    ).cast("int")
+    return (
+        _t(spark, sf_dir, "documents")
+        .select(shard.alias("shard_id"), "n_chars")
+        .groupBy("shard_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("total_chars"),
+        )
+        .orderBy("shard_id")
     )
 
 

@@ -1,6 +1,6 @@
-"""Round-3 breadth pack: reshape (pivot / unpivot), SCD2 history, RFM
-segments, rolling event statistics, full outer joins and active-user
-counts — operator families the catalog lacked, each oracle-checked.
+"""Round-3 breadth pack: reshape (pivot / unpivot), deterministic
+stratified quota sampling, corpus-LM document scoring, and cosine range
+search — operator families the catalog lacked, each oracle-checked.
 
 Registered after the curated driver window (overflow region of
 ``__spark_entry__._PRIORITY``); correctness comes from the strict local
@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import reshape
+from ..operators import reshape, sampling, similarity as SIM, text as TX
 from .catalog import _t, register
+from .text_queries import _ANN_DOT, _D_TOKS
 
 
 @register(
@@ -91,6 +92,94 @@ def lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "docs_stratified_sample",
+    """
+SELECT doc_id, source FROM (
+  SELECT doc_id, source,
+         ROW_NUMBER() OVER (
+           PARTITION BY source
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+         ) AS rk
+  FROM documents
+) s WHERE rk <= 10
+ORDER BY source, doc_id
+""",
+    "sampling", "stratified", "deterministic",
+)
+def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-source quota sample (10 docs per source): hash-rank
+    selection is a pure function of the data — exact quota per group and
+    reproducible across engines (the oracle replays it), unlike Bernoulli
+    sampleBy."""
+    docs = _t(spark, sf_dir, "documents")
+    out = sampling.stratified_quota_sample(docs, "source", quota=10, id_col="doc_id")
+    return out.select("doc_id", "source").orderBy("source", "doc_id")
+
+
+@register(
+    "docs_unigram_logprob",
+    f"""
+WITH tok AS (
+  SELECT doc_id, unnest({_D_TOKS}) AS t FROM documents
+),
+tf AS (
+  SELECT doc_id, t, COUNT(*) AS tf FROM tok GROUP BY doc_id, t
+),
+vocab AS (
+  SELECT t, COUNT(*) AS cnt FROM tok GROUP BY t
+)
+SELECT tf.doc_id,
+       CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
+       CAST(SUM(tf.tf * v.cnt) AS BIGINT) AS sum_tf_cnt,
+       CAST(SUM(tf.tf * tf.tf * v.cnt) AS BIGINT) AS sum_tf2_cnt
+FROM tf JOIN vocab v ON tf.t = v.t
+GROUP BY tf.doc_id
+ORDER BY tf.doc_id
+""",
+    "text", "lm", "quality",
+)
+def docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus unigram-LM scorer verification (operators.text
+    .unigram_check_fold): the same explode→tf→vocab→broadcast-join plan
+    as the production ``unigram_logprob`` scorer, driver-checked via
+    EXACT integer moments (Σtf, Σtf·cnt, Σtf²·cnt) that pin the joined
+    (tf, cnt) multiset per document.  The ln(p) fold itself is OFF the
+    cross-engine surface by design: ``ROUND(ln(x), n)`` recomputed on two
+    engines proved DuckDB-build-sensitive (driver hash FAIL in r4 AND r5
+    while bit-exact locally — the driver box's libm lands a term on the
+    other side of a rounding boundary).  ln values are pinned in pytest:
+    a hand-computed exact check plus a DuckDB 1e-9 relative-tolerance
+    cross-check (test_round3 / test_round6)."""
+    docs = _t(spark, sf_dir, "documents")
+    return TX.unigram_check_fold(docs).select(
+        "doc_id", "n_tokens", "sum_tf_cnt", "sum_tf2_cnt"
+    ).orderBy("doc_id")
+
+
+@register(
+    "ann_range_search",
+    f"""
+WITH pairs AS ({_ANN_DOT})
+SELECT probe_id, neighbor_id,
+       ROUND(CAST(dot_dec AS DOUBLE), 6) AS cosine
+FROM pairs
+WHERE dot_dec >= CAST(0.35 AS DECIMAL(30,15))
+ORDER BY probe_id, neighbor_id
+""",
+    "similarity", "range-search", "bruteforce",
+)
+def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All neighbors with cosine >= 0.35 for probes vec_id < 10 — the
+    recall-complete retrieval primitive top-k cannot express.  Map-side
+    threshold filter; decimal-exact boundary."""
+    emb = _t(spark, sf_dir, "embeddings")
+    out = SIM.cosine_range_search(
+        emb, emb.filter(F.col("vec_id") < 10), threshold=0.35
+    )
+    return out.orderBy("probe_id", "neighbor_id")
+
+
+@register(
     "orders_scd2",
     """
 WITH ordered AS (
@@ -140,6 +229,65 @@ def orders_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("valid_to").cast("string").alias("valid_to"),
         "is_current",
     ).orderBy("o_custkey", "valid_from")
+
+
+# Explicit half-up rounding (floor(x*1e6 + 0.5)/1e6) on BOTH sides: a
+# fraction like 1/128 is an exact 7-decimal midpoint where Spark's
+# HALF_UP and DuckDB's ROUND disagree at the last digit; the explicit
+# formula is the same sequence of correctly-rounded double ops in any
+# engine.
+@register(
+    "docs_boilerplate_spans",
+    f"""
+WITH tok AS (
+  SELECT doc_id, {_D_TOKS} AS toks FROM documents
+),
+grams AS (
+  SELECT doc_id,
+         unnest(list_distinct(list_transform(range(1, len(toks) - 3),
+                j -> toks[j] || ' ' || toks[j+1] || ' ' || toks[j+2]
+                     || ' ' || toks[j+3] || ' ' || toks[j+4]))) AS g
+  FROM tok WHERE len(toks) >= 5
+),
+gdf AS (SELECT g, COUNT(DISTINCT doc_id) AS d FROM grams GROUP BY g),
+bp AS (SELECT g FROM gdf WHERE d >= 2),
+per AS (
+  SELECT grams.doc_id, COUNT(*) AS n_bp
+  FROM grams JOIN bp ON grams.g = bp.g GROUP BY grams.doc_id
+),
+tot AS (SELECT doc_id, COUNT(*) AS n_grams FROM grams GROUP BY doc_id)
+SELECT d.doc_id,
+       CAST(COALESCE(t.n_grams, 0) AS BIGINT) AS n_grams,
+       CAST(COALESCE(p.n_bp, 0) AS BIGINT) AS n_boilerplate,
+       CASE WHEN COALESCE(t.n_grams, 0) > 0
+            THEN FLOOR(CAST(COALESCE(p.n_bp, 0) AS DOUBLE) / t.n_grams
+                       * 1000000 + 0.5) / 1000000
+            ELSE 0.0 END AS boilerplate_fraction
+FROM documents d
+LEFT JOIN tot t ON d.doc_id = t.doc_id
+LEFT JOIN per p ON d.doc_id = p.doc_id
+ORDER BY d.doc_id
+""",
+    "text", "boilerplate", "span-dedup",
+)
+def docs_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-document repeated 5-gram span detection
+    (operators.pipeline.boilerplate_spans): per-doc fraction of shingles
+    shared with >= 2 documents — the span-level dedup signal."""
+    from ..operators import pipeline as PL
+
+    docs = _t(spark, sf_dir, "documents")
+    out = PL.boilerplate_spans(docs, n=5, min_docs=2)
+    return out.withColumn(
+        "boilerplate_fraction",
+        F.when(
+            F.col("n_grams") > 0,
+            F.floor(
+                F.col("n_boilerplate") / F.col("n_grams") * 1_000_000 + 0.5
+            )
+            / 1_000_000,
+        ).otherwise(F.lit(0.0)),
+    ).orderBy("doc_id")
 
 
 @register(
@@ -308,6 +456,41 @@ def stream_minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.round("sum_value", 4).alias("sum_value"),
     ).orderBy("bucket_start", "event_type")
+
+
+@register(
+    "docs_weighted_sample",
+    """
+WITH u AS (
+  SELECT doc_id, n_chars,
+         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT)
+           / POWER(16, 13) AS unif,
+         LEAST(1.0, n_chars / 400.0) AS w
+  FROM documents
+)
+SELECT doc_id, n_chars FROM u WHERE unif < w
+ORDER BY doc_id
+""",
+    "sampling", "weighted", "deterministic",
+)
+def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic weighted Bernoulli sampling: keep each doc with
+    probability proportional to a quality weight (here length-saturating
+    n_chars/400), decided by a uniform hash of the id — the importance-
+    sampling step of corpus mixture building, reproducible across engines
+    and partitionings (rand() is neither).  13 hex chars = 52 bits, exact
+    in a double, so unif and the comparison are bit-identical anywhere.
+    Pure map-side projection + filter: zero shuffle."""
+    docs = _t(spark, sf_dir, "documents")
+    unif = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10
+    ).cast("bigint") / F.lit(float(16 ** 13))
+    w = F.least(F.lit(1.0), F.col("n_chars") / 400.0)
+    return (
+        docs.filter(unif < w)
+        .select("doc_id", "n_chars")
+        .orderBy("doc_id")
+    )
 
 
 @register(
@@ -501,3 +684,64 @@ def complaints_monthly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1_000_000
         ).alias("mom_change"),
     ).orderBy("month")
+
+
+@register(
+    "docs_weighted_topk_sample",
+    """
+WITH u AS (
+  SELECT doc_id, n_chars,
+         (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT)
+          + 1) / POWER(16, 13) AS unif
+  FROM documents
+),
+k AS (
+  SELECT doc_id, n_chars,
+         ROUND(ln(unif), 6) / CAST(n_chars AS DOUBLE) AS key
+  FROM u
+)
+SELECT doc_id, n_chars,
+       CAST(row_number() OVER (ORDER BY key DESC, doc_id) AS INT) AS rank
+FROM k ORDER BY key DESC, doc_id LIMIT 100
+""",
+    "sampling", "weighted", "without-replacement", "topk", "deterministic",
+)
+def docs_weighted_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-k weighted sampling WITHOUT replacement
+    (Efraimidis–Spirakis A-ES): each doc draws key = ln(u)/w from a
+    deterministic md5-uniform u and weight w = n_chars; the top-k keys
+    are a weighted-without-replacement sample — the one sampler shape
+    the family still lacked (Bernoulli gives a random-size sample,
+    quota/temperature are per-group).
+
+    Distributed shape: key is a pure map-side expression; the top-k is
+    orderBy+limit (TakeOrderedAndProject — per-partition local top-k,
+    never a global sort of all keys).  Parity: u is a 52-bit-exact
+    uniform; ln rounds at 6 before the division, so both engines rank
+    identical doubles; doc_id breaks any residual tie.
+
+    ln-boundary margin (unigram lesson as MEASURED margin): the key
+    orders rows but is not emitted, so a hash flip needs a libm
+    divergence to cross a 6-decimal rounding boundary AND reorder.
+    Measured at the driver's sf0.01 over all 500 ln evaluations: the
+    closest value sits 1.0e-3 quanta (1e-9 absolute) from a boundary —
+    ≥10^6 above worst-case libm divergence — and the smallest nonzero
+    adjacent key gap in the top-100 is 1.3e-8, so identical rounded
+    inputs produce identical ranks on any build.
+    """
+    from pyspark.sql import Window
+
+    docs = _t(spark, sf_dir, "documents")
+    h = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10
+    ).cast("bigint")
+    u = (h + F.lit(1)) / F.lit(float(16**13))
+    key = F.round(F.log(u), 6) / F.col("n_chars").cast("double")
+    w = Window.orderBy(F.desc("_key"), F.col("doc_id"))
+    return (
+        docs.select("doc_id", "n_chars", key.alias("_key"))
+        .orderBy(F.desc("_key"), "doc_id")
+        .limit(100)  # TakeOrderedAndProject; the window ranks only these
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .select("doc_id", "n_chars", "rank")
+    )

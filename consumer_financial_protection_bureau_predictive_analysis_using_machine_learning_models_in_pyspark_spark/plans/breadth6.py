@@ -1,5 +1,5 @@
-"""Round-6 breadth pack: the physical-layout operations that decide what a
-100 TB scan COSTS before any query runs —
+"""Round-6 breadth pack: the physical-layout and corpus-statistics
+operations that decide what a 100 TB scan COSTS before any query runs —
 
 - orders_mv_merge:        incremental materialized-view maintenance
                           (merge delta partials into stored MV state;
@@ -9,10 +9,16 @@
                           locality;
 - lineitem_skipping_stats: min-max data-skipping manifest under two
                           candidate shard layouts + the pruning dividend
-                          for a date-range predicate, in one scan.
+                          for a date-range predicate, in one scan;
+- docs_bigram_pmi:        PMI collocation mining (phrase detection for
+                          tokenizer/vocabulary curation);
+- docs_quality_zscore:    per-domain quality standardization (outliers
+                          against each source's own distribution).
 
 Oracle discipline (see catalog.py header): integer/bit arithmetic and
-DECIMAL folds wherever exactness is needed.
+DECIMAL folds wherever exactness is needed; single-ln double expressions
+with identical association order and 6-decimal rounding where not (the
+unigram_logprob lesson).
 """
 
 from __future__ import annotations
@@ -23,7 +29,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import layout as LY
+from ..operators import text as TX
 from .catalog import _t, register
+from .text_queries import (
+    _AUG_CTE,
+    _D_FP,
+    _D_TOKS,
+    _QU_EXPR_SQL,
+    _QU_MOMENTS_SQL,
+    _STOP_SQL,
+)
 
 # ---------------------------------------------------------------------------
 # Incremental materialized-view maintenance
@@ -197,6 +212,221 @@ def lineitem_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# PMI collocations
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "docs_bigram_pmi",
+    f"""
+WITH tk AS (SELECT doc_id, {_D_TOKS} AS toks FROM documents),
+pairs AS (
+  SELECT toks[i] AS t1, toks[i + 1] AS t2
+  FROM (SELECT unnest(range(1, len(toks))) AS i, toks FROM tk WHERE len(toks) >= 2)
+),
+cb AS (
+  SELECT t1, t2, CAST(COUNT(*) AS BIGINT) AS c_xy FROM pairs GROUP BY t1, t2
+),
+cu AS (
+  SELECT t, COUNT(*) AS c FROM (SELECT unnest(toks) AS t FROM tk) GROUP BY t
+),
+nu AS (SELECT CAST(SUM(c) AS DOUBLE) AS n_uni FROM cu),
+nb AS (SELECT CAST(SUM(c_xy) AS DOUBLE) AS n_bi FROM cb)
+SELECT t1, t2, c_xy,
+       ROUND(ln((CAST(c_xy AS DOUBLE) * n_uni * n_uni)
+                / (n_bi * CAST(cx.c AS DOUBLE) * CAST(cy.c AS DOUBLE))), 6) AS pmi
+FROM cb
+JOIN cu cx ON cb.t1 = cx.t
+JOIN cu cy ON cb.t2 = cy.t
+CROSS JOIN nu CROSS JOIN nb
+WHERE c_xy >= 3
+ORDER BY pmi DESC, t1, t2
+LIMIT 50
+""",
+    "text", "pmi", "collocations", "phrases",
+)
+def docs_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PMI collocation mining (operators.text.bigram_pmi): top-50
+    bigrams by ln(P(xy)/(P(x)P(y))), min count 3 — the phrase-detection
+    pass of tokenizer/vocabulary curation.  Bigrams form in-row (token
+    array zipped with its own tail: no positional self-join), the vocab
+    broadcasts back onto the count-filtered bigram frame, and the PMI
+    argument is one double division of integer-exact products so the
+    only engine-variant op is the final ln, absorbed by 6-decimal
+    rounding."""
+    docs = _t(spark, sf_dir, "documents")
+    return TX.bigram_pmi(docs, min_count=3, top_k=50)
+
+
+# ---------------------------------------------------------------------------
+# Per-domain quality standardization
+# ---------------------------------------------------------------------------
+
+@register(
+    "docs_quality_zscore",
+    f"""
+WITH s AS (SELECT source, text, {_D_TOKS} AS toks FROM documents),
+b AS (SELECT source, {_QU_MOMENTS_SQL} FROM s),
+q AS (SELECT source, {_QU_EXPR_SQL} AS qu FROM b),
+st AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(qu) AS BIGINT) AS sum_qu,
+         CAST(SUM(qu * qu) AS BIGINT) AS sum_qu2
+  FROM q GROUP BY source
+),
+d AS (
+  SELECT source, n_docs, sum_qu, sum_qu2,
+         CAST(sum_qu AS DOUBLE) / CAST(n_docs AS DOUBLE) AS mean,
+         sqrt(GREATEST(CAST(sum_qu2 AS DOUBLE) / CAST(n_docs AS DOUBLE)
+              - (CAST(sum_qu AS DOUBLE) / CAST(n_docs AS DOUBLE))
+                * (CAST(sum_qu AS DOUBLE) / CAST(n_docs AS DOUBLE)), 0.0)) AS sd
+  FROM st
+),
+o AS (
+  SELECT q.source,
+         CAST(SUM(CASE WHEN abs(CAST(q.qu AS DOUBLE) - d.mean) > 2.0 * d.sd
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+  FROM q JOIN d ON q.source = d.source GROUP BY q.source
+)
+SELECT d.source, d.n_docs, d.sum_qu, d.sum_qu2, o.n_outliers
+FROM d JOIN o ON d.source = o.source
+ORDER BY d.source
+""",
+    "text", "quality", "zscore", "calibration",
+)
+def docs_quality_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain quality calibration (operators.text
+    .quality_zscore_by_source): per-source moments of the INTEGER
+    micro-unit quality (quality_score_exact — r7 hash-surface
+    hardening; the pre-r7 surface summed ROUND()ed floats, the exact
+    failure mode that burned dedup_canonical_best in r6), plus the
+    |z| > 2 outlier count against the source's OWN distribution — the
+    step that stops a global quality cut from flattening one domain.
+    mean/sd stay internal doubles derived from the exact integer sums
+    with a fixed expression order (every op IEEE-correctly-rounded from
+    exact inputs → engine-stable compare); the hash surface itself is
+    all BIGINT.  The domain-sized stats table broadcasts back for the
+    outlier compare; the corpus never shuffles."""
+    docs = _t(spark, sf_dir, "documents")
+    return TX.quality_zscore_by_source(docs).orderBy("source")
+
+
+# ---------------------------------------------------------------------------
+# Vocabulary coverage curve
+# ---------------------------------------------------------------------------
+
+_VOCAB_SIZES = (5, 10, 20)
+
+
+@register(
+    "docs_vocab_coverage",
+    f"""
+WITH tok AS (SELECT unnest({_D_TOKS}) AS t FROM documents),
+cnt AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c FROM tok GROUP BY t),
+rk AS (SELECT t, c, ROW_NUMBER() OVER (ORDER BY c DESC, t) AS rn FROM cnt),
+tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total FROM cnt)
+SELECT v.vocab_size,
+       CAST(SUM(CASE WHEN rk.rn <= v.vocab_size THEN 1 ELSE 0 END) AS BIGINT) AS n_types,
+       CAST(SUM(CASE WHEN rk.rn <= v.vocab_size THEN rk.c ELSE 0 END) AS BIGINT) AS covered_tokens,
+       MIN(tot.total) AS total_tokens,
+       ROUND(CAST(SUM(CASE WHEN rk.rn <= v.vocab_size THEN rk.c ELSE 0 END) AS DOUBLE)
+             / CAST(MIN(tot.total) AS DOUBLE), 6) AS coverage
+FROM rk CROSS JOIN tot
+CROSS JOIN (VALUES (5), (10), (20)) AS v(vocab_size)
+GROUP BY v.vocab_size
+ORDER BY v.vocab_size
+""",
+    "text", "vocabulary", "coverage", "tokenizer",
+)
+def docs_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer-vocabulary coverage curve (operators.text
+    .vocab_coverage): token coverage of the top-V most frequent types for
+    V in (5, 10, 20) — the report behind a vocabulary-size cut.  One
+    explode feeds the type counts, one vocabulary-bounded ordered window
+    assigns ranks, and a single conditional agg emits every V at once;
+    `stack` unpivots the 1-row result."""
+    docs = _t(spark, sf_dir, "documents")
+    return TX.vocab_coverage(docs, sizes=_VOCAB_SIZES).orderBy("vocab_size")
+
+
+# ---------------------------------------------------------------------------
+# Quality-aware canonical dedup
+# ---------------------------------------------------------------------------
+
+from .text_queries import _AUG_CTE, _COMPONENT_CTES  # noqa: E402
+
+_AUG_XTAIL_CTE = """
+SELECT doc_id, text FROM documents
+UNION ALL
+SELECT doc_id + 1000000 AS doc_id, text || ' xtail' AS text
+FROM documents WHERE doc_id % 10 = 0
+""".strip()
+
+# the full minhash pipeline + recursive component closure, re-derived over
+# the near-dup (' xtail') corpus instead of the exact-copy one: only the
+# aug CTE differs, so the substitution keeps every shared constant aligned
+_COMPONENT_XTAIL_CTES = _COMPONENT_CTES.replace(_AUG_CTE, _AUG_XTAIL_CTE)
+
+
+@register(
+    "dedup_canonical_best",
+    f"""
+{_COMPONENT_XTAIL_CTES},
+qual AS (
+  SELECT doc_id, {_QU_EXPR_SQL} AS quality_u
+  FROM (
+    SELECT doc_id, {_QU_MOMENTS_SQL}
+    FROM (SELECT doc_id, text, {_D_TOKS} AS toks FROM aug)
+  )
+),
+ranked AS (
+  SELECT c.doc_id,
+         ROW_NUMBER() OVER (PARTITION BY c.component
+                            ORDER BY q.quality_u DESC, c.doc_id) AS rn
+  FROM comp c JOIN qual q ON q.doc_id = c.doc_id
+)
+SELECT g.doc_id, q.quality_u
+FROM aug g JOIN qual q ON q.doc_id = g.doc_id
+WHERE g.doc_id NOT IN (SELECT doc_id FROM ranked WHERE rn > 1)
+ORDER BY g.doc_id
+""",
+    "dedup", "components", "canonical", "quality",
+)
+def dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-aware canonical corpus (operators.dedup
+    .canonical_docs_best): near-dup clusters (minhash pairs over a
+    ' xtail'-perturbed corpus, so duplicates genuinely differ in quality)
+    keep their HIGHEST-quality member, tie → min id — versus
+    ``dedup_canonical_docs``' min-id convention.  The ranking window is
+    per-component (cluster-sized); the corpus rides only the final
+    anti-join.
+
+    r7 hash-surface hardening: the ranking key and the emitted score are
+    ``quality_u`` — quality_score_exact's pure-int64 micro-unit fold —
+    after the r6 driver row proved the float ``ROUND(Σ 0.25·term, 6)``
+    surface DuckDB-build-sensitive (values bit-identical locally, hash
+    FAIL on the driver box; and a boundary flip on a float RANK could
+    change WHICH doc is canonical, not just a printed digit)."""
+    from ..operators import dedup as DD
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    aug = d.union(
+        d.filter(F.col("doc_id") % 10 == 0).select(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            F.concat("text", F.lit(" xtail")).alias("text"),
+        )
+    )
+    pairs = DD.minhash_dedup_pairs(spark, aug, threshold=0.5)
+    comps = DD.connected_components(pairs)
+    qual = TX.quality_score_exact(aug).select("doc_id", "quality_u")
+    return (
+        DD.canonical_docs_best(qual, comps, qual, quality_col="quality_u")
+        .select("doc_id", "quality_u")
+        .orderBy("doc_id")
+    )
+
+
+# ---------------------------------------------------------------------------
 # Streaming compact-state MV maintenance
 # ---------------------------------------------------------------------------
 
@@ -243,6 +473,122 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_dec").cast("double").alias("sum_value"),
         F.col("max_ts").cast("string").alias("max_ts"),
     ).orderBy("user_id")
+
+
+@register(
+    "docs_training_export",
+    f"""
+WITH aug AS ({{AUG}}),
+t AS (
+  SELECT doc_id, text, {_D_TOKS} AS toks FROM aug
+),
+m AS (
+  SELECT doc_id, text, toks,
+         length(text) >= 100 AS p_chars,
+         len(toks) >= 20 AS p_tokens,
+         CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE)
+           / CAST(length(text) AS DOUBLE) >= 0.5 AS p_alpha,
+         CAST(len(list_filter(toks, s -> list_contains({_STOP_SQL}, s))) AS DOUBLE)
+           / CAST(len(toks) AS DOUBLE) <= 0.3 AS p_stop
+  FROM t
+),
+kept AS (
+  SELECT doc_id, text, CAST(len(toks) AS BIGINT) AS n_tokens
+  FROM m WHERE p_chars AND p_tokens AND p_alpha AND p_stop
+),
+fp AS (
+  SELECT doc_id, n_tokens, {{FP}} AS f FROM kept
+),
+canon AS (
+  SELECT doc_id, n_tokens FROM (
+    SELECT doc_id, n_tokens,
+           MIN(doc_id) OVER (PARTITION BY f) AS keep_id
+    FROM fp) x
+  WHERE doc_id = keep_id
+),
+r AS (
+  SELECT doc_id, n_tokens, md5(CAST(doc_id AS VARCHAR)) AS rk FROM canon
+),
+c AS (
+  SELECT doc_id, n_tokens,
+         CAST(SUM(n_tokens) OVER (ORDER BY rk, doc_id
+                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+  FROM r
+),
+samp AS (SELECT doc_id, n_tokens FROM c WHERE cum <= 20000),
+p AS (
+  SELECT doc_id, n_tokens,
+         CAST(SUM(n_tokens) OVER (ORDER BY doc_id
+                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum2
+  FROM samp
+)
+SELECT CAST(FLOOR((cum2 - n_tokens) / 512.0) AS BIGINT) AS bin_id,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens,
+       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS doc_ids
+FROM p GROUP BY bin_id ORDER BY bin_id
+""".format(AUG=_AUG_CTE, FP=_D_FP),
+    "pipeline", "composition", "export", "end-to-end",
+)
+def docs_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The END-TO-END training-data export — the four pipeline stages a
+    real curation run chains, composed as ONE lazy plan and value-oracled
+    through every stage boundary: C4/Gopher quality filter → exact
+    content dedup (min-id canonical) → deterministic 20k-token budget
+    slice (md5-shuffled two-phase prefix sum) → 512-token greedy packing
+    with the ordered doc-id manifest.  Input is the dup-augmented corpus
+    so the dedup stage provably removes rows.
+
+    Each stage is an already-oracled operator (docs_filter_chain,
+    dedup_exact, docs_token_budget_sample, docs_pack_manifest); this
+    entry proves the COMPOSITION — one Catalyst plan, no materialization
+    between stages, filters pruning before any shuffle, the only global
+    ordering a 256-row bucket-offset table inside the distributed prefix
+    sum.  This is the "switch your pipeline to this repo" demo: the
+    manifest it returns is what a training loader consumes.
+    """
+    from ..functions import textfns as TF
+    from ..operators import pipeline as PL
+    from .text_queries import _aug
+
+    aug = _aug(spark, sf_dir)
+    text = F.col("text")
+    toks = TF.tokens("text")
+    stop_arr = F.array(*[F.lit(s) for s in TF.STOPWORDS_EN])
+    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
+    rules = [
+        ("min_chars", F.length(text) >= 100),
+        ("min_tokens", F.size(toks) >= 20),
+        (
+            "alpha_ratio",
+            F.length(F.regexp_replace(text, r"[^A-Za-z ]", "")).cast("double")
+            / F.length(text).cast("double")
+            >= 0.5,
+        ),
+        (
+            "stopword_ratio",
+            n_stop.cast("double") / F.size(toks).cast("double") <= 0.3,
+        ),
+    ]
+    flags = PL.filter_chain(aug, rules)
+    kept = aug.join(flags.filter(F.col("keep")).select("doc_id"), "doc_id")
+    fp = kept.select(
+        "doc_id", "text", TF.content_fingerprint("text").alias("_f")
+    )
+    keepers = fp.groupBy("_f").agg(F.min("doc_id").alias("doc_id"))
+    canon = kept.join(keepers.select("doc_id"), "doc_id")
+    samp = PL.sample_token_budget(canon, 20_000).select("doc_id")
+    packed = PL.pack_manifest(
+        canon.join(samp, "doc_id").withColumn("_part", F.lit("all")),
+        budget=512,
+        part_col="_part",
+    )
+    return packed.select(
+        "bin_id",
+        F.col("n_docs").cast("bigint").alias("n_docs"),
+        F.col("bin_tokens").cast("bigint").alias("bin_tokens"),
+        "doc_ids",
+    ).orderBy("bin_id")
 
 
 @register(

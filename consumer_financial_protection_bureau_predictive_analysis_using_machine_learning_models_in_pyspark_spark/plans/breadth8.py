@@ -1,5 +1,11 @@
-"""Round-8 catalog entries: the right-to-be-forgotten delete cascade
-audit and the Hilbert-curve clustering audit of lineitem.
+"""Round-8 catalog entries.
+
+Leads with the HashingTF-parity hashed-features path (SURVEY §7 handoff
+note b / VERDICT r7 item 4): ml.HashingTF's standard murmur3_x86_32 as a
+native column expression on the Spark side and the identical generated
+arithmetic as nested DuckDB subqueries on the oracle side — making the
+last reference-adjacent transformer without a cross-checkable twin
+oracle-checked.
 """
 
 from __future__ import annotations
@@ -7,7 +13,179 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import hashing as HH
+from ..operators import dedup as DD
+from ..operators import text as TX
 from .catalog import _t, register
+from .text_queries import _D_TOKS
+
+_HTF_N = 1024
+_HTF_MAXB = 32
+
+_HTF_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_D_TOKS}) AS term FROM documents
+),
+f AS (
+  SELECT doc_id, term FROM toks
+  WHERE term <> '' AND octet_length(encode(term)) <= {_HTF_MAXB}
+)
+SELECT feature_ix,
+       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       CAST(COUNT(*) AS BIGINT) AS n_tokens
+FROM {HH.hashingtf_index_duckdb_subquery(
+    "SELECT doc_id, term FROM f", ["doc_id", "term"], "term", "feature_ix",
+    _HTF_N, _HTF_MAXB)} q
+GROUP BY feature_ix
+ORDER BY feature_ix
+"""
+
+
+@register(
+    "docs_hashed_features",
+    _HTF_ORACLE,
+    "text", "features", "hashing",
+)
+def docs_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ml.HashingTF-compatible hashed term features, fully native and
+    DuckDB-oracled.
+
+    ``feature_ix`` = ``HashingTF(1024).indexOf(term)`` — standard
+    murmur3_x86_32 seed 42 over UTF-8 bytes (``hashUnsafeBytes2``), which
+    ``F.hash`` does NOT match for tokens whose byte length % 4 != 0
+    (functions/hashing.py documents the tail-handling difference; the
+    real-HashingTF parity pin is tests/test_hashingtf_parity.py).
+
+    Scale: explode → 90-step codegen'd hash projection → one partial-agg
+    shuffle with ≤1024 reduce groups.  No Python, no fanout joins.
+    """
+    return TX.hashed_term_features(
+        _t(spark, sf_dir, "documents"),
+        num_features=_HTF_N,
+        max_bytes=_HTF_MAXB,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Blocked edit-distance near-dup (fuzzy text dedup beyond shingle Jaccard)
+# ---------------------------------------------------------------------------
+#
+# Corpus: documents ∪ an exact-dup slice ∪ a 2-edit perturbed slice, so the
+# operator has distance-0 AND distance-2 pairs to find (the synthetic docs
+# are otherwise all-distinct).  Deterministic and SQL-expressible on both
+# sides — same pattern as text_queries._AUG_CTE.
+
+_ED_CORPUS_CTE = """
+SELECT doc_id, text FROM documents
+UNION ALL
+SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
+UNION ALL
+SELECT doc_id + 2000000 AS doc_id, text || ' zq' AS text
+FROM documents WHERE doc_id % 7 = 0
+""".strip()
+
+_ED_MAXD = 4
+_ED_PREFIX = 12
+_ED_MAXBLK = 256
+
+
+def _ed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    exact = d.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+    )
+    pert = d.filter(F.col("doc_id") % 7 == 0).select(
+        (F.col("doc_id") + 2000000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zq")).alias("text"),
+    )
+    return d.union(exact).union(pert)
+
+
+@register(
+    "dedup_edit_distance",
+    f"""
+WITH corpus AS ({_ED_CORPUS_CTE}),
+c AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS txt
+  FROM corpus
+),
+blk AS (SELECT doc_id, txt, substring(txt, 1, {_ED_PREFIX}) AS b FROM c),
+ok AS (SELECT b FROM blk GROUP BY b HAVING COUNT(*) <= {_ED_MAXBLK}),
+p AS (SELECT blk.doc_id, blk.txt, blk.b FROM blk JOIN ok USING (b))
+SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
+       CAST(levenshtein(a.txt, b2.txt) AS BIGINT) AS dist
+FROM p a JOIN p b2 USING (b)
+WHERE a.doc_id < b2.doc_id
+  AND abs(length(a.txt) - length(b2.txt)) <= {_ED_MAXD}
+  AND levenshtein(a.txt, b2.txt) <= {_ED_MAXD}
+ORDER BY id_a, id_b
+""",
+    "dedup", "edit-distance", "blocking",
+)
+def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prefix-blocked Levenshtein near-dup pairs (operators.dedup
+    .edit_distance_pairs): equi-join candidate generation with a
+    max-block skew guard, banded levenshtein(threshold) verify.  Finds
+    the injected exact (dist 0) and 2-edit perturbed pairs."""
+    from ..operators import dedup as DD
+
+    return DD.edit_distance_pairs(
+        _ed_corpus(spark, sf_dir),
+        max_dist=_ED_MAXD,
+        prefix_len=_ED_PREFIX,
+        max_block=_ED_MAXBLK,
+    ).orderBy("id_a", "id_b")
+
+
+# ---------------------------------------------------------------------------
+# Eval-side contamination report (reverse of docs_decontaminate)
+# ---------------------------------------------------------------------------
+
+from .pipeline_queries import _D_GRAMS_CTE  # noqa: E402  (shared gram CTE)
+
+
+@register(
+    "docs_contamination_report",
+    f"""
+WITH {_D_GRAMS_CTE},
+ev AS (SELECT doc_id, gram FROM grams WHERE doc_id % 25 = 0),
+hits AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 25 <> 0),
+j AS (
+  SELECT ev.doc_id,
+         COUNT(*) AS n_grams,
+         COUNT(h.gram) AS n_hit
+  FROM ev LEFT JOIN (SELECT gram FROM hits) h USING (gram)
+  GROUP BY ev.doc_id
+)
+SELECT b.doc_id,
+       CAST(COALESCE(j.n_grams, 0) AS BIGINT) AS n_grams,
+       CAST(COALESCE(j.n_hit, 0) AS BIGINT) AS n_hit_grams,
+       CAST(CASE WHEN COALESCE(j.n_grams, 0) = 0 THEN 0
+                 ELSE (2000000 * j.n_hit + j.n_grams) // (2 * j.n_grams)
+            END AS BIGINT) AS contamination_u
+FROM (SELECT doc_id FROM documents WHERE doc_id % 25 = 0) b
+LEFT JOIN j ON b.doc_id = j.doc_id
+ORDER BY b.doc_id
+""",
+    "pipeline", "decontamination", "eval-integrity",
+)
+def docs_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-eval-doc 8-gram contamination ratio against the training
+    corpus (operators.pipeline.contamination_report; micro-unit integer
+    ratio surface).  Same %25 split as docs_decontaminate, reporting the
+    EVAL side instead of the corpus side."""
+    from pyspark.sql import functions as F
+
+    from ..operators import pipeline as PL
+
+    docs = _t(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 25 == 0)
+    corpus = docs.filter(F.col("doc_id") % 25 != 0).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+    return PL.contamination_report(corpus, bench, n=8).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -153,3 +331,229 @@ def lineitem_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bucket")
     )
 
+
+# ---------------------------------------------------------------------------
+# Bigram LM fit score (quality-filter proxy; integer micro-unit surface)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "docs_bigram_condprob",
+    f"""
+WITH tok AS (
+  SELECT doc_id, {_D_TOKS} AS toks FROM documents
+),
+pairs AS (
+  SELECT doc_id,
+         toks[i] AS t1, toks[i + 1] AS t2
+  FROM tok CROSS JOIN unnest(generate_series(1, len(toks) - 1)) AS u(i)
+  WHERE len(toks) >= 2
+),
+cbi AS (SELECT t1, t2, COUNT(*) AS c12 FROM pairs GROUP BY t1, t2),
+cleft AS (SELECT t1, SUM(c12) AS c1 FROM cbi GROUP BY t1),
+scored AS (
+  SELECT p.doc_id,
+         CAST((2000000 * b.c12 + l.c1) // (2 * l.c1) AS BIGINT) AS pu
+  FROM pairs p JOIN cbi b USING (t1, t2) JOIN cleft l USING (t1)
+),
+agg AS (
+  SELECT doc_id,
+         CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+         CAST(SUM(pu) AS BIGINT) AS sum_condprob_u
+  FROM scored GROUP BY doc_id
+)
+SELECT doc_id, n_bigrams, sum_condprob_u,
+       CAST((2 * sum_condprob_u + n_bigrams) // (2 * n_bigrams) AS BIGINT)
+         AS avg_condprob_u
+FROM agg
+ORDER BY doc_id
+""",
+    "text", "lm-scoring", "quality",
+)
+def docs_bigram_condprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc bigram LM fit score (operators.text.bigram_condprob_score):
+    the CCNet/KenLM-style quality-filter proxy on the engine-stable
+    integer micro-unit surface — corpus P(w2|w1) summed per doc, no
+    transcendental anywhere on the hashed surface.  Extends the LM
+    family (unigram_logprob → bigram conditional) one order up."""
+    from ..operators import text as TX
+
+    return TX.bigram_condprob_score(_t(spark, sf_dir, "documents")).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Shingle containment (asymmetric near-dup: doc contained in a superset doc)
+# ---------------------------------------------------------------------------
+#
+# Jaccard misses the concatenation/expansion case: a doc glued into a
+# bigger doc scores low symmetric overlap but containment(sub ⊆ sup) =
+# |A∩B|/|A| ≈ 1.  Corpus: documents ∪ a superset slice (text + appended
+# tokens, id +3,000,000) so there are true containment-1.0 pairs to find.
+
+_CT_MIN_U = 900_000  # containment ≥ 0.9 in 1e-6 micro-units
+
+_CT_CORPUS_CTE = """
+SELECT doc_id, lang, text FROM documents
+UNION ALL
+SELECT doc_id + 3000000 AS doc_id, lang,
+       text || ' zq yw xv ut' AS text
+FROM documents WHERE doc_id % 13 = 0
+""".strip()
+
+
+@register(
+    "dedup_containment",
+    f"""
+WITH corpus AS ({_CT_CORPUS_CTE}),
+tok AS (
+  SELECT doc_id, lang, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+  FROM corpus
+),
+sh AS (
+  SELECT doc_id, lang,
+         unnest(list_distinct(list_transform(range(1, len(toks) - 1),
+                j -> toks[j] || ' ' || toks[j+1] || ' ' || toks[j+2]))) AS s
+  FROM tok WHERE len(toks) >= 3
+),
+hashed AS (
+  SELECT DISTINCT doc_id, lang,
+         CAST('0x' || substr(md5(s), 1, 14) AS BIGINT) % 2147483647 AS h
+  FROM sh
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM hashed GROUP BY doc_id),
+dfh AS (SELECT lang, h, COUNT(*) AS df FROM hashed GROUP BY lang, h),
+cold AS (
+  SELECT hashed.doc_id, hashed.lang, hashed.h FROM hashed
+  JOIN dfh ON dfh.lang = hashed.lang AND dfh.h = hashed.h
+  WHERE dfh.df <= {DD.SHINGLE_MAX_DF}
+),
+hot AS (
+  SELECT hashed.doc_id, hashed.h FROM hashed
+  JOIN dfh ON dfh.lang = hashed.lang AND dfh.h = hashed.h
+  WHERE dfh.df > {DD.SHINGLE_MAX_DF}
+),
+cand AS (
+  SELECT a.doc_id AS id_sub, b.doc_id AS id_sup, COUNT(*) AS n_cold
+  FROM cold a
+  JOIN cold b ON a.lang = b.lang AND a.h = b.h AND a.doc_id <> b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+),
+hotx AS (
+  SELECT c.id_sub, c.id_sup, COUNT(*) AS n_hot
+  FROM cand c
+  JOIN hot ha ON ha.doc_id = c.id_sub
+  JOIN hot hb ON hb.doc_id = c.id_sup AND hb.h = ha.h
+  GROUP BY c.id_sub, c.id_sup
+),
+inter AS (
+  SELECT c.id_sub, c.id_sup, c.n_cold + COALESCE(x.n_hot, 0) AS n_inter
+  FROM cand c
+  LEFT JOIN hotx x ON x.id_sub = c.id_sub AND x.id_sup = c.id_sup
+)
+SELECT i.id_sub, i.id_sup,
+       CAST(sa.n AS BIGINT) AS n_sub_shingles,
+       CAST(i.n_inter AS BIGINT) AS n_shared,
+       CAST((2000000 * i.n_inter + sa.n) // (2 * sa.n) AS BIGINT)
+         AS containment_u
+FROM inter i JOIN sizes sa ON sa.doc_id = i.id_sub
+WHERE (2000000 * i.n_inter + sa.n) // (2 * sa.n) >= {_CT_MIN_U}
+ORDER BY id_sub, id_sup
+""",
+    "dedup", "containment", "asymmetric",
+)
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric shingle containment: directional pairs
+    (id_sub, id_sup) where ≥ 90% of the sub-doc's distinct 3-gram
+    shingles appear in the sup-doc — catching
+    concatenation/expansion duplicates whose SYMMETRIC Jaccard falls
+    below any useful threshold.  Micro-unit integer ratio surface.
+
+    r9 (VERDICT r8 "What's wrong" #1): candidates come from
+    ``DD.shingle_overlap_pairs`` with its document-frequency cap — hot
+    shingles (df > ``DD.SHINGLE_MAX_DF``) never enter the inverted-index
+    join (they contributed g² candidate rows per bucket before), while
+    hot overlaps are added back for surviving candidates so every
+    emitted containment value stays EXACT.  Recall contract: a sub-doc
+    whose shared shingles are ALL corpus-level boilerplate (each in
+    > max_df docs) is missed — stated, mirroring edit_distance_pairs'
+    max_block policy; the oracle SQL mirrors the cap CTE-for-CTE.
+
+    Still in-row-distinct shingle hashes (no cross-row distinct
+    shuffle), persisted once for sizes AND both join sides."""
+    return (
+        _ct_scored_pairs(spark, sf_dir)
+        .select(
+            "id_sub",
+            "id_sup",
+            F.col("n").cast("bigint").alias("n_sub_shingles"),
+            F.col("n_inter").cast("bigint").alias("n_shared"),
+            "containment_u",
+        )
+        .orderBy("id_sub", "id_sup")
+    )
+
+
+def _ct_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The containment fixture corpus (documents ∪ synthetic padded
+    supersets) — factored from ``_ct_shingles`` so the clone-collapsed
+    serving twin (breadth12) collapses the SAME corpus the whole family
+    scores."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    sup = docs.filter(F.col("doc_id") % 13 == 0).select(
+        (F.col("doc_id") + 3_000_000).alias("doc_id"),
+        "lang",
+        F.concat("text", F.lit(" zq yw xv ut")).alias("text"),
+    )
+    return docs.union(sup)
+
+
+def ct_shingle_frame(corpus: DataFrame) -> DataFrame:
+    """(doc_id, lang, h) distinct-per-doc 3-gram shingle hashes of an
+    arbitrary containment-corpus frame (in-row distinct, no dedup
+    shuffle) — the one shingle expression every containment entry
+    shares."""
+    from ..functions import textfns as TF
+
+    hashed_arr = F.array_distinct(
+        F.transform(TF.shingles(F.col("_toks"), 3), TF.token_hash)
+    )
+    return corpus.select("doc_id", "lang", TF.tokens("text").alias("_toks")).select(
+        "doc_id", "lang", F.explode(hashed_arr).alias("h")
+    )
+
+
+def _ct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted (doc_id, lang, h) distinct-per-doc shingle frame over the
+    containment corpus (documents ∪ synthetic padded supersets) — shared
+    by the all-pairs anchor, the canonical twin (breadth10) and the
+    pruned serving twin (breadth10b), so all three score the identical
+    corpus from one cached frame (persist dedupes by logical plan)."""
+    from pyspark.storagelevel import StorageLevel
+
+    return ct_shingle_frame(_ct_corpus(spark, sf_dir)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+
+
+def _ct_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared candidate+score stage for the containment family: every
+    directional pair (id_sub, id_sup) at containment ≥ ``_CT_MIN_U``
+    with columns (id_sub, id_sup, n, n_inter, containment_u).  The
+    all-pairs anchor sorts and emits this verbatim; the canonical twin
+    aggregates it per id_sub so the quadratic pair list never reaches
+    the output (map-side partial max — see breadth10)."""
+    sh = _ct_shingles(spark, sf_dir)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    inter = DD.shingle_overlap_pairs(sh, directional=True).select(
+        F.col("id_a").alias("id_sub"),
+        F.col("id_b").alias("id_sup"),
+        "n_inter",
+    )
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "id_sub"), "id_sub")
+        .withColumn(
+            "containment_u",
+            F.expr("CAST((2000000 * n_inter + n) DIV (2 * n) AS BIGINT)"),
+        )
+        .filter(F.col("containment_u") >= _CT_MIN_U)
+    )

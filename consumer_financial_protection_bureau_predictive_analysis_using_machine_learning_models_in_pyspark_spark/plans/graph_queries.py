@@ -284,10 +284,13 @@ def supplier_strong_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph — edges whose weight sits at least 10% above the mean edge
     weight.  The strength cut is pure integer arithmetic
     (10·w·ne >= 11·tw — no division, so the threshold is exact on both
-    engines and scale-free), and the component labels come from
-    operators.graph.connected_components (min-label fixpoint, checked
-    against a recursive-CTE oracle).  Only suppliers with at least one strong edge participate
+    engines and scale-free), and the component labels come from the same
+    operators.dedup.connected_components min-label fixpoint the dedup
+    family uses — one operator, two domains, one recursive-CTE oracle
+    pattern.  Only suppliers with at least one strong edge participate
     (community of the strong graph, not the full vertex set)."""
+    from ..operators import dedup as DD
+
     li = _t(spark, sf_dir, "lineitem")
     e = G.co_occurrence_edges(li, "l_suppkey", "l_orderkey")
     st = e.agg(
@@ -301,7 +304,7 @@ def supplier_strong_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
     )
     return (
-        G.connected_components(strong)
+        DD.connected_components(strong)
         .select(F.col("doc_id").alias("s_suppkey"), "component")
         .orderBy("s_suppkey")
     )

@@ -201,7 +201,7 @@ def ml_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Scored-frame cache for the lift twins: the LR fit is the offline
-# artifact; both the
+# artifact (same lifecycle argument as text_queries._IVF_CACHE); both the
 # exact and approx lift entries serve from one persisted (p1, y) frame.
 # Session-validated on every hit; evictable for long-lived sessions.
 _LR_SCORED_CACHE: dict[str, DataFrame] = {}
@@ -284,7 +284,7 @@ def ml_timely_lr_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     single global-ordered window over the SCORED frame — fine for a
     test-split frame; the documented knob for full-corpus scoring at
     100 TB is percentile_approx decile boundaries + map-side bucketing
-    (the ml_timely_lr_lift_approx twin)."""
+    (the docs_quality_deciles_approx pattern, same module)."""
     from pyspark.sql import Window
 
     scored = _lr_scored(spark, sf_dir)

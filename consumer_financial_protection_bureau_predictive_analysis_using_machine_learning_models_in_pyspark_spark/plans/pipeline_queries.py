@@ -1,8 +1,11 @@
-"""Catalog entries for blocked fuzzy entity resolution
-(operators/pipeline.py), the salted skew join, sliding stream windows and
-CDC-style maintenance (MERGE upsert, log compaction, grouping sets).
+"""Catalog entries for the training-data pipeline operators
+(operators/pipeline.py + the salted skew join + sliding stream windows):
+decontamination, sequence packing, incremental dedup, quality filter
+chain — the corpus-preparation surface between raw crawl and tokenizer.
 
-Window SUM/COUNT results are CAST to BIGINT (DuckDB HUGEINT gotcha).
+Oracle discipline matches text_queries.py: tokenization/fingerprint SQL
+mirrors are shared so both engines compute literally the same arithmetic;
+window SUM/COUNT results are CAST to BIGINT (DuckDB HUGEINT gotcha).
 """
 
 from __future__ import annotations
@@ -10,11 +13,259 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import textfns as TF
 from ..operators import pipeline as PL
 from ..operators import skew
 from ..streaming import jobs as SJ
 from .catalog import _t, register
 from .streaming_queries import _drain
+from .text_queries import _D_FP, _D_TOKS, _STOP_SQL
+
+# Word-8-gram rendering shared by the decontamination oracle: DuckDB can't
+# lateral-join generate_series on a column, so positions come from
+# unnest(generate_series(...)) in the select list.
+_D_GRAMS_CTE = f"""
+toks AS (SELECT doc_id, {_D_TOKS} AS w FROM documents),
+pos AS (
+  SELECT doc_id, w, unnest(generate_series(1, len(w) - 7)) AS i
+  FROM toks WHERE len(w) >= 8
+),
+grams AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+7], ' ') AS gram FROM pos)
+""".strip()
+
+
+@register(
+    "docs_decontaminate",
+    f"""
+WITH {_D_GRAMS_CTE},
+bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 25 = 0)
+SELECT g.doc_id, COUNT(*) AS n_hit_grams
+FROM grams g JOIN bench USING (gram)
+WHERE g.doc_id % 25 <> 0
+GROUP BY g.doc_id
+ORDER BY g.doc_id
+""",
+    "pipeline", "decontamination", "ngram-overlap",
+)
+def docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train/test-overlap flagging: corpus documents sharing any word
+    8-gram (the GPT-3/PaLM convention) with a benchmark set — here the
+    ``doc_id % 25 == 0`` slice plays the benchmark.  The benchmark gram set
+    is broadcast; the corpus side never shuffles text."""
+    docs = _t(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 25 == 0)
+    # gram explode is CPU-bound: spread it across every core even when the
+    # source collapses to one input split, and partition by the doc_id the
+    # hit-count aggregation groups on so the agg reuses the layout
+    corpus = docs.filter(F.col("doc_id") % 25 != 0).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+    return PL.decontaminate(corpus, bench, n=8).orderBy("doc_id")
+
+
+@register(
+    "docs_pack_bins",
+    f"""
+WITH t AS (
+  SELECT lang, doc_id, CAST(len({_D_TOKS}) AS BIGINT) AS n_tokens
+  FROM documents
+),
+c AS (
+  SELECT lang, doc_id, n_tokens,
+         CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+  FROM t
+)
+SELECT lang,
+       CAST(FLOOR((cum - n_tokens) / 512.0) AS BIGINT) AS bin_id,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens
+FROM c
+GROUP BY lang, bin_id
+ORDER BY lang, bin_id
+""",
+    "pipeline", "sequence-packing", "window",
+)
+def docs_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy contiguous sequence packing into 512-token bins per language
+    stream (concatenate-then-chunk batch assembly): one window + one agg,
+    both partitioned by lang — text never moves."""
+    docs = _t(spark, sf_dir, "documents")
+    return PL.pack_bins(docs, budget=512, part_col="lang").orderBy(
+        "lang", "bin_id"
+    )
+
+
+@register(
+    "docs_chunk",
+    f"""
+WITH toks AS (SELECT doc_id, {_D_TOKS} AS w FROM documents),
+nums AS (
+  SELECT doc_id, w, len(w) AS n,
+         CASE WHEN len(w) <= 32 THEN 1
+              ELSE CAST(ceil((len(w) - 32) / 24.0) AS BIGINT) + 1 END AS nc
+  FROM toks
+),
+c AS (SELECT doc_id, w, n, unnest(generate_series(0, nc - 1)) AS cid FROM nums)
+SELECT doc_id,
+       CAST(cid AS BIGINT) AS chunk_id,
+       CAST(cid * 24 AS BIGINT) AS start_tok,
+       CAST(LEAST(32, n - cid * 24) AS BIGINT) AS chunk_tokens,
+       array_to_string(w[cid*24 + 1 : cid*24 + 32], ' ') AS chunk_text
+FROM c
+ORDER BY doc_id, chunk_id
+""",
+    "pipeline", "chunking",
+)
+def docs_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping token chunking for fixed-context training windows
+    (32-token chunks, stride 24 → 8-token overlap); every document's tail
+    is covered by its final chunk."""
+    docs = _t(spark, sf_dir, "documents")
+    return PL.chunk_documents(docs, chunk=32, stride=24).orderBy(
+        "doc_id", "chunk_id"
+    )
+
+
+# Shared by dedup_incremental AND its Bloom-prefiltered twin: both are
+# EXACT (the Bloom path verifies positives), so one oracle serves both.
+_INCR_DEDUP_SQL = f"""
+WITH batch AS (
+  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
+  UNION ALL
+  SELECT doc_id + 2000000 AS doc_id, text || ' v2' AS text FROM documents WHERE doc_id % 20 = 5
+  UNION ALL
+  SELECT doc_id + 3000000 AS doc_id, text || ' v2' AS text FROM documents WHERE doc_id % 20 = 5
+),
+bfp AS (SELECT doc_id, {_D_FP} AS fp FROM batch),
+cfp AS (SELECT DISTINCT {_D_FP} AS fp FROM documents),
+ranked AS (
+  SELECT b.doc_id,
+         ROW_NUMBER() OVER (PARTITION BY b.fp ORDER BY b.doc_id) AS rn,
+         c.fp IS NOT NULL AS in_corpus
+  FROM bfp b LEFT JOIN cfp c USING (fp)
+)
+SELECT doc_id,
+       CASE WHEN in_corpus THEN 'dup_of_corpus'
+            WHEN rn > 1 THEN 'dup_in_batch'
+            ELSE 'kept' END AS status
+FROM ranked
+ORDER BY doc_id
+"""
+
+
+def _incr_batch(spark: SparkSession, sf_dir: str):
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    part_a = docs.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+    )
+    novel = docs.filter(F.col("doc_id") % 20 == 5).select(
+        "doc_id", F.concat(F.col("text"), F.lit(" v2")).alias("text")
+    )
+    part_b = novel.select((F.col("doc_id") + 2000000).alias("doc_id"), "text")
+    part_c = novel.select((F.col("doc_id") + 3000000).alias("doc_id"), "text")
+    return docs, part_a.union(part_b).union(part_c)
+
+
+@register(
+    "dedup_incremental",
+    _INCR_DEDUP_SQL,
+    "pipeline", "dedup", "incremental",
+)
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Steady-state dedup: triage a synthetic ingest batch against the
+    existing corpus.  Batch = re-keyed 10% slice (exact corpus dups) plus a
+    twice-ingested ``' v2'``-suffixed slice (novel content, duplicated
+    within the batch) — exercising all three statuses deterministically."""
+    docs, batch = _incr_batch(spark, sf_dir)
+    return PL.incremental_dedup(docs, batch).orderBy("doc_id")
+
+
+@register(
+    "dedup_incremental_bloom",
+    _INCR_DEDUP_SQL,
+    "pipeline", "dedup", "incremental", "bloom",
+    twin_of="dedup_incremental",
+    twin_pin="tests/test_round5.py::test_bloom_incremental_exact_under_false_positives",
+)
+def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Bloom-prefiltered twin of ``dedup_incremental``
+    (operators.pipeline.incremental_dedup_bloom): the corpus folds into a
+    broadcast Bloom filter and NEVER shuffles; Bloom positives are
+    exactly verified, so the statuses — and therefore the oracle — are
+    identical to the join-based form.  Same synthetic batch.
+
+    Measured crossover status (honest negative at committed scales,
+    BENCH_SF1_r10.json twin_pairs): sf0.1→sf1 ratio 1.83× vs the
+    anchor's 0.98× — the twin scales WORSE over this decade.  At ≤ 50 k
+    corpus fingerprints the anchor's distinct-fingerprint frame is
+    already broadcast-trivial, while the Bloom path pays a fixed
+    two-phase bit-array fold + driver materialization that grows with
+    corpus size; the claimed advantage is the regime where the corpus
+    fingerprint set exceeds broadcast/exchange budgets (≳10⁹ keys),
+    which no committed local scale can reach.  The twin stays registered
+    as the form that degrades gracefully there; the anchor remains the
+    right plan at every scale this repo can measure."""
+    docs, batch = _incr_batch(spark, sf_dir)
+    return PL.incremental_dedup_bloom(docs, batch).orderBy("doc_id")
+
+
+@register(
+    "docs_filter_chain",
+    f"""
+WITH t AS (
+  SELECT doc_id, text, {_D_TOKS} AS toks FROM documents
+),
+m AS (
+  SELECT doc_id,
+         length(text) >= 100 AS p_chars,
+         len(toks) >= 20 AS p_tokens,
+         CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE)
+           / CAST(length(text) AS DOUBLE) >= 0.5 AS p_alpha,
+         CAST(len(list_filter(toks, s -> list_contains({_STOP_SQL}, s))) AS DOUBLE)
+           / CAST(len(toks) AS DOUBLE) <= 0.3 AS p_stop
+  FROM t
+)
+SELECT doc_id,
+       (p_chars AND p_tokens AND p_alpha AND p_stop) AS keep,
+       CASE WHEN NOT p_chars THEN 'min_chars'
+            WHEN NOT p_tokens THEN 'min_tokens'
+            WHEN NOT p_alpha THEN 'alpha_ratio'
+            WHEN NOT p_stop THEN 'stopword_ratio'
+            ELSE 'kept' END AS reason
+FROM m
+ORDER BY doc_id
+""",
+    "pipeline", "quality-filter", "c4-gopher",
+)
+def docs_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered C4/Gopher-style quality gates with first-failure reasons:
+    min length, min tokens, alphabetic ratio, stopword ratio.  One
+    codegen'd projection — runs at parquet-scan speed."""
+    docs = _t(spark, sf_dir, "documents")
+    return PL.filter_chain(docs, quality_rule_set()).orderBy("doc_id")
+
+
+def quality_rule_set() -> list[tuple[str, F.Column]]:
+    """The canonical heuristic gate set over ``documents.text`` (the
+    rules ``docs_filter_chain`` oracles), exposed so the model-based
+    quality classifier (plans/breadth10.py) trains on EXACTLY the
+    heuristic verdicts the chain emits — one definition, two consumers."""
+    text = F.col("text")
+    toks = TF.tokens("text")
+    stop_arr = F.array(*[F.lit(s) for s in TF.STOPWORDS_EN])
+    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
+    alpha_ratio = (
+        F.length(F.regexp_replace(text, r"[^A-Za-z ]", "")).cast("double")
+        / F.length(text).cast("double")
+    )
+    stop_ratio = n_stop.cast("double") / F.size(toks).cast("double")
+    return [
+        ("min_chars", F.length(text) >= 100),
+        ("min_tokens", F.size(toks) >= 20),
+        ("alpha_ratio", alpha_ratio >= 0.5),
+        ("stopword_ratio", stop_ratio <= 0.3),
+    ]
 
 
 @register(

@@ -279,6 +279,107 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "stream_semantic_dedup", None,
+    "streaming", "semdedup", "incremental", "foreachBatch",
+)
+def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming SemDeDup end-to-end (streaming.jobs.
+    run_streaming_semantic_dedup): the 80% corpus slice's canonical IVF
+    index is the offline artifact; the 20% batch slice arrives as TWO
+    parquet files (vec_id%10==0 then %10==5), each a micro-batch, and
+    every batch is triaged against corpus canonicals + earlier batches'
+    kept docs, with statuses and kept-vector state written idempotently
+    under _batch_id partitions.  Rows-only (KMeans upstream);
+    sequential equivalence with batch-mode incremental dedup and replay
+    idempotency are pinned in pytest.
+
+    The work dir is memoized per sf_dir and cleaned at exit (repeated
+    calls resume the checkpoint: a drained source adds no batches and
+    the statuses re-read the same partitions)."""
+    from ..operators import dedup as DD
+    from ..operators import similarity as SIM
+    from .text_queries import ivf_index_for
+
+    def frames():
+        emb = _t(spark, sf_dir, "embeddings")
+        return [emb.filter(f"pmod(vec_id, 10) == {r}") for r in (0, 5)]
+
+    work = SJ.stage_microbatches("stream_semantic_dedup", sf_dir, frames)
+    flat = f"{work}/batches"
+
+    idx = ivf_index_for(
+        spark, sf_dir, n_assign=3, where="pmod(vec_id, 5) != 0"
+    )
+    # Offline canonical-set computation, duplication-factor routed (r13):
+    # the direct per-cell all-pairs is memory-quadratic in clone depth —
+    # the exact class that OOMed ann_semantic_canonical_fast at the sf10
+    # wall — so on clone-heavy corpora the loser set comes from the
+    # collapse-first governor (semantic_collapsed_frame over the corpus
+    # slice, rep-level per-cell verify + member expansion) instead.  On
+    # the clone-light fixtures the factor probe routes the ORIGINAL path,
+    # so the sequential-equivalence pins and driver rows are unchanged.
+    from ..operators.dispatch import duplication_factor
+
+    corpus80 = (
+        _t(spark, sf_dir, "embeddings")
+        .filter("pmod(vec_id, 5) != 0")
+        .select("vec_id", "embedding")
+    )
+    if duplication_factor(corpus80, F.col("embedding")) >= 2.0:
+        from .breadth13 import semantic_collapsed_frame
+
+        def rep_pairs(reps: DataFrame) -> DataFrame:
+            ridx = SIM.ivf_build(reps, n_cells=8, n_assign=3)
+            return SIM.semantic_dedup_pairs_fast(ridx, threshold=0.35)
+
+        losers = (
+            semantic_collapsed_frame(corpus80, pairs_of_reps=rep_pairs)
+            .filter(~F.col("kept"))
+            .select(F.col("vec_id").alias("neighbor_id"))
+        )
+    else:
+        pairs = SIM.semantic_dedup_pairs_fast(idx, threshold=0.35).select(
+            F.col("id1").alias("doc_a"), F.col("id2").alias("doc_b")
+        )
+        losers = (
+            DD.connected_components(pairs)
+            .filter(F.col("doc_id") != F.col("component"))
+            .select(F.col("doc_id").alias("neighbor_id"))
+        )
+    # materialize the canonical assignment ONCE (it IS the offline
+    # artifact this entry serves): unmaterialized, every micro-batch
+    # re-ran the loser anti-join as part of its probe plan (r13
+    # optimization; localCheckpoint also truncates the CC lineage the
+    # losers frame carries).  swap_local_checkpoint: each cold re-run
+    # rebuilds this artifact, and a localCheckpoint is invisible to the
+    # CacheManager — without the swap the session accumulated one dead
+    # checkpointed RDD per run (r14 hygiene sweep, pinned in
+    # tests/test_cache_hygiene.py)
+    from ..operators.cache import swap_local_checkpoint
+
+    canon_assigned = swap_local_checkpoint(
+        f"stream_semantic_dedup.canon:{sf_dir}",
+        idx.assigned.join(losers, "neighbor_id", "left_anti").localCheckpoint(),
+    )
+    canon_idx = SIM.IvfIndex(canon_assigned, idx.centroids, idx.n_assign)
+
+    stream = SJ.read_embeddings_stream(spark, flat, max_files_per_trigger=1)
+    SJ.run_streaming_semantic_dedup(
+        stream,
+        canon_idx,
+        f"{work}/out",
+        f"{work}/kept",
+        f"{work}/ckpt",
+        threshold=0.35,
+    )
+    return (
+        spark.read.parquet(f"{work}/out")
+        .select("doc_id", "status", F.col("_batch_id").cast("int").alias("batch"))
+        .orderBy("batch", "doc_id")
+    )
+
+
 # The event-stream gate's checks — shared verbatim with the pytest
 # corrupt-batch fixture so the two can't drift.
 EVENT_GATE_CHECKS = {

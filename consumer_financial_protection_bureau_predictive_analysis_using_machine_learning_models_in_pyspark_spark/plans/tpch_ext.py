@@ -405,7 +405,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-part agg has one row per brand-filtered part — linear in
     scale factor, so a *forced* broadcast would eventually OOM the
     driver.  Its broadcast hint is therefore conditional (the
-    counted-threshold pattern of skew.broadcast_if_bounded): one cheap count of the
+    canonical_docs pattern, operators/dedup.py): one cheap count of the
     filtered PART dim — which exactly bounds the aggregate's cardinality
     without touching lineitem — gates the hint; above the threshold the
     join-back is left unhinted and AQE co-partitions both sides on

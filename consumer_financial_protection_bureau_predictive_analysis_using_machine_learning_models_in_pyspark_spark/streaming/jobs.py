@@ -36,6 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
+    StringType,
     StructField,
     StructType,
     TimestampType,
@@ -512,6 +513,138 @@ def static_enrich_counts(
     )
 
 
+def read_embeddings_stream(
+    spark, dir_path: str, max_files_per_trigger: int | None = 1
+):
+    """File-source stream over a directory of embedding parquet files —
+    each arriving file (an ingest batch from the upstream embedder) is a
+    micro-batch with ``maxFilesPerTrigger=1``.  Kafka stand-in, same as
+    ``read_events_stream``."""
+    schema = spark.read.parquet(dir_path).schema
+    r = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
+    return r.parquet(dir_path)
+
+
+def run_streaming_semantic_dedup(
+    stream: DataFrame,
+    index,
+    out_dir: str,
+    kept_dir: str,
+    checkpoint: str,
+    threshold: float = 0.35,
+    n_probe_cells: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Streaming SemDeDup: each micro-batch of new embeddings is triaged
+    against the canonical corpus PLUS everything kept from earlier
+    batches — the continuous-ingest form of
+    ``similarity.semantic_dedup_incremental`` (which this calls per
+    batch; the quantizer codebook never re-fits).
+
+    State is carried in storage, not in the stream: ``kept_dir`` holds
+    the (neighbor_id, vec, cell) rows of every previously-kept batch doc
+    under its ``_batch_id`` partition, and each micro-batch unions the
+    (already canonical-only) ``index.assigned`` with kept rows from
+    STRICTLY EARLIER batches — the ``_batch_id < batch_id`` cut is what
+    makes replay idempotent: a re-run batch (failure between write and
+    offset commit) does not see its own previous output, so it
+    re-derives identical statuses and overwrites its own partitions
+    (same exactly-once discipline as ``run_foreach_batch_parquet``).
+
+    Statuses land in ``out_dir`` partitioned by ``_batch_id``;
+    sequential equivalence with batch-mode incremental dedup is pinned
+    in tests/test_round5.py.
+    """
+    from ..operators import similarity as SIM
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        base = index.assigned
+        if hadoop_path_exists(spark, kept_dir):
+            # read failures propagate; only true absence means first batch
+            # (the bare-except form silently reset state on ANY error —
+            # r8 review finding, fixed here and in the phash twin)
+            kept_prev = (
+                spark.read.parquet(kept_dir)
+                .filter(F.col("_batch_id") < batch_id)
+                .select("neighbor_id", "vec", "cell")
+            )
+            assigned = base.union(kept_prev)
+        else:  # first batch: no kept_dir yet
+            assigned = base
+        idx = SIM.IvfIndex(assigned, index.centroids, index.n_assign)
+        # scratch: the operator's internal per-batch persists (corpus_hits)
+        # plus ``st`` are released below, whether or not the writes
+        # succeed — every micro-batch builds a distinct plan, so without
+        # the release the stream accumulates one dead cache entry per
+        # batch for its whole lifetime (ADVICE r13)
+        scratch: list = []
+        try:
+            st = SIM.semantic_dedup_incremental(
+                idx,
+                batch_df,
+                threshold,
+                n_probe_cells=n_probe_cells,
+                id_col=id_col,
+                vec_col=vec_col,
+                scratch=scratch,
+            ).persist()
+            scratch.append(st)
+            (
+                st.withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(out_dir)
+            )
+            kept_ids = st.filter(F.col("status") == "kept").select(
+                F.col("doc_id").alias(id_col)
+            )
+            newly_kept = batch_df.join(kept_ids, id_col, "left_semi").select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("vec"),
+                F.explode(
+                    SIM._top_cells(
+                        F.col(vec_col), index.centroids, index.n_assign
+                    )
+                ).alias("cell"),
+            )
+            (
+                newly_kept.withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(kept_dir)
+            )
+        finally:
+            for frame in scratch:
+                frame.unpersist()
+
+    w = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    _start_and_drain(w, stream.sparkSession)
+
+
+def hadoop_path_exists(spark, path: str) -> bool:
+    """Existence check through the Hadoop FileSystem API — the ONLY
+    acceptable 'is this the first batch?' test for storage-carried
+    streaming state.  A bare ``except Exception`` around the state read
+    would treat ANY transient read failure (permissions, corrupt footer,
+    FS hiccup) as 'no prior state' and silently rebuild dedup state from
+    scratch, double-keeping every previously-canonical key (r8 review
+    finding); a real read error must propagate and fail the batch."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
 def mv_versions(spark, state_dir: str) -> list[int]:
     """Version directories (``v{batch_id}``) under ``state_dir``, resolved
     through the Hadoop FileSystem API so MV state may live on ANY
@@ -810,6 +943,190 @@ def run_streaming_checksum_mv(
     _start_and_drain(w, stream.sparkSession)
 
 
+def run_streaming_phash_dedup(
+    stream: DataFrame,
+    out_dir: str,
+    kept_dir: str,
+    checkpoint: str,
+    width: int = 8,
+    height: int = 8,
+) -> None:
+    """Streaming perceptual-hash image dedup (VERDICT r7 stretch): the
+    multimodal family's continuous-ingest twin — each micro-batch of
+    image blobs is resized (Arrow mapInPandas), average-hashed to one
+    BIGINT per image (operators.multimodal.phash_from_pixels), and
+    triaged against every phash kept by STRICTLY EARLIER batches.
+
+    Statuses per image: ``kept`` (first holder of its phash),
+    ``dup_prior`` (phash already canonical from an earlier batch;
+    ``canonical_id`` names it), ``dup_in_batch`` (another image in the
+    SAME batch holds the lower media_id for this phash).  State is
+    carried in storage exactly like ``run_streaming_semantic_dedup``:
+    ``kept_dir`` holds (phash, media_id) per ``_batch_id`` partition and
+    the ``_batch_id < batch_id`` cut + dynamic partition overwrite make
+    replay idempotent — a re-run batch never sees its own prior output
+    and rewrites identical partitions.
+
+    Scale posture: after the hash the per-batch state join carries
+    8 bytes per image; the kept-state side grows with DISTINCT images
+    only.  Sequential equivalence with the batch-mode exact-phash dedup
+    and replay idempotency are pinned in tests/test_round8.py.
+    """
+    from ..operators import multimodal as MM
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        from pyspark.sql import Window
+
+        spark = batch_df.sparkSession
+        hashed = MM.phash_from_pixels(
+            MM.resize_images(batch_df, width=width, height=height)
+        ).persist()
+        if hadoop_path_exists(spark, kept_dir):
+            # a read failure past this point PROPAGATES — treating it as
+            # "first batch" would silently reset the dedup state
+            kept_prev = (
+                spark.read.parquet(kept_dir)
+                .filter(F.col("_batch_id") < batch_id)
+                .select("phash", F.col("media_id").alias("_prior_id"))
+            )
+        else:  # first batch: kept_dir doesn't exist yet
+            kept_prev = None
+        w = Window.partitionBy("phash")
+        ranked = hashed.withColumn(
+            "_rk", F.row_number().over(w.orderBy("media_id"))
+        ).withColumn("_batch_canon", F.min("media_id").over(w))
+        joined = (
+            ranked.join(kept_prev, "phash", "left")
+            if kept_prev is not None
+            else ranked.withColumn("_prior_id", F.lit(None).cast("long"))
+        )
+        st = joined.select(
+            "media_id",
+            "phash",
+            F.when(F.col("_prior_id").isNotNull(), F.lit("dup_prior"))
+            .when(F.col("_rk") > 1, F.lit("dup_in_batch"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.coalesce("_prior_id", "_batch_canon").alias("canonical_id"),
+        ).persist()
+        (
+            st.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(out_dir)
+        )
+        (
+            st.filter(F.col("status") == "kept")
+            .select("phash", "media_id")
+            .withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(kept_dir)
+        )
+        st.unpersist()
+        hashed.unpersist()
+
+    w = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    _start_and_drain(w, stream.sparkSession)
+
+
+def run_streaming_substring_decontaminate(
+    stream: DataFrame,
+    out_dir: str,
+    gram_dir: str,
+    checkpoint: str,
+    k: int = 10,
+) -> None:
+    """Streaming span-level decontamination (the continuous-ingest twin of
+    docs_substring_decontaminate): each micro-batch of documents is
+    screened against the gram-hash index of every STRICTLY EARLIER batch —
+    maximal spans whose every k-gram was already ingested are located and
+    measured — then the batch's own distinct gram hashes join the index.
+
+    Output per doc per batch: ``(doc_id, n_tokens, n_spans, cut_tokens)``
+    (zero-span docs included — the loader's per-doc cut budget).  State is
+    carried in storage exactly like ``run_streaming_phash_dedup``:
+    ``gram_dir`` holds distinct gram hashes per ``_batch_id`` partition,
+    the ``_batch_id < batch_id`` cut + dynamic partition overwrite make
+    replay idempotent.  The first batch sees an empty index (no spans) —
+    by design: nothing was ingested before it.
+
+    Scale posture: the index carries ONE bigint per distinct corpus gram;
+    the probe is a semi-join on h (linear in batch grams, no pair join);
+    the islands merge windows per batch doc only.
+    """
+    from ..functions import textfns as TF
+    from ..operators import pipeline as PL
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        grams = PL.positional_gram_hashes(batch_df, k).persist()
+        if hadoop_path_exists(spark, gram_dir):
+            # a read failure here PROPAGATES — treating it as "first
+            # batch" would silently reset the decontamination index
+            prior = (
+                spark.read.parquet(gram_dir)
+                .filter(F.col("_batch_id") < batch_id)
+                .select("h")
+            )
+            spans = PL.substring_spans_vs_corpus(
+                batch_df, k=k, corpus_grams=prior
+            )
+            per_doc = spans.groupBy("doc_id").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_spans"),
+                F.sum("span_tokens").cast("bigint").alias("cut_tokens"),
+            )
+        else:  # first batch: nothing ingested before it
+            per_doc = None
+        base = batch_df.select(
+            "doc_id", F.size(TF.tokens("text")).cast("bigint").alias("n_tokens")
+        )
+        joined = (
+            base.join(per_doc, "doc_id", "left")
+            if per_doc is not None
+            else base.withColumn("n_spans", F.lit(None).cast("bigint"))
+            .withColumn("cut_tokens", F.lit(None).cast("bigint"))
+        )
+        out = joined.select(
+            "doc_id",
+            "n_tokens",
+            F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
+            F.coalesce("cut_tokens", F.lit(0)).cast("bigint").alias(
+                "cut_tokens"
+            ),
+        )
+        (
+            out.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(out_dir)
+        )
+        (
+            grams.select("h")
+            .distinct()
+            .withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(gram_dir)
+        )
+        grams.unpersist()
+
+    w = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    _start_and_drain(w, stream.sparkSession)
+
+
 def run_streaming_gap_moments(
     stream: DataFrame,
     state_dir: str,
@@ -894,6 +1211,58 @@ def run_streaming_gap_moments(
 
     w = (
         stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    _start_and_drain(w, stream.sparkSession)
+
+
+def run_streaming_model_scoring(
+    stream: DataFrame,
+    score_fn,
+    out_dir: str,
+    checkpoint: str,
+) -> None:
+    """Model serving at ingest (r10): score every micro-batch with a
+    PREBUILT model — ``score_fn`` is a caller-supplied closure
+    ``batch_df -> scored_df`` wrapping the offline-trained model (the
+    production split: training is an offline job, the stream only runs
+    ``transform``).  Each batch's scores land under ``_batch_id=N``
+    partitions with dynamic overwrite, so a replayed batch overwrites
+    itself — the same idempotent exactly-once discipline as every other
+    foreachBatch job in this module.
+
+    The model rides the closure (driver-resident, broadcast to executors
+    by Spark's task serialization exactly as in batch ``transform``);
+    nothing is re-fit per batch, so per-batch cost is one narrow scoring
+    pass over the batch.
+
+    ``score_fn`` may return either the scored frame, or a
+    ``(scored, scratch)`` tuple where ``scratch`` lists internally
+    persisted per-batch frames — they are unpersisted once the batch's
+    write returns or raises, so a probe that caches a batch-derived frame (a
+    distinct plan every micro-batch, un-dedupable by the CacheManager)
+    does not leak one cache entry per batch for the stream's lifetime
+    (ADVICE r13)."""
+
+    def score(batch_df: DataFrame, batch_id: int) -> None:
+        res = score_fn(batch_df)
+        scored, scratch = res if isinstance(res, tuple) else (res, [])
+        try:
+            (
+                scored
+                .withColumn("_batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch_id")
+                .parquet(out_dir)
+            )
+        finally:
+            for frame in scratch:
+                frame.unpersist()
+
+    w = (
+        stream.writeStream.foreachBatch(score)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )

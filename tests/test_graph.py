@@ -211,12 +211,3 @@ def test_jaccard_similar_items_hand_computed(spark):
     assert rows[(3, 1)]["neighbor"] == 4  # 0.5 beats J(3,1)=2/7
     assert rows[(4, 1)]["neighbor"] == 3
     assert (2, 2) not in rows  # item 2 has only one qualifying neighbor
-
-
-def test_connected_components_transitive(spark):
-    # chain 1-2-3 (transitive), pair 10-11, pair crossing via 3-10 absent
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    got = {(r.doc_id, r.component) for r in G.connected_components(pairs).collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}

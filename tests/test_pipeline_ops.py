@@ -1,6 +1,7 @@
-"""Operator behavior beyond the catalog's oracle parity: salted-join
-equality, interval joins, multi-resolution rollups (batch and streaming),
-count-min sketch bounds, MERGE upsert and log compaction.
+"""Training-data pipeline operators (operators/pipeline.py, skew.salted_join):
+behavioral tests beyond the catalog's oracle parity — first-failure reason
+ordering, packing invariants, incremental statuses, salted-join equality,
+and the decontamination broadcast plan property.
 """
 
 from __future__ import annotations
@@ -8,10 +9,82 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+    pipeline as PL,
     skew,
 )
 
 from .conftest import SF_SMOKE
+
+
+def test_filter_chain_reports_first_failing_rule(spark):
+    df = spark.createDataFrame(
+        [(1, "ok ok"), (2, "x"), (3, "zz zz zz")], "doc_id long, text string"
+    )
+    rules = [
+        ("min_chars", F.length("text") >= 3),   # doc 2 fails here first
+        ("no_z", ~F.col("text").contains("z")),  # doc 3 passes rule 1, fails here
+    ]
+    got = {r.doc_id: (r.keep, r.reason) for r in PL.filter_chain(df, rules).collect()}
+    assert got == {
+        1: (True, "kept"),
+        2: (False, "min_chars"),  # fails no_z too — first failure wins
+        3: (False, "no_z"),
+    }
+
+
+def test_pack_bins_invariants(spark):
+    # 6 docs of 200 tokens each, one stream: starts at 0,200,...,1000 →
+    # bins floor(start/512) = 0,0,0,1,1,1
+    docs = spark.createDataFrame(
+        [(i, "en", " ".join(["t"] * 200)) for i in range(6)],
+        "doc_id long, lang string, text string",
+    )
+    got = {
+        r.bin_id: (r.n_docs, r.bin_tokens)
+        for r in PL.pack_bins(docs, budget=512).collect()
+    }
+    assert got == {0: (3, 600), 1: (3, 600)}
+
+
+def test_pack_bins_conserves_tokens_per_stream(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        readers,
+    )
+
+    docs = readers.load_table(spark, SF_SMOKE, "documents")
+    packed = PL.pack_bins(docs, budget=512)
+    per_lang = (
+        packed.groupBy("lang")
+        .agg(F.sum("bin_tokens").alias("packed"), F.sum("n_docs").alias("packed_docs"))
+    )
+    truth = docs.groupBy("lang").agg(
+        F.sum(F.size(F.split(F.lower(F.trim("text")), r"\s+"))).alias("tok"),
+        F.count(F.lit(1)).alias("true_docs"),
+    )
+    j = per_lang.join(truth, "lang")
+    assert j.filter("packed <> tok OR packed_docs <> true_docs").count() == 0
+
+
+def test_incremental_dedup_statuses(spark):
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, "ALPHA   beta"),  # normalizes to corpus doc 1 → dup_of_corpus
+            (11, "epsilon zeta"),  # novel, first → kept
+            (12, "epsilon zeta"),  # novel, second → dup_in_batch
+            (13, "eta theta"),     # novel, unique → kept
+        ],
+        "doc_id long, text string",
+    )
+    got = {r.doc_id: r.status for r in PL.incremental_dedup(corpus, batch).collect()}
+    assert got == {
+        10: "dup_of_corpus",
+        11: "kept",
+        12: "dup_in_batch",
+        13: "kept",
+    }
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -28,6 +101,55 @@ def test_salted_join_equals_plain_join(spark):
     a = {tuple(r) for r in salted.select(*cols).collect()}
     b = {tuple(r) for r in plain.select(*cols).collect()}
     assert a == b
+
+
+def test_decontaminate_finds_planted_overlap_and_broadcasts(spark):
+    bench = spark.createDataFrame(
+        [(100, "q w e r t y u i o p")], "doc_id long, text string"
+    )
+    corpus = spark.createDataFrame(
+        [
+            # contains bench 8-grams "q w e r t y u i" AND "w e r t y u i o"
+            (1, "z z z q w e r t y u i o z z"),
+            (2, "a b c d e f g h i j"),  # no overlap
+        ],
+        "doc_id long, text string",
+    )
+    out = PL.decontaminate(corpus, bench, n=8)
+    assert [(r.doc_id, r.n_hit_grams) for r in out.collect()] == [(1, 2)]
+    # the benchmark gram set must broadcast — the corpus side never shuffles
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+
+
+def test_ivf_ann_topk_recall_and_consistency(spark):
+    """IVF with 3/8 probed cells and 2-cell corpus multi-assignment:
+    deterministic output, 5 ranked neighbors per probe, cosines agree with
+    the exact baseline on shared pairs, and recall@5 >= 0.7 (VERDICT r2
+    item 5; measured 0.90 on this fixture)."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        catalog as CAT,
+    )
+
+    ivf = CAT.CATALOG["ann_ivf_topk"].fn(spark, SF_SMOKE).collect()
+    exact = CAT.CATALOG["ann_cosine_topk"].fn(spark, SF_SMOKE).collect()
+    per_probe = {}
+    for r in ivf:
+        per_probe.setdefault(r.probe_id, []).append(r)
+    assert all(len(v) == 5 for v in per_probe.values())
+    for v in per_probe.values():
+        ranked = sorted(v, key=lambda r: r.rank)
+        cosines = [r.cosine for r in ranked]
+        assert cosines == sorted(cosines, reverse=True)
+    exact_cos = {(r.probe_id, r.neighbor_id): r.cosine for r in exact}
+    shared = [
+        r for r in ivf if (r.probe_id, r.neighbor_id) in exact_cos
+    ]
+    assert shared and all(
+        r.cosine == exact_cos[(r.probe_id, r.neighbor_id)] for r in shared
+    )
+    recall = len(shared) / len(exact)
+    assert recall >= 0.7, recall
 
 
 def test_interval_join_equals_naive_range_join(spark):
@@ -97,6 +219,33 @@ def test_multires_rollup_levels_consistent(spark):
     assert totals["minute"][0] == n_events
 
 
+def test_chunk_documents_covers_tail_with_overlap(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        pipeline as PL2,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"t{i}" for i in range(10))),   # 10 toks → 1 chunk
+         (2, " ".join(f"t{i}" for i in range(33)))],  # 33 toks → 2 chunks
+        "doc_id long, text string",
+    )
+    rows = sorted(
+        PL2.chunk_documents(docs, chunk=32, stride=24).collect(),
+        key=lambda r: (r.doc_id, r.chunk_id),
+    )
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    assert len(by_doc[1]) == 1 and by_doc[1][0].chunk_tokens == 10
+    assert len(by_doc[2]) == 2
+    first, second = by_doc[2]
+    assert (first.start_tok, first.chunk_tokens) == (0, 32)
+    # tail chunk starts at stride and covers through token 32
+    assert (second.start_tok, second.chunk_tokens) == (24, 9)
+    assert second.chunk_text.split(" ")[0] == "t24"
+    assert second.chunk_text.split(" ")[-1] == "t32"
+
+
 def test_cms_estimates_are_one_sided(spark):
     """Count-Min guarantees est >= true count for EVERY key (min of
     counters each containing the key's full count plus collisions)."""
@@ -116,6 +265,34 @@ def test_cms_estimates_are_one_sided(spark):
     j = est.join(exact, "user_id")
     assert j.filter("est_count < true_count").count() == 0
     assert j.count() == cand.count()
+
+
+def test_chunking_sweep_covers_every_token(spark):
+    """Token counts 1..120 in one frame: per doc, chunk starts advance by
+    stride, lengths are min(chunk, n - start), the final chunk reaches
+    token n-1, and no chunk is empty."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        pipeline as PL2,
+    )
+
+    chunk, stride = 32, 24
+    docs = spark.createDataFrame(
+        [(n, " ".join(f"t{i}" for i in range(n))) for n in range(1, 121)],
+        "doc_id long, text string",
+    )
+    rows = PL2.chunk_documents(docs, chunk=chunk, stride=stride).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    for n in range(1, 121):
+        cs = sorted(by_doc[n], key=lambda r: r.chunk_id)
+        expected = 1 if n <= chunk else -(-(n - chunk) // stride) + 1
+        assert len(cs) == expected, (n, len(cs))
+        for j, r in enumerate(cs):
+            assert r.start_tok == j * stride
+            assert r.chunk_tokens == min(chunk, n - r.start_tok) > 0
+        last = cs[-1]
+        assert last.start_tok + last.chunk_tokens == n  # tail covered
 
 
 def test_streaming_rollup_matches_batch_rollup(spark, tmp_path):
@@ -147,6 +324,113 @@ def test_streaming_rollup_matches_batch_rollup(spark, tmp_path):
         .collect()
     }
     assert merged == batch
+
+
+def test_repetition_stats_edges(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        text as TX,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "one"), (2, "a a a a b"), (3, "x y x y")],
+        "doc_id long, text string",
+    )
+    out = {r["doc_id"]: r for r in TX.repetition_stats(df).collect()}
+    # 1-token doc: the sequence() guard must yield zero bigrams, not [1, 0]
+    assert out[1]["n_bigrams"] == 0 and out[1]["dup_bigram_fraction"] == 0.0
+    assert out[2]["top_token_count"] == 4
+    assert abs(out[2]["top_token_fraction"] - 0.8) < 1e-9
+    # "x y x y" → bigrams [x y, y x, x y]: 3 total, 2 distinct
+    assert out[3]["n_bigrams"] == 3
+    assert abs(out[3]["dup_bigram_fraction"] - round(1 - 2 / 3, 6)) < 1e-9
+
+
+def test_pii_redact_order_and_counts(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        text as TX,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "mail a.b@x.io ssn 123-45-6789 call 555-1234 plain 12-34")],
+        "doc_id long, text string",
+    )
+    r = TX.pii_redact(df).collect()[0]
+    assert (r["n_emails"], r["n_ssns"], r["n_phones"]) == (1, 1, 1)
+    assert r["redacted"] == "mail <EMAIL> ssn <SSN> call <PHONE> plain 12-34"
+
+
+def test_minhash_fast_path_matches_md5_pairs(spark):
+    """xxhash64 and md5 shingle hashing must agree on which pairs are
+    duplicates (Jaccard over hashed shingle sets is hash-invariant modulo
+    collisions; the injected corpus has exact duplicates, so band minima
+    collide identically)."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        dedup as DD,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.text_queries import (  # noqa: E501
+        _aug,
+    )
+
+    df = _aug(spark, SF_SMOKE)
+    md5_pairs = {
+        (r.doc_a, r.doc_b)
+        for r in DD.minhash_dedup_pairs(spark, df, threshold=0.5).collect()
+    }
+    fast_pairs = {
+        (r.doc_a, r.doc_b)
+        for r in DD.minhash_dedup_pairs(
+            spark, df, threshold=0.5, hash_fn="xxhash64"
+        ).collect()
+    }
+    assert md5_pairs == fast_pairs and len(fast_pairs) > 0
+
+
+def test_star_components_match_label_propagation(spark):
+    """Large-star/small-star must produce exactly the label-propagation
+    components on shapes that stress it: a long chain (deep diameter), a
+    ring, touching components, and a pre-star graph."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        dedup as DD,
+    )
+
+    graphs = {
+        "chain": [(i, i + 1) for i in range(40)],
+        "ring": [(i, (i + 1) % 10) for i in range(10)],
+        "two_comps": [(1, 2), (2, 3), (10, 11), (12, 11)],
+        "star_already": [(5, 1), (6, 1), (7, 1)],
+        "cross": [(100, 1), (100, 50), (50, 2), (2, 1), (99, 98)],
+    }
+    for name, edges in graphs.items():
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        # propagation needs O(diameter) rounds — give it enough (its
+        # default max_iter=20 silently under-converges on the 40-chain,
+        # which is exactly why the star variant exists)
+        want = {
+            (r.doc_id, r.component)
+            for r in DD.connected_components(pairs, max_iter=50).collect()
+        }
+        got = {
+            (r.doc_id, r.component)
+            for r in DD.connected_components_star(pairs).collect()
+        }
+        assert got == want, f"{name}: {sorted(got)} != {sorted(want)}"
+
+
+def test_star_components_chain_beats_max_iter(spark):
+    """A 60-hop chain converges for star rounds well inside max_iter=20 —
+    the regime where plain propagation (O(diameter)) would need 60."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        dedup as DD,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "doc_a long, doc_b long"
+    )
+    got = {
+        (r.doc_id, r.component)
+        for r in DD.connected_components_star(pairs, max_iter=10).collect()
+    }
+    assert got == {(i, 0) for i in range(61)}
 
 
 def test_merge_upsert_semantics_and_broadcast_plan(spark):
@@ -188,3 +472,86 @@ def test_compact_latest_breaks_ties_deterministically(spark):
     assert {(r.key, r.payload) for r in out.collect()} == {
         ("u1", "latest"), ("u2", "tie-wins"),
     }
+
+
+def test_ivf_prebuilt_twin_matches_fit_included(spark):
+    """VERDICT r3 item 4: the split build/query path must return exactly
+    the fit-included composition's rows (same params, same seed), and the
+    second invocation must reuse the cached, persisted index."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        catalog as CAT,
+        text_queries as TQ,
+    )
+
+    fresh = {tuple(r) for r in CAT.CATALOG["ann_ivf_topk"].fn(spark, SF_SMOKE).collect()}
+    pre1 = {
+        tuple(r)
+        for r in CAT.CATALOG["ann_ivf_prebuilt_topk"].fn(spark, SF_SMOKE).collect()
+    }
+    assert pre1 == fresh
+    idx_a = TQ.ivf_index_for(spark, SF_SMOKE)
+    pre2 = {
+        tuple(r)
+        for r in CAT.CATALOG["ann_ivf_prebuilt_topk"].fn(spark, SF_SMOKE).collect()
+    }
+    idx_b = TQ.ivf_index_for(spark, SF_SMOKE)
+    assert pre2 == pre1
+    assert idx_a is idx_b, "index was rebuilt instead of cache-served"
+    assert idx_a.assigned.storageLevel.useMemory or idx_a.assigned.storageLevel.useDisk
+
+
+def test_ivf_cache_release_and_session_affinity(spark):
+    """VERDICT r4 item 5 / ADVICE r4: repeated invocations must not
+    accumulate persisted blocks (one cached frame per key, evictable),
+    and a cache entry from a foreign session must be rebuilt, not served."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        text_queries as TQ,
+    )
+
+    TQ.ivf_index_release()
+    assert not TQ._IVF_CACHE
+
+    def persisted_ids() -> set:
+        # set-diff on RDD ids, NOT a global count: the shared session's
+        # ContextCleaner unpersists other tests' dereferenced frames
+        # asynchronously, so the global count is not stable ground
+        # (full-suite flake adjudicated in VERDICT r5 What's-wrong #2);
+        # the cleaner only ever REMOVES ids, so "new ids since the
+        # snapshot" is exactly this test's footprint.
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    base = persisted_ids()
+    for _ in range(3):
+        TQ.ivf_index_for(spark, SF_SMOKE)
+    added = persisted_ids() - base
+    assert len(added) == 1, f"repeat invocations accumulated blocks: {added}"
+
+    # release evicts and unpersists
+    assert TQ.ivf_index_release(SF_SMOKE) == 1
+    assert not (persisted_ids() & added), "released index still persisted"
+    assert not TQ._IVF_CACHE
+
+    # a cache entry bound to another session object is dropped and rebuilt
+    idx = TQ.ivf_index_for(spark, SF_SMOKE)
+
+    class _NotThisSession:
+        pass
+
+    key = (SF_SMOKE, 8, 2, None)
+    cached = TQ._IVF_CACHE[key]
+    assert cached is idx
+
+    class _ForeignFrame:
+        sparkSession = _NotThisSession()
+
+        def unpersist(self):
+            raise RuntimeError("dead session")
+
+    class _ForeignIdx:
+        assigned = _ForeignFrame()
+
+    TQ._IVF_CACHE[key] = _ForeignIdx()
+    rebuilt = TQ.ivf_index_for(spark, SF_SMOKE)
+    assert rebuilt is not idx and rebuilt.assigned.sparkSession is spark
+    TQ.ivf_index_release()

@@ -1,11 +1,14 @@
-"""Round-2 additions: connected-components round budget, idempotent
-foreachBatch replay, tuning and EM-LDA catalog entries, JSON-path/parquet-path
-clean parity."""
+"""Round-2 additions: reliable-checkpoint connected components, idempotent
+foreachBatch replay, deterministic fast-top-k tie-breaking, tuning and
+EM-LDA catalog entries, JSON-path/parquet-path clean parity."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
-    graph as G,
+    dedup as DD,
+    similarity as SIM,
 )
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
     catalog,
@@ -17,16 +20,31 @@ from consumer_financial_protection_bureau_predictive_analysis_using_machine_lear
 from .conftest import SF_SMOKE
 
 
-def test_connected_components_max_iter_stops(spark, monkeypatch):
-    """The round budget bounds the rounds: a chain longer than the budget
-    stops early with labels only partially propagated (still monotone ≥
-    true min, never wrong-component merges)."""
-    monkeypatch.setattr(G, "_CC_MAX_ITER", 2)
-    monkeypatch.setattr(G, "_CC_DRIVER_MAX_EDGES", -1)  # iterative path
+def test_connected_components_chain_reliable_checkpoint(spark, tmp_path):
+    """A 9-hop chain (worst-case diameter for min-label propagation) with
+    checkpoint_dir set: reliable checkpoints replace localCheckpoint and the
+    fixpoint is still the per-component min."""
     chain = [(i, i + 1) for i in range(9)]
     pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    labels = {r.doc_id: r.component for r in G.connected_components(
-        pairs).collect()}
+    got = {
+        (r.doc_id, r.component)
+        for r in DD.connected_components(
+            pairs, checkpoint_dir=str(tmp_path / "ckpt"), driver_max_edges=None
+        ).collect()
+    }
+    assert got == {(i, 0) for i in range(10)}
+    # reliable checkpoint files actually landed in the requested dir
+    assert any((tmp_path / "ckpt").rglob("*"))
+
+
+def test_connected_components_max_iter_stops(spark):
+    """max_iter bounds the rounds: a chain longer than max_iter hops stops
+    early with labels only partially propagated (still monotone ≥ true min,
+    never wrong-component merges)."""
+    chain = [(i, i + 1) for i in range(9)]
+    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    labels = {r.doc_id: r.component for r in DD.connected_components(
+        pairs, max_iter=2, driver_max_edges=None).collect()}
     assert labels[0] == 0 and labels[1] == 0 and labels[2] == 0
     assert all(lbl >= 0 for lbl in labels.values())
     # far end of the chain cannot have converged in 2 rounds
@@ -47,6 +65,22 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == n_first  # not doubled
     assert back.select("_batch_id").distinct().count() == 1
+
+
+def test_cosine_topk_fast_breaks_ties_deterministically(spark):
+    """All-identical vectors → every score ties; the local per-batch cut
+    must keep the same (score desc, neighbor_id asc) winners the global
+    window would, across multiple partitions."""
+    rows = [(i, [1.0, 0.0, 0.0]) for i in range(40)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).repartition(4)
+    probes = emb.filter(F.col("vec_id") == 0)
+    exact = SIM.cosine_topk(emb, probes, k=5)
+    fast = SIM.cosine_topk_fast(emb, probes, k=5)
+    e = [(r.rank, r.neighbor_id) for r in exact.orderBy("rank").collect()]
+    f = [(r.rank, r.neighbor_id) for r in fast.orderBy("rank").collect()]
+    assert e == f == [(1, 1), (2, 2), (3, 3), (4, 4), (5, 5)]
 
 
 def test_tuned_lr_emits_best_params_from_grid(spark):

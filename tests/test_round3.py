@@ -1,15 +1,63 @@
-"""Round-3 additions: TPC-H breadth pack 2, behavioral analytics and
-reshape/SCD2 operators."""
+"""Round-3 additions: TPC-H breadth pack 2, behavioral analytics, and the
+distributed token-budget sampler."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+    pipeline as PL,
+)
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
     catalog,
 )
 
 from .conftest import SF_SMOKE
+
+
+def _docs(spark):
+    return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+
+def test_token_budget_two_phase_matches_naive_global_window(spark):
+    """The distributed two-phase prefix sum must equal the single-partition
+    global-window formulation row for row (same order key, same cumsum)."""
+    docs = _docs(spark)
+    budget = 50_000
+    fast = {
+        (r.doc_id, r.n_tokens, r.cum_tokens)
+        for r in PL.sample_token_budget(docs, budget).collect()
+    }
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.functions import (  # noqa: E501
+        textfns as TF,
+    )
+
+    rk = F.md5(F.col("doc_id").cast("string"))
+    naive = (
+        docs.select(
+            "doc_id",
+            F.size(TF.tokens("text")).cast("bigint").alias("n_tokens"),
+            rk.alias("rk"),
+        )
+        .withColumn(
+            "cum_tokens",
+            F.sum("n_tokens").over(
+                Window.orderBy("rk", "doc_id").rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
+                )
+            ),
+        )
+        .filter(F.col("cum_tokens") <= budget)
+    )
+    slow = {(r.doc_id, r.n_tokens, r.cum_tokens) for r in naive.collect()}
+    assert fast == slow and len(fast) > 0
+
+
+def test_token_budget_zero_and_huge(spark):
+    docs = _docs(spark)
+    assert PL.sample_token_budget(docs, 0).count() == 0
+    assert PL.sample_token_budget(docs, 10**12).count() == docs.count()
 
 
 def test_funnel_counts_monotonically_decrease(spark):
@@ -98,6 +146,53 @@ def test_user_paths_totals_match_event_counts(spark):
     assert n_trans == total - n_users
 
 
+def test_domain_mix_is_pure_filter_and_respects_weights(spark):
+    """Kept docs are a subset selected deterministically; a re-run keeps
+    exactly the same set, and high-weight sources keep >= low-weight ones
+    proportionally (statistically: src0 w=1.0 keeps everything)."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        analytics_queries as AQ,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        readers,
+    )
+
+    a = {
+        (r.source, r.n_kept)
+        for r in catalog.CATALOG["docs_domain_mix"].fn(spark, SF_SMOKE).collect()
+    }
+    b = {
+        (r.source, r.n_kept)
+        for r in catalog.CATALOG["docs_domain_mix"].fn(spark, SF_SMOKE).collect()
+    }
+    assert a == b and len(a) > 0
+    per_source = dict(a)
+    totals = {
+        r.source: r.n
+        for r in readers.load_table(spark, SF_SMOKE, "documents")
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert per_source.get("src0") == totals["src0"]  # w=1.0 keeps all
+    for s, kept in per_source.items():
+        assert kept <= totals[s]
+
+
+def test_shard_export_covers_all_docs_balanced(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        readers,
+    )
+
+    df = catalog.CATALOG["docs_shard_export"].fn(spark, SF_SMOKE)
+    rows = df.collect()
+    total = readers.load_table(spark, SF_SMOKE, "documents").count()
+    assert sum(r.n_docs for r in rows) == total
+    assert all(0 <= r.shard_id < 16 for r in rows)
+    # md5 is uniform: no shard should be wildly off a 16-way split
+    assert max(r.n_docs for r in rows) <= 4 * max(1, total // 16)
+
+
 def test_q20_winners_hold_majority_share(spark):
     """Every returned supplier must actually hold >50% of some standard
     part's 1997 volume (recompute the share independently)."""
@@ -144,7 +239,7 @@ def test_q20_winners_hold_majority_share(spark):
     assert names == expected
 
 
-# --- round-3 breadth pack: reshape / SCD2 / active users ---
+# --- round-3 breadth pack: reshape / stratified sample / LM score / range ---
 
 
 def test_unpivot_is_single_scan_expand(spark):
@@ -164,6 +259,74 @@ def test_pivot_is_single_aggregate_no_extra_job(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1
     assert plan.count("HashAggregate") >= 2
+
+
+def test_stratified_quota_sample_exact_quotas_and_determinism(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        sampling,
+    )
+
+    docs = _docs(spark)
+    out = sampling.stratified_quota_sample(docs, "source", quota=5, id_col="doc_id")
+    sizes = {r["source"]: r["n"] for r in
+             out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
+    full = {r["source"]: r["n"] for r in
+            docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert sizes == {s: min(5, n) for s, n in full.items()}
+    # pure function of the data: identical membership on a re-run and on a
+    # different partitioning
+    a = {tuple(r) for r in out.select("doc_id").collect()}
+    b = {
+        tuple(r)
+        for r in sampling.stratified_quota_sample(
+            docs.repartition(13), "source", quota=5, id_col="doc_id"
+        ).select("doc_id").collect()
+    }
+    assert a == b
+    # salt re-draws: different membership, same quotas
+    c = {
+        tuple(r)
+        for r in sampling.stratified_quota_sample(
+            docs, "source", quota=5, id_col="doc_id", salt="redraw"
+        ).select("doc_id").collect()
+    }
+    assert c != a and len(c) == len(a)
+
+
+def test_unigram_logprob_matches_handcomputed(spark):
+    import math
+
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        text as TX,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a a b"), (2, "b c")], "doc_id long, text string"
+    )
+    # corpus: a=2, b=2, c=1, total=5
+    got = {r.doc_id: (r.n_tokens, float(r.mean_logprob))
+           for r in TX.unigram_logprob(docs).collect()}
+    lp = {t: round(math.log(c / 5), 6) for t, c in {"a": 2, "b": 2, "c": 1}.items()}
+    want1 = round((2 * lp["a"] + lp["b"]) / 3, 6)
+    want2 = round((lp["b"] + lp["c"]) / 2, 6)
+    assert got[1] == (3, want1)
+    assert got[2] == (2, want2)
+
+
+def test_range_search_consistent_with_topk(spark):
+    """Every top-k hit scoring >= threshold must appear in the range result
+    with the identical decimal-rounded cosine (shared scoring core)."""
+    topk = catalog.CATALOG["ann_cosine_topk"].fn(spark, SF_SMOKE).collect()
+    rng = {
+        (r.probe_id, r.neighbor_id): r.cosine
+        for r in catalog.CATALOG["ann_range_search"].fn(spark, SF_SMOKE).collect()
+    }
+    overlap = [r for r in topk if r.cosine >= 0.35]
+    assert overlap, "fixture should have top-k hits above the range threshold"
+    for r in overlap:
+        assert rng[(r.probe_id, r.neighbor_id)] == r.cosine
+    # and nothing below threshold leaks in
+    assert all(c >= 0.35 for c in rng.values())
 
 
 def test_scd2_history_collapses_and_versions(spark):
@@ -194,6 +357,30 @@ def test_scd2_history_collapses_and_versions(spark):
         (1, "paid", 30, 40, False),
         (2, "new", 10, None, True),
     ]
+
+
+def test_boilerplate_spans_handcase(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        pipeline as PL,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e x1 y1"),   # shares "a b c d e" with doc 2
+            (2, "z a b c d e"),
+            (3, "p q r s t"),         # unique 5-gram
+            (4, "too short"),         # < 5 tokens -> 0 grams
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id: (r.n_grams, r.n_boilerplate, r.boilerplate_fraction)
+        for r in PL.boilerplate_spans(docs, n=5, min_docs=2).collect()
+    }
+    assert got[1] == (3, 1, round(1 / 3, 6))
+    assert got[2] == (2, 1, 0.5)
+    assert got[3] == (1, 0, 0.0)
+    assert got[4] == (0, 0, 0.0)
 
 
 def test_pivot_agg_null_semantics_consistent(spark):
@@ -233,3 +420,26 @@ def test_active_users_approx_error_bound(spark):
     assert set(est) == set(exact)
     for key, n in exact.items():
         assert abs(est[key] - n) <= max(2.0, 0.06 * n), (key, n, est[key])
+
+
+def test_weighted_topk_sample_aes_properties(spark):
+    """A-ES sampler: exactly k rows, deterministic across invocations,
+    and weight-biased (mean weight of the sample exceeds the corpus
+    mean — heavy docs are proportionally more likely)."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        catalog,
+    )
+    from .conftest import SF_ORACLE
+
+    fn = catalog.CATALOG["docs_weighted_topk_sample"].fn
+    a = fn(spark, SF_ORACLE).collect()
+    b = fn(spark, SF_ORACLE).collect()
+    assert len(a) == 100
+    assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]  # deterministic
+    assert [r["rank"] for r in sorted(a, key=lambda r: r["rank"])] == list(
+        range(1, 101)
+    )
+    sel_mean = sum(r["n_chars"] for r in a) / len(a)
+    corpus = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+    corpus_mean = corpus.agg({"n_chars": "avg"}).collect()[0][0]
+    assert sel_mean > corpus_mean

@@ -193,6 +193,20 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
+def test_cosine_topk_fast_matches_exact(spark):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (
+        similarity as SIM,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    probes = emb.filter(F.col("vec_id") < 5)
+    exact = SIM.cosine_topk(emb, probes, k=5)
+    fast = SIM.cosine_topk_fast(emb, probes, k=5)
+    e = {(r.probe_id, r.rank): (r.neighbor_id, r.cosine) for r in exact.collect()}
+    f = {(r.probe_id, r.rank): (r.neighbor_id, r.cosine) for r in fast.collect()}
+    assert e == f
+
+
 def test_observed_clean_counters(spark):
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark import (
         schemas,

@@ -71,6 +71,13 @@ def test_plans_keep_no_dir_memos_but_zorder():
     bench.py's per-run reset finds it."""
     allowed = {
         "_ZORDER_DIRS",  # offline layout artifact: warm is the lifecycle
+        # prebuilt serving indexes/artifacts: warm-by-design, primed in
+        # bench._prime_session so run 1 matches every later run
+        "_PQ_CACHE",
+        "_IVF_CACHE",
+        "_MINHASH_IDX_CACHE",
+        "_FUZZY_IDX_CACHE",
+        "_REBUILD_IDX_CACHE",
         "_LR_SCORED_CACHE",  # session-scoped scored frame (ML eval dim)
         "CATALOG",  # the catalog itself (imported into every module)
     }

@@ -18,7 +18,7 @@ repo-standard workflow:
 ``measure`` runs one primed session per core count (bench.py methodology:
 _prime_session, per-run cold reset of streaming work dirs, timed ``.count()``)
 and records per-query run lists, medians, and the md5 of the normalized
-extended plan (``normalize`` below).  ``compare`` prints a
+extended plan (tools/plan_fingerprint.normalize).  ``compare`` prints a
 per-query ratio per core column and flags fingerprint mismatches — equal
 fingerprints mean the executed plan is identical and any wall delta is
 environment.  Optionally pass ``--plans-dir plans/r14 --tag before`` to
@@ -33,27 +33,15 @@ import hashlib
 import io
 import json
 import os
-import re
 import sys
 import time
 from contextlib import redirect_stdout
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
 
-
-def normalize(plan: str) -> str:
-    """Strip plan ids, exchange ids, temp view names and paths, so two code
-    trees can be diffed: identical fingerprints mean the executed plan is
-    identical and any wall delta is environment."""
-    plan = re.sub(r"#\d+[L]?", "#N", plan)
-    plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=X]", plan)
-    plan = re.sub(r"\[id=#?\d+\]", "[id=X]", plan)
-    plan = re.sub(r"Exchange\s+\(\d+\)", "Exchange (X)", plan)
-    plan = re.sub(r"\(\d+\)", "(X)", plan)
-    plan = re.sub(r"file:[^\s,\]]+", "PATH", plan)
-    plan = re.sub(r"Statistics\([^)]*\)", "STATS", plan)
-    return plan
+from plan_fingerprint import normalize  # noqa: E402
 
 
 def _measure_one_session(names, cpus, runs, sf_dir, plans_dir, tag):

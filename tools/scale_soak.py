@@ -115,6 +115,15 @@ SOAK_SKIP = {
         " supplier co-purchase graph: >430 s at sf1 without completing"
         " (measured r8) — same superlinear-oracle class as pagerank"
     ),
+    "dedup_edit_distance": (
+        "the 10x key-shifted soak corpus gives every doc 9 exact clones,"
+        " so each prefix block is 10x denser (~100x candidate pairs) and"
+        " DuckDB's per-pair levenshtein went >900 s at sf1 without"
+        " completing (measured r9); the ENGINE side finishes the same"
+        " corpus in 298.5 s / 414,491 verified pairs (measured r9) — the"
+        " skip is the oracle's O(len^2)-per-pair scalar loop, not the"
+        " capped blocking"
+    ),
 }
 
 

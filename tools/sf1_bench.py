@@ -4,7 +4,8 @@ Runs a representative query panel on BOTH sf0.1 and the ~sf1 soak corpus
 (10 key-shifted copies, `tools/scale_soak.py build`) in one warmed session
 and records per-query walls plus the sf1/sf0.1 ratio.  On local[N] with
 CPU-bound work, 10× data should cost ≈10× wall (linear scaling) — ratios
-well above 10 flag superlinear behavior; ratios below 10 reflect fixed per-query overhead
+well above 10 flag superlinear behavior (the quadratic-bucket class the
+df-cap guards exist for); ratios below 10 reflect fixed per-query overhead
 amortizing away.
 
 Usage: python tools/sf1_bench.py   (writes BENCH_SF1_r{N}.json)
@@ -31,8 +32,88 @@ PANEL = [
     "q18_large_volume_customers",
     "events_sessionize",
     "events_hourly_agg",
-    # r10b: CUSUM drift over the event stream
+    # text / pipeline
+    "docs_token_stats",
+    "docs_filter_chain",
+    "docs_pack_sequences",
+    "docs_epoch_shuffle",
+    "docs_substring_dedup",
+    "docs_substring_clean_stats",
+    # dedup
+    "dedup_exact",
+    "dedup_simhash",
+    "dedup_minhash_fast",
+    "dedup_containment",
+    # similarity
+    "ann_cosine_topk_fast",
+    "ann_ivf_topk",
+    # multimodal
+    "media_text_pair_filter",
+    # r10: decade evidence for the round's additions
+    "dedup_containment_canonical",
+    "media_audio_fingerprint",
+    "docs_quality_classifier",
+    # r10 (VERDICT r9 #4): anchor/twin pairs whose twins are SLOWER at
+    # sf0.1 — the docstrings argue a scale crossover; the committed
+    # sf0.1->sf1 ratio PAIR is the evidence (the anchor's ratio should
+    # grow faster than the twin's if the crossover argument holds)
+    "dedup_incremental",
+    "dedup_incremental_bloom",
+    "docs_quality_deciles",
+    "docs_quality_deciles_approx",
+    # r10b: candidate-scoring governor — the decade evidence that closed
+    # the containment family's open observation (a)
+    "dedup_containment_canonical_fast",
+    "docs_ref_perplexity_buckets",
     "events_cusum_drift",
+    # r11: clone-collapse governor for the worst r10 decade tail (81x),
+    # plus the curation composition entry
+    "dedup_edit_distance",
+    "dedup_edit_distance_canonical",
+    "docs_curation_e2e",
+    # r12: durable-checkpoint twin of the curation funnel, the fuzzy
+    # decontamination serving pair, and the padded-batch manifest
+    "docs_curation_restartable",
+    "docs_decontaminate_fuzzy",
+    "docs_decontaminate_fuzzy_prebuilt",
+    "stream_decontaminate_fuzzy",
+    "docs_padded_batch_manifest",
+    "dedup_containment_collapsed",
+    "dedup_minhash_canonical",
+    # r13: the semantic collapse governor + the dup-factor dispatchers
+    # (on the key-shifted sf1 corpus every dispatcher routes collapsed)
+    "ann_semantic_canonical",
+    "ann_semantic_collapsed",
+    "ann_semantic_collapsed_fast",
+    "ann_semantic_auto",
+    "dedup_containment_auto",
+    "dedup_minhash_auto",
+    # the sf10 wall carries this ingest twin; its middle-decade column
+    # merges from here (review r13: it was missing, leaving sf1=null)
+    "stream_semantic_dedup",
+    "docs_decontaminate_fuzzy_collapsed",
+    "docs_decontaminate_fuzzy_auto",
+]
+
+# (anchor, twin) pairs surfaced as an explicit ratio comparison in the
+# artifact: twin_ratio < anchor_ratio evidences the crossover direction.
+TWIN_PAIRS = [
+    ("dedup_containment", "dedup_containment_canonical"),
+    ("dedup_containment_canonical", "dedup_containment_canonical_fast"),
+    ("dedup_incremental", "dedup_incremental_bloom"),
+    ("docs_quality_deciles", "docs_quality_deciles_approx"),
+    ("dedup_edit_distance", "dedup_edit_distance_canonical"),
+    ("docs_curation_e2e", "docs_curation_restartable"),
+    ("docs_decontaminate_fuzzy", "docs_decontaminate_fuzzy_prebuilt"),
+    ("dedup_containment_canonical_fast", "dedup_containment_collapsed"),
+    ("dedup_minhash_fast", "dedup_minhash_canonical"),
+    ("ann_semantic_canonical", "ann_semantic_collapsed"),
+    ("ann_semantic_collapsed", "ann_semantic_collapsed_fast"),
+    ("dedup_containment_canonical_fast", "dedup_containment_auto"),
+    ("dedup_minhash_canonical", "dedup_minhash_auto"),
+    ("ann_semantic_collapsed", "ann_semantic_auto"),
+    ("docs_decontaminate_fuzzy_prebuilt", "docs_decontaminate_fuzzy_collapsed"),
+    ("docs_decontaminate_fuzzy_collapsed", "docs_decontaminate_fuzzy_auto"),
 ]
 
 
@@ -66,7 +147,8 @@ def main() -> None:
         master=f"local[{cpus}]",
         app_name="sf1-bench",
         # sf1 corpora in one heap: the engine-default 8g hit
-        # driver headroom for the sf1 soak corpus on a loaded box (r13)
+        # UNABLE_TO_ACQUIRE_MEMORY on the containment family's sf1 spill
+        # under a loaded box (r13) - same headroom rationale as sf10_wall
         extra_conf={"spark.driver.memory": "24g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -84,7 +166,9 @@ def main() -> None:
             runs = []
             for _ in range(2):
                 # streaming entries: cold ingest every run, never the
-                # consumed-checkpoint replay (bench.py cold-pin, r13)
+                # consumed-checkpoint replay (bench.py cold-pin, r13 —
+                # the r12 stream_decontaminate_fuzzy 0.35 s sf1 number
+                # was the warm replay path this purge retires)
                 SJ.reset(name)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
@@ -96,13 +180,23 @@ def main() -> None:
               f"ratio {rec['ratio']}x", file=sys.stderr, flush=True)
     spark.stop()
 
+    twin_ratios = {
+        f"{anchor}/{twin}": {
+            "anchor_ratio": out[anchor]["ratio"],
+            "twin_ratio": out[twin]["ratio"],
+            "twin_scales_flatter": out[twin]["ratio"] < out[anchor]["ratio"],
+        }
+        for anchor, twin in TWIN_PAIRS
+        if anchor in out and twin in out
+    }
     path = os.path.join(HERE, f"BENCH_SF1_r{_round_number():02d}.json")
     payload = {
+        "twin_pairs": twin_ratios,
         "note": (
             "one-decade scaling: best-of-2 steady-state walls on sf0.1 and "
             "the 10x key-shifted soak corpus, one warmed local session; "
             "ratio ~ 10 = linear scaling on CPU-bound local[N], >> 10 = "
-            "superlinear"
+            "superlinear (the class the df-cap/banding guards exist for)"
         ),
         "cpus": cpus,
         "queries": out,
