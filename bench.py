@@ -1,19 +1,19 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Legacy per-query timer over the catalog, kept for the outside driver.
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...} — in EVERY mode (full bench and
---panel) the LAST stdout line is that one parseable payload, the driver
-contract.  With ``--commit`` the SAME payload is also written to
-BENCH_LOCAL_r{N}.json in the repo (N = newest driver round + 1), so the
-full per-query evidence survives the driver's 2000-char stdout tail cap
-(VERDICT r4: the committed r4 artifact lost the first ~7 timings);
-without ``--commit`` nothing on disk changes (VERDICT r13: silent
-overwrites of the committed round artifact).
+The repo benchmark is ``perfbench`` (BENCHMARK.json); this script only
+keeps the driver's stdout contract.  It times ``.count()`` of every
+catalog entry not in ``BENCH_EXCLUDED`` against ``$SPARK_GRAFT_SF_DIR``
+and prints ONE JSON line:
 
-Query set: the flagship complaint pipeline plus one representative per
-operator family (relational agg/join/window, set ops, JSON/event-time,
-text analysis, dedup, similarity search, ML train+score) so a regression
-in any engine subsystem shows up in the headline number.
+    {"metric": "bench_total_wall", "value": total_sec, "unit": "sec",
+     "queries": {name: sec, ...}, "sf": ..., "cold_pinned": [...]}
+
+With ``--commit`` the same payload is also written to
+BENCH_LOCAL_r{N}.json (N = newest driver round + 1), so the full
+per-query evidence survives the driver's 2000-char stdout tail cap;
+without it nothing on disk changes.  Every other line goes to stderr.
+
+    SPARK_GRAFT_SF_DIR=<scale-factor data dir> python bench.py [--commit]
 """
 
 from __future__ import annotations
@@ -25,297 +25,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
-    # relational core
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q18_large_volume_customers",
-    "q4_order_priority",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q2_min_cost_supplier",
-    "q9_profit_by_nation",
-    "q16_supplier_part_count",
-    "q21_waiting_suppliers",
-    "events_funnel",
-    "events_cohort_retention",
-    "complaints_flagship",
-    "complaints_class_distribution",
-    "topk_companies_per_state",
-    "orders_running_total",
-    "lineitem_cube",
-    "events_hourly_agg",
-    "events_sessionize",
-    "events_props_extract",
-    "events_asof_join",
-    "events_interval_join",
-    "events_multires_rollup",
-    "events_value_quantiles",
-    "skewjoin_events_enrich",
-    "er_fuzzy_part_match",
-    "orders_profile",
-    "orders_profile_approx",
-    "csv_roundtrip_customer",
-    # text / dedup / similarity (LLM-data-pipeline surface)
-    "docs_token_stats",
-    "docs_corpus_datasheet",
-    "docs_tfidf_keywords",
-    "docs_quality_score",
-    "docs_language_id",
-    "docs_decontaminate",
-    "docs_pack_bins",
-    "docs_chunk",
-    "docs_filter_chain",
-    "docs_quality_classifier",
-    "docs_quality_classifier_agreement",
-    "docs_quality_classifier_sweep",
-    "docs_repetition_stats",
-    "docs_token_budget_sample",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_incremental_bloom",
-    "dedup_incremental_minhash",
-    "dedup_incremental_minhash_prebuilt",
-    "dedup_minhash_lsh",
-    "dedup_minhash_fast",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_components",
-    "ann_cosine_topk",
-    "ann_cosine_topk_fast",
-    "ann_ivf_topk",
-    "ann_ivf_prebuilt_topk",
-    "ann_range_search",
-    "ann_recall_eval",
-    "ann_ivf_delete_compact",
-    "ann_int8_rerank_topk",
-    "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
-    # round-4 breadth: temperature mixture + curriculum + manifest
-    "docs_temperature_mix",
-    "docs_quality_deciles",
-    "docs_pack_manifest",
-    "docs_pack_sequences",
-    "docs_delete_impact",
-    "docs_domain_reweight",
-    "docs_dsir_importance",
-    "docs_dsir_sample",
-    "docs_dsir_score_batch",
-    "docs_reweighted_sample",
-    "docs_training_export",
-    "docs_bm25_rank",
-    "docs_hybrid_rrf",
-    "ann_semantic_dedup",
-    "ann_semantic_canonical",
-    "ann_semantic_canonical_fast",
-    "ann_semantic_dedup_incremental",
-    "ann_semantic_dedup_incremental_lsh",
-    "docs_quality_deciles_approx",
-    "events_value_outliers_mad",
-    "events_value_outliers_mad_approx",
-    "events_active_users_approx",
-    "stream_static_enrich",
-    # round-3 breadth: reshape + deterministic sampling + LM scoring
-    "orders_status_pivot",
-    "lineitem_unpivot",
-    "docs_stratified_sample",
-    "docs_unigram_logprob",
-    "docs_boilerplate_spans",
-    "orders_scd2",
-    "orders_rfm_segments",
-    "events_rolling_mean_dev",
-    "events_value_histogram",
-    "docs_weighted_sample",
-    "docs_weighted_topk_sample",
-    "customer_halves_full_outer",
-    "events_active_users",
-    "complaints_monthly_trend",
-    # multimodal + streaming
-    "media_meta_stats",
-    "media_decode_features",
-    "media_resize_images",
-    "docs_shard_export",
-    "stream_windowed_counts",
-    # layout / maintenance (r6)
-    "orders_mv_merge",
-    "lineitem_zorder_layout",
-    "lineitem_skipping_stats",
-    "stream_mv_maintenance",
-    "stream_join_mv",
-    # text/curation (r6)
-    "docs_bigram_pmi",
-    "docs_quality_zscore",
-    "docs_vocab_coverage",
-    "dedup_canonical_best",
-    "dedup_canonical_delete_promote",
-    # graph / quality / interchange (r6 second wave)
-    "supplier_copurchase_pagerank",
-    "part_copurchase_triangles",
-    "star_constraint_audit",
-    "orders_snapshot_diff",
-    "docs_snapshot_diff",
-    "orc_roundtrip_part",
-    "events_purchase_attribution",
-    "docs_bpe_merges",
-    "docs_bpe_encode",
-    "docs_bpe_vocab",
-    "part_association_rules",
-    "lineitem_numeric_corr",
-    "orders_price_psi",
-    "orders_price_ks",
-    "orders_status_priority_chi2",
-    "stream_quality_gate",
-    "stream_quality_classifier",
-    "events_top_session_paths",
-    "supplier_strong_components",
-    "part_similar_items",
-    # ML (train + score, the reference's core workload)
-    "ml_timely_lr",
-    "ml_timely_lr_lift",
-    "ml_timely_lr_lift_approx",
-    "ml_timely_lr_calibration",
-    "ml_timely_lr_threshold_sweep",
-    "ml_response_dt",
-    # r7 part 2: loader-side layout + ops/audit
-    "docs_epoch_shuffle",
-    "events_peak_concurrency",
-    "orders_partition_checksums",
-    "stream_checksum_mv",
-    "orders_replica_reconcile",
-    "dedup_cluster_size_stats",
-    "media_audio_fingerprint",
-    "media_phash_dedup",
-    "media_phash_near_pairs",
-    # r11 additions
-    "docs_decontaminate_fuzzy",
-    "docs_padded_batches",
-    "docs_curation_e2e",
-    "stream_curation_e2e",
-    "dedup_edit_distance_canonical",
-    "ann_ivf_rebuild_policy",
-    # r12 additions
-    "docs_curation_restartable",
-    "docs_decontaminate_fuzzy_prebuilt",
-    "stream_decontaminate_fuzzy",
-    "docs_padded_batch_manifest",
-    "dedup_containment_collapsed",
-    "dedup_minhash_canonical",
-    # r13 additions: SemDeDup clone-collapse governor + dup-factor dispatch
-    "ann_semantic_collapsed",
-    "ann_semantic_collapsed_fast",
-    "ann_semantic_auto",
-    "dedup_containment_auto",
-    "dedup_minhash_auto",
-    "docs_decontaminate_fuzzy_collapsed",
-    "docs_decontaminate_fuzzy_auto",
-    # r8 coverage sweep (VERDICT r7 item 3): every remaining catalog
-    # entry is benched unless it appears in BENCH_EXCLUDED with a reason.
-    # -- reference-parity complaints pipeline
-    "complaints_clean",
-    "complaints_frequency_encode",
-    "complaints_date_parts",
-    "complaints_binary_metrics",
-    "complaints_confusion_counts",
-    "complaints_per_class_metrics",
-    "complaints_confusion_pivot",
-    "complaints_json_clean",
-    "complaints_rebalance_8class",
-    "complaints_oversample_timely",
-    "complaints_train_test_split",
-    # -- relational / TPC-H-ish remainder
-    "events_ordinal",
-    "customers_in_both_statuses",
-    "customers_only_finished",
-    "union_order_sample_frames",
-    "orders_rollup_by_date",
-    "sql_nation_revenue",
-    "events_heavy_hitters_cms",
-    "events_grouping_sets",
-    "events_compact_latest",
-    "events_user_paths",
-    "events_gap_fill",
-    "salted_lineitem_agg",
-    "orders_merge_upsert",
-    "sink_roundtrip_orders",
-    "lineitem_zorder_export",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_shipping_delay_class",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q19_disjunctive_revenue",
-    "q20_potential_promotion",
-    "q22_sales_opportunity",
-    # -- text / dedup remainder
-    "docs_fingerprints",
-    "docs_pii_redact",
-    "docs_domain_mix",
-    "dedup_canonical_docs",
-    "dedup_jaccard_blocked",
-    "dedup_components_star",
-    "ann_lsh_topk",
-    "media_frame_sample",
-    # -- r8 additions
-    "docs_hashed_features",
-    "dedup_edit_distance",
-    "docs_contamination_report",
-    "stream_phash_dedup",
-    "orders_delete_propagation",
-    "lineitem_hilbert_layout",
-    "docs_bigram_condprob",
-    "dedup_containment",
-    "dedup_containment_canonical",
-    # -- r9 additions
-    "docs_substring_dedup",
-    "docs_substring_clean_stats",
-    "dedup_incremental_containment",
-    "dedup_incremental_containment_prebuilt",
-    "media_text_pair_filter",
-    "docs_substring_excise",
-    "dedup_lsh_recall_eval",
-    "docs_length_buckets",
-    "docs_substring_decontaminate",
-    "stream_substring_decontaminate",
-    "docs_dedup_rate_by_source",
-    "docs_self_repetition_spans",
-    "events_bot_users",
-    "stream_bot_users",
-    # -- streaming remainder (availableNow lifecycles; same harness
-    #    shape as the already-benched stream_windowed_counts et al.)
-    "stream_session_stats",
-    "stream_sliding_counts",
-    "stream_dedup_events",
-    "stream_running_user_stats",
-    "stream_click_purchase_join",
-    "stream_semantic_dedup",
-    "stream_minute_rollup",
-    # -- r10 second-window additions
-    "dedup_containment_canonical_fast",
-    "docs_unimax_mix",
-    "customer_k_anonymity",
-    "customer_k_anonymize",
-    "ann_hard_negatives",
-    "docs_ref_perplexity_buckets",
-    "docs_unimax_sample",
-    "docs_tokenizer_fertility",
-    "stream_ref_perplexity",
-    "customer_l_diversity",
-    "events_cusum_drift",
-    "ann_ivf_nprobe_sweep",
-    "docs_quality_conformal",
-    "events_forecast_snaive",
-    "stream_cusum_drift",
-    "docs_mix_drift_kl",
-]
+from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E402,E501
+    CATALOG as _CATALOG,
+)
 
-# Catalog entries deliberately NOT benched, with the reason committed
-# (VERDICT r7 item 2: silent bench gaps hide wall-time regressions —
+# Catalog entries deliberately NOT benched, with the reason committed:
 # every exclusion must name why the number would not measure engine
-# data-path throughput).  tests/test_bench_coverage.py pins
+# data-path throughput.  tests/test_bench_coverage.py pins
 # BENCH_QUERIES ∪ BENCH_EXCLUDED == catalog.
 BENCH_EXCLUDED = {
     "stream_late_data_audit": (
@@ -356,80 +72,22 @@ BENCH_EXCLUDED = {
     ),
 }
 
-
-# Isolated drift panel (VERDICT r8 "What's wrong" #2): the full bench's
-# wall numbers drift ~1.3× round-over-round with session load (199 queries
-# share one JVM), so a genuine 1.3–1.9× single-query regression is
-# indistinguishable from box load there.  This fixed panel — the twin
-# anchor pairs plus every ≥1.5× r8/r7 mover — is re-run SERIALLY in a
-# fresh session at round close (``python bench.py --panel``), 3 runs per
-# query, medians recorded in the same BENCH_LOCAL artifact under
-# ``panel``.  Panel members also get a tighter 1.3× remeasure bar in the
-# full bench run (vs 2× default).
-PANEL_QUERIES = [
-    # twin anchor pairs (exact anchor + production twin)
-    "ann_cosine_topk",
-    "ann_cosine_topk_fast",
-    "dedup_minhash_lsh",
-    "dedup_minhash_fast",
-    "ann_semantic_canonical",
-    "ann_semantic_canonical_fast",
-    "dedup_incremental",
-    "dedup_incremental_bloom",
-    "dedup_containment_canonical",
-    "dedup_containment_canonical_fast",
-    # r8/r7 ≥1.5× movers — reproduce-or-clear
-    "docs_domain_reweight",
-    "docs_dsir_importance",
-    "docs_dsir_sample",
-    "docs_dsir_score_batch",
-    "stream_static_enrich",
-    "stream_windowed_counts",
-    "docs_training_export",
-    "docs_stratified_sample",
-    "docs_boilerplate_spans",
-    "docs_pack_manifest",
-    "q1_pricing_summary",
-    "ann_semantic_dedup",
-    "lineitem_unpivot",
-    "docs_bm25_rank",
-    "ann_semantic_dedup_incremental",
-    "orders_rfm_segments",
-    "docs_weighted_topk_sample",
-    # r10 ≥1.5× movers — reproduce-or-clear (VERDICT r10 "What's wrong" #2)
-    "docs_hashed_features",
-    "docs_bigram_condprob",
-    "media_frame_sample",
-]
+BENCH_QUERIES = [n for n in _CATALOG if n not in BENCH_EXCLUDED]
 
 
-# ---------------------------------------------------------------------------
-# Cold-run pinning (VERDICT r12 item 4): streaming entries that stage
-# micro-batch inputs + a checkpoint in a per-(entry, sf_dir) work dir
-# become ~free on any SAME-SESSION re-run — the consumed checkpoint reports
-# "no new files" — so the remeasure pass's min() and the panel's 3-run
-# median could record a warm number a fresh session can never reproduce
-# (stream_checksum_mv flip-flopped 3.37 → 2.67 → 0.215 → 2.03 s across
-# rounds for exactly this reason).  Every timed execution therefore first
-# calls streaming.jobs.reset(name), which deletes the entry's work dirs
-# (staging + checkpoint) and is a no-op for entries without any; the
-# payload carries ``cold_pinned`` — the timed entries that held a work
-# dir — so the artifact says which numbers hold that contract.
-# Deliberately-warm serving memos — the prebuilt IVF / MinHash /
-# fuzzy-benchmark indexes built in _prime_session, and the offline
-# z-order layout — live outside that registry and are NOT purged:
-# offline-built-once is their documented lifecycle, and priming makes them
-# warm on the FIRST run too.
-# ---------------------------------------------------------------------------
-
-
-def _prime_session(spark, sf_dir: str, cpus: str) -> None:
-    """One-time JVM/daemon/offline-index warmup shared by bench + panel."""
+def _prime_session(spark, sf_dir: str) -> None:
+    """Warm the JVM, parquet footers and Python worker pool, and build the
+    prebuilt IVF / MinHash / fuzzy-decontamination indexes.  Building those
+    indexes is an offline lifecycle: the *_prebuilt and *_fuzzy_prebuilt
+    entries measure probe cost, so the index must be warm on the first
+    timed run too.  They live outside the streaming work-dir registry, so
+    the per-entry reset in ``main`` leaves them warm."""
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    spark.range(64).repartition(int(cpus)).mapInPandas(
+    spark.range(64).repartition(spark.sparkContext.defaultParallelism).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        breadth12 as _b12,
         text_queries as _tq,
     )
 
@@ -437,137 +95,11 @@ def _prime_session(spark, sf_dir: str, cpus: str) -> None:
     _tq.ivf_index_for(spark, sf_dir, n_assign=3)
     _tq.ivf_index_for(spark, sf_dir, n_assign=3, where="pmod(vec_id, 5) != 0")
     _tq.minhash_index_for(spark, sf_dir)
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
-        breadth12 as _b12,
-    )
-
-    # frozen fuzzy-decontamination benchmark index: the *_fuzzy_prebuilt /
-    # stream_decontaminate_fuzzy entries measure PROBE cost by design, so
-    # their index must be warm on the first timed run too (previously it
-    # was cold on run 1 and warm on any remeasure — the same
-    # round-over-round oscillation the cold reset pins from the other side)
     _b12.fuzzy_bench_index_for(spark, sf_dir)
-
-
-def run_panel(commit: bool = False) -> None:
-    """Round-close isolated drift panel: fresh session, serial, 3 runs per
-    panel query, per-query median.  Merges a ``panel`` section into the
-    round's BENCH_LOCAL artifact (only with ``--commit`` — r14 contract,
-    see ``_write_local_artifact``) and prints ONE JSON line that carries
-    the FULL payload keys (metric/value/queries/sf/cold_pinned) so the
-    driver's last-stdout-line parse succeeds in every mode — r12's round
-    comparison died because a panel-section-only JSON line was the last
-    thing on stdout (``BENCH_r12.json`` ``parsed: null``).  Against the
-    PREVIOUS round's full-bench numbers, a panel median > 1.3× prev is
-    a REPRODUCED regression (flagged); anything the full bench showed
-    slower but whose isolated median is back within 1.3× is recorded as
-    cleared-as-load."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.session import (  # noqa: E501
-        get_session,
-    )
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
-        CATALOG,
-    )
-    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
-        jobs as SJ,
-    )
-
-    spark = get_session(master=f"local[{cpus}]", app_name="bench-panel")
-    spark.sparkContext.setLogLevel("ERROR")
-    _prime_session(spark, sf_dir, cpus)
-
-    panel: dict[str, dict] = {}
-    for name in PANEL_QUERIES:
-        spec = CATALOG[name]
-        runs = []
-        for _ in range(3):
-            SJ.reset(name)
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).count()
-            runs.append(round(time.perf_counter() - t0, 3))
-        med = sorted(runs)[1]
-        panel[name] = {"runs": runs, "median": med}
-        print(f"# panel {name}: median {med:.3f}s {runs}", file=sys.stderr)
-    spark.stop()
-
-    prev_payloads = _prior_round_queries(limit=1)
-    prev = prev_payloads[0] if prev_payloads else {}
-    reproduced, cleared = {}, {}
-    for name, rec in panel.items():
-        if name in prev and prev[name] >= 0.25:
-            if rec["median"] > 1.3 * prev[name]:
-                reproduced[name] = [prev[name], rec["median"]]
-            else:
-                cleared[name] = [prev[name], rec["median"]]
-    # r12 lesson: panel-vs-prev-FULL is apples-to-oranges (fresh cold
-    # session vs a 250-query warm session) — all 7 of r11's "reproduced"
-    # flags dissolved under idle isolated re-measure + plan-fingerprint
-    # identity (tools/isolate_one.py, tools/plan_fingerprint.py,
-    # ADJUDICATE_r12.json).  Keep the full-bench compare for continuity,
-    # but ALSO record the like-for-like compare against the previous
-    # round's PANEL medians; a flag that appears in BOTH views (and on
-    # an idle box) is worth a bisect, one that appears only against the
-    # warm full bench is session composition, not code.
-    prev_panel = _prior_round_panel()
-    vs_prev_panel = {}
-    for name, rec in panel.items():
-        p = prev_panel.get(name)
-        if p and p >= 0.25:
-            vs_prev_panel[name] = {
-                "prev_panel": p,
-                "median": rec["median"],
-                "ratio": round(rec["median"] / p, 3),
-            }
-    section = {
-        "queries": panel,
-        "reproduced_regressions": reproduced,
-        "cleared_as_load": cleared,
-        "vs_prev_panel": vs_prev_panel,
-        "cold_pinned": sorted(SJ.staged_names() & set(panel)),
-    }
-    path = _artifact_path()
-    payload = {}
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                payload = json.load(f)
-        except (OSError, ValueError):
-            payload = {}
-    # The ONE printed line must be a full driver-parseable payload in every
-    # mode.  Panel-only invocations (no full-bench artifact yet) synthesize
-    # the required keys from the panel medians themselves.
-    if "queries" not in payload:
-        medians = {k: v["median"] for k, v in panel.items()}
-        payload = {
-            "metric": "bench_panel_wall",
-            "value": round(sum(medians.values()), 3),
-            "unit": "sec",
-            "queries": medians,
-            "sf": _sf_value(sf_dir),
-            "cold_pinned": section["cold_pinned"],
-        }
-    payload["panel"] = section
-    if commit:
-        try:
-            with open(path, "w") as f:
-                json.dump(payload, f, indent=1, sort_keys=True)
-                f.write("\n")
-        except OSError as e:
-            print(f"# panel artifact write failed: {e}", file=sys.stderr)
-    else:
-        print(
-            f"# panel artifact NOT written (pass --commit to update {path})",
-            file=sys.stderr,
-        )
-    print(json.dumps(payload))
 
 
 def main(commit: bool = False) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.session import (  # noqa: E501
         get_session,
@@ -579,20 +111,16 @@ def main(commit: bool = False) -> None:
         jobs as SJ,
     )
 
-    spark = get_session(master=f"local[{cpus}]", app_name="bench")
+    spark = get_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM + parquet footers so q1 doesn't pay one-time session
-    # cost, spawn the Python worker pool, and build the offline serving
-    # indexes (prebuilt-IVF / corpus MinHash): their build is an OFFLINE
-    # lifecycle — the steady-state serving cost is what the *_prebuilt
-    # entries measure, and their fit-included anchors right above them
-    # keep the comparison honest
-    _prime_session(spark, sf_dir, cpus)
+    _prime_session(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         spec = CATALOG[name]
+        # a streaming entry re-run in one session resumes its consumed
+        # checkpoint and reports "no new files"; deleting its work dirs
+        # first keeps every number cold and fresh-session-reproducible
         SJ.reset(name)
         t0 = time.perf_counter()
         n = spec.fn(spark, sf_dir).count()
@@ -600,64 +128,18 @@ def main(commit: bool = False) -> None:
         timings[name] = round(dt, 3)
         print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
 
-    sf_val = _sf_value(sf_dir)
-    total = round(sum(timings.values()), 3)
     payload = {
         "metric": "bench_total_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_val,
-        # every timing of these entries purged its staging/checkpoint dir
-        # first — the committed number is cold and fresh-session-reproducible
+        "sf": _sf_value(sf_dir),
+        # the timed entries that held a work dir, i.e. whose cold reset
+        # above actually did something
         "cold_pinned": sorted(SJ.staged_names() & set(timings)),
     }
-    regressions = _regressions_vs_previous_round(timings)
-    if regressions:
-        # re-measure before declaring: this machine's background load
-        # swings single timings ±2×, and a cold first run pays codegen —
-        # a real regression reproduces, noise doesn't.  r14 (VERDICT r13
-        # "What's wrong" #5): the recorded number is the MEDIAN of three
-        # samples (first run + two remeasures), a symmetric estimator —
-        # the previous min(first, second) policy filtered noise only in
-        # the repo's favor.  All three samples are recorded so a judge
-        # can see the swing without /tmp archaeology.
-        remeasured: dict[str, list[float]] = {}
-        for name in list(regressions):
-            spec = CATALOG[name]
-            samples = [timings[name]]
-            for _ in range(2):
-                SJ.reset(name)
-                t0 = time.perf_counter()
-                spec.fn(spark, sf_dir).count()
-                samples.append(round(time.perf_counter() - t0, 3))
-            remeasured[name] = samples
-            timings[name] = sorted(samples)[1]
-        payload["value"] = round(sum(timings.values()), 3)
-        payload["remeasured"] = remeasured
-        regressions = _regressions_vs_previous_round(timings)
-    if regressions:
-        payload["regressions_vs_prev"] = regressions
-        for name, (prev, cur) in regressions.items():
-            print(f"# REGRESSION {name}: {prev:.3f}s -> {cur:.3f}s", file=sys.stderr)
-    # per twin pair (QuerySpec.twin_of; QUERIES.md `twin of` column): the
-    # exact-anchor / production-twin wall ratio, committed so the
-    # "verification entry costs Nx the serving path" claim (e.g.
-    # ann_semantic_canonical 3.23 s vs _fast 1.40 s in r6) is a
-    # regression-guarded number, not a one-off VERDICT observation.
-    twin_speedup = {}
-    for name, spec in CATALOG.items():
-        if spec.twin_of and name in timings and spec.twin_of in timings:
-            tw, an = timings[name], timings[spec.twin_of]
-            twin_speedup[name] = {
-                "anchor": spec.twin_of,
-                "anchor_sec": an,
-                "twin_sec": tw,
-                "speedup": round(an / tw, 3) if tw > 0 else None,
-            }
-    if twin_speedup:
-        payload["twin_speedup"] = twin_speedup
-    _write_local_artifact(payload, commit=commit)
+    if commit:
+        _write_local_artifact(payload)
     print(json.dumps(payload))
     spark.stop()
 
@@ -665,7 +147,7 @@ def main(commit: bool = False) -> None:
 def _round_of(path: str) -> int | None:
     """Round number embedded in an artifact filename, or None for files
     that carry no r<digits> suffix (a stray BENCH_LOCAL_retry.json must
-    be skipped, not crash the panel — ADVICE r12)."""
+    be skipped, not crash)."""
     import re
 
     m = re.search(r"r(\d+)", os.path.basename(path))
@@ -700,32 +182,8 @@ def _artifact_path() -> str:
     return os.path.join(here, f"BENCH_LOCAL_r{_round_number():02d}.json")
 
 
-def _write_local_artifact(payload: dict, commit: bool = False) -> None:
-    """Write the round's BENCH_LOCAL artifact — ONLY with ``--commit``.
-
-    r14 contract (VERDICT r13 "What's wrong" #2): every bench run used to
-    silently overwrite the committed round artifact, so the driver's own
-    post-round run replaced the builder's committed evidence in the
-    working tree.  The committed artifact now only changes when the
-    invoker explicitly asks (``python bench.py --commit``); the stdout
-    payload is unchanged and remains the driver contract either way."""
+def _write_local_artifact(payload: dict) -> None:
     path = _artifact_path()
-    # a full-bench re-run must not clobber an already-recorded panel
-    # section (the --panel pass merges INTO this file; see run_panel)
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                prev = json.load(f)
-            if "panel" in prev and "panel" not in payload:
-                payload["panel"] = prev["panel"]
-        except (OSError, ValueError):
-            pass
-    if not commit:
-        print(
-            f"# bench artifact NOT written (pass --commit to update {path})",
-            file=sys.stderr,
-        )
-        return
     try:
         with open(path, "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
@@ -734,115 +192,5 @@ def _write_local_artifact(payload: dict, commit: bool = False) -> None:
         print(f"# bench artifact write failed: {e}", file=sys.stderr)
 
 
-def _regressions_vs_previous_round(
-    timings: dict[str, float], factor: float = 2.0, floor_sec: float = 0.25
-) -> dict[str, tuple[float, float]]:
-    """Round-over-round guard: compare against the newest prior-round bench
-    payload and flag queries slower by > ``factor``× (ignoring
-    sub-``floor_sec`` timings, which are dominated by fixed overhead and
-    machine noise; 0.25 s — the r4 floor of 0.5 s exempted a 3.9× mover
-    from its own retry).  REPEAT movers get a tighter bar (VERDICT r5
-    item 7): a query that already drifted ≥1.5× between the two prior
-    rounds is flagged at 1.5× instead of 2×, so slow two-round creep
-    (complaints_flagship 1.38→2.20 s in r4→r5) cannot hide under the 2×
-    bar indefinitely.  BENCH_LOCAL_r*.json (complete, repo-written) is
-    preferred over the driver's BENCH_r*.json (2000-char tail, possibly
-    front-truncated with ``parsed: null``).  Purely informational — the
-    single-line JSON contract is preserved, regressions ride along as an
-    extra key."""
-    prev_payloads = _prior_round_queries(limit=2)
-    if not prev_payloads:
-        return {}
-    prev = prev_payloads[0]
-    prevprev = prev_payloads[1] if len(prev_payloads) > 1 else {}
-    repeat_movers = {
-        name
-        for name, t in prev.items()
-        if name in prevprev
-        and prevprev[name] >= floor_sec
-        and t > 1.5 * prevprev[name]
-    }
-    out = {}
-    for name, cur in timings.items():
-        if name not in prev or prev[name] < floor_sec:
-            continue
-        bar = 1.5 if name in repeat_movers else factor
-        # panel members carry the isolated-drift contract: remeasure at
-        # 1.3× instead of waiting for a 2× excursion (VERDICT r8 item 3)
-        if name in PANEL_QUERIES:
-            bar = min(bar, 1.3)
-        if cur > bar * prev[name]:
-            out[name] = (prev[name], cur)
-    return out
-
-
-def _prior_round_panel() -> dict[str, float]:
-    """Per-query PANEL medians of the newest prior round that has a
-    panel section (fresh-session like-for-like baseline for run_panel)."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    cur_round = _round_number()
-    paths = sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json"))
-            if (n := _round_of(p)) is not None and n < cur_round
-        ),
-        key=_round_of,
-    )
-    for path in reversed(paths):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            q = doc.get("panel", {}).get("queries", {})
-        except (OSError, ValueError, AttributeError):
-            continue
-        if q:
-            return {k: v["median"] for k, v in q.items() if "median" in v}
-    return {}
-
-
-def _prior_round_queries(limit: int = 2) -> list[dict[str, float]]:
-    """Per-query timing dicts of the newest prior rounds (newest first),
-    at most one per round number."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    _num = _round_of
-    cur_round = _round_number()
-    candidates = sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-            + glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json"))
-            if (n := _num(p)) is not None and n < cur_round
-        ),
-        # newest round wins; within a round the LOCAL (complete) file wins
-        key=lambda p: (_num(p), "LOCAL" in os.path.basename(p)),
-    )
-    out: list[dict[str, float]] = []
-    seen_rounds: set[int] = set()
-    for path in reversed(candidates):
-        if _num(path) in seen_rounds:
-            continue
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            q = (doc.get("parsed") or doc).get("queries", {})
-        except (OSError, ValueError, AttributeError):
-            continue
-        if q:
-            out.append(q)
-            seen_rounds.add(_num(path))
-            if len(out) >= limit:
-                break
-    return out
-
-
 if __name__ == "__main__":
-    _commit = "--commit" in sys.argv
-    if "--panel" in sys.argv:
-        run_panel(commit=_commit)
-    else:
-        main(commit=_commit)
+    main(commit="--commit" in sys.argv)

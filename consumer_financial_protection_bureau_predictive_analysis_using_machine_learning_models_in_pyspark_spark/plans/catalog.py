@@ -34,8 +34,8 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default_factory=tuple)
     # fast/approx/prebuilt production twins link to their exact anchor entry
     # plus the pytest that pins the pair's equality/deviation bound, so the
-    # twin relationship is machine-readable (QUERIES.md `twin of` column,
-    # bench.py twin_speedup ratios) instead of living only in docstrings.
+    # twin relationship is machine-readable (QUERIES.md `twin of` column)
+    # instead of living only in docstrings.
     twin_of: str | None = None
     twin_pin: str | None = None
 

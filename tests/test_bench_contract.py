@@ -1,19 +1,14 @@
-"""Pin the bench stdout/artifact contract (VERDICT r13 "Next round" #1).
+"""Pin the bench.py stdout/artifact contract the outside driver reads.
 
-Round 12's round-over-round comparison died at the driver boundary:
-``BENCH_r12.json`` has ``parsed: null`` because bench stdout did not end
-with one parseable payload JSON.  These tests pin, WITHOUT a Spark
-session (every heavy dependency is stubbed), that:
+Tested WITHOUT a Spark session (every heavy dependency is stubbed):
 
-* ``main()`` and ``run_panel()`` each end stdout with exactly one JSON
-  object carrying the driver-contract keys (``metric``, ``value``,
-  ``unit``, ``queries``, ``sf``, ``cold_pinned``) — including the
-  remeasure path, which mutates the payload after first assembly;
+* ``main()`` ends stdout with exactly one JSON object carrying the
+  driver-contract keys (``metric``, ``value``, ``unit``, ``queries``,
+  ``sf``, ``cold_pinned``);
 * every other ``print`` in bench.py targets stderr (static scan), so no
   stray stdout line can land after the payload;
-* the committed ``BENCH_LOCAL_r{N}.json`` artifact is written ONLY under
-  ``--commit`` (VERDICT r13 "What's wrong" #2: every run used to
-  silently overwrite the committed round artifact).
+* the ``BENCH_LOCAL_r{N}.json`` artifact is written ONLY under
+  ``--commit``, and then holds exactly the printed payload.
 """
 
 from __future__ import annotations
@@ -49,7 +44,7 @@ class _FakeSpark:
         pass
 
 
-def _stub_bench(monkeypatch, tmp_path, names, prev_queries=None):
+def _stub_bench(monkeypatch, tmp_path, names):
     """Point bench at a fake 2-query catalog, a no-op session and a tmp
     artifact path; returns the artifact path."""
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark import (  # noqa: E501
@@ -65,13 +60,6 @@ def _stub_bench(monkeypatch, tmp_path, names, prev_queries=None):
     monkeypatch.setattr(session_mod, "get_session", lambda **kw: _FakeSpark())
     monkeypatch.setattr(bench, "_prime_session", lambda *a: None)
     monkeypatch.setattr(bench, "BENCH_QUERIES", list(names))
-    monkeypatch.setattr(bench, "PANEL_QUERIES", list(names))
-    monkeypatch.setattr(
-        bench, "_prior_round_queries", lambda limit=2: (
-            [prev_queries] if prev_queries else []
-        )
-    )
-    monkeypatch.setattr(bench, "_prior_round_panel", lambda: {})
     art = tmp_path / "BENCH_LOCAL_r99.json"
     monkeypatch.setattr(bench, "_artifact_path", lambda: str(art))
     return art
@@ -95,53 +83,13 @@ def test_main_stdout_is_one_full_payload(monkeypatch, tmp_path, capsys):
     assert not art.exists(), "artifact written without --commit"
 
 
-def test_main_remeasure_path_keeps_contract(monkeypatch, tmp_path, capsys):
-    # prev-round numbers tiny enough that both queries flag as regressions
-    # and ride the remeasure path (median-of-3, all samples recorded)
-    art = _stub_bench(
-        monkeypatch, tmp_path, ["qa", "qb"],
-        prev_queries=None,
-    )
-    monkeypatch.setattr(
-        bench,
-        "_regressions_vs_previous_round",
-        lambda timings, **kw: {n: (1.0, timings[n]) for n in timings},
-    )
+def test_main_commit_writes_printed_payload(monkeypatch, tmp_path, capsys):
+    art = _stub_bench(monkeypatch, tmp_path, ["qa", "qb"])
     bench.main(commit=True)
     payload = _last_stdout_payload(capsys)
-    assert PAYLOAD_KEYS <= set(payload)
-    assert set(payload["remeasured"]) == {"qa", "qb"}
-    assert all(len(v) == 3 for v in payload["remeasured"].values())
+    assert set(payload) == PAYLOAD_KEYS, payload.keys()
     assert art.exists(), "artifact missing despite --commit"
-    on_disk = json.loads(art.read_text())
-    assert on_disk["queries"] == payload["queries"]
-
-
-def test_panel_stdout_is_one_full_payload(monkeypatch, tmp_path, capsys):
-    art = _stub_bench(monkeypatch, tmp_path, ["qa", "qb"])
-    bench.run_panel(commit=False)
-    payload = _last_stdout_payload(capsys)
-    assert PAYLOAD_KEYS <= set(payload), payload.keys()
-    assert "panel" in payload
-    assert set(payload["panel"]["queries"]) == {"qa", "qb"}
-    assert not art.exists(), "panel wrote artifact without --commit"
-
-
-def test_panel_merges_into_existing_payload(monkeypatch, tmp_path, capsys):
-    art = _stub_bench(monkeypatch, tmp_path, ["qa"])
-    full = {
-        "metric": "bench_total_wall", "value": 12.3, "unit": "sec",
-        "queries": {"qa": 12.3}, "sf": 0.1, "cold_pinned": [],
-    }
-    art.write_text(json.dumps(full))
-    bench.run_panel(commit=True)
-    payload = _last_stdout_payload(capsys)
-    # the merged payload keeps the FULL bench's headline keys, panel rides along
-    assert payload["metric"] == "bench_total_wall"
-    assert payload["value"] == 12.3
-    assert "panel" in payload
-    on_disk = json.loads(art.read_text())
-    assert on_disk["panel"]["queries"]["qa"]["median"] >= 0
+    assert json.loads(art.read_text()) == payload
 
 
 def test_every_other_print_targets_stderr():
@@ -173,4 +121,4 @@ def test_every_other_print_targets_stderr():
             and arg.func.attr == "dumps"
         ), f"stdout print at line {node.lineno} is not the payload print"
         payload_prints += 1
-    assert payload_prints == 2, payload_prints  # one in main, one in run_panel
+    assert payload_prints == 1, payload_prints  # the one in main

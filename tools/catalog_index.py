@@ -42,9 +42,7 @@ def render() -> str:
         "names the exact",
         "anchor entry and each pair's equality/deviation bound is pinned by "
         "the pytest in",
-        "`QuerySpec.twin_pin` (see `plans/catalog.py`); `bench.py` reports "
-        "per-pair",
-        "`twin_speedup` wall ratios.",
+        "`QuerySpec.twin_pin` (see `plans/catalog.py`).",
         "",
         "| # | query | check | twin of | tags |",
         "|---|---|---|---|---|",
