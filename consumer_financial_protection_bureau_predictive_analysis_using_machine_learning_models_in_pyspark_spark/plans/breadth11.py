@@ -69,6 +69,14 @@ _E2E_CT_MIN_U = 900_000  # containment >= 0.9, micro-units
 # Conservation pins (tests/test_round11.py): each stage's reason rows
 # partition the previous stage's kept set; pack tokens == mixture
 # selected tokens; sequences * 128 == tokens + tail_padding.
+#
+# The stage-boundary CTEs (s1k, s1x, dropped, s2k, contam, s3k, p) are
+# AS MATERIALIZED on purpose: DuckDB plans a CTE again at every place that
+# reads it, and the ledger's UNION ALL reads each stage's survivors two or
+# three times; inlined, the containment/decontamination prefix is planned
+# many times over and runs out of memory even on the 500-row sf0.001
+# corpus.  These are the same points where curation_frames materializes
+# the Spark side (j1/j1x/j2/j3/sel).
 # ---------------------------------------------------------------------------
 
 _E2E_SQL = f"""
@@ -98,11 +106,11 @@ flags AS (
               ELSE 'kept' END AS reason
   FROM t
 ),
-s1k AS (
+s1k AS MATERIALIZED (
   SELECT t.* FROM t JOIN flags USING (doc_id) WHERE flags.reason = 'kept'
 ),
 eg AS (SELECT text, MIN(doc_id) AS keeper FROM s1k GROUP BY text),
-s1x AS (
+s1x AS MATERIALIZED (
   SELECT s1k.* FROM s1k JOIN eg ON eg.text = s1k.text
   WHERE s1k.doc_id = eg.keeper
 ),
@@ -151,12 +159,12 @@ ct AS (
   JOIN sizes sa ON sa.doc_id = c.id_sub
   JOIN sizes sb ON sb.doc_id = c.id_sup
 ),
-dropped AS (
+dropped AS MATERIALIZED (
   SELECT DISTINCT id_sub AS doc_id FROM ct
   WHERE u >= {_E2E_CT_MIN_U}
     AND (n_sup > n_sub OR (n_sup = n_sub AND id_sup < id_sub))
 ),
-s2k AS (
+s2k AS MATERIALIZED (
   SELECT s1x.* FROM s1x
   WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.doc_id = s1x.doc_id)
 ),
@@ -172,8 +180,10 @@ bpos AS (
   FROM bench WHERE len(toks) >= 8
 ),
 bgrams AS (SELECT DISTINCT array_to_string(w[i:i+7], ' ') AS gram FROM bpos),
-contam AS (SELECT DISTINCT g.doc_id FROM cgrams g JOIN bgrams USING (gram)),
-s3k AS (
+contam AS MATERIALIZED (
+  SELECT DISTINCT g.doc_id FROM cgrams g JOIN bgrams USING (gram)
+),
+s3k AS MATERIALIZED (
   SELECT s2k.* FROM s2k
   WHERE NOT EXISTS (SELECT 1 FROM contam c WHERE c.doc_id = s2k.doc_id)
 ),
@@ -185,7 +195,7 @@ dom AS (
 doc AS (SELECT doc_id, source, nt AS n_tok FROM s3k),
 {_UNIMAX_SAMPLE_TAIL_CTES},
 chosen AS (SELECT doc_id, source, n_tok, e + extra AS n_copies FROM sel),
-p AS (
+p AS MATERIALIZED (
   SELECT CAST(COALESCE(SUM(n_tok * n_copies), 0) AS BIGINT) AS tt
   FROM chosen WHERE n_copies > 0
 )
