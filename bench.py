@@ -80,8 +80,9 @@ def _prime_session(spark, sf_dir: str) -> None:
     prebuilt IVF / MinHash / fuzzy-decontamination indexes.  Building those
     indexes is an offline lifecycle: the *_prebuilt and *_fuzzy_prebuilt
     entries measure probe cost, so the index must be warm on the first
-    timed run too.  They live outside the streaming work-dir registry, so
-    the per-entry reset in ``main`` leaves them warm."""
+    timed run too.  They are session memos (``operators.cache.memo``), not
+    work dirs, so the per-entry ``streaming.jobs.reset`` in ``main`` leaves
+    them warm."""
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     spark.range(64).repartition(spark.sparkContext.defaultParallelism).mapInPandas(
         lambda it: it, schema="id long"

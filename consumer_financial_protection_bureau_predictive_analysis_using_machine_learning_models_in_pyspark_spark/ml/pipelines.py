@@ -33,10 +33,7 @@ from pyspark.ml.classification import (
     LogisticRegression,
     RandomForestClassifier,
 )
-from pyspark.ml.evaluation import (
-    BinaryClassificationEvaluator,
-    MulticlassClassificationEvaluator,
-)
+from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import StringIndexer, VectorAssembler
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder, TrainValidationSplit
 from pyspark.sql import DataFrame
@@ -209,14 +206,6 @@ def auc(predictions: DataFrame) -> float:
     return BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(
         predictions
     )
-
-
-def multiclass_metrics(predictions: DataFrame) -> dict[str, float]:
-    ev = MulticlassClassificationEvaluator(labelCol="label", predictionCol="prediction")
-    return {
-        m: ev.evaluate(predictions, {ev.metricName: m})
-        for m in ("accuracy", "weightedPrecision", "weightedRecall", "f1")
-    }
 
 
 # ---------------------------------------------------------------------------

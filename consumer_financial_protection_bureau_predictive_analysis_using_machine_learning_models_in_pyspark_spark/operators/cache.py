@@ -15,11 +15,18 @@ deterministically by unpersisting the RDD inside its ``LogicalRDD``
 plan leaf.  :func:`swap_local_checkpoint` is the rebuild pattern: keep
 at most ONE live checkpoint per slot key — release the previous
 invocation's artifact, remember the new one.
+
+:func:`memo` is the build-once pattern: an artifact built once per
+(name, key, session) and served from memory on every later call (the
+prebuilt ANN/MinHash/PQ indexes, the scored frame of the lift entries);
+:func:`release` evicts entries and frees their frames.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Hashable, Iterable
+
+from pyspark.sql import DataFrame, SparkSession
 
 # slot key -> last checkpointed frame (module-level: slots survive across
 # invocations within a session, which is the whole point)
@@ -56,3 +63,48 @@ def swap_local_checkpoint(slot: str, df: DataFrame) -> DataFrame:
         release_local_checkpoint(prev)
     _SLOTS[slot] = df
     return df
+
+
+# (name, key) -> (session the entry was built under, value, frames to free)
+_MEMO: dict[tuple[str, Hashable], tuple[SparkSession, object, tuple]] = {}
+
+
+def memo(
+    name: str,
+    key: Hashable,
+    spark: SparkSession,
+    build: Callable[[], tuple[object, Iterable[DataFrame]]],
+):
+    """The value memoized under ``(name, key)`` for ``spark``, built on a
+    miss.  ``build()`` returns ``(value, frames)``: the value to serve and
+    the frames (persisted or locally checkpointed) that back it.  An
+    entry built under another session is released and rebuilt — its
+    blocks died with that session's executors.  The entry is stored only
+    once ``build`` returns, so a build that raises leaves no entry."""
+    hit = _MEMO.get((name, key))
+    if hit is not None:
+        if hit[0] is spark:
+            return hit[1]
+        release(name, key)
+    value, frames = build()
+    _MEMO[(name, key)] = (spark, value, tuple(frames))
+    return value
+
+
+def release(name: str | None = None, key: Hashable = None) -> int:
+    """Evict the memo entries matching ``name`` and ``key`` (``None``
+    matches any) and free every frame of each.  Returns the number
+    evicted.  Freeing a frame of a stopped session fails quietly: its
+    blocks are already gone."""
+    hits = [
+        k for k in _MEMO
+        if (name is None or k[0] == name) and (key is None or k[1] == key)
+    ]
+    for k in hits:
+        for df in _MEMO.pop(k)[2]:
+            try:
+                df.unpersist()  # a no-op on a localCheckpoint()ed frame
+            except Exception:
+                pass
+            release_local_checkpoint(df)  # a no-op on a persisted one
+    return len(hits)

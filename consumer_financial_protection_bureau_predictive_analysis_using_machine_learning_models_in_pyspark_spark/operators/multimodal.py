@@ -41,15 +41,6 @@ from pyspark.sql.types import (
 
 MODALITIES = ("image", "audio", "video")
 
-# One nullable struct per modality — exactly one is non-null per row, chosen
-# by the `modality` discriminator (parquet stores nulls for the others, ~free).
-MEDIA_META = (
-    "meta struct<"
-    "image: struct<width:int, height:int, channels:int>, "
-    "audio: struct<sample_rate:int, duration_ms:bigint>, "
-    "video: struct<fps:int, n_frames:int, width:int, height:int>>"
-)
-
 
 def media_table(docs: DataFrame) -> DataFrame:
     """documents → (media_id, modality, content binary, meta struct).

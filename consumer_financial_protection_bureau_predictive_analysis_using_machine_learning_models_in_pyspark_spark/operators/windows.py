@@ -107,23 +107,6 @@ def asof_join(
     )
 
 
-def running_agg(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    out_col: str = "running_sum",
-) -> DataFrame:
-    """Per-key running sum ordered by ``order_col`` (rows unbounded-preceding
-    to current)."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, F.sum(value_col).over(w))
-
-
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns as TF
+from ..operators import cache as CACHE
 from ..operators import dedup as DD
 from ..operators import pipeline as PL
 from .catalog import _t, register
@@ -243,9 +244,6 @@ FROM (
 ORDER BY stage_ix, reason
 """.strip()
 
-_LEDGER_COLS = ["stage_ix", "stage", "reason", "n_docs", "n_tokens"]
-
-
 def _shingles_of(frame: DataFrame) -> DataFrame:
     """(doc_id, lang, h): distinct-in-row 3-gram shingle hashes — ONE
     expression shared by the batch funnel's index build and the stream
@@ -335,12 +333,10 @@ def docs_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-invocation releases the PREVIOUS run's stage artifacts (steady
     # state: one live checkpoint per stage per session, not one per run —
     # r14 hygiene sweep)
-    from ..operators.cache import swap_local_checkpoint
-
     frames = curation_frames(
         spark,
         sf_dir,
-        materialize=lambda name, df: swap_local_checkpoint(
+        materialize=lambda name, df: CACHE.swap_local_checkpoint(
             f"docs_curation_e2e.{name}:{sf_dir}", df.localCheckpoint()
         ),
     )
@@ -683,8 +679,6 @@ def dedup_edit_distance_canonical(spark: SparkSession, sf_dir: str) -> DataFrame
 # is re-measured against exact post-ingest ground truth.
 # ---------------------------------------------------------------------------
 
-_REBUILD_IDX_CACHE: dict[str, object] = {}
-
 _REBUILD_DRIFT_THRESHOLD_U = 200_000  # 0.2 nats — measured separation:
 # in-distribution control batches score ≤ ~28k µnats (sf0.001/sf0.01),
 # the constructed shifted batch ~795k at both scales (≥ 28× the control)
@@ -746,19 +740,18 @@ def ann_ivf_rebuild_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # session-cached served index (the text_queries.ivf_index_for
+    def build_served():
+        idx = SIM.ivf_build(corpus0, n_cells=8, n_assign=2)
+        # freeze the served index (KMeans already ran eagerly; the
+        # assigned frame is recomputed per consumer otherwise)
+        assigned = idx.assigned.localCheckpoint()
+        return SIM.IvfIndex(assigned, idx.centroids, idx.n_assign), [assigned]
+
+    # session-memoized served index (the text_queries.ivf_index_for
     # pattern): the base build is identical per sf_dir, so bench loops
     # and repeated driver calls pay the KMeans fit once; the scenario
     # rebuilds below are the measured event, never cached
-    idx0 = _REBUILD_IDX_CACHE.get(sf_dir)
-    if idx0 is None:
-        idx0 = SIM.ivf_build(corpus0, n_cells=8, n_assign=2)
-        # freeze the served index (KMeans already ran eagerly; the
-        # assigned frame is recomputed per consumer otherwise)
-        idx0 = SIM.IvfIndex(
-            idx0.assigned.localCheckpoint(), idx0.centroids, idx0.n_assign
-        )
-        _REBUILD_IDX_CACHE[sf_dir] = idx0
+    idx0 = CACHE.memo("ann_ivf_rebuild_policy", sf_dir, spark, build_served)
     probes = emb.filter(F.col("vec_id") < 10)
 
     def _run_scenario(scenario: str, batch: DataFrame) -> tuple:
@@ -794,10 +787,8 @@ def ann_ivf_rebuild_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-scenario checkpoints can be released before returning —
         # otherwise each invocation leaked 4 checkpointed RDDs into
         # storage for the session's lifetime (r14 hygiene sweep)
-        from ..operators.cache import release_local_checkpoint
-
-        release_local_checkpoint(batch)
-        release_local_checkpoint(truth)
+        CACHE.release_local_checkpoint(batch)
+        CACHE.release_local_checkpoint(truth)
         return (
             scenario,
             n_batch,
@@ -880,10 +871,8 @@ def stream_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frozen dims, and localCheckpoints are invisible to the CacheManager
     # — without the swap a session accumulated 7 dead checkpointed RDDs
     # per run (r14 hygiene sweep)
-    from ..operators.cache import swap_local_checkpoint
-
     def _ck(slot: str, df: DataFrame) -> DataFrame:
-        return swap_local_checkpoint(
+        return CACHE.swap_local_checkpoint(
             f"stream_curation_e2e.{slot}:{sf_dir}", df.localCheckpoint()
         )
 
@@ -1301,8 +1290,7 @@ def fuzzy_flagged(
 # per-bucket window would collapse a 100 TB sort onto 4 reduce tasks.
 # ---------------------------------------------------------------------------
 
-_PB_BUCKETS = (16, 32, 64, 128)  # token-length band caps; docs cap at 128
-_PB_BATCH = 8                    # examples per padded batch
+_PB_BATCH = 8  # examples per padded batch
 
 
 # The d/b/r CTE chain is shared with docs_padded_batch_manifest

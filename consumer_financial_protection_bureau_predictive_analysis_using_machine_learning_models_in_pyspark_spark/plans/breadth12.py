@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import cache as CACHE
 from ..operators import dedup as DD
 from ..operators import restart as RS
 from .breadth8 import _CT_CORPUS_CTE, _CT_MIN_U
@@ -97,9 +98,6 @@ def docs_curation_restartable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fuzzy decontamination: prebuilt benchmark index + streaming ingest twin
 # ---------------------------------------------------------------------------
 
-_FUZZY_IDX_CACHE: dict[str, tuple] = {}
-
-
 def fuzzy_bench_index_for(spark: SparkSession, sf_dir: str) -> tuple:
     """(hashes, bands) of the BENCHMARK slice, built + materialized once
     per (sf_dir, session) — the frozen fuzzy-decontamination index the
@@ -108,25 +106,13 @@ def fuzzy_bench_index_for(spark: SparkSession, sf_dir: str) -> tuple:
     rather than persist: the index is dim-sized (eval-suite-small by
     definition), lives as leaf-rooted plans inside foreachBatch
     closures, and never re-derives corpus lineage."""
-    idx = _FUZZY_IDX_CACHE.get(sf_dir)
-    if idx is not None and idx[0].sparkSession is not spark:
-        _FUZZY_IDX_CACHE.pop(sf_dir, None)
-        idx = None
-    if idx is None:
-        bench = fd_bench(spark, sf_dir)
-        hashes = DD.shingle_hashes(bench).localCheckpoint()
+
+    def build():
+        hashes = DD.shingle_hashes(fd_bench(spark, sf_dir)).localCheckpoint()
         bands = DD.minhash_band_keys(hashes).localCheckpoint()
-        idx = (hashes, bands)
-        _FUZZY_IDX_CACHE[sf_dir] = idx
-    return idx
+        return (hashes, bands), [hashes, bands]
 
-
-def fuzzy_bench_index_release(sf_dir: str | None = None) -> int:
-    """Evict cached fuzzy benchmark indexes (all, or just ``sf_dir``'s)."""
-    keys = [k for k in _FUZZY_IDX_CACHE if sf_dir is None or k == sf_dir]
-    for k in keys:
-        _FUZZY_IDX_CACHE.pop(k)
-    return len(keys)
+    return CACHE.memo("fuzzy_bench_index_for", sf_dir, spark, build)
 
 
 @register(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators import layout as LY
 from ..operators import text as TX
+from ..streaming import jobs as SJ
 from .catalog import _t, register
 from .text_queries import (
     _AUG_CTE,
@@ -448,8 +449,6 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The work dir is memoized per sf_dir and cleaned at exit (repeated
     calls resume the checkpoint: a drained source adds no batches and the
     state re-reads the same latest version)."""
-    from ..streaming import jobs as SJ
-
     def frames():
         ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
         return [ev.filter(F.pmod(F.col("user_id"), F.lit(3)) == i) for i in range(3)]
@@ -613,8 +612,6 @@ def stream_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..streaming import jobs as SJ
-
     def build(work: str) -> None:
         ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
         users = ev.select("user_id").distinct()
@@ -668,9 +665,6 @@ def stream_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order write path: real clustered files + file-level manifest
 # ---------------------------------------------------------------------------
 
-_ZORDER_DIRS: dict[str, str] = {}
-
-
 @register(
     "lineitem_zorder_export", None,
     "layout", "zorder", "write", "manifest",
@@ -688,30 +682,13 @@ def lineitem_zorder_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     secondary-dimension locality dividend vs. a 1-D sorted write are
     pinned in tests/test_round6.py.
 
-    The work dir is memoized per sf_dir and cleaned at exit."""
-    import atexit
-    import shutil
-    import tempfile
+    The layout is written once into the entry's registry work dir."""
 
-    work = _ZORDER_DIRS.get(sf_dir)
-    if work is None:
-        work = tempfile.mkdtemp(prefix="zorder_export_")
-        try:
-            li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-            LY.zorder_write(
-                li, "l_partkey", "l_suppkey", f"{work}/table", n_files=16
-            )
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        if not _ZORDER_DIRS:
-            atexit.register(
-                lambda: [
-                    shutil.rmtree(d, ignore_errors=True)
-                    for d in _ZORDER_DIRS.values()
-                ]
-            )
-        _ZORDER_DIRS[sf_dir] = work
+    def build(work: str) -> None:
+        li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+        LY.zorder_write(li, "l_partkey", "l_suppkey", f"{work}/table", n_files=16)
+
+    work = SJ.workdir("lineitem_zorder_export", sf_dir, build)
     rep = LY.file_extent_report(
         spark, f"{work}/table", ("zval", "_bx", "_by")
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import cache as CACHE
 from ..operators import pipeline as PL
 from .catalog import _t, register
 from .text_queries import _D_TOKS, _QU_EXPR_SQL, _QU_MOMENTS_SQL
@@ -158,26 +159,17 @@ _PQ_SUBDOT = (
 )
 
 
-# Offline PQ artifacts (codebook + corpus codes) per sf_dir — the same
-# build-once lifecycle as text_queries._IVF_CACHE: serving entries must
-# measure the QUERY path, not re-pay the offline encode per call.
-# Session-validated on every hit (a dead session's persisted blocks died
-# with its executors); deterministic, so caching cannot change values.
-_PQ_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+# Offline PQ artifacts (codebook + corpus codes) per (sf_dir, session) —
+# the same build-once lifecycle as text_queries.ivf_index_for: serving
+# entries must measure the QUERY path, not re-pay the offline encode per
+# call.  Deterministic, so caching cannot change values.
 def pq_artifacts_for(
     spark: SparkSession, sf_dir: str, m: int = _PQ_M, k: int = _PQ_K
 ) -> tuple[DataFrame, DataFrame]:
     """(codebook, codes) for the embeddings table, persisted + memoized."""
     from ..operators import similarity as SIM
 
-    key = (sf_dir, m, k)
-    art = _PQ_CACHE.get(key)
-    if art is not None and art[1].sparkSession is not spark:
-        _PQ_CACHE.pop(key, None)
-        art = None
-    if art is None:
+    def build():
         from pyspark import StorageLevel
 
         emb = _t(spark, sf_dir, "embeddings")
@@ -186,24 +178,9 @@ def pq_artifacts_for(
             StorageLevel.MEMORY_AND_DISK
         )
         codes.count()  # materialize: the "index is on disk" contract
-        art = (cb, codes)
-        _PQ_CACHE[key] = art
-    return art
+        return (cb, codes), [codes]
 
-
-def pq_artifacts_release(sf_dir: str | None = None) -> int:
-    """Evict cached PQ artifacts (all, or just ``sf_dir``'s), unpersisting
-    the codes frames.  Same teardown contract as ivf_index_release."""
-    evicted = 0
-    for key in list(_PQ_CACHE):
-        if sf_dir is None or key[0] == sf_dir:
-            _cb, codes = _PQ_CACHE.pop(key)
-            try:
-                codes.unpersist()
-            except Exception:
-                pass  # dead session: blocks already gone
-            evicted += 1
-    return evicted
+    return CACHE.memo("pq_artifacts_for", (sf_dir, m, k), spark, build)
 
 
 @register(

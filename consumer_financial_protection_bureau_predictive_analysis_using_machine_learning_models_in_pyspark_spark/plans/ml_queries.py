@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml import nlp, pipelines as ML
-from ..operators import encode, metrics as M, sampling
+from ..operators import cache as CACHE, encode, metrics as M, sampling
 from .catalog import _cleaned, _t, register
 
 
@@ -200,35 +200,32 @@ def ml_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topics.select("topic", "term", F.round("weight", 6).alias("weight"))
 
 
-# Scored-frame cache for the lift twins: the LR fit is the offline
-# artifact (same lifecycle argument as text_queries._IVF_CACHE); both the
-# exact and approx lift entries serve from one persisted (p1, y) frame.
-# Session-validated on every hit; evictable for long-lived sessions.
-_LR_SCORED_CACHE: dict[str, DataFrame] = {}
-
-
+# Scored-frame memo for the lift twins: the LR fit is the offline
+# artifact (same lifecycle argument as text_queries.ivf_index_for); both
+# the exact and approx lift entries serve from one cached (p1, y) frame
+# per (sf_dir, session).
 def _lr_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.functions import vector_to_array
 
-    cached = _LR_SCORED_CACHE.get(sf_dir)
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    _LR_SCORED_CACHE.pop(sf_dir, None)
-    data = _timely_training_frame(spark, sf_dir).cache()
-    train, test = sampling.train_test_split(data, seed=42)
-    fitted = ML.timely_pipeline("lr").fit(train)
-    scored = (
-        fitted.transform(test)
-        .select(
-            vector_to_array("probability")[1].alias("p1"),
-            F.col("label").cast("double").alias("y"),
-        )
-        .cache()
-    )
-    scored.count()
-    data.unpersist()
-    _LR_SCORED_CACHE[sf_dir] = scored
-    return scored
+    def build():
+        data = _timely_training_frame(spark, sf_dir).cache()
+        try:
+            train, test = sampling.train_test_split(data, seed=42)
+            fitted = ML.timely_pipeline("lr").fit(train)
+            scored = (
+                fitted.transform(test)
+                .select(
+                    vector_to_array("probability")[1].alias("p1"),
+                    F.col("label").cast("double").alias("y"),
+                )
+                .cache()
+            )
+            scored.count()
+        finally:
+            data.unpersist()
+        return scored, [scored]
+
+    return CACHE.memo("lr_scored", sf_dir, spark, build)
 
 
 def _lift_from_deciles(scored_with_decile: DataFrame) -> DataFrame:

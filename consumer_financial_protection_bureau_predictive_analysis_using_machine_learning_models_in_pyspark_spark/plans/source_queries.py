@@ -13,23 +13,14 @@ unit tests, promoted to oracle-checked entries (VERDICT r1 items 5-7):
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators import cleaning, skew
 from ..sources import fixtures, readers, sinks
+from ..streaming import jobs as SJ
 from .catalog import _CLEAN_COLS, _CLEANED_CTE, _t, register
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    """Per-sf_dir scratch path under the system temp dir (the fixture dirs
-    are read-only)."""
-    slug = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{slug}")
 
 
 # A deliberately malformed NDJSON line: PERMISSIVE parsing lands the raw
@@ -38,24 +29,28 @@ _BROKEN_LINE = '{"complaint_id": BROKEN'
 
 
 def _render_complaints_json(spark: SparkSession, sf_dir: str) -> str:
-    """Render the complaints fixture as NDJSON, once per sf_dir.
+    """Render the complaints fixture as NDJSON into the entry's registry
+    work dir, once per (sf_dir, process); ``streaming.jobs.reset`` drops
+    it for a fresh render.
 
     Rows the fixture marks corrupt are written as genuinely malformed JSON
     (not a data field named _corrupt_record — that name is reserved for the
     reader's own capture column), so the read path exercises real PERMISSIVE
     corrupt-record handling.  One distributed pass: to_json over a struct of
-    the data columns; cached via the _SUCCESS marker.
+    the data columns.
     """
-    out = _scratch(sf_dir, "complaints_json")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        df = fixtures.complaints(spark, sf_dir)
+
+    def build(work: str) -> None:
         line = F.when(
             F.col(schemas.CORRUPT_COL).isNotNull(), F.lit(_BROKEN_LINE)
         ).otherwise(
             F.to_json(F.struct(*[F.col(c) for c in schemas.COMPLAINT_COLUMNS]))
         )
-        df.select(line.alias("value")).write.mode("overwrite").text(out)
-    return out
+        fixtures.complaints(spark, sf_dir).select(line.alias("value")).write.text(
+            f"{work}/json"
+        )
+
+    return f"{SJ.workdir('complaints_json_clean', sf_dir, build)}/json"
 
 
 @register(
@@ -92,7 +87,7 @@ def sink_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back, aggregate.  Oracle aggregates the source table directly — any
     value corruption in the sink/scan cycle breaks the hash."""
     orders = _t(spark, sf_dir, "orders")
-    out = _scratch(sf_dir, "orders_sink")
+    out = f"{SJ.workdir('sink_roundtrip_orders', sf_dir)}/orders"
     sinks.write_parquet(orders, out, partition_by=["o_orderstatus"])
     back = spark.read.parquet(out)
     return (
@@ -172,7 +167,7 @@ def csv_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text hop (double shortest-repr round-trip, quoting of embedded
     delimiters) breaks the hash."""
     cust = _t(spark, sf_dir, "customer")
-    out = _scratch(sf_dir, "customer_csv")
+    out = f"{SJ.workdir('csv_roundtrip_customer', sf_dir)}/customer"
     sinks.write_csv(cust, out)
     back = readers.read_csv(spark, out, cust.schema)
     return (
@@ -217,7 +212,7 @@ def orc_roundtrip_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     format hop (or a partition column dropped/retyped by the round-trip)
     breaks the hash."""
     p = _t(spark, sf_dir, "part")
-    out = _scratch(sf_dir, "part_orc")
+    out = f"{SJ.workdir('orc_roundtrip_part', sf_dir)}/part"
     sinks.write_orc(p, out, partition_by=("p_type",))
     back = readers.read_orc(spark, out)
     return (

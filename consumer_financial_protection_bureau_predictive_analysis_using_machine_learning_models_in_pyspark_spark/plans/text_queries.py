@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import textfns as TF
+from ..operators import cache as CACHE
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
 from ..operators import text as TX
@@ -618,17 +619,11 @@ def ann_cosine_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cosine_topk_fast(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
-# Prebuilt-IVF index cache: build+assign once per (sf_dir, params) and
-# persist the assigned frame — the offline-index lifecycle (VERDICT r3
-# item 4).  ann_ivf_prebuilt_topk serves probes from it; bench primes it
-# in warmup so the twin's timing is the amortized probe path, not the fit.
-# Entries are session-validated on every hit (a frame cached under a
-# stopped/replaced SparkSession raises on first use — ADVICE r4) and
-# evictable via ivf_index_release, so a long-lived session doesn't
-# accumulate persisted blocks (VERDICT r4 item 5).
-_IVF_CACHE: dict[tuple, object] = {}
-
-
+# Prebuilt IVF index: built, assigned and persisted once per (sf_dir,
+# params, session) — the offline-index lifecycle (VERDICT r3 item 4).
+# ann_ivf_prebuilt_topk serves probes from it; bench primes it in warmup
+# so the twin's timing is the amortized probe path, not the fit.
+# operators.cache.release("ivf_index_for") evicts and unpersists.
 def ivf_index_for(
     spark: SparkSession,
     sf_dir: str,
@@ -639,14 +634,8 @@ def ivf_index_for(
     """``where`` (a SQL predicate over the embeddings table) scopes the
     index to a corpus subset — e.g. the "existing corpus" half of the
     incremental-ingest entries; it participates in the cache key."""
-    key = (sf_dir, n_cells, n_assign, where)
-    idx = _IVF_CACHE.get(key)
-    if idx is not None and idx.assigned.sparkSession is not spark:
-        # built under a different (possibly stopped) session: its persisted
-        # blocks died with that session's executors — drop and rebuild.
-        _IVF_CACHE.pop(key, None)
-        idx = None
-    if idx is None:
+
+    def build():
         from pyspark import StorageLevel
 
         emb = _t(spark, sf_dir, "embeddings")
@@ -655,25 +644,10 @@ def ivf_index_for(
         idx = SIM.ivf_build(emb, n_cells=n_cells, n_assign=n_assign)
         idx.assigned = idx.assigned.persist(StorageLevel.MEMORY_AND_DISK)
         idx.assigned.count()  # materialize: the "index is on disk" contract
-        _IVF_CACHE[key] = idx
-    return idx
+        return idx, [idx.assigned]
 
-
-def ivf_index_release(sf_dir: str | None = None) -> int:
-    """Evict cached IVF indexes (all of them, or just ``sf_dir``'s),
-    unpersisting their assigned frames.  Returns the number evicted.
-    Call from bench/test teardown or any long-lived session that is done
-    serving a corpus; a dead-session entry is unpersisted best-effort
-    (its blocks are already gone with the session)."""
-    evicted = 0
-    for key in [k for k in _IVF_CACHE if sf_dir is None or k[0] == sf_dir]:
-        idx = _IVF_CACHE.pop(key)
-        try:
-            idx.assigned.unpersist()
-        except Exception:  # stopped session: blocks already released
-            pass
-        evicted += 1
-    return evicted
+    key = (sf_dir, n_cells, n_assign, where)
+    return CACHE.memo("ivf_index_for", key, spark, build)
 
 
 @register(
@@ -1293,23 +1267,14 @@ def docs_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Prebuilt corpus MinHash index (round 5): the (shingle-hash, band-key)
-# frames of the documents corpus, persisted once per sf_dir — the same
-# offline-build lifecycle as the IVF cache above (session-validated,
-# releasable).
-_MINHASH_IDX_CACHE: dict[tuple, tuple] = {}
-
-
+# frames of the documents corpus, persisted once per (sf_dir, session) —
+# the same offline-build lifecycle as ivf_index_for.
 def minhash_index_for(spark: SparkSession, sf_dir: str) -> tuple:
     """(hashes, bands) of the documents corpus, built+persisted once per
     (sf_dir, session).  Serves incremental near-dup triage the way
-    ``ivf_index_for`` serves ANN probes; ``minhash_index_release``
-    evicts."""
-    key = (sf_dir,)
-    idx = _MINHASH_IDX_CACHE.get(key)
-    if idx is not None and idx[0].sparkSession is not spark:
-        _MINHASH_IDX_CACHE.pop(key, None)
-        idx = None
-    if idx is None:
+    ``ivf_index_for`` serves ANN probes."""
+
+    def build():
         from pyspark import StorageLevel
 
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1321,23 +1286,9 @@ def minhash_index_for(spark: SparkSession, sf_dir: str) -> tuple:
             StorageLevel.MEMORY_AND_DISK
         )
         bands.count()  # materialize both (bands consumes hashes)
-        idx = (hashes, bands)
-        _MINHASH_IDX_CACHE[key] = idx
-    return idx
+        return (hashes, bands), [bands, hashes]
 
-
-def minhash_index_release(sf_dir: str | None = None) -> int:
-    """Evict cached MinHash corpus indexes (all, or just ``sf_dir``'s)."""
-    evicted = 0
-    for key in [k for k in _MINHASH_IDX_CACHE if sf_dir is None or k[0] == sf_dir]:
-        hashes, bands = _MINHASH_IDX_CACHE.pop(key)
-        for f in (bands, hashes):
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-        evicted += 1
-    return evicted
+    return CACHE.memo("minhash_index_for", sf_dir, spark, build)
 
 
 # ---------------------------------------------------------------------------

@@ -44,19 +44,6 @@ COMPLAINTS_SCHEMA = T.StructType(
     + [T.StructField(CORRUPT_COL, T.StringType(), True)]
 )
 
-# The 8-class company_response domain, ordered majority-first (reference
-# decision_tree_final_class_8.py:154-175 filters these eight literals).
-COMPANY_RESPONSE_CLASSES = [
-    "Closed with explanation",
-    "Closed with non-monetary relief",
-    "In progress",
-    "Closed with monetary relief",
-    "Closed without relief",
-    "Closed",
-    "Untimely response",
-    "Closed with relief",
-]
-
 # ---------------------------------------------------------------------------
 # Driver-generated synthetic test tables (TESTDATA.md / FIXTURES.md §A).
 # ---------------------------------------------------------------------------
@@ -193,6 +180,3 @@ TABLE_SCHEMAS = {
     "embeddings": EMBEDDINGS_SCHEMA,
 }
 TESTDATA_TABLES = list(TABLE_SCHEMAS)
-
-# JSON schema for the `props` column of events (extension surface: from_json).
-EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])

@@ -13,6 +13,8 @@ scale-relevant knobs:
 - Arrow enabled for any pandas interchange (feature-importance extraction,
   plotting sinks).
 - UTC session timezone so timestamp rendering is deterministic.
+- no console progress bar: its carriage-return ``[Stage N:>`` lines
+  would splice into every stderr log line.
 
 Every operator in this package is written to be correct under a *foreign*
 session too (the correctness driver constructs its own), so nothing here is
@@ -48,6 +50,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -5,7 +5,7 @@ Each operator is written against an event-time column + keys, exactly the
 shape Structured Streaming requires, so the same transformation runs under
 ``readStream`` with a watermark bolted on (see ``streaming.jobs``).
 
-Scale posture: tumbling/sliding aggregation is a keyed hash agg — the
+Scale posture: tumbling aggregation is a keyed hash agg — the
 shuffle key includes the window start, so skew is bounded by (key × window)
 cardinality.  Sessionization uses the gaps-and-islands window pattern in
 batch (lag + cumulative flag sum) and ``session_window`` under streaming.
@@ -33,24 +33,6 @@ def tumbling_agg(
     """
     return (
         df.groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start", F.col("w.start"))
-        .withColumn("window_end", F.col("w.end"))
-        .drop("w")
-    )
-
-
-def sliding_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    keys: Sequence[str],
-    aggs: list,
-) -> DataFrame:
-    """Sliding-window aggregation (each event lands in duration/slide windows)."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration, slide).alias("w"), *keys)
         .agg(*aggs)
         .withColumn("window_start", F.col("w.start"))
         .withColumn("window_end", F.col("w.end"))

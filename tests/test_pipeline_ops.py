@@ -504,12 +504,15 @@ def test_ivf_cache_release_and_session_affinity(spark):
     """VERDICT r4 item 5 / ADVICE r4: repeated invocations must not
     accumulate persisted blocks (one cached frame per key, evictable),
     and a cache entry from a foreign session must be rebuilt, not served."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        cache as CACHE,
+    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         text_queries as TQ,
     )
 
-    TQ.ivf_index_release()
-    assert not TQ._IVF_CACHE
+    CACHE.release("ivf_index_for")
+    assert CACHE.release("ivf_index_for") == 0
 
     def persisted_ids() -> set:
         # set-diff on RDD ids, NOT a global count: the shared session's
@@ -528,9 +531,10 @@ def test_ivf_cache_release_and_session_affinity(spark):
     assert len(added) == 1, f"repeat invocations accumulated blocks: {added}"
 
     # release evicts and unpersists
-    assert TQ.ivf_index_release(SF_SMOKE) == 1
+    key = (SF_SMOKE, 8, 2, None)
+    assert CACHE.release("ivf_index_for", key) == 1
     assert not (persisted_ids() & added), "released index still persisted"
-    assert not TQ._IVF_CACHE
+    assert CACHE.release("ivf_index_for") == 0
 
     # a cache entry bound to another session object is dropped and rebuilt
     idx = TQ.ivf_index_for(spark, SF_SMOKE)
@@ -538,8 +542,7 @@ def test_ivf_cache_release_and_session_affinity(spark):
     class _NotThisSession:
         pass
 
-    key = (SF_SMOKE, 8, 2, None)
-    cached = TQ._IVF_CACHE[key]
+    cached = CACHE.memo("ivf_index_for", key, spark, lambda: 1 / 0)
     assert cached is idx
 
     class _ForeignFrame:
@@ -551,7 +554,12 @@ def test_ivf_cache_release_and_session_affinity(spark):
     class _ForeignIdx:
         assigned = _ForeignFrame()
 
-    TQ._IVF_CACHE[key] = _ForeignIdx()
+    CACHE.release("ivf_index_for", key)
+    foreign = _ForeignIdx()
+    CACHE.memo(
+        "ivf_index_for", key, _NotThisSession(),
+        lambda: (foreign, [foreign.assigned]),
+    )
     rebuilt = TQ.ivf_index_for(spark, SF_SMOKE)
     assert rebuilt is not idx and rebuilt.assigned.sparkSession is spark
-    TQ.ivf_index_release()
+    CACHE.release("ivf_index_for")

@@ -4,6 +4,8 @@ plans, not just claimed in docstrings."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (
@@ -11,6 +13,8 @@ from consumer_financial_protection_bureau_predictive_analysis_using_machine_lear
 )
 
 SF = "/root/testdata/sf0.001"
+# the checkout this file belongs to, so a run from a copy checks that copy
+_REPO = Path(__file__).resolve().parents[1]
 
 
 def _physical(spark, name: str) -> str:
@@ -722,10 +726,10 @@ def test_queries_md_in_sync():
     — a stale index misleads both users and the judge."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(_REPO / "tools"))
     import catalog_index
 
-    with open("/root/repo/QUERIES.md") as f:
+    with open(_REPO / "QUERIES.md") as f:
         committed = f.read()
     assert committed == catalog_index.render(), (
         "QUERIES.md is stale; regenerate with `python tools/catalog_index.py`"
@@ -737,7 +741,7 @@ def test_bench_queries_all_registered():
     renamed entry would silently crash the driver's bench run)."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+    spec = importlib.util.spec_from_file_location("bench", _REPO / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     missing = [n for n in bench.BENCH_QUERIES if n not in CATALOG]

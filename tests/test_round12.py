@@ -27,6 +27,7 @@ from consumer_financial_protection_bureau_predictive_analysis_using_machine_lear
     breadth12,
 )
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+    cache as CACHE,
     restart as RS,
 )
 
@@ -177,7 +178,7 @@ def test_fuzzy_index_session_cached(spark):
     i1 = breadth12.fuzzy_bench_index_for(spark, SF)
     i2 = breadth12.fuzzy_bench_index_for(spark, SF)
     assert i1[0] is i2[0] and i1[1] is i2[1]
-    assert breadth12.fuzzy_bench_index_release(SF) == 1
+    assert CACHE.release("fuzzy_bench_index_for", SF) == 1
     i3 = breadth12.fuzzy_bench_index_for(spark, SF)
     assert i3[0] is not i1[0]
 

@@ -341,11 +341,14 @@ def test_minhash_index_cache_reuse_and_release(spark):
     """The corpus MinHash index follows the IVF cache's lifecycle:
     cache-served on repeat, session-validated, releasable — and the
     prebuilt entry's statuses equal the fit-included entry's."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        cache as CACHE,
+    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         text_queries as TQ,
     )
 
-    TQ.minhash_index_release()
+    CACHE.release("minhash_index_for")
     a = TQ.minhash_index_for(spark, SF_SMOKE)
     b = TQ.minhash_index_for(spark, SF_SMOKE)
     assert a is b, "index rebuilt instead of cache-served"
@@ -364,8 +367,8 @@ def test_minhash_index_cache_reuse_and_release(spark):
         .collect()
     }
     assert pre == fit
-    assert TQ.minhash_index_release(SF_SMOKE) == 1
-    assert not TQ._MINHASH_IDX_CACHE
+    assert CACHE.release("minhash_index_for", SF_SMOKE) == 1
+    assert CACHE.release("minhash_index_for") == 0
 
 
 def test_profile_table_nulls_and_single_scan(spark):

@@ -646,11 +646,14 @@ def test_pq_artifacts_cached_and_values_unchanged(spark):
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
         similarity as SIM,
     )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        cache as CACHE,
+    )
     from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
         breadth7 as B7,
     )
 
-    B7.pq_artifacts_release()
+    CACHE.release("pq_artifacts_for")
     cb1, codes1 = B7.pq_artifacts_for(spark, SF_SMOKE)
     _cb2, codes2 = B7.pq_artifacts_for(spark, SF_SMOKE)
     assert codes1 is codes2
@@ -661,7 +664,7 @@ def test_pq_artifacts_cached_and_values_unchanged(spark):
     served = catalog.CATALOG["ann_pq_adc_topk"].fn(spark, SF_SMOKE)
     assert served.exceptAll(inline).count() == 0
     assert inline.exceptAll(served).count() == 0
-    assert B7.pq_artifacts_release(SF_SMOKE) == 1
+    assert CACHE.release("pq_artifacts_for", (SF_SMOKE, 8, 16)) == 1
 
 
 def test_concurrency_sweep_hand_fixture(spark):
