@@ -61,7 +61,9 @@ def lda_topics(
     - topics: (topic, term, weight) — describeTopics' termIndices mapped to
       words via posexplode + vocabulary join (replaces the reference's
       broadcast-variable UDF D2);
-    - doc_topics: per-document topicDistribution.
+    - doc_topics: per-document topicDistribution, keyed by ``doc_id``
+      when ``featurized`` has one, else next to every column of
+      ``featurized``.
     """
     lda = LDA(
         k=k, seed=seed, optimizer=optimizer, maxIter=max_iter,
@@ -87,8 +89,7 @@ def lda_topics(
         .join(F.broadcast(vocab_df), "term_id")
         .select("topic", "term", "weight")
     )
-    doc_topics = model.transform(featurized).select(
-        "doc_id" if "doc_id" in featurized.columns else "*",
-        F.col("topicDistribution"),
-    )
+    doc_topics = model.transform(featurized)
+    if "doc_id" in featurized.columns:
+        doc_topics = doc_topics.select("doc_id", "topicDistribution")
     return topics, doc_topics

@@ -18,12 +18,14 @@ invocation's artifact, remember the new one.
 
 :func:`memo` is the build-once pattern: an artifact built once per
 (name, key, session) and served from memory on every later call (the
-prebuilt ANN/MinHash/PQ indexes, the scored frame of the lift entries);
-:func:`release` evicts entries and frees their frames.
+complaints fixture, the prebuilt ANN/MinHash/PQ indexes, the scored frame
+of the lift entries); :func:`release` evicts entries and frees their
+frames.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Hashable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +69,10 @@ def swap_local_checkpoint(slot: str, df: DataFrame) -> DataFrame:
 
 # (name, key) -> (session the entry was built under, value, frames to free)
 _MEMO: dict[tuple[str, Hashable], tuple[SparkSession, object, tuple]] = {}
+# Serializes every miss and release.  Re-entrant: a build may itself call
+# ``memo`` (the lift entries' scored frame is built on the complaints
+# fixture) or ``release`` (a build that retires a stale entry first).
+_LOCK = threading.RLock()
 
 
 def memo(
@@ -80,15 +86,23 @@ def memo(
     the frames (persisted or locally checkpointed) that back it.  An
     entry built under another session is released and rebuilt — its
     blocks died with that session's executors.  The entry is stored only
-    once ``build`` returns, so a build that raises leaves no entry."""
+    once ``build`` returns, so a build that raises leaves no entry.
+
+    A hit takes no lock.  A miss runs under one module lock and looks the
+    entry up again once it holds it, so threads that miss together build
+    it once."""
     hit = _MEMO.get((name, key))
-    if hit is not None:
-        if hit[0] is spark:
-            return hit[1]
-        release(name, key)
-    value, frames = build()
-    _MEMO[(name, key)] = (spark, value, tuple(frames))
-    return value
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    with _LOCK:
+        hit = _MEMO.get((name, key))
+        if hit is not None:
+            if hit[0] is spark:
+                return hit[1]
+            release(name, key)
+        value, frames = build()
+        _MEMO[(name, key)] = (spark, value, tuple(frames))
+        return value
 
 
 def release(name: str | None = None, key: Hashable = None) -> int:
@@ -96,15 +110,16 @@ def release(name: str | None = None, key: Hashable = None) -> int:
     matches any) and free every frame of each.  Returns the number
     evicted.  Freeing a frame of a stopped session fails quietly: its
     blocks are already gone."""
-    hits = [
-        k for k in _MEMO
-        if (name is None or k[0] == name) and (key is None or k[1] == key)
-    ]
-    for k in hits:
-        for df in _MEMO.pop(k)[2]:
-            try:
-                df.unpersist()  # a no-op on a localCheckpoint()ed frame
-            except Exception:
-                pass
-            release_local_checkpoint(df)  # a no-op on a persisted one
+    with _LOCK:
+        hits = [
+            k for k in _MEMO
+            if (name is None or k[0] == name) and (key is None or k[1] == key)
+        ]
+        for k in hits:
+            for df in _MEMO.pop(k)[2]:
+                try:
+                    df.unpersist()  # a no-op on a localCheckpoint()ed frame
+                except Exception:
+                    pass
+                release_local_checkpoint(df)  # a no-op on a persisted one
     return len(hits)

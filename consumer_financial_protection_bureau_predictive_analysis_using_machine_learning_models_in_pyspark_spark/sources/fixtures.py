@@ -23,8 +23,11 @@ Shape goals (mirroring the real corpus):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import cache as CACHE
 from . import readers
 
 # Executed verbatim by Spark SQL and DuckDB.  Keep to the common dialect:
@@ -87,13 +90,50 @@ def complaints_cte(body_sql: str, extra_ctes: dict[str, str] | None = None) -> s
     return "WITH " + ",\n".join(ctes) + "\n" + body_sql
 
 
+# the test tables the fixture SQL reads
+_TABLES = tuple(dict.fromkeys(t for _, t in readers._TABLE_REF.findall(COMPLAINTS_FIXTURE_SQL)))
+
+
+def _fingerprint(sf_dir: str) -> tuple:
+    """(path relative to ``sf_dir``, size, ``st_mtime_ns``) of every file
+    under each table the fixture reads.  ``os.stat`` only: no Spark job."""
+    out = []
+    for table in _TABLES:
+        root = os.path.join(sf_dir, f"{table}.parquet")
+        files = [root] if os.path.isfile(root) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        )
+        for f in files:
+            st = os.stat(f)
+            out.append((os.path.relpath(f, sf_dir), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 def complaints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the complaints fixture in Spark.
+    """The complaints fixture in Spark: one persisted frame per input.
 
     Runs the *same SQL text* the DuckDB oracle uses, with the parquet
     tables bound per call (``readers.run_sql``) — guaranteeing fixture
     parity by construction.  Catalyst plans this like any DataFrame
     program (the joins against customer/nation/documents are
     auto-broadcast: all three are small dims).
+
+    The frame is built once per (``sf_dir``, files, session) through
+    ``operators.cache.memo`` and persisted at the default level; the first
+    action on it fills the cache, so building it runs no Spark job and
+    every later report reads the cached rows instead of four tables.
+    Each ``sf_dir`` holds one entry, keyed by the fingerprint of the files
+    the fixture reads.  When they change, the old entry is released
+    *before* the new frame is persisted: the CacheManager matches cached
+    data by plan, i.e. by file paths, so a plan over the same paths would
+    otherwise be served the old rows — and a release after the new
+    persist would drop the new entry too.
     """
-    return readers.run_sql(spark, sf_dir, COMPLAINTS_FIXTURE_SQL)
+    name = f"complaints {os.path.realpath(sf_dir)}"
+
+    def build():
+        CACHE.release(name)  # the entry of files that have since changed
+        df = readers.run_sql(spark, sf_dir, COMPLAINTS_FIXTURE_SQL).persist()
+        return df, [df]
+
+    return CACHE.memo(name, _fingerprint(sf_dir), spark, build)

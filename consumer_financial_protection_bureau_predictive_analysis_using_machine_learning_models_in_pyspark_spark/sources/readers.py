@@ -66,23 +66,18 @@ _NS_TO_NTZ = (
 )
 
 
-_EVENTS_TS_IS_NANOS: dict[str, bool] = {}
-
-
 def _events_ts_is_nanos(path: str) -> bool:
     """Sniff the parquet footer (metadata-only read) for the ts encoding.
 
     Early driver datasets wrote ts as TIMESTAMP(NANOS) — which Spark's
     reader rejects outright ([PARQUET_TYPE_ILLEGAL]) — while current ones
     write plain TIMESTAMP(MICROS).  Detecting from the footer keeps one
-    loader working against both vintages with no session conf.
+    loader working against both vintages with no session conf.  Read on
+    every call: a file rewritten at the same path is never misread.
     """
-    if path not in _EVENTS_TS_IS_NANOS:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        t = pq.read_schema(path).field("ts").type
-        _EVENTS_TS_IS_NANOS[path] = str(t) in ("int64", "timestamp[ns]")
-    return _EVENTS_TS_IS_NANOS[path]
+    return str(pq.read_schema(path).field("ts").type) in ("int64", "timestamp[ns]")
 
 
 _TABLE_REF = re.compile(

@@ -174,6 +174,24 @@ def test_lda_em_optimizer_parity_path(spark):
     assert doc_topics.count() == 100
 
 
+def test_lda_doc_topics_without_doc_id_has_one_distribution(spark):
+    """A frame keyed by another column (``complaint_id``, as the training
+    round and the narrative entries pass) comes back whole, with one
+    ``topicDistribution`` column."""
+    words = ["loan payment escrow", "card charge dispute", "bank deposit overdraft"]
+    docs = spark.createDataFrame(
+        [(str(i), f"{words[i % 3]} {words[(i + 1) % 3]}") for i in range(30)],
+        "complaint_id string, text string",
+    )
+    featurized, vocab = nlp.nlp_features(docs, "text", vocab_size=20, min_df=1.0)
+    _, doc_topics = nlp.lda_topics(
+        spark, featurized, vocab, k=2, seed=7, max_iter=2, terms_per_topic=3,
+    )
+    assert doc_topics.columns.count("topicDistribution") == 1
+    assert "complaint_id" in doc_topics.columns
+    assert doc_topics.count() == 30
+
+
 def test_one_hot_stages_and_index_to_string(spark):
     """M22 convenience transformers (reference dead imports at
     company_response_RF.py:32-39, here functional): one-hot width ==

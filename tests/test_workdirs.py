@@ -5,10 +5,10 @@ the z-order layout, the source round-trips' outputs — comes from one
 registry, ``streaming.jobs.workdir``, keyed by (entry name, sf_dir):
 built once, memoized only after the build succeeded, dropped by
 ``reset(name)`` for a cold rerun.  Every prebuilt frame (the ANN /
-MinHash / PQ / fuzzy indexes, the lift entries' scored frame) comes from
-one session-checked memo, ``operators.cache.memo``, and
-``operators.cache.release`` frees it.  The plans package keeps no dict
-memo of its own.
+MinHash / PQ / fuzzy indexes, the lift entries' scored frame, the
+persisted complaints fixture) comes from one session-checked memo,
+``operators.cache.memo``, and ``operators.cache.release`` frees it.  The
+plans package keeps no dict memo of its own.
 """
 
 from __future__ import annotations
@@ -18,6 +18,9 @@ import importlib
 import os
 import pkgutil
 import tempfile
+import threading
+import time
+import uuid
 
 import pytest
 
@@ -30,6 +33,11 @@ from consumer_financial_protection_bureau_predictive_analysis_using_machine_lear
 from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.streaming import (  # noqa: E501
     jobs as SJ,
 )
+from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+    fixtures,
+    readers,
+)
+from perfbench import datagen
 
 from .conftest import SF_SMOKE
 
@@ -173,3 +181,126 @@ def test_source_roundtrip_dir_comes_from_registry(spark):
     assert os.listdir(work) == ["json"]
     SJ.reset("complaints_json_clean")
     assert not os.path.exists(work)
+
+
+_FIXTURE_ORDERS = 400
+
+
+@pytest.fixture
+def fixture_dir(tmp_path):
+    """A fresh dir of the fixture's four tables; its memo entry is
+    released afterwards, so no test leaves a persisted frame behind."""
+    datagen.write_tables(datagen.make_tables(1, _FIXTURE_ORDERS), str(tmp_path))
+    yield str(tmp_path)
+    CACHE.release(f"complaints {os.path.realpath(tmp_path)}")
+
+
+def _jobs_of(spark, action) -> int:
+    sc = spark.sparkContext
+    group = f"fixture-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one action")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixture_repeat_call_reads_no_table_and_runs_fewer_jobs(
+    spark, fixture_dir, monkeypatch
+):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans import (  # noqa: E501
+        CATALOG,
+    )
+
+    loads = []
+    real_load = readers.load_table
+    monkeypatch.setattr(
+        readers, "load_table", lambda *a: loads.append(a[2]) or real_load(*a)
+    )
+    first = fixtures.complaints(spark, fixture_dir)
+    assert sorted(loads) == ["customer", "documents", "nation", "orders"]
+    loads.clear()
+    assert fixtures.complaints(spark, fixture_dir) is first
+    assert loads == []  # served from the memo: no table is read again
+
+    report = CATALOG["complaints_class_distribution"].fn
+    rows = []
+    cold = _jobs_of(spark, lambda: rows.append(report(spark, fixture_dir).collect()))
+    warm = _jobs_of(spark, lambda: rows.append(report(spark, fixture_dir).collect()))
+    assert rows[0] == rows[1]
+    # the first collect fills the cache (dim broadcasts, the documents
+    # count); the second reads the cached rows
+    assert warm < cold, (cold, warm)
+    assert loads == []
+
+
+def _orders_dates(table) -> list[tuple[str, str]]:
+    keys = table.column("o_orderkey").to_pylist()
+    days = table.column("o_orderdate").to_pylist()
+    return sorted((str(k), d.date().isoformat()) for k, d in zip(keys, days))
+
+
+def _persisted_count(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_fixture_rebuilds_when_its_files_change(spark, fixture_dir):
+    """Files rewritten at the same path are served, not the cached rows of
+    the old ones, and the old entry's storage is freed first."""
+    old = fixtures.complaints(spark, fixture_dir)
+    old.collect()  # fills the cache
+    n_persisted = _persisted_count(spark)
+
+    orders = datagen.make_tables(2, _FIXTURE_ORDERS)["orders"]
+    datagen.write_tables({"orders": orders}, fixture_dir)
+    new = fixtures.complaints(spark, fixture_dir)
+    assert new is not old
+    got = sorted(
+        (r.complaint_id, r.date_received)
+        for r in new.select("complaint_id", "date_received").collect()
+    )
+    assert got == _orders_dates(orders)
+    assert new.storageLevel.useMemory  # the new entry is the cached one
+    assert _persisted_count(spark) <= n_persisted
+    assert fixtures.complaints(spark, fixture_dir) is new
+
+
+def test_fixture_cold_callers_build_once(spark, fixture_dir, monkeypatch):
+    builds = []
+    real_run_sql = readers.run_sql
+
+    def slow_run_sql(*a):
+        builds.append(a[1])
+        time.sleep(0.2)  # hold the build open while the other caller arrives
+        return real_run_sql(*a)
+
+    monkeypatch.setattr(readers, "run_sql", slow_run_sql)
+    start = threading.Barrier(2)
+    got = [None, None]
+
+    def call(i):
+        start.wait()
+        got[i] = fixtures.complaints(spark, fixture_dir)
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert builds == [fixture_dir]
+    assert got[0] is got[1] is not None
+
+
+def test_fixture_foreign_session_gets_rebuilt_entry(spark, fixture_dir):
+    ours = fixtures.complaints(spark, fixture_dir)
+    n = ours.count()
+    other = spark.newSession()
+    theirs = fixtures.complaints(other, fixture_dir)
+    assert theirs is not ours and theirs.sparkSession is other
+    assert theirs.count() == n
+    assert fixtures.complaints(other, fixture_dir) is theirs
+    back = fixtures.complaints(spark, fixture_dir)
+    assert back is not ours and back.sparkSession is spark
+    assert back.count() == n
