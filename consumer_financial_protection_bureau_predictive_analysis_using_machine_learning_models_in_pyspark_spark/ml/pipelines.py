@@ -23,7 +23,6 @@ Divergences from the reference, on purpose (SURVEY §2.12):
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import (
@@ -63,11 +62,13 @@ MULTICLASS_MODELS = {
 }
 
 
-def timely_pipeline(
-    model: str = "lr",
-    cat_cols: tuple[str, ...] = ("product", "issue", "state", "submitted_via"),
-    num_cols: tuple[str, ...] = ("year", "month", "day"),
-) -> Pipeline:
+# the feature columns of the two tasks
+TIMELY_CATEGORICAL = ("product", "issue", "state", "submitted_via")
+TIMELY_NUMERIC = ("year", "month", "day")
+RESPONSE_FEATURES = ("product_index", "frequency_company", "frequency_issue")
+
+
+def timely_pipeline(model: str = "lr") -> Pipeline:
     """Binary timely-response task (reference timely_LR.py:71-103 /
     timely_SVM.py:75-98): StringIndexer per categorical (handleInvalid=keep,
     frequencyDesc pinned) + label indexer + VectorAssembler + model.
@@ -80,10 +81,11 @@ def timely_pipeline(
     # for all categorical features (the reference fits one indexer per
     # column — 4 separate jobs); per-column frequencies and therefore
     # indices are identical either way
+    indexed = [f"{c}_index" for c in TIMELY_CATEGORICAL]
     stages = [
         StringIndexer(
-            inputCols=list(cat_cols),
-            outputCols=[f"{c}_index" for c in cat_cols],
+            inputCols=list(TIMELY_CATEGORICAL),
+            outputCols=indexed,
             handleInvalid="keep",
             stringOrderType="frequencyDesc",
         ),
@@ -96,7 +98,7 @@ def timely_pipeline(
     ]
     stages.append(
         VectorAssembler(
-            inputCols=[f"{c}_index" for c in cat_cols] + list(num_cols),
+            inputCols=indexed + list(TIMELY_NUMERIC),
             outputCol="features",
         )
     )
@@ -104,14 +106,7 @@ def timely_pipeline(
     return Pipeline(stages=stages)
 
 
-def response_pipeline(
-    model: str = "dt",
-    feature_cols: tuple[str, ...] = (
-        "product_index",
-        "frequency_company",
-        "frequency_issue",
-    ),
-) -> Pipeline:
+def response_pipeline(model: str = "dt") -> Pipeline:
     """8-class company_response task (reference
     decision_tree_final_class_8.py:110-121): product indexer + frequency
     encodings (done upstream by operators.encode.frequency_encode) →
@@ -131,7 +126,7 @@ def response_pipeline(
             handleInvalid="skip",
             stringOrderType="frequencyDesc",
         ),
-        VectorAssembler(inputCols=list(feature_cols), outputCol="features"),
+        VectorAssembler(inputCols=list(RESPONSE_FEATURES), outputCol="features"),
         MULTICLASS_MODELS[model](),
     ]
     return Pipeline(stages=stages)
@@ -183,14 +178,14 @@ def cv_fit(
 
 
 def tvs_fit(pipeline: Pipeline, train: DataFrame, grid: list, evaluator,
-            train_ratio: float = 0.8, parallelism: int = 4):
-    """TrainValidationSplit (reference decision_tree_final_class_8.py:395-398,
-    compared head-to-head with CV)."""
+            parallelism: int = 4):
+    """TrainValidationSplit, trainRatio 0.8 (reference
+    decision_tree_final_class_8.py:395-398, compared head-to-head with CV)."""
     tvs = TrainValidationSplit(
         estimator=pipeline,
         estimatorParamMaps=grid,
         evaluator=evaluator,
-        trainRatio=train_ratio,
+        trainRatio=0.8,
         parallelism=parallelism,
         seed=42,
     )

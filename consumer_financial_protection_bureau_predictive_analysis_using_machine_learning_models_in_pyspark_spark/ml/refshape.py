@@ -28,7 +28,7 @@ from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.tuning import ParamGridBuilder
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import encode, metrics as M, sampling
+from ..operators import metrics as M, sampling
 from . import pipelines as ML
 
 
@@ -66,30 +66,6 @@ def _canonical(df: DataFrame) -> DataFrame:
     return df.coalesce(1).sortWithinPartitions(*df.columns)
 
 
-def reference_shape_frames(
-    spark: SparkSession, sf_dir: str, target: int = 15_000
-) -> tuple[DataFrame, DataFrame]:
-    """(train, test) at the reference's published geometry: cleaned
-    complaints → company/issue frequency encodings
-    (decision_tree_final_class_8.py:110-121) → every class resampled with
-    replacement to ``target`` rows (seed 42,
-    decision_tree_final_class_8.py:179-193) → 70/30 randomSplit seed 42
-    (decision_tree_final_class_8.py:209)."""
-    from ..plans.catalog import _cleaned
-
-    df = _cleaned(spark, sf_dir)
-    df = encode.frequency_encode(df, "company")
-    df = encode.frequency_encode(df, "issue")
-    df = df.select(
-        "product", "company_response", "frequency_company", "frequency_issue"
-    )
-    balanced = sampling.rebalance_to_target(
-        _canonical(df), "company_response", target=target, seed=42
-    ).cache()
-    train, test = sampling.train_test_split(_canonical(balanced), seed=42)
-    return train, test
-
-
 def reference_shape_eval(
     spark: SparkSession,
     sf_dir: str,
@@ -97,7 +73,13 @@ def reference_shape_eval(
     target: int = 15_000,
     tuner: str = "cv",
 ) -> dict:
-    """Run the full published protocol and return the quality surface:
+    """Run the full published protocol and return the quality surface.
+
+    The geometry: cleaned complaints → company/issue frequency encodings
+    (decision_tree_final_class_8.py:110-121) → every class resampled with
+    replacement to ``target`` rows (seed 42,
+    decision_tree_final_class_8.py:179-193) → 70/30 randomSplit seed 42
+    (decision_tree_final_class_8.py:209).  Returns
 
     ``{"model", "target", "tuner", "best_params", "accuracy",
     "n_test", "per_class": {label: {"recall", "precision", "support"}},
@@ -105,44 +87,54 @@ def reference_shape_eval(
 
     ``tuner``: 'cv' (CrossValidator numFolds=3, the reference's headline)
     or 'tvs' (TrainValidationSplit trainRatio=0.8 — the reference compares
-    both, decision_tree_final_class_8.py:395-398).
+    both, decision_tree_final_class_8.py:395-398).  Every frame it caches
+    is released on return, also when the fit raises.
     """
-    train, test = reference_shape_frames(spark, sf_dir, target)
+    from ..plans.ml_queries import _response_features
+
+    if tuner not in ("cv", "tvs"):
+        raise ValueError(f"tuner must be cv or tvs, got {tuner!r}")
     pipe = ML.response_pipeline(model)
     grid = reference_grid(pipe, model)
     evaluator = MulticlassClassificationEvaluator(
         labelCol="label", predictionCol="prediction", metricName="accuracy"
     )
-    train = _canonical(train).cache()
-    if tuner == "cv":
-        fitted = ML.cv_fit(pipe, train, grid, evaluator, folds=3)
-    elif tuner == "tvs":
-        fitted = ML.tvs_fit(pipe, train, grid, evaluator, train_ratio=0.8)
-    else:
-        raise ValueError(f"tuner must be cv or tvs, got {tuner!r}")
-    best = fitted.bestModel.stages[-1]
-    preds = fitted.transform(test).cache()
-    per_class = {
-        float(r["label"]): {
-            "recall": round(r["recall"], 6),
-            # a class the tuned model never predicts has no precision
-            # (0 predicted rows) — recorded as None, not 0
-            "precision": (
-                None if r["precision"] is None else round(r["precision"], 6)
-            ),
-            "support": int(r["n_label"]),
-        }
-        for r in M.per_class_metrics(preds).collect()
-    }
-    n_test = preds.count()
-    acc = preds.filter("label = prediction").count() / n_test
+    balanced = sampling.rebalance_to_target(
+        _canonical(_response_features(spark, sf_dir)), "company_response",
+        target=target, seed=42,
+    )
+    with sampling.cached_split(_canonical(balanced)) as (train, test):
+        train, preds = _canonical(train).cache(), None
+        try:
+            if tuner == "cv":
+                fitted = ML.cv_fit(pipe, train, grid, evaluator, folds=3)
+            else:
+                fitted = ML.tvs_fit(pipe, train, grid, evaluator)
+            best = fitted.bestModel.stages[-1]
+            preds = fitted.transform(test).cache()
+            per_class = {
+                float(r["label"]): {
+                    "recall": round(r["recall"], 6),
+                    # a class the tuned model never predicts has no
+                    # precision (0 predicted rows) — recorded as None, not 0
+                    "precision": (
+                        None if r["precision"] is None else round(r["precision"], 6)
+                    ),
+                    "support": int(r["n_label"]),
+                }
+                for r in M.per_class_metrics(preds).collect()
+            }
+            n_test = preds.count()
+            acc = preds.filter("label = prediction").count() / n_test
+        finally:
+            train.unpersist()
+            if preds is not None:
+                preds.unpersist()
     best_params = {"maxDepth": best.getMaxDepth()}
     if model == "dt":
         best_params["minInstancesPerNode"] = best.getMinInstancesPerNode()
     else:
         best_params["numTrees"] = best.getNumTrees
-    preds.unpersist()
-    train.unpersist()
     return {
         "model": model,
         "target": target,

@@ -35,24 +35,23 @@ def non_blank(c: str | Column) -> Column:
     return ~(F.isnull(col) | (F.trim(col) == F.lit("")))
 
 
-def drop_corrupt(df: DataFrame, corrupt_col: str = schemas.CORRUPT_COL) -> DataFrame:
+def drop_corrupt(df: DataFrame) -> DataFrame:
     """Filter out corrupt-record rows, then drop the marker column (P2+P4)."""
-    if corrupt_col not in df.columns:
+    if schemas.CORRUPT_COL not in df.columns:
         return df
-    return df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
+    return df.filter(F.col(schemas.CORRUPT_COL).isNull()).drop(schemas.CORRUPT_COL)
 
 
-def recode_blanks(
-    df: DataFrame, cols: Sequence[str], replacement: str = NOT_AVAILABLE
-) -> DataFrame:
-    """Blank → replacement via when/otherwise (P8; reference init.py:32-33).
+def recode_blanks(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Blank → 'Not Available' via when/otherwise (P8; reference
+    init.py:32-33).
 
     One ``withColumns`` call (not a loop of ``withColumn``) so the plan gets
     a single Project node regardless of how many columns are recoded.
     """
     return df.withColumns(
         {
-            c: F.when(F.col(c) == "", F.lit(replacement)).otherwise(F.col(c))
+            c: F.when(F.col(c) == "", F.lit(NOT_AVAILABLE)).otherwise(F.col(c))
             for c in cols
         }
     )
@@ -67,19 +66,20 @@ def filter_non_blank(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df if pred is None else df.filter(pred)
 
 
-def clean_complaints(
-    df: DataFrame,
-    required: Sequence[str] = ("company", "product", "issue", "company_response", "timely"),
-    recode: Sequence[str] = ("sub_product", "sub_issue"),
-) -> DataFrame:
+# the columns a cleaned complaint must fill, and the ones recoded when blank
+REQUIRED = ("company", "product", "issue", "company_response", "timely")
+RECODED = ("sub_product", "sub_issue")
+
+
+def clean_complaints(df: DataFrame) -> DataFrame:
     """Composite `clean_complaints` (SURVEY §2.10; reference init.py:13-33 +
-    decision_tree_final_class_8.py:47-54): corrupt-drop → blank-recode →
-    required-column filter.
+    decision_tree_final_class_8.py:47-54): corrupt-drop → blank-recode of
+    ``RECODED`` → ``REQUIRED``-column filter.
 
     Single-pass: all three are narrow transformations, no shuffle; Catalyst
     collapses them into one scan+filter+project stage.
     """
-    return filter_non_blank(recode_blanks(drop_corrupt(df), recode), required)
+    return filter_non_blank(recode_blanks(drop_corrupt(df), RECODED), REQUIRED)
 
 
 class CleanQuality:

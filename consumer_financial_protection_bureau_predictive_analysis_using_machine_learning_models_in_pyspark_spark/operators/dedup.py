@@ -77,23 +77,6 @@ def shingle_hashes(
     )
 
 
-def minhash_signatures(
-    spark: SparkSession, hashes: DataFrame
-) -> DataFrame:
-    """(doc_id, i, mh): min over shingles of (a_i*h + b_i) mod p.
-
-    ONE aggregation computes all 16 permutation minima as parallel agg
-    columns (map-side partial min), then unpivots with ``stack`` — no row
-    blowup.  The naive alternative (crossJoin against the 16-row permutation
-    table, then groupBy(doc_id, i)) shuffles 16× the shingle rows; at 100 TB
-    that multiplier is the whole job."""
-    mins = _perm_mins(hashes)
-    stack = ", ".join(f"{i}, m{i}" for i in range(N_PERMS))
-    return mins.selectExpr(
-        "doc_id", f"stack({N_PERMS}, {stack}) AS (i, mh)"
-    ).select("doc_id", F.col("i").cast("int").alias("i"), "mh")
-
-
 def _perm_mins(hashes: DataFrame) -> DataFrame:
     """Wide per-doc signature: (doc_id, m0..m15) in one hash aggregation."""
     return hashes.groupBy("doc_id").agg(
@@ -104,32 +87,11 @@ def _perm_mins(hashes: DataFrame) -> DataFrame:
     )
 
 
-def lsh_bands(sigs: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
-    """(doc_id, band, key): concatenate each band's minhashes in row order.
-
-    Sort before join (array_sort over (i, mh) structs) keeps the key
-    deterministic regardless of aggregation order.
-    """
-    return (
-        sigs.withColumn("band", (F.col("i") / band_rows).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                ",",
-            ).alias("key")
-        )
-    )
-
-
 def minhash_band_keys(hashes: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
     """(doc_id, band, key) in ONE shuffle: the 16 permutation minima as
     parallel aggregation columns, band keys concatenated in-row, bands
-    unpivoted with ``stack`` (a narrow projection).  Same key text as
-    lsh_bands(minhash_signatures(...)) — but 1 shuffle instead of 3."""
+    unpivoted with ``stack`` (a narrow projection) — 1 shuffle, where
+    unpivoting the minima and grouping them back into bands takes 3."""
     mins = _perm_mins(hashes)
     n_bands = N_PERMS // band_rows
     keys = [

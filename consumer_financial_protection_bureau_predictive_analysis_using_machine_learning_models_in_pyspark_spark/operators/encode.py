@@ -20,30 +20,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def frequency_table(df: DataFrame, key: str, out_col: str | None = None) -> DataFrame:
-    """`groupBy(key).count()` dimension table (A1)."""
-    out_col = out_col or f"frequency_{key}"
-    return df.groupBy(key).agg(F.count(F.lit(1)).alias(out_col))
-
-
-def frequency_encode(
-    df: DataFrame, key: str, out_col: str | None = None, drop_key: bool = False
-) -> DataFrame:
-    """Composite frequency encode: A1 + broadcast left join (J1/J2).
+def frequency_encode(df: DataFrame, key: str) -> DataFrame:
+    """Composite frequency encode: ``groupBy(key).count()`` as
+    ``frequency_<key>`` (A1) + broadcast left join (J1/J2).
 
     The reference leaves join strategy to the planner; at 100 TB the dim
     (≤ ~7,000 rows for `company`) must be broadcast so the fact table never
     shuffles — hence the explicit hint.
     """
-    out_col = out_col or f"frequency_{key}"
-    freq = frequency_table(df, key, out_col)
-    joined = df.join(F.broadcast(freq), on=key, how="left")
-    return joined.drop(key) if drop_key else joined
+    freq = df.groupBy(key).agg(F.count(F.lit(1)).alias(f"frequency_{key}"))
+    return df.join(F.broadcast(freq), on=key, how="left")
 
 
-def date_parts(
-    df: DataFrame, src_col: str, prefix: str = "", fmt: str | None = None
-) -> DataFrame:
+def date_parts(df: DataFrame, src_col: str) -> DataFrame:
     """Cast string column to timestamp and derive year/month/day ints
     (reference timely_LR.py:57-62).
 
@@ -51,12 +40,7 @@ def date_parts(
     strings degrade to NULL parts instead of failing the job under ANSI mode
     (Spark 4 default).
     """
-    c = F.col(src_col)
-    ts = F.try_to_timestamp(c, F.lit(fmt)) if fmt else F.try_to_timestamp(c)
+    ts = F.try_to_timestamp(F.col(src_col))
     return df.withColumns(
-        {
-            f"{prefix}year": F.year(ts),
-            f"{prefix}month": F.month(ts),
-            f"{prefix}day": F.dayofmonth(ts),
-        }
+        {"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)}
     )

@@ -1,5 +1,5 @@
-"""Evaluation-metric operators (SURVEY §2.10 `binary_metrics`,
-`confusion_matrix`; §2.9 M19 replacement).
+"""Evaluation-metric operators (SURVEY §2.10 `binary_metrics`, the
+confusion matrix; §2.9 M19 replacement).
 
 Reference behavior:
 - TP/FP/TN/FN via four separate SQL-string filter+count jobs (reference
@@ -18,7 +18,7 @@ shuffle of |classes|² rows instead of four full-table scans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,34 +33,16 @@ def confusion_counts(
     )
 
 
-def confusion_matrix(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
-    """Wide confusion matrix via pivot (rows=label, cols=prediction)."""
-    return (
-        confusion_counts(df, label_col, pred_col)
-        .groupBy("label")
-        .pivot("prediction")
-        .sum("n")
-        .na.fill(0)
-        .orderBy("label")
-    )
-
-
-def binary_metrics(
-    df: DataFrame,
-    label_col: str = "label",
-    pred_col: str = "prediction",
-    positive=1.0,
-) -> DataFrame:
-    """(metric, value) table: tp/fp/tn/fn/precision/recall/f1/accuracy.
+def binary_metrics(df: DataFrame) -> DataFrame:
+    """(metric, value) table: tp/fp/tn/fn/precision/recall/f1/accuracy of
+    ``prediction`` against ``label``, positive class 1.0.
 
     Replaces the reference's four independent count() jobs
     (timely_LR.py:157-160) with one conditional aggregation — a single scan
     with map-side partial aggregation, which is the difference between 4×
     and 1× I/O at 100 TB.
     """
-    lbl, prd, pos = F.col(label_col), F.col(pred_col), F.lit(positive)
+    lbl, prd, pos = F.col("label"), F.col("prediction"), F.lit(1.0)
     agg = df.agg(
         F.sum(F.when((prd == pos) & (lbl == pos), 1).otherwise(0)).alias("tp"),
         F.sum(F.when((prd == pos) & (lbl != pos), 1).otherwise(0)).alias("fp"),
@@ -86,6 +68,92 @@ def binary_metrics(
     metrics = ["tp", "fp", "tn", "fn", "precision", "recall", "accuracy", "f1"]
     stack = ", ".join(f"'{m}', {m}" for m in metrics)
     return wide.selectExpr(f"stack({len(metrics)}, {stack}) AS (metric, value)")
+
+
+# cells of the threshold-sweep histogram: thresholds k/SWEEP_BINS, k=1..19
+SWEEP_BINS = 20
+
+
+def threshold_sweep(scored: DataFrame, threshold: Column) -> DataFrame:
+    """The full PR/confusion curve in ONE pass: for every threshold cell
+    k=1..SWEEP_BINS-1, tp/fp/fn/tn and precision/recall/F1 of
+    {cell ≥ k} against the label.
+
+    ``scored`` holds the score's cell ``cell`` (int in [0, SWEEP_BINS))
+    and its 0/1 label ``y``; ``threshold`` is a named expression over
+    ``cell``, the cell's lower bound in the caller's units — the first
+    output column and the sort key.
+
+    One map-side histogram of (n, n_pos) per cell, densified (a score
+    range with no rows still owes its threshold a row); every threshold's
+    counts then fall out of a suffix-sum window over the 20-row aggregate,
+    never the scored frame, so the cost is one scan, not 19.  At a
+    threshold with no predicted positives precision is NULL (undefined),
+    recall and f1 are 0.
+    """
+    from pyspark.sql import Window
+
+    nb = SWEEP_BINS
+    hist = scored.groupBy("cell").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("y").cast("bigint").alias("n_pos"),
+    )
+    cells = scored.sparkSession.range(nb).select(F.col("id").cast("int").alias("cell"))
+    hist = cells.join(hist, "cell", "left").fillna(0, subset=["n", "n_pos"])
+    tot = hist.agg(
+        F.sum("n").cast("bigint").alias("_nn"),
+        F.sum("n_pos").cast("bigint").alias("_pp"),
+    )
+    wc = Window.orderBy(F.desc("cell")).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hist.select(
+        "cell",
+        F.sum("n").over(wc).alias("_pred_pos"),
+        F.sum("n_pos").over(wc).alias("_tp"),
+    )
+    counts = (
+        cum.crossJoin(F.broadcast(tot))
+        .filter(F.col("cell") >= 1)
+        .select(
+            threshold,
+            F.col("_tp").cast("bigint").alias("tp"),
+            (F.col("_pred_pos") - F.col("_tp")).cast("bigint").alias("fp"),
+            (F.col("_pp") - F.col("_tp")).cast("bigint").alias("fn"),
+            (F.col("_nn") - F.col("_pp") - (F.col("_pred_pos") - F.col("_tp")))
+            .cast("bigint")
+            .alias("tn"),
+        )
+    )
+    name = counts.columns[0]
+    prec = F.when(
+        F.col("tp") + F.col("fp") > 0,
+        F.col("tp") / (F.col("tp") + F.col("fp")),
+    )
+    # CASE-guarded for ANSI mode (the driver's vanilla session): a
+    # positive-free split must yield 0, not a div-by-zero error
+    rec = F.when(
+        F.col("tp") + F.col("fn") > 0,
+        F.col("tp") / (F.col("tp") + F.col("fn")),
+    ).otherwise(F.lit(0.0))
+    return (
+        counts.withColumn("_prec", prec)
+        .withColumn("_rec", rec)
+        .select(
+            name, "tp", "fp", "fn", "tn",
+            F.round("_prec", 6).alias("precision"),
+            F.round("_rec", 6).alias("recall"),
+            F.round(
+                F.when(
+                    F.coalesce(F.col("_prec"), F.lit(0.0)) + F.col("_rec") > 0,
+                    2 * F.col("_prec") * F.col("_rec")
+                    / (F.col("_prec") + F.col("_rec")),
+                ).otherwise(F.lit(0.0)),
+                6,
+            ).alias("f1"),
+        )
+        .orderBy(name)
+    )
 
 
 def per_class_metrics(

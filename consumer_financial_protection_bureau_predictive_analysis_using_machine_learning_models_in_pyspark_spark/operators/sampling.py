@@ -17,6 +17,9 @@ sampling, fixed seed), O(1) scans instead of O(classes).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -269,8 +272,19 @@ def weighted_mixture_sample(
     )
 
 
-def train_test_split(
-    df: DataFrame, weights: list[float] | None = None, seed: int = 42
-) -> list[DataFrame]:
+def train_test_split(df: DataFrame, seed: int = 42) -> list[DataFrame]:
     """70/30 split, seed=42 (U4; reference timely_LR.py:100)."""
-    return df.randomSplit(weights or [0.7, 0.3], seed=seed)
+    return df.randomSplit([0.7, 0.3], seed=seed)
+
+
+@contextmanager
+def cached_split(df: DataFrame) -> Iterator[list[DataFrame]]:
+    """One fit's training lifetime: cache ``df``, yield its 70/30 split,
+    and unpersist ``df`` on exit, also when the fit raises.  ``cache()``
+    registers the frame in the CacheManager before any action fills it,
+    so the release must run on every path."""
+    data = df.cache()
+    try:
+        yield train_test_split(data)
+    finally:
+        data.unpersist()

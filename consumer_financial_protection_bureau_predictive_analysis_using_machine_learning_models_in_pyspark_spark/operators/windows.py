@@ -44,12 +44,6 @@ def top_k_per_group(
     )
 
 
-def with_ordinal(df: DataFrame, name: str = "ordinal") -> DataFrame:
-    """Non-dense unique row id — the shuffle-free replacement for the
-    reference's ``rdd.zipWithIndex()`` (init.py:29, SURVEY §2.12)."""
-    return df.withColumn(name, F.monotonically_increasing_id())
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

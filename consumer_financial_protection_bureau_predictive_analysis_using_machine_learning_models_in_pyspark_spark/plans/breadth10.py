@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textfns import tokens as TF_tokens
 from ..ml import quality as Q
+from ..operators import metrics as M
 from .breadth8 import _ct_scored_pairs
 from .catalog import CATALOG, _t, register
 from .pipeline_queries import quality_rule_set
@@ -725,9 +726,6 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus curation model.
 # ---------------------------------------------------------------------------
 
-_QC_SWEEP_BINS = 20
-
-
 @register(
     "docs_quality_classifier_sweep", None,
     "ml", "quality", "curation", "threshold-sweep", "eval",
@@ -740,83 +738,21 @@ def docs_quality_classifier_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     (docs_quality_classifier ships the 0.5 point; deployments trade
     recall for precision here).
 
-    One-pass shape (the ml_timely_lr_threshold_sweep discipline,
-    plans/ml_queries.py:374): a map-side 20-cell histogram of
-    (n, n_positive) by score cell, densified, then every threshold's
-    counts fall out of a suffix-sum window over the 20-row aggregate —
-    cell k's suffix sum IS {score_u ≥ k·50,000} exactly (floor
-    semantics).  The window runs over 20 rows, never the corpus; pinned
-    row-for-row equal to the naive 19-filter sweep in
-    tests/test_round10.py.  Rows-only (scores are MLlib outputs)."""
-    from pyspark.sql import Window
-
-    nb = _QC_SWEEP_BINS
+    One-pass shape: ``metrics.threshold_sweep``, the fold
+    ml_timely_lr_threshold_sweep also runs — cell k's suffix sum IS
+    {score_u ≥ k·50,000} exactly (floor semantics).  Pinned row-for-row
+    equal to the naive 19-filter sweep in tests/test_round10.py.
+    Rows-only (scores are MLlib outputs)."""
+    width = 1_000_000 // M.SWEEP_BINS
     scored = _quality_scores(spark, sf_dir).select(
         F.least(
-            (F.col("model_score_u") / F.lit(1_000_000 // nb)).cast("int"),
-            F.lit(nb - 1),
+            (F.col("model_score_u") / F.lit(width)).cast("int"),
+            F.lit(M.SWEEP_BINS - 1),
         ).alias("cell"),
         F.col("heuristic_keep").cast("int").alias("y"),
     )
-    hist = scored.groupBy("cell").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("n_pos"),
-    )
-    cells = spark.range(nb).select(F.col("id").cast("int").alias("cell"))
-    hist = cells.join(hist, "cell", "left").fillna(0, subset=["n", "n_pos"])
-    tot = hist.agg(
-        F.sum("n").cast("bigint").alias("_nn"),
-        F.sum("n_pos").cast("bigint").alias("_pp"),
-    )
-    wc = Window.orderBy(F.desc("cell")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "cell",
-        F.sum("n").over(wc).alias("_pred_pos"),
-        F.sum("n_pos").over(wc).alias("_tp"),
-    )
-    counts = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("cell") >= 1)
-        .select(
-            (F.col("cell") * F.lit(1_000_000 // nb))
-            .cast("bigint")
-            .alias("threshold_u"),
-            F.col("_tp").cast("bigint").alias("tp"),
-            (F.col("_pred_pos") - F.col("_tp")).cast("bigint").alias("fp"),
-            (F.col("_pp") - F.col("_tp")).cast("bigint").alias("fn"),
-            (F.col("_nn") - F.col("_pp") - (F.col("_pred_pos") - F.col("_tp")))
-            .cast("bigint")
-            .alias("tn"),
-        )
-    )
-    prec = F.when(
-        F.col("tp") + F.col("fp") > 0,
-        F.col("tp") / (F.col("tp") + F.col("fp")),
-    )
-    rec = F.when(
-        F.col("tp") + F.col("fn") > 0,
-        F.col("tp") / (F.col("tp") + F.col("fn")),
-    ).otherwise(F.lit(0.0))
-    return (
-        counts.withColumn("_prec", prec)
-        .withColumn("_rec", rec)
-        .select(
-            "threshold_u", "tp", "fp", "fn", "tn",
-            F.round("_prec", 6).alias("precision"),
-            F.round("_rec", 6).alias("recall"),
-            F.round(
-                F.when(
-                    F.coalesce(F.col("_prec"), F.lit(0.0)) + F.col("_rec") > 0,
-                    2 * F.col("_prec") * F.col("_rec")
-                    / (F.col("_prec") + F.col("_rec")),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("f1"),
-        )
-        .orderBy("threshold_u")
-    )
+    threshold = (F.col("cell") * F.lit(width)).cast("bigint").alias("threshold_u")
+    return M.threshold_sweep(scored, threshold)
 
 
 # ---------------------------------------------------------------------------

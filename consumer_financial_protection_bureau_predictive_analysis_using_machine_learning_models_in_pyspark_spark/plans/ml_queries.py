@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml import nlp, pipelines as ML
-from ..operators import cache as CACHE, encode, metrics as M, sampling
+from ..operators import encode, metrics as M, sampling
+from ..sources import fixtures
 from .catalog import _cleaned, _t, register
 
 
@@ -38,26 +39,31 @@ def _timely_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.oversample_binary(df, "timely", minority_value="No", seed=42)
 
 
-def _response_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """clean → frequency encode company+issue → rebalance to target
-    (reference decision_tree_final_class_8.py prologue, single-pass)."""
+def _response_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 8-class prologue: clean → frequency encode company+issue
+    (reference decision_tree_final_class_8.py:75-84) → the task's columns.
+    ``ml.refshape`` starts from it too."""
     df = _cleaned(spark, sf_dir)
     df = encode.frequency_encode(df, "company")
     df = encode.frequency_encode(df, "issue")
-    df = df.select("product", "company_response", "frequency_company",
-                   "frequency_issue")
-    return sampling.rebalance_to_target(df, "company_response", target=500, seed=42)
+    return df.select("product", "company_response", "frequency_company",
+                     "frequency_issue")
+
+
+def _response_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """8-class prologue → rebalance to target (reference
+    decision_tree_final_class_8.py prologue, single-pass)."""
+    return sampling.rebalance_to_target(
+        _response_features(spark, sf_dir), "company_response", target=500, seed=42
+    )
 
 
 def _binary_task(spark: SparkSession, sf_dir: str, model: str) -> DataFrame:
-    data = _timely_training_frame(spark, sf_dir).cache()
-    train, test = sampling.train_test_split(data, seed=42)
-    fitted = ML.timely_pipeline(model).fit(train)
-    preds = fitted.transform(test)
-    out = M.binary_metrics(preds).withColumn("model", F.lit(model))
-    out = out.select("model", "metric", F.round("value", 6).alias("value"))
-    data.unpersist()
-    return out
+    with sampling.cached_split(_timely_training_frame(spark, sf_dir)) as (train, test):
+        fitted = ML.timely_pipeline(model).fit(train)
+        preds = fitted.transform(test)
+        out = M.binary_metrics(preds).withColumn("model", F.lit(model))
+        return out.select("model", "metric", F.round("value", 6).alias("value"))
 
 
 @register("ml_timely_lr", None, "ml", "binary", "lr")
@@ -88,26 +94,18 @@ def ml_response_dt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-class company-response task, DecisionTree (reference
     decision_tree_final_class_8.py): rebalance → fit → DataFrame-native
     confusion counts (no RDD MulticlassMetrics hop)."""
-    data = _response_training_frame(spark, sf_dir).cache()
-    train, test = sampling.train_test_split(data, seed=42)
-    fitted = ML.response_pipeline("dt").fit(train)
-    preds = fitted.transform(test)
-    out = M.confusion_counts(preds).orderBy("label", "prediction")
-    data.unpersist()
-    return out
+    with sampling.cached_split(_response_training_frame(spark, sf_dir)) as (train, test):
+        fitted = ML.response_pipeline("dt").fit(train)
+        return M.confusion_counts(fitted.transform(test)).orderBy("label", "prediction")
 
 
 @register("ml_response_rf", None, "ml", "multiclass", "rf")
 def ml_response_rf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-class task, RandomForest (reference random_forest_final_class_8.py)
     with per-class precision/recall computed distributed."""
-    data = _response_training_frame(spark, sf_dir).cache()
-    train, test = sampling.train_test_split(data, seed=42)
-    fitted = ML.response_pipeline("rf").fit(train)
-    preds = fitted.transform(test)
-    out = M.per_class_metrics(preds)
-    data.unpersist()
-    return out
+    with sampling.cached_split(_response_training_frame(spark, sf_dir)) as (train, test):
+        fitted = ML.response_pipeline("rf").fit(train)
+        return M.per_class_metrics(fitted.transform(test))
 
 
 @register("ml_feature_importances", None, "ml", "introspection")
@@ -116,9 +114,7 @@ def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision_tree_final_class_8.py:291-307 does this via pandas)."""
     data = _response_training_frame(spark, sf_dir)
     fitted = ML.response_pipeline("dt").fit(data)
-    return ML.feature_importances(
-        fitted, ["product_index", "frequency_company", "frequency_issue"]
-    )
+    return ML.feature_importances(fitted, list(ML.RESPONSE_FEATURES))
 
 
 @register("ml_timely_lr_tuned", None, "ml", "tuning", "cv", "tvs")
@@ -137,28 +133,26 @@ def ml_timely_lr_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    data = _timely_training_frame(spark, sf_dir).cache()
-    train, test = sampling.train_test_split(data, seed=42)
     pipe = ML.timely_pipeline("lr")
     grid = ML.random_grid(ML.lr_param_grid(pipe), n=4, seed=7)
     ev = BinaryClassificationEvaluator(metricName="areaUnderROC")
 
     rows = []
-    cv_model = ML.cv_fit(pipe, train, grid, ev, folds=3, parallelism=8)
-    tvs_model = ML.tvs_fit(pipe, train, grid, ev, parallelism=8)
-    for tuner, model, val_metric in (
-        ("cv", cv_model, max(cv_model.avgMetrics)),
-        ("tvs", tvs_model, max(tvs_model.validationMetrics)),
-    ):
-        lr = model.bestModel.stages[-1]
-        rows.append((
-            tuner,
-            float(lr.getRegParam()),
-            float(lr.getElasticNetParam()),
-            round(float(val_metric), 6),
-            round(float(ev.evaluate(model.bestModel.transform(test))), 6),
-        ))
-    data.unpersist()
+    with sampling.cached_split(_timely_training_frame(spark, sf_dir)) as (train, test):
+        cv_model = ML.cv_fit(pipe, train, grid, ev, folds=3, parallelism=8)
+        tvs_model = ML.tvs_fit(pipe, train, grid, ev, parallelism=8)
+        for tuner, model, val_metric in (
+            ("cv", cv_model, max(cv_model.avgMetrics)),
+            ("tvs", tvs_model, max(tvs_model.validationMetrics)),
+        ):
+            lr = model.bestModel.stages[-1]
+            rows.append((
+                tuner,
+                float(lr.getRegParam()),
+                float(lr.getElasticNetParam()),
+                round(float(val_metric), 6),
+                round(float(ev.evaluate(model.bestModel.transform(test))), 6),
+            ))
     return spark.createDataFrame(
         rows,
         "tuner string, best_reg_param double, best_elastic_net double,"
@@ -201,16 +195,14 @@ def ml_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Scored-frame memo for the lift twins: the LR fit is the offline
-# artifact (same lifecycle argument as text_queries.ivf_index_for); both
-# the exact and approx lift entries serve from one cached (p1, y) frame
-# per (sf_dir, session).
+# artifact (same lifecycle argument as text_queries.ivf_index_for); the
+# lift, calibration and sweep entries serve from one cached (p1, y) frame
+# per (input files, session), rebuilt when the files change.
 def _lr_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.functions import vector_to_array
 
     def build():
-        data = _timely_training_frame(spark, sf_dir).cache()
-        try:
-            train, test = sampling.train_test_split(data, seed=42)
+        with sampling.cached_split(_timely_training_frame(spark, sf_dir)) as (train, test):
             fitted = ML.timely_pipeline("lr").fit(train)
             scored = (
                 fitted.transform(test)
@@ -221,11 +213,9 @@ def _lr_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cache()
             )
             scored.count()
-        finally:
-            data.unpersist()
         return scored, [scored]
 
-    return CACHE.memo("lr_scored", sf_dir, spark, build)
+    return fixtures.memo_on_inputs("lr_scored", spark, sf_dir, build)
 
 
 def _lift_from_deciles(scored_with_decile: DataFrame) -> DataFrame:
@@ -361,9 +351,6 @@ def ml_timely_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SWEEP_BINS = 20
-
-
 @register(
     "ml_timely_lr_threshold_sweep", None,
     "ml", "binary", "lr", "threshold", "pr-curve",
@@ -374,84 +361,16 @@ def ml_timely_lr_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick the threshold from this table.  For every threshold k/20
     (k=1..19): tp/fp/fn/tn and precision/recall/F1.
 
-    The naive sweep filters the scored frame once per threshold (19
-    scans).  Here: one map-side 20-cell histogram of (n, n_pos) by score
-    cell, then every threshold's confusion counts fall out of a
-    cumulative window over the 20-row aggregate — cell k's suffix sum IS
-    {p1 >= k/20} exactly (floor semantics), so the one-pass table equals
-    the 19-scan table row for row, pinned against direct filtering in
-    tests/test_round7.py.  The window runs over 20 rows, never the
-    scored frame: full-corpus cost is one scan + one 20-row fold.
-
-    Convention: at a threshold with zero predicted positives, precision
-    is NULL (undefined — the standard convention), while recall and f1
-    are 0; consumers iterating the curve must treat NULL precision as
-    "no operating point", not 0."""
-    from pyspark.sql import Window
-
-    scored = _lr_scored(spark, sf_dir)
-    nb = _SWEEP_BINS
-    cell_expr = F.least(F.floor(F.col("p1") * nb).cast("int"), F.lit(nb - 1))
-    hist = scored.groupBy(cell_expr.alias("cell")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("n_pos"),
+    The fold is ``metrics.threshold_sweep``: a 20-cell histogram of the
+    scores, then a suffix-sum window over the 20-row aggregate — cell k's
+    suffix sum IS {p1 >= k/20} exactly (floor semantics), so the one-pass
+    table equals the 19-scan table row for row, pinned against direct
+    filtering in tests/test_round7.py.  Precision is NULL at a threshold
+    with no predicted positives."""
+    nb = M.SWEEP_BINS
+    scored = _lr_scored(spark, sf_dir).select(
+        F.least(F.floor(F.col("p1") * nb).cast("int"), F.lit(nb - 1)).alias("cell"),
+        "y",
     )
-    # densify: a score range with no rows still owes its threshold a row
-    cells = spark.range(nb).select(F.col("id").cast("int").alias("cell"))
-    hist = (
-        cells.join(hist, "cell", "left")
-        .fillna(0, subset=["n", "n_pos"])
-    )
-    tot = hist.agg(
-        F.sum("n").cast("bigint").alias("_nn"),
-        F.sum("n_pos").cast("bigint").alias("_pp"),
-    )
-    wc = Window.orderBy(F.desc("cell")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "cell",
-        F.sum("n").over(wc).alias("_pred_pos"),
-        F.sum("n_pos").over(wc).alias("_tp"),
-    )
-    counts = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("cell") >= 1)
-        .select(
-            F.round(F.col("cell") / F.lit(float(nb)), 2).alias("threshold"),
-            F.col("_tp").cast("bigint").alias("tp"),
-            (F.col("_pred_pos") - F.col("_tp")).cast("bigint").alias("fp"),
-            (F.col("_pp") - F.col("_tp")).cast("bigint").alias("fn"),
-            (F.col("_nn") - F.col("_pp") - (F.col("_pred_pos") - F.col("_tp")))
-            .cast("bigint")
-            .alias("tn"),
-        )
-    )
-    prec = F.when(
-        F.col("tp") + F.col("fp") > 0,
-        F.col("tp") / (F.col("tp") + F.col("fp")),
-    )
-    # CASE-guarded for ANSI mode (the driver's vanilla session): a
-    # positive-free split must yield 0, not a div-by-zero error
-    rec = F.when(
-        F.col("tp") + F.col("fn") > 0,
-        F.col("tp") / (F.col("tp") + F.col("fn")),
-    ).otherwise(F.lit(0.0))
-    return (
-        counts.withColumn("_prec", prec)
-        .withColumn("_rec", rec)
-        .select(
-            "threshold", "tp", "fp", "fn", "tn",
-            F.round("_prec", 6).alias("precision"),
-            F.round("_rec", 6).alias("recall"),
-            F.round(
-                F.when(
-                    F.coalesce(F.col("_prec"), F.lit(0.0)) + F.col("_rec") > 0,
-                    2 * F.col("_prec") * F.col("_rec")
-                    / (F.col("_prec") + F.col("_rec")),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("f1"),
-        )
-        .orderBy("threshold")
-    )
+    threshold = F.round(F.col("cell") / F.lit(float(nb)), 2).alias("threshold")
+    return M.threshold_sweep(scored, threshold)

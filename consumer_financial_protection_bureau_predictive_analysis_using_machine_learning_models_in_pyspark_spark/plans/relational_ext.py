@@ -91,8 +91,8 @@ def events_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True row ordinal via row_number (W3) — the principled replacement for
     the reference's RDD zipWithIndex (init.py:29).  A global window is a
     single-task sort, so at scale this is only for small filtered frames;
-    the shuffle-free alternative is monotonically_increasing_id
-    (operators.windows.with_ordinal)."""
+    the shuffle-free alternative is a non-dense
+    monotonically_increasing_id."""
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     return ev.select(
         "event_id", F.row_number().over(Window.orderBy("event_id")).alias("ordinal")

@@ -109,6 +109,23 @@ def _fingerprint(sf_dir: str) -> tuple:
     return tuple(out)
 
 
+def memo_on_inputs(kind: str, spark: SparkSession, sf_dir: str, build):
+    """``operators.cache.memo`` for a frame derived from the fixture's
+    input files: one entry per ``sf_dir``, named ``"<kind> <realpath>"``
+    and keyed by the fingerprint of those files.  When they change, the
+    old entry is released *before* ``build`` persists the new frame: the
+    CacheManager matches cached data by plan, i.e. by file paths, so a
+    plan over the same paths would otherwise be served the old rows — and
+    a release after the new persist would drop the new entry too."""
+    name = f"{kind} {os.path.realpath(sf_dir)}"
+
+    def rebuild():
+        CACHE.release(name)  # the entry of files that have since changed
+        return build()
+
+    return CACHE.memo(name, _fingerprint(sf_dir), spark, rebuild)
+
+
 def complaints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complaints fixture in Spark: one persisted frame per input.
 
@@ -119,21 +136,13 @@ def complaints(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto-broadcast: all three are small dims).
 
     The frame is built once per (``sf_dir``, files, session) through
-    ``operators.cache.memo`` and persisted at the default level; the first
+    ``memo_on_inputs`` and persisted at the default level; the first
     action on it fills the cache, so building it runs no Spark job and
     every later report reads the cached rows instead of four tables.
-    Each ``sf_dir`` holds one entry, keyed by the fingerprint of the files
-    the fixture reads.  When they change, the old entry is released
-    *before* the new frame is persisted: the CacheManager matches cached
-    data by plan, i.e. by file paths, so a plan over the same paths would
-    otherwise be served the old rows — and a release after the new
-    persist would drop the new entry too.
     """
-    name = f"complaints {os.path.realpath(sf_dir)}"
 
     def build():
-        CACHE.release(name)  # the entry of files that have since changed
         df = readers.run_sql(spark, sf_dir, COMPLAINTS_FIXTURE_SQL).persist()
         return df, [df]
 
-    return CACHE.memo(name, _fingerprint(sf_dir), spark, build)
+    return memo_on_inputs("complaints", spark, sf_dir, build)

@@ -140,3 +140,67 @@ def test_semantic_dedup_batch_releases_scratch_when_write_raises(
         )
     assert (tmp_path / "out").exists()
     assert _n_persistent(spark) == before
+
+
+def _persisted_ids(spark) -> set:
+    # the ids behind ``_n_persistent``: "no new id since the snapshot" is
+    # immune to the ContextCleaner freeing other tests' frames meanwhile
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+class _FitFails:
+    """A pipeline whose fit fills the training frame's cache, then raises."""
+
+    def fit(self, train):
+        train.count()
+        raise RuntimeError("fit failed")
+
+
+@pytest.mark.parametrize(
+    "name, factory",
+    [("ml_timely_lr", "timely_pipeline"), ("ml_response_dt", "response_pipeline")],
+)
+def test_failed_fit_releases_training_frame(spark, sf_dir, monkeypatch, name, factory):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.ml import (  # noqa: E501
+        pipelines as ML,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.operators import (  # noqa: E501
+        sampling,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        fixtures,
+    )
+
+    split_inputs = []
+    real_split = sampling.train_test_split
+
+    def spy_split(df, *a, **kw):
+        split_inputs.append(df)  # the cached training frame
+        return real_split(df, *a, **kw)
+
+    monkeypatch.setattr(sampling, "train_test_split", spy_split)
+    monkeypatch.setattr(ML, factory, lambda *a, **kw: _FitFails())
+    fixtures.complaints(spark, sf_dir).count()  # the fixture's cache may stay
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError, match="fit failed"):
+        CATALOG[name].fn(spark, sf_dir)
+    assert len(split_inputs) == 1
+    # ``cache()`` registers lazily: check the CacheManager, not only RDDs
+    assert not split_inputs[0].storageLevel.useMemory, "CacheManager entry left"
+    assert _persisted_ids(spark) - before == set(), "persisted RDD left"
+
+
+def test_reference_shape_eval_releases_its_frames(spark, sf_dir):
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.ml import (  # noqa: E501
+        refshape as RS,
+    )
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.sources import (  # noqa: E501
+        fixtures,
+    )
+
+    fixtures.complaints(spark, sf_dir).count()  # the fixture's cache may stay
+    before = _persisted_ids(spark)
+    got = RS.reference_shape_eval(spark, sf_dir, "dt", target=100)
+    assert got["n_test"] > 0
+    assert _persisted_ids(spark) - before == set()

@@ -365,7 +365,7 @@ def test_zorder_export_files_disjoint_and_local(spark, tmp_path):
     assert by > 200, by
 
 
-def test_top_session_paths_order_deterministic(spark):
+def test_top_session_paths_order_deterministic(spark, tmp_path):
     """Path strings must respect (ts, event_id) order even when same-ts
     events land in different partitions — the array_sort-on-structs
     guard against collect_list's nondeterministic fetch order."""
@@ -386,9 +386,8 @@ def test_top_session_paths_order_deterministic(spark):
         rows, "event_id bigint, ts timestamp, user_id bigint, event_type string"
     ).repartition(8)
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="paths_fixture_")
+    d = str(tmp_path)
     # the reader sniffs events.parquet as a single FILE and expects
     # timestamp[us] (Spark's default INT96 confuses the nanos sniff):
     # write with one partition + micros, promote the part file

@@ -372,7 +372,7 @@ def test_lsh_recall_eval_s_curve(spark):
     assert rows[10][2] == 1_000_000    # exact clones never missed
 
 
-def test_length_buckets_power_of_two_edges(spark):
+def test_length_buckets_power_of_two_edges(spark, tmp_path):
     """Bucket caps are exact powers of two; a doc exactly AT a power of
     two fits its own cap (no phantom next bucket); waste is 0 for a
     full bucket."""
@@ -389,9 +389,8 @@ def test_length_buckets_power_of_two_edges(spark):
         ],
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    docs.createOrReplaceTempView("documents")
-    import tempfile, os
-    d = tempfile.mkdtemp()
+    import os
+    d = str(tmp_path)
     docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     got = {r.bucket_cap: (r.n_docs, r.sum_tokens, r.padded_tokens, r.waste_u)
            for r in B9.docs_length_buckets(spark, d).collect()}

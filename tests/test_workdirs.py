@@ -304,3 +304,26 @@ def test_fixture_foreign_session_gets_rebuilt_entry(spark, fixture_dir):
     back = fixtures.complaints(spark, fixture_dir)
     assert back is not ours and back.sparkSession is spark
     assert back.count() == n
+
+
+def test_lr_scored_rebuilds_when_its_files_change(spark, fixture_dir):
+    """The scored frame behind the lift, calibration and sweep entries
+    follows its input files like the fixture does: rewritten tables
+    rebuild it, and the old frame is freed first."""
+    from consumer_financial_protection_bureau_predictive_analysis_using_machine_learning_models_in_pyspark_spark.plans.ml_queries import (  # noqa: E501
+        _lr_scored,
+    )
+
+    try:
+        old = _lr_scored(spark, fixture_dir)
+        n_old = old.count()
+        orders = datagen.make_tables(2, 4 * _FIXTURE_ORDERS)["orders"]
+        datagen.write_tables({"orders": orders}, fixture_dir)
+        new = _lr_scored(spark, fixture_dir)
+        assert new is not old
+        assert new.count() > 2 * n_old  # the test split of 4x the orders
+        assert not old.storageLevel.useMemory  # the old entry was released
+        assert new.storageLevel.useMemory
+        assert _lr_scored(spark, fixture_dir) is new
+    finally:
+        CACHE.release(f"lr_scored {os.path.realpath(fixture_dir)}")
