@@ -19,12 +19,15 @@ invocation's artifact, remember the new one.
 :func:`memo` is the build-once pattern: an artifact built once per
 (name, key, session) and served from memory on every later call (the
 complaints fixture, the prebuilt ANN/MinHash/PQ indexes, the scored frame
-of the lift entries); :func:`release` evicts entries and frees their
-frames.
+of the lift entries, the frequency tables); :func:`release` evicts entries
+and frees their frames.  An entry built from files names them
+(``inputs``) and is served only while their :func:`fingerprint` is
+unchanged: that is the one rebuild-when-files-change memo.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 from collections.abc import Callable, Hashable, Iterable
 
@@ -67,11 +70,27 @@ def swap_local_checkpoint(slot: str, df: DataFrame) -> DataFrame:
     return df
 
 
-# (name, key) -> (session the entry was built under, value, frames to free)
-_MEMO: dict[tuple[str, Hashable], tuple[SparkSession, object, tuple]] = {}
+def fingerprint(paths: Iterable[str]) -> tuple:
+    """(path, size, ``st_mtime_ns``) of every file under each of ``paths``
+    (a file, or a dir walked recursively; a missing path adds nothing).
+    ``os.stat`` only: no Spark job."""
+    out = []
+    for root in paths:
+        files = [root] if os.path.isfile(root) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        )
+        for f in files:
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+# (name, key) -> (session the entry was built under, value, frames to free,
+# fingerprint of the entry's input files)
+_MEMO: dict[tuple[str, Hashable], tuple[SparkSession, object, tuple, tuple]] = {}
 # Serializes every miss and release.  Re-entrant: a build may itself call
 # ``memo`` (the lift entries' scored frame is built on the complaints
-# fixture) or ``release`` (a build that retires a stale entry first).
+# fixture) or ``release``.
 _LOCK = threading.RLock()
 
 
@@ -80,28 +99,43 @@ def memo(
     key: Hashable,
     spark: SparkSession,
     build: Callable[[], tuple[object, Iterable[DataFrame]]],
+    inputs: Iterable[str] | None = None,
 ):
     """The value memoized under ``(name, key)`` for ``spark``, built on a
     miss.  ``build()`` returns ``(value, frames)``: the value to serve and
-    the frames (persisted or locally checkpointed) that back it.  An
-    entry built under another session is released and rebuilt — its
-    blocks died with that session's executors.  The entry is stored only
-    once ``build`` returns, so a build that raises leaves no entry.
+    the frames (persisted or locally checkpointed) that back it.  The
+    entry is stored only once ``build`` returns, so a build that raises
+    leaves no entry.
+
+    An entry is served only to the session it was built under and, when
+    the call names ``inputs`` (the files the value is built from), only
+    while their :func:`fingerprint` is unchanged; a call without
+    ``inputs`` serves the stored entry as it is.  Otherwise the entry is
+    released *before* the rebuild: a foreign session's blocks died with
+    its executors, and Spark's CacheManager matches cached data by plan,
+    i.e. by file paths, so a persist over rewritten files would be served
+    the old rows — and a release after the new persist would drop the new
+    entry too.
 
     A hit takes no lock.  A miss runs under one module lock and looks the
     entry up again once it holds it, so threads that miss together build
     it once."""
+    stamp = None if inputs is None else fingerprint(inputs)
+
+    def serves(hit) -> bool:
+        return hit[0] is spark and stamp in (None, hit[3])
+
     hit = _MEMO.get((name, key))
-    if hit is not None and hit[0] is spark:
+    if hit is not None and serves(hit):
         return hit[1]
     with _LOCK:
         hit = _MEMO.get((name, key))
         if hit is not None:
-            if hit[0] is spark:
+            if serves(hit):
                 return hit[1]
             release(name, key)
         value, frames = build()
-        _MEMO[(name, key)] = (spark, value, tuple(frames))
+        _MEMO[(name, key)] = (spark, value, tuple(frames), stamp)
         return value
 
 

@@ -8,16 +8,36 @@ Reference behavior:
 - date parts: cast string → timestamp → year/month/day int columns
   (reference timely_LR.py:57-62, complaints_narrative_LDA.py:34-39).
 
+The frequency table is computed once per input, not once per query.  On a
+miss, ``frequency_encode`` runs the aggregate eagerly (one collect: ≤ 2
+Spark jobs over materialized inputs) and keeps the ``(key,
+frequency_<key>)`` rows as a driver-local relation in
+``operators.cache.memo``, one entry per (key, analyzed plan), rebuilt when
+the files that plan reads change.  Every later call over the same plan
+joins that relation back and builds its plan with no Spark job.  A plan
+the memo cannot key safely — non-deterministic, holding a subquery, or
+reading anything but local files, local rows or an RDD — gets the lazy
+aggregate per call, as before.
+
 Scale posture: the frequency dim is tiny (≤ cardinality of the key), so the
 join-back is explicitly broadcast — no shuffle of the 100 TB fact side.  The
 aggregation itself is a partial+final hash agg (map-side combine), and for a
-skewed key like `company` AQE handles the hot partitions.
+skewed key like `company` AQE handles the hot partitions.  The driver-side
+table is no new scale limit: a broadcast join already collects that same
+key-bounded table to the driver on every query.  The memo holds no Spark
+storage, so there is nothing to unpersist.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import cache
+
+# analyzed-plan leaves whose rows are fixed by the plan itself: the memo
+# needs no file fingerprint for them
+_ROW_LEAVES = ("LocalRelation", "LogicalRDD")
 
 
 def frequency_encode(df: DataFrame, key: str) -> DataFrame:
@@ -26,10 +46,66 @@ def frequency_encode(df: DataFrame, key: str) -> DataFrame:
 
     The reference leaves join strategy to the planner; at 100 TB the dim
     (≤ ~7,000 rows for `company`) must be broadcast so the fact table never
-    shuffles — hence the explicit hint.
+    shuffles — hence the explicit hint.  The table comes from the memo
+    when ``df``'s plan was encoded on ``key`` before (module docstring).
     """
-    freq = df.groupBy(key).agg(F.count(F.lit(1)).alias(f"frequency_{key}"))
-    return df.join(F.broadcast(freq), on=key, how="left")
+    table = None
+    inputs = _plan_files(df)
+    if inputs is not None:
+        seen, table = cache.memo(
+            f"frequency_encode {key} {df.semanticHash()}", None, df.sparkSession,
+            lambda: ((df, _local_table(df, key)), []), inputs,
+        )
+        if not df.sameSemantics(seen):  # the 32-bit hash collided
+            table = None
+    if table is None:
+        table = _frequencies(df, key)
+    return df.join(F.broadcast(table), on=key, how="left")
+
+
+def _frequencies(df: DataFrame, key: str) -> DataFrame:
+    return df.groupBy(key).agg(F.count(F.lit(1)).alias(f"frequency_{key}"))
+
+
+def _local_table(df: DataFrame, key: str) -> DataFrame:
+    """The frequency table collected in the JVM and wrapped as a
+    ``LocalRelation``; the rows never pass through Python."""
+    jfreq = _frequencies(df, key)._jdf
+    spark = df.sparkSession
+    rows = jfreq.collectAsList()
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, jfreq.schema()), spark)
+
+
+def _plan_files(df: DataFrame) -> list[str] | None:
+    """The local paths (file or dir) that ``df``'s analyzed plan reads, or
+    ``None`` when its result is not a function of those paths' contents:
+    a non-deterministic plan, a subquery (its plan is not a child, so its
+    leaves are not walked), or a leaf that is not a local file relation,
+    ``LocalRelation`` or ``LogicalRDD``.  The analyzed plan, because the
+    optimized plan of a persisted frame holds an ``InMemoryRelation``."""
+    plan = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    if not plan.deterministic() or plan.containsPattern(patterns.PLAN_EXPRESSION()):
+        return None
+    paths = []
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.nodeName()
+        if kind in _ROW_LEAVES:
+            continue
+        if kind != "LogicalRelation":
+            return None
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        roots = relation.location().rootPaths()
+        for j in range(roots.size()):
+            uri = roots.apply(j).toUri()
+            if uri.getScheme() not in (None, "file"):
+                return None
+            paths.append(uri.getPath())
+    return paths
 
 
 def date_parts(df: DataFrame, src_col: str) -> DataFrame:

@@ -8,7 +8,7 @@
    oracle; the resume pins live in tests/test_round12.py.
 2. ``docs_decontaminate_fuzzy_prebuilt`` + ``stream_decontaminate_fuzzy``
    — the serving twins of ``docs_decontaminate_fuzzy``: the benchmark
-   band index is built ONCE per (sf_dir, session) and frozen
+   band index is built ONCE per (documents files, session) and frozen
    (``fuzzy_bench_index_for``), the corpus probes it per run / per
    ingest micro-batch.  At-ingest probing of a frozen benchmark index is
    how fuzzy decontamination deploys: the benchmark suite changes
@@ -34,7 +34,7 @@ from ..operators import cache as CACHE
 from ..operators import dedup as DD
 from ..operators import restart as RS
 from .breadth8 import _CT_CORPUS_CTE, _CT_MIN_U
-from .catalog import CATALOG, _t, register
+from .catalog import CATALOG, _inputs, _t, register
 from .text_queries import _AUG_CTE
 from .breadth11 import (
     _E2E_SQL,
@@ -100,7 +100,7 @@ def docs_curation_restartable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def fuzzy_bench_index_for(spark: SparkSession, sf_dir: str) -> tuple:
     """(hashes, bands) of the BENCHMARK slice, built + materialized once
-    per (sf_dir, session) — the frozen fuzzy-decontamination index the
+    per (documents files, session) — the frozen fuzzy-decontamination index the
     prebuilt and streaming twins probe (``minhash_index_for``'s
     lifecycle applied to the benchmark side).  localCheckpoint (eager)
     rather than persist: the index is dim-sized (eval-suite-small by
@@ -112,7 +112,9 @@ def fuzzy_bench_index_for(spark: SparkSession, sf_dir: str) -> tuple:
         bands = DD.minhash_band_keys(hashes).localCheckpoint()
         return (hashes, bands), [hashes, bands]
 
-    return CACHE.memo("fuzzy_bench_index_for", sf_dir, spark, build)
+    return CACHE.memo(
+        "fuzzy_bench_index_for", sf_dir, spark, build, _inputs(sf_dir, "documents")
+    )
 
 
 @register(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators import cache as CACHE
 from ..operators import pipeline as PL
-from .catalog import _t, register
+from .catalog import _inputs, _t, register
 from .text_queries import _D_TOKS, _QU_EXPR_SQL, _QU_MOMENTS_SQL
 
 _SEQ_LEN = 128
@@ -159,7 +159,7 @@ _PQ_SUBDOT = (
 )
 
 
-# Offline PQ artifacts (codebook + corpus codes) per (sf_dir, session) —
+# Offline PQ artifacts (codebook + corpus codes) per (files, session) —
 # the same build-once lifecycle as text_queries.ivf_index_for: serving
 # entries must measure the QUERY path, not re-pay the offline encode per
 # call.  Deterministic, so caching cannot change values.
@@ -180,7 +180,9 @@ def pq_artifacts_for(
         codes.count()  # materialize: the "index is on disk" contract
         return (cb, codes), [codes]
 
-    return CACHE.memo("pq_artifacts_for", (sf_dir, m, k), spark, build)
+    return CACHE.memo(
+        "pq_artifacts_for", (sf_dir, m, k), spark, build, _inputs(sf_dir, "embeddings")
+    )
 
 
 @register(

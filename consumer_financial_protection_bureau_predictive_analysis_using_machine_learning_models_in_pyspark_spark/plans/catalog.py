@@ -63,6 +63,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return readers.load_table(spark, sf_dir, name)
 
 
+def _inputs(sf_dir: str, *names: str) -> list[str]:
+    """The paths of test tables ``names``: a memo's ``inputs`` over them."""
+    return [readers.table_path(sf_dir, n) for n in names]
+
+
 # ---------------------------------------------------------------------------
 # Relational kernel on the star schema (SURVEY §2.1-2.5): scan → filter →
 # project → agg → sort, joins, top-k.  TPC-H-shaped so plans are comparable

@@ -94,36 +94,13 @@ def complaints_cte(body_sql: str, extra_ctes: dict[str, str] | None = None) -> s
 _TABLES = tuple(dict.fromkeys(t for _, t in readers._TABLE_REF.findall(COMPLAINTS_FIXTURE_SQL)))
 
 
-def _fingerprint(sf_dir: str) -> tuple:
-    """(path relative to ``sf_dir``, size, ``st_mtime_ns``) of every file
-    under each table the fixture reads.  ``os.stat`` only: no Spark job."""
-    out = []
-    for table in _TABLES:
-        root = os.path.join(sf_dir, f"{table}.parquet")
-        files = [root] if os.path.isfile(root) else sorted(
-            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
-        )
-        for f in files:
-            st = os.stat(f)
-            out.append((os.path.relpath(f, sf_dir), st.st_size, st.st_mtime_ns))
-    return tuple(out)
-
-
 def memo_on_inputs(kind: str, spark: SparkSession, sf_dir: str, build):
     """``operators.cache.memo`` for a frame derived from the fixture's
-    input files: one entry per ``sf_dir``, named ``"<kind> <realpath>"``
-    and keyed by the fingerprint of those files.  When they change, the
-    old entry is released *before* ``build`` persists the new frame: the
-    CacheManager matches cached data by plan, i.e. by file paths, so a
-    plan over the same paths would otherwise be served the old rows — and
-    a release after the new persist would drop the new entry too."""
+    input files: one entry per ``sf_dir``, named ``"<kind> <realpath>"``,
+    rebuilt — old entry released first — when those files change."""
     name = f"{kind} {os.path.realpath(sf_dir)}"
-
-    def rebuild():
-        CACHE.release(name)  # the entry of files that have since changed
-        return build()
-
-    return CACHE.memo(name, _fingerprint(sf_dir), spark, rebuild)
+    inputs = [readers.table_path(sf_dir, t) for t in _TABLES]
+    return CACHE.memo(name, None, spark, build, inputs)
 
 
 def complaints(spark: SparkSession, sf_dir: str) -> DataFrame:

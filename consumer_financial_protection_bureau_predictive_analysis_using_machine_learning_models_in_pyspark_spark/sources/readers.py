@@ -37,12 +37,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(
             f"no pinned schema for table {name!r}; add it to schemas.TABLE_SCHEMAS"
         )
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         schema, ts = events_encoding(path)
         raw = spark.read.schema(schema).parquet(path)
         return raw if ts is None else raw.withColumn("ts", ts)
     return spark.read.schema(schemas.TABLE_SCHEMAS[name]).parquet(path)
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """Where test table ``name`` lives under ``sf_dir`` (a parquet file or
+    dir): what ``load_table`` reads and what a memo over it fingerprints."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def events_encoding(path: str) -> tuple[StructType, Column | None]:

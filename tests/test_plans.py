@@ -585,8 +585,6 @@ _BOUNDED_HINT_JUSTIFICATIONS = {
     # (b) vocabulary- or domain-bounded aggregates: keyed by a natural
     #     dim (term vocab, source domain, company) whose cardinality is
     #     sublinear in corpus size -- the freq-dim pattern from SURVEY §2
-    "complaints_flagship": "company freq table: company-dim-bounded",
-    "complaints_frequency_encode": "company/issue freq tables: dim-bounded",
     "docs_bigram_pmi": "unigram count frames: vocab-bounded",
     "docs_bm25_rank": "per-term df: bounded by |query_terms| after isin",
     "docs_quality_zscore": "per-source moments: source-domain-bounded",
